@@ -844,7 +844,13 @@ object Bench {
       leanLine(s""","n_queries":${results.length}"""))
     // the line + trailing newline must sit WHOLLY inside the 2000-char
     // window even with a few chars of full-line fragment ahead of it
-    println(leanFit.find(_.length <= 1990).getOrElse(leanFit.last))
+    val lean = leanFit.init.find(_.length <= 1990)
+    if (lean.isEmpty)
+      System.err.println(s"[bench] WARNING lean-map-dropped: no per-query map fits the " +
+        s"1990-char lean line (smallest ${leanFit.init.map(_.length).min} chars for " +
+        s"${results.length} queries); printing n_queries only, per-query times are in " +
+        "bench_artifact.json")
+    println(lean.getOrElse(leanFit.last))
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.export
 import graft.operators.ExportOps
 import graft.sinks.ZipSink
 import graft.sources.Catalog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The batch snapshot export job (SURVEY.md §2.1 / §3.1): the Spark
@@ -15,10 +15,13 @@ import org.apache.spark.sql.functions._
   *   → serialization (B8) → archive sink (B9,B10), with per-record
   *   error accumulation (B11).
   *
-  * Where the reference is sequential (one List per GVR, one thread), the
-  * Spark plan scans all tables in parallel and unions them; each table's
-  * scan→project stage is whole-stage codegen'd. YAML rendering happens
-  * only at the sink edge.
+  * Where the reference is sequential (one List per GVR, one thread), an
+  * export here runs a fixed number of Spark jobs however many tables
+  * there are: [[Catalog.scanAll]] reads every table's footer schema in
+  * one job and scans each group of same-schema tables as one relation,
+  * then the sink's write is the only other action. Entry order inside an
+  * archive follows the scan's splits, not table order: entry names are
+  * the contract. YAML rendering happens only at the sink edge.
   */
 object ExportJob {
 
@@ -48,7 +51,7 @@ object ExportJob {
   def runPartitioned(spark: SparkSession, root: String, outDir: String): ExportResult = {
     val (tables, discErrs) = Catalog.discover(spark, root)
     val scan = Catalog.scanAll(spark, tables)
-    val frames = scan.frames.toSeq.sortBy(_._1).flatMap { case (_, df) =>
+    val frames = scan.groups.map(_.frame).flatMap { df =>
       val cols = df.columns.toSet
       if (!Set("kind", "name").subsetOf(cols)) None
       else {
@@ -61,9 +64,12 @@ object ExportJob {
       }
     }
     if (frames.isEmpty) return ExportResult(0L, discErrs ++ scan.errors)
-    val unioned = frames.reduce(_ unionByName _)
-    unioned.write.mode("overwrite").partitionBy("namespace", "kind").parquet(outDir)
-    ExportResult(spark.read.parquet(outDir).count(), discErrs ++ scan.errors)
+    // the entry count is an observed metric of the write itself, not a
+    // second job over the output
+    val written = Observation("export")
+    frames.reduce(_ union _).observe(written, count(lit(1)).as("entries"))
+      .write.mode("overwrite").partitionBy("namespace", "kind").parquet(outDir)
+    ExportResult(written.get("entries").asInstanceOf[Long], discErrs ++ scan.errors)
   }
 
   /** Discover, scan, render: the shared head of every zip-mode export.
@@ -74,17 +80,15 @@ object ExportJob {
       : (Option[DataFrame], Seq[String]) = {
     val (tables, discErrs) = Catalog.discover(spark, root)
     val scan = Catalog.scanAll(spark, tables)
-    val attempts = scan.frames.toSeq.sortBy(_._1).map { case (name, df) =>
-      scala.util.Try(entriesFor(df)) match {
-        case scala.util.Success(e) => Right(e)
-        case scala.util.Failure(ex) => Left(s"$name: ${ex.getMessage}")
-      }
+    val attempts = scan.groups.map { g =>
+      scala.util.Try(entriesFor(g.frame)).toEither.left
+        .map(ex => g.tables.map(t => s"${t.name}: ${ex.getMessage}"))
     }
     val frames = attempts.collect { case Right(df) => df }
-    val errs = discErrs ++ scan.errors ++ attempts.collect { case Left(e) => e }
+    val errs = discErrs ++ scan.errors ++ attempts.collect { case Left(e) => e }.flatten
     if (frames.isEmpty) (None, errs)
     else {
-      val unioned = frames.reduce(_ unionByName _)
+      val unioned = frames.reduce(_ union _)
       // YAML at the edge: rendered per entry inside the single sink pass —
       // the sink's own entry count is the result, so the expression is
       // evaluated exactly once per row (no count() pre-pass). to_yaml is a

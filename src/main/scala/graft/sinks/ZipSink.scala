@@ -109,9 +109,13 @@ object ZipSink {
     * namespace's archives, not the fleet's.
     *
     * Same executor-side mechanics as [[writeSharded]] (`foreachPartition`
-    * after repartitioning on the segment; no driver bottleneck). A
-    * partition can hold several segments (hash co-location), so the
-    * writer keeps one open sink per segment within the partition.
+    * after hash-repartitioning on the segment; no driver bottleneck). The
+    * repartition asks for the session's `spark.sql.shuffle.partitions`
+    * explicitly, so adaptive execution cannot coalesce the writers into
+    * one task: a small export still writes its archives in parallel.
+    * Every segment hashes to exactly one partition, so it gets exactly
+    * one archive, whose `part-<pid>` suffix is the writing partition; a
+    * partition holding several segments keeps one open sink per segment.
     * Returns the number of entries written.
     */
   def writePartitionedByPrefix(df: DataFrame, dir: String): Long = {
@@ -119,7 +123,8 @@ object ZipSink {
     val entries = df.sparkSession.sparkContext.longAccumulator("zip_entries")
     val withSeg = validated(df).withColumn("_seg",
       org.apache.spark.sql.functions.substring_index(col("path"), "/", 1))
-    withSeg.repartition(col("_seg")).foreachPartition {
+    val writers = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    withSeg.repartition(writers, col("_seg")).foreachPartition {
       rows: Iterator[org.apache.spark.sql.Row] =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val conf = confFrom(hconf)

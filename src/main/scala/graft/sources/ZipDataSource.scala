@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.zip.ZipInputStream
-import scala.collection.mutable.ArrayBuffer
 
 /** DataSource V2 reader for the engine's export archives (B9/B10): the
   * inverse of [[graft.sinks.ZipSink]], closing the export→ingest round
@@ -242,23 +241,15 @@ final class ZipEntryReader(archive: String, columns: Array[String],
       zis.closeEntry() // definite non-match: payload never decoded
       next()
     } else {
-      val data: UTF8String =
-        if (needData) {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](8192)
-          var n = zis.read(chunk)
-          while (n >= 0) { buf.write(chunk, 0, n); n = zis.read(chunk) }
-          UTF8String.fromBytes(buf.toByteArray)
-        } else null // pruned: closeEntry skips the payload without decoding
+      // pruned `data`: closeEntry skips the payload without decoding
+      val data = if (needData) UTF8String.fromBytes(zis.readAllBytes()) else null
       zis.closeEntry()
-      val values = new ArrayBuffer[Any](columns.length)
-      columns.foreach {
-        case "archive" => values += archiveU
-        case "path" => values += UTF8String.fromString(e.getName)
-        case "data" => values += data
+      row = new GenericInternalRow(columns.map[Any] {
+        case "archive" => archiveU
+        case "path" => UTF8String.fromString(e.getName)
+        case "data" => data
         case other => throw new IllegalArgumentException(s"unknown column $other")
-      }
-      row = new GenericInternalRow(values.toArray)
+      })
       true
     }
   }

@@ -2,8 +2,12 @@ package graft.export
 
 import graft.SparkSpec
 import graft.functions.Yaml
+import graft.model.KrmModel
 import graft.operators.ExportOps
 import graft.sinks.ZipSink
+import graft.sources.Catalog
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -203,17 +207,111 @@ class ExportSpec extends SparkSpec {
     assert(hits.value == 2, s"UDF evaluated ${hits.value} times for 2 rows")
   }
 
+  /** Rows in `KrmModel.krmSchema`: `perNs` objects of one kind in each namespace. */
+  private def krmRows(kind: String, namespaces: Seq[String], perNs: Int): Seq[Row] =
+    for (ns <- namespaces; i <- 1 to perNs) yield Row("apps", "v1", kind, ns, s"$kind-$i",
+      Map("app" -> kind.toLowerCase), null, s"""{"replicas":$i}""", null, s"$i", s"uid-$ns-$i",
+      i.toLong, null, "upsert")
+
+  private def krmFrame(rows: Seq[Row]) =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), KrmModel.krmSchema)
+
+  /** Every (path, data) entry of the archives under `out`. */
+  private def zipEntries(out: String): Set[(String, String)] =
+    spark.read.format("graft-zip").load(out).select("path", "data").as[(String, String)]
+      .collect().toSet
+
   test("export tolerates unreadable tables (error accumulation)") {
     val root = java.nio.file.Files.createTempDirectory("exportbad").toFile
-    // one good table, one corrupt file
-    val schema = StructType(Seq(StructField("kind", StringType), StructField("name", StringType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row("Pod", "p1"))), schema)
-      .write.parquet(new java.io.File(root, "good.parquet").getAbsolutePath)
+    def at(name: String) = new java.io.File(root, name).getAbsolutePath
+    // three tables with the same KRM schema
+    Seq("Pod", "Service", "ConfigMap").foreach { k =>
+      krmFrame(krmRows(k, Seq("dev", "prod"), 3)).write.parquet(at(s"$k.parquet"))
+    }
+    // one with the KRM columns in another order
+    val secrets = krmFrame(krmRows("Secret", Seq("dev"), 2))
+    secrets.select(secrets.columns.reverse.toIndexedSeq.map(col): _*).write.parquet(at("Secret.parquet"))
+    // one Hive-partitioned table whose prod files carry an extra column:
+    // first-file inference and mergeSchema give different schemas
+    krmFrame(krmRows("Deployment", Seq("dev"), 2))
+      .write.partitionBy("namespace").parquet(at("Deployment.parquet"))
+    krmFrame(krmRows("Deployment", Seq("prod"), 2)).withColumn("replicas", lit(3))
+      .write.mode("append").partitionBy("namespace").parquet(at("Deployment.parquet"))
+    // one empty directory, one corrupt file
+    new java.io.File(root, "empty").mkdir()
     java.nio.file.Files.writeString(
       new java.io.File(root, "bad.parquet").toPath, "not parquet")
-    val zip = new java.io.File(root, "out.zip").getAbsolutePath
-    val res = ExportJob.run(spark, root.getAbsolutePath, zip)
-    assert(res.entries == 1)
-    assert(res.errors.nonEmpty)
+    val readable = Seq("ConfigMap", "Deployment", "Pod", "Secret", "Service")
+
+    for (merge <- Seq(false, true)) {
+      spark.conf.set("spark.sql.parquet.mergeSchema", merge.toString)
+      try {
+        val (tables, discErrs) = Catalog.discover(spark, root.getAbsolutePath)
+        assert(discErrs.isEmpty)
+        val scan = Catalog.scanAll(spark, tables)
+        // (a) every table's relation has the schema Spark infers for it alone
+        val scanned = for (g <- scan.groups; t <- g.tables) yield {
+          assert(g.frame.schema == spark.read.parquet(t.path).schema, s"${t.name}, merge=$merge")
+          t.name -> g
+        }
+        assert(scanned.map(_._1).sorted == readable)
+        val byName = scanned.toMap
+        assert(byName("Pod") eq byName("Service"))
+        assert(byName("Pod") eq byName("ConfigMap"))
+        assert(scan.groups.size == 3, "same-schema tables share one relation")
+        assert(byName("Deployment").frame.columns.contains("replicas") == merge)
+
+        // (b) the export equals each table rendered alone
+        val zip = at(s"out-$merge.zip")
+        val res = ExportJob.run(spark, root.getAbsolutePath, zip)
+        val want = readable.map { t =>
+          ExportJob.entriesFor(spark.read.parquet(at(s"$t.parquet")))
+            .select(col("path"), graft.functions.functions.to_yaml(col("data")))
+            .as[(String, String)].collect().toSet
+        }.reduce(_ ++ _)
+        assert(zipEntries(zip) == want)
+        assert(res.entries == want.size)
+        // (c) the errors name exactly the empty and the corrupt table
+        assert(res.errors.map(_.takeWhile(_ != ':')).sorted == Seq("bad", "empty"),
+          res.errors.mkString("; "))
+      } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    }
+  }
+
+  test("partitioned-zip export: job count is fixed in the table count; writers stay parallel") {
+    val tasksPerStage = scala.collection.concurrent.TrieMap.empty[Int, Int]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        tasksPerStage.updateWith(e.stageId)(n => Some(n.getOrElse(0) + 1))
+    }
+    /** Jobs of one export of `tables` same-schema tables over `namespaces`
+      * namespaces, and the task count of its last (writer) stage. */
+    def exportOf(tables: Int, namespaces: Int): (Int, Int) = {
+      val root = java.nio.file.Files.createTempDirectory("exportjobs").toFile.getAbsolutePath
+      (1 to tables).foreach { t =>
+        krmFrame(krmRows(s"Kind$t", (1 to namespaces).map(n => s"ns$n"), 2))
+          .write.parquet(s"$root/kind$t.parquet")
+      }
+      val out = java.nio.file.Files.createTempDirectory("exportjobsout").toString
+      ListenerBusAccess.drain(spark.sparkContext)
+      jobs.set(0); tasksPerStage.clear()
+      val res = ExportJob.runPartitionedZip(spark, root, out)
+      ListenerBusAccess.drain(spark.sparkContext)
+      assert(res.errors.isEmpty && res.entries == tables * namespaces * 2)
+      (jobs.get, tasksPerStage(tasksPerStage.keys.max))
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (jobs2, _) = exportOf(2, 4)
+      val (jobs8, writers) = exportOf(8, 16)
+      assert(jobs2 == jobs8, s"2 tables ran $jobs2 jobs, 8 tables ran $jobs8")
+      assert(writers > 1, s"the writer stage ran $writers task(s) for 16 namespaces")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset("spark.sql.adaptive.enabled")
+    }
   }
 }
