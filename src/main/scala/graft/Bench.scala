@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -554,24 +552,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // The catalog's wide-aggregate queries (64 minhash min-aggs, 60
-      // simhash bit-sums) each generate huge codegen classes; the default
-      // 100-entry compiled-class cache evicts them between interleaved
-      // rounds, so every sample re-pays Janino + JIT (~12 s for the LSH
-      // DAG — measured 17.9 s interleaved vs 2.2 s solo). A catalog this
-      // wide needs a cache sized to the working set. Static conf: must be
-      // set before the first session of the JVM.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val jvms = competingJvms()
     jvms.foreach(j => System.err.println(s"[bench] competing JVM: $j"))

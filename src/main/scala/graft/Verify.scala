@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,16 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only: Set[String] = rest.toSet // optional query-name filter
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Catalog working set exceeds the default 100-entry compiled-class
-      // cache (wide minhash/simhash aggregates) — see Bench.scala.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     // Loud (but non-fatal) drift check: a driver testdata regen with
     // changed physical types cost a full round once (round 9).

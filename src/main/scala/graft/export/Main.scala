@@ -67,13 +67,7 @@ object Main {
         "usage: graft.export.Main --root <dir> --output <zip|dir> [--sharded|--partitioned|--partitioned-zip]")
       sys.exit(2)
     case Right(opts) =>
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .appName("graft-export")
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = graft.GraftSession()
       try {
         val res = run(spark, opts)
         println(s"exported ${res.entries} entries to ${opts.output}")

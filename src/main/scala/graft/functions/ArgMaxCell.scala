@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * quantizer's scoring relation the partial aggregation sits directly
   * on the k-fold join blowup, which means the SORT runs over
   * |docs|·k rows (2·10⁸ at the k=10⁴ cutover scale, spilling long
-  * before it cuts — measured unusable in ProfileCutover). This
+  * before it cuts — measured unusable, SCALING.md "Round 13"). This
   * aggregate's buffer is two primitive fields (best score, best cell),
   * so HashAggregate partial-collapses the blowup in-task with no sort
   * and no spill, at any k.

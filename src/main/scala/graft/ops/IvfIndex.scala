@@ -162,7 +162,7 @@ object IvfIndex {
     // cluster by cell before the partitioned write: without it every
     // write task emits one file per cell it happens to hold, and at
     // large k the file count explodes multiplicatively (task × cell —
-    // measured 4× wall on the k=10⁴ join form, ProfileCutover);
+    // measured 4× wall on the k=10⁴ join form, SCALING.md "Round 13");
     // clustered, each cell's rows land in one task → one file per
     // non-empty cell, which is also the layout probes want to prune
     assignCells(corpus, "id", "vec", centroids, cutoverCells = cutoverCells)

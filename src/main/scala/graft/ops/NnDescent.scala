@@ -534,7 +534,7 @@ object NnDescent {
     * same polarity as [[QuantizerRelation.CutoverCells]]: literals in
     * the plan below, data on the broadcast bus above.
     *
-    * Where the default sits, and why (tools/ProfileFrontier, sf0.1,
+    * Where the default sits, and why (SCALING.md "Round 18", sf0.1,
     * 1,995-node index, batches 50/500/1,995 queries): the literal form
     * measured FASTER throughout gate scale — 3.2/3.8/6.0 s vs the
     * semi-join's 5.3/5.9/10.1 s — because the semi-join adds two
@@ -745,7 +745,7 @@ object NnDescent {
   /** Build the k-NN graph: ring init, `iters` local-join sweeps.
     * Output: (id, nbr, score, rank) with rank ∈ [1, k].
     *
-    * SIZING `k` (the ProfileNnDescent convergence tables): on clustered
+    * SIZING `k` (SCALING.md "Round 16 addendum 2" tables): on clustered
     * corpora 3–4 sweeps at the default cap converge (recall 0.94–0.96);
     * on hard NEAR-ISOTROPIC corpora sweeps and cap SATURATE (~0.47 at
     * any budget, build-k=5) because narrow per-node lists starve the

@@ -85,8 +85,8 @@ object PqRelation {
     // the per-(doc, sub) argmax partially aggregates in-task and ONE
     // narrow id-keyed exchange carries one (id, codes) row per doc.
     // Shape mirrors [[QuantizerRelation.assignCells]] (both measured,
-    // ProfileCutover): ONLY (id, vec) enter the blowup — the subspace
-    // WINDOW and its degeneracy flag are computed per (doc, sub)
+    // SCALING.md "Round 13"): ONLY (id, vec) enter the blowup — the
+    // subspace WINDOW and its degeneracy flag are computed per (doc, sub)
     // BEFORE the k′-fold join (the interpreted `exists` lambda runs
     // m·|docs| times, not m·k′·|docs|), the score is the codegen'd
     // DotProductExpr (two column operands, nothing rides the plan,

@@ -104,8 +104,8 @@ object QuantizerRelation {
     * exactly [0, k). Requires `idCol` unique (every caller's existing
     * contract).
     *
-    * Shape (both measured, ProfileCutover): ONLY (id, vec) enter the
-    * k-fold join blowup — the degeneracy flag is computed once per doc
+    * Shape (both measured, SCALING.md "Round 13"): ONLY (id, vec) enter
+    * the k-fold join blowup — the degeneracy flag is computed once per doc
     * before the join (not k times), the per-(doc, cell) score is the
     * codegen'd [[graft.functions.DotProductExpr]] (two COLUMN
     * operands, nothing rides the plan; the zip_with/aggregate HOF

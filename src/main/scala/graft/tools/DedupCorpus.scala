@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** End-to-end corpus dedup CLI: read a documents parquet, drop near-
   * duplicates (one representative per MinHash-LSH cluster — see
@@ -20,14 +20,7 @@ object DedupCorpus {
     val idCol = if (args.length > 2) args(2) else "doc_id"
     val textCol = if (args.length > 3) args(3) else "text"
     val bands = if (args.length > 4) args(4).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-dedup-corpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
     val docs = spark.read.parquet(in)

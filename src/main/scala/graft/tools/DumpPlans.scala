@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Dump `.explain("formatted")` for a comma-separated list of declared
   * queries (or every declared query with `all`) to
@@ -16,15 +15,7 @@ object DumpPlans {
     require(args.length == 3, "usage: DumpPlans <tag> <suffix> <names|all>")
     val tag = args(0); val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted

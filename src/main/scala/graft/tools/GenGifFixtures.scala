@@ -8,7 +8,7 @@ import java.security.MessageDigest
 import javax.imageio.stream.MemoryCacheImageOutputStream
 import javax.imageio.{IIOImage, ImageIO}
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** One-off generator for the MULTI-FRAME (animated GIF) near-dup
   * fixtures behind `multimodal_video_dedup` and the real-frames
@@ -159,8 +159,7 @@ object GenGifFixtures {
     require(distinctShared("vid_s04_a.gif", "vid_s04_b.gif") == 1)
     require(distinctShared("vid_s00_base.gif", "vid_s00_extra.gif") == 3)
 
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(2)
     import spark.implicits._
     FixtureIO.writeSingleFile(spark, entries.toSeq.toDF(),
       s"${new File(outDir).getAbsoluteFile.getParent}/video_manifest.parquet")

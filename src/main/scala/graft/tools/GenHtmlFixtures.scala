@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-off generator for the HTML-extraction fixtures behind
@@ -100,8 +100,7 @@ object GenHtmlFixtures {
       entries += Entry(name, bytes.length.toLong, md5hex(bytes), expected,
         expected.length)
     }
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(2)
     import spark.implicits._
     FixtureIO.writeSingleFile(spark, entries.toSeq.toDF(),
       s"${new File(outDir).getAbsoluteFile.getParent}/html_manifest.parquet")

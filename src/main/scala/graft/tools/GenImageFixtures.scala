@@ -6,7 +6,7 @@ import java.nio.file.Files
 import java.security.MessageDigest
 
 import javax.imageio.ImageIO
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** One-off generator for the REAL image fixtures behind
   * `multimodal_real`: deterministic PNG/JPEG/GIF files written with the
@@ -60,8 +60,7 @@ object GenImageFixtures {
 
     // Manifest as ONE parquet file at a stable path (the oracle SQL
     // reads it by literal path).
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(2)
     import spark.implicits._
     FixtureIO.writeSingleFile(spark, entries.toSeq.toDF(),
       s"${new File(outDir).getAbsoluteFile.getParent}/images_manifest.parquet")

@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** One-off generator for the REAL audio/video fixtures behind
   * `multimodal_audio` — the WAV/MP4 sibling of [[GenImageFixtures]].
@@ -144,8 +144,7 @@ object GenMediaFixtures {
           du * 1000L / ts, 0, ts, w, h))
     }
 
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(2)
     import spark.implicits._
     FixtureIO.writeSingleFile(spark, entries.toSeq.toDF(),
       s"${new File(outDir).getAbsoluteFile.getParent}/media_manifest.parquet")

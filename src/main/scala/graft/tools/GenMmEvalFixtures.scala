@@ -2,7 +2,7 @@ package graft.tools
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** One-off generator for the CROSS-MODAL retrieval-eval fixtures
   * behind `q_retrieval_eval_mm`: a committed (caption-vec, image-vec)
@@ -58,8 +58,7 @@ object GenMmEvalFixtures {
 
   def main(args: Array[String]): Unit = {
     val fixturesDir = args.headOption.getOrElse("fixtures")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(2)
     import spark.implicits._
 
     val manifest = spark.read

@@ -8,7 +8,7 @@ import java.security.MessageDigest
 import javax.imageio.stream.MemoryCacheImageOutputStream
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** One-off generator for the perceptual-near-dup image fixtures behind
   * `multimodal_phash_dedup`: deterministic structured "scenes" (JDK
@@ -127,8 +127,7 @@ object GenPhashFixtures {
       }
     }
 
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(2)
     import spark.implicits._
     FixtureIO.writeSingleFile(spark, entries.toSeq.toDF(),
       s"${new File(outDir).getAbsoluteFile.getParent}/images_dup_manifest.parquet")

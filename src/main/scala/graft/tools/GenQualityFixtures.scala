@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Committed generator for the LABELED text-quality fixture that
@@ -180,9 +180,7 @@ object GenQualityFixtures {
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("fixtures")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(8)
     try {
       import spark.implicits._
       val rows = corpus()

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of a harness SF directory: `GenScale <src>
@@ -36,15 +37,7 @@ object GenScale {
     val Array(src, dst, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-genscale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

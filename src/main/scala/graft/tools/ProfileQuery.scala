@@ -1,45 +1,46 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
+import java.util.concurrent.atomic.AtomicLong
 
-/** Repeat-profiler for a single catalog query: executes
+import graft.{GraftSession, SparkEntry}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+/** The repeat-profiler for catalog queries: executes
   * `SparkEntry.queries(name)` N times through the noop sink (same
-  * materialization as Bench) with GC/JIT telemetry per run, to separate
-  * plan cost from JIT warm-up and environment drift.
+  * session and materialization as Bench) and prints wall, GC, JIT and
+  * Spark job count per run, to separate plan cost from JIT warm-up and
+  * environment drift.
   *
-  * Usage: ProfileQuery <queryName> [runs=4]
+  * Usage: ProfileQuery <name1,name2,...> [runs=4]
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: ProfileQuery <queryName> [runs]")
-    val name = args(0)
+    require(args.nonEmpty, "usage: ProfileQuery <name1,name2,...> [runs]")
+    val names = args(0).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val runs = if (args.length > 1) args(1).toInt else 4
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Mirror Bench's session config exactly (cpus from the same env var,
-    // same codegen cache sizing) — the tool exists to reproduce bench
-    // timings, so a diverging session conf would measure the wrong thing.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
+    val jobs = new AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })
     def gcMillis: Long = ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).sum
     def jitMillis: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
-    (1 to runs).foreach { i =>
-      val g0 = gcMillis; val j0 = jitMillis; val t0 = System.nanoTime()
+    for (name <- names; i <- 1 to runs) {
+      val n0 = jobs.get; val g0 = gcMillis; val j0 = jitMillis; val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      println(f"[profile] $name run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-        f"(gc ${(gcMillis - g0) / 1000.0}%.1f s, jit ${(jitMillis - j0) / 1000.0}%.1f s)")
+      val wall = (System.nanoTime() - t0) / 1e9
+      val gc = (gcMillis - g0) / 1000.0; val jit = (jitMillis - j0) / 1000.0
+      // the listener bus delivers asynchronously: let it drain, outside
+      // the timed window, before reading this run's job count
+      Thread.sleep(200)
+      println(f"[profile] $name run $i: $wall%.2f s " +
+        f"(gc $gc%.1f s, jit $jit%.1f s, jobs ${jobs.get - n0})")
     }
     spark.stop()
   }

@@ -3,6 +3,7 @@ package graft.tools
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.GraftSession
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,14 +37,7 @@ object SelectQuantizerSeeds {
   def main(args: Array[String]): Unit = {
     val sfDirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     val allRows = scala.collection.mutable.ArrayBuffer[(String, String, String, Double)]()

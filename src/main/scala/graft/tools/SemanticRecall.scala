@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.ops.{Dedup, IvfIndex, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall measurement for the SemDeDup operators against the exact
@@ -32,9 +31,7 @@ object SemanticRecall {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val taus = if (args.length > 1) args.drop(1).map(_.toDouble).toSeq
       else Seq(0.35, 0.8, 0.95)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(16)
     spark.sparkContext.setLogLevel("WARN")
     try {
       val emb = Tables.embeddings(spark, sfDir)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ops.{ClassifierTrain, TextAnalysis}
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** One-off trainer for the committed quality-classifier weights behind
@@ -41,9 +41,7 @@ object TrainClassifier {
   def main(args: Array[String]): Unit = {
     val labeledPath = args.headOption.getOrElse("fixtures/labeled_quality.parquet")
     val outDir = if (args.length > 1) args(1) else "fixtures"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(8)
     try {
       val docs = spark.read.parquet(labeledPath)
         .select("doc_id", "klass", "label", "text")

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ops.Pca
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** One-off trainer for the committed PCA basis behind `ann_pca` /
@@ -28,9 +28,7 @@ object TrainPca {
   def main(args: Array[String]): Unit = {
     val srcPath = args.headOption.getOrElse("/root/testdata/sf0.01/embeddings.parquet")
     val outDir = if (args.length > 1) args(1) else "fixtures"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(8)
     try {
       import spark.implicits._
       val emb = spark.read.parquet(srcPath).select(col("embedding"))

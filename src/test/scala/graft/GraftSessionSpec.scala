@@ -1,0 +1,35 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** [[GraftSession]] is the only session builder: no other source file
+  * may build its own session (their settings used to drift apart), and
+  * the suite's shared session carries the factory's settings. */
+class GraftSessionSpec extends SparkSpec {
+
+  private def scalaFiles(root: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  test("only GraftSession.scala builds a SparkSession") {
+    val builder = "SparkSession" + ".builder"
+    val files = scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala")
+    val builders = files.filter(f => Files.readString(f).contains(builder))
+      .map(_.getFileName.toString)
+    assert(builders == Seq("GraftSession.scala"))
+  }
+
+  test("the shared test session carries the factory settings") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
+    val cores = spark.sparkContext.defaultParallelism
+    assert(spark.sparkContext.master == s"local[$cores]")
+    assert(conf.get("spark.sql.shuffle.partitions") == cores.toString)
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+  }
+}

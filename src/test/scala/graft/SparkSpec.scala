@@ -7,17 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ScalaTest suites run sequentially in the forked JVM). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // Suite working set exceeds the default 100-entry compiled-class
-      // cache (wide minhash/simhash aggregates) — see Bench.scala.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

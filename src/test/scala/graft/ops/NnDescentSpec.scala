@@ -56,10 +56,11 @@ class NnDescentSpec extends SparkSpec {
     info(f"kNN-graph recall@5: 1 sweep $r0%.3f, 2 sweeps $r2%.3f, 4 sweeps $r4%.3f")
     assert(r2 >= r0 && r4 >= r2, s"recall must not degrade: $r0 → $r2 → $r4")
     assert(r4 >= 0.35, s"4 sweeps should sit far above the 0.01 random baseline: $r4")
-    // the measured remedy for the hard case (ProfileNnDescent overbuild
-    // table): BUILD WIDER, serve truncated — build-k=10 → recall 0.887,
-    // k=15 → 0.985, k=20 → 0.998 on this same fixture, vs the 0.44
-    // saturation any sweeps×cap budget reaches at build-k=5
+    // the measured remedy for the hard case (SCALING.md "Round 16
+    // addendum 2" overbuild table): BUILD WIDER, serve truncated —
+    // build-k=10 → recall 0.887, k=15 → 0.985, k=20 → 0.998 on this
+    // same fixture, vs the 0.44 saturation any sweeps×cap budget
+    // reaches at build-k=5
     val gWide = NnDescent.knnGraph(nodes, k = 10, iters = 4, sample = 20)
       .filter($"rank" <= 5)
     val rWide = recallOf(gWide, 5)
