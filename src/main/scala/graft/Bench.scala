@@ -624,8 +624,8 @@ object Bench {
       val (sh0, sp0, gc0) = settled
       val t0 = System.nanoTime()
       try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
+        Materialize.scope(SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save())
         val sec = (System.nanoTime() - t0) / 1e9
         settled = byteMetrics.settle()
         (sec, settled._1 - sh0, settled._2 - sp0, settled._3 - gc0)

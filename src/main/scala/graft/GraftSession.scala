@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** The one place a SparkSession is built. Bench, Verify, the export
@@ -7,17 +8,21 @@ import org.apache.spark.sql.SparkSession
   * configuration Verify checks is the one Bench measures.
   *
   * `cores` sizes both the local master and the shuffle width; it
-  * defaults to `SPARK_GRAFT_CPUS`, else every core the JVM sees.
-  * `SPARK_GRAFT_MASTER` replaces the local master for deployments.
+  * defaults to `SPARK_GRAFT_CPUS`, else every core the JVM sees. A
+  * master or shuffle width the launch already set (spark-submit's
+  * `--master` and `--conf`) is kept.
   */
 object GraftSession {
   private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  private[graft] def sizing(launch: SparkConf, cores: Int): Seq[(String, String)] =
+    Seq("spark.master" -> s"local[$cores]", "spark.sql.shuffle.partitions" -> cores.toString)
+      .filterNot { case (key, _) => launch.contains(key) }
+
   def apply(cores: Int = defaultCores): SparkSession =
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"))
-      .config("spark.sql.shuffle.partitions", cores.toString)
+    sizing(new SparkConf(), cores)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       // The catalog's wide aggregates (64 minhash min-aggs, 60 simhash
       // bit-sums) each generate huge codegen classes; the default
       // 100-entry compiled-class cache evicts them between interleaved

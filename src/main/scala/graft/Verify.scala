@@ -12,19 +12,13 @@ object Verify {
     // changed physical types cost a full round once (round 9).
     SchemaGuard.warnOnDrift(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    // Gate SFs produce tiny results, where one output file per query
-    // keeps the oracle compare simple; at larger verify scales that
-    // one-task write becomes the harness bottleneck — set
-    // SPARK_GRAFT_VERIFY_PARTITIONS=0 to keep each plan's own output
-    // partitioning (the compare sorts rows, so file count is free).
-    val outParts = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PARTITIONS", "1").toInt
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .foreach { case (name, fn) =>
       try {
-        val res = fn(spark, sfDir)
-        (if (outParts > 0) res.coalesce(outParts) else res)
-          .write.mode("overwrite").parquet(s"$outDir/$name")
+        // one output file per query keeps the oracle compare simple
+        Materialize.scope(fn(spark, sfDir).coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/$name"))
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -84,42 +85,36 @@ object Bpe {
 
   /** Train `nMerges` merges. Stops early if the vocabulary runs out of
     * adjacent pairs (every word fused to one symbol). */
-  def train(docs: DataFrame, textCol: String, nMerges: Int): BpeModel = {
-    val base = wordCounts(docs, textCol)
-      .withColumn("seg", charSeg(col("word")))
-      .persist()
-    var segCol: Column = col("seg")
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var step = 1
-    var exhausted = false
-    while (step <= nMerges && !exhausted) {
-      val best = pairCounts(base, segCol)
-        .orderBy(col("c").desc, col("w1"), col("w2"))
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (w1, w2, c) = (best.head.getString(0), best.head.getString(1),
-          best.head.getLong(2))
-        val merged = w1 + w2
-        merges += Merge(step, w1, w2, merged, c)
-        // the evolving segmentation is the ONE merge-table-as-data
-        // kernel over the persisted base — plan size O(1) in the step
-        // count, so training to a 32k-merge vocabulary never grows the
-        // expression tree (the fold form is step-linear)
-        segCol = segmentCol(col("word"), merges.toSeq)
-        step += 1
+  def train(docs: DataFrame, textCol: String, nMerges: Int): BpeModel =
+    Materialize.cached(wordCounts(docs, textCol)
+        .withColumn("seg", charSeg(col("word")))) { base =>
+      var segCol: Column = col("seg")
+      val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
+      var step = 1
+      var exhausted = false
+      while (step <= nMerges && !exhausted) {
+        val best = pairCounts(base, segCol)
+          .orderBy(col("c").desc, col("w1"), col("w2"))
+          .limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val (w1, w2, c) = (best.head.getString(0), best.head.getString(1),
+            best.head.getLong(2))
+          val merged = w1 + w2
+          merges += Merge(step, w1, w2, merged, c)
+          // the evolving segmentation is the ONE merge-table-as-data
+          // kernel over the persisted base — plan size O(1) in the step
+          // count, so training to a 32k-merge vocabulary never grows the
+          // expression tree (the fold form is step-linear)
+          segCol = segmentCol(col("word"), merges.toSeq)
+          step += 1
+        }
       }
+      // Materialize the final segmentation (vocab-sized — one cheap job):
+      // vocabSeg keeps no lineage back to the training cache.
+      val vocabSeg = Materialize(base.select(col("word"), col("cnt"), segCol.as("seg")))
+      BpeModel(merges.toSeq, vocabSeg)
     }
-    // Materialize the final segmentation (vocab-sized — one cheap job)
-    // so the training cache can be RELEASED here instead of living for
-    // the session: vocabSeg keeps no lineage back to `base`, and every
-    // train call (batch queries, per-epoch stream model builds) leaves
-    // the block store as it found it.
-    val vocabSeg = base.select(col("word"), col("cnt"), segCol.as("seg"))
-      .localCheckpoint()
-    base.unpersist()
-    BpeModel(merges.toSeq, vocabSeg)
-  }
 
   /** The merge table as a DataFrame — the `text_bpe_train` surface. */
   def mergesDf(spark: SparkSession, merges: Seq[Merge]): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,9 +56,7 @@ object ClassifierTrain {
     * Returns the dense double weight vector (length `dim`). */
   def fit(spark: SparkSession, feats: DataFrame, labels: DataFrame,
       dim: Int = 1024, epochs: Int = 60, lr: Double = 40.0): Array[Double] = {
-    val f = feats.persist()
-    val l = labels.persist()
-    try {
+    Materialize.cached(feats)(f => Materialize.cached(labels) { l =>
       val nDocs = l.count().toDouble
       require(nDocs > 0, "no labeled docs")
       val w = new Array[Double](dim)
@@ -83,7 +82,7 @@ object ClassifierTrain {
         }
       }
       w
-    } finally { f.unpersist(false); l.unpersist(false); () }
+    })
   }
 
   /** Fraction of `labels` docs the weight vector classifies correctly

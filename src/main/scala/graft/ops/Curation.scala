@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -79,7 +80,7 @@ object Curation {
     // inside [[Dedup.dedupBySimhash]] — materialize once so the
     // classifier scoring scan (the chain's CPU-heavy leaf) runs once
     // per invocation instead of once per downstream reference.
-    val curated = curate(docs, idCol, textCol, minQuality).localCheckpoint()
+    val curated = Materialize(curate(docs, idCol, textCol, minQuality))
     Dedup.dedupBySimhash(curated, idCol, textCol, maxDist,
       tokenHash = Dedup.md5TokenHash60, bits = 60, bands = 4)
   }
@@ -142,22 +143,16 @@ object Curation {
       n: Int = 8, fpp: Double = 0.01): DataFrame = {
     // The bench shingle relation feeds three consumers (the sizing
     // count, the bloom build, the exact verify join); the premise of
-    // this function is that it is BIG, so derive it once: persist, let
-    // the count materialize the cache, and eagerly checkpoint the
-    // (tiny) contaminated-id set so the cache can be dropped before
-    // the lazy result escapes.
-    val benchSh = Dedup.shingleHashes(bench, benchIdCol, benchTextCol, n)
-      .select(col("shingle")).distinct().persist()
-    try {
-      val contaminated = bloomCandidates(corpus, idCol, textCol, benchSh, n, fpp)
+    // this function is that it is BIG, so derive it once, and
+    // checkpoint the (tiny) contaminated-id set the result reads.
+    val contaminated = Materialize.cached(
+        Dedup.shingleHashes(bench, benchIdCol, benchTextCol, n)
+          .select(col("shingle")).distinct()) { benchSh =>
+      Materialize(bloomCandidates(corpus, idCol, textCol, benchSh, n, fpp)
         .join(benchSh, Seq("shingle"), "left_semi")
-        .select(col("id").as(idCol)).distinct()
-        .localCheckpoint(true)
-      corpus.join(contaminated, Seq(idCol), "left_anti")
-    } finally {
-      benchSh.unpersist(false)
-      ()
+        .select(col("id").as(idCol)).distinct())
     }
+    corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 
   /** [[decontaminateBloom]]'s pre-filter stage: corpus (id, shingle)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -72,15 +73,9 @@ object Dedup {
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int = 3,
       maxShingleFreq: Int = 1000): DataFrame = {
     // The shingle relation feeds four consumers (sizes, frequency cap,
-    // both self-join sides) — persist it for the computation, then
-    // localCheckpoint the (small) result eagerly so the persisted
-    // intermediate can be dropped before returning. A leaked cache here
-    // would outlive the call and CacheManager would substitute it into
-    // unrelated later plans over the same parquet (see minhashLshPairs,
-    // which pioneered this persist → localCheckpoint(eager) → unpersist
-    // shape).
-    val sh = shingles(df, idCol, textCol, n).persist()
-    try {
+    // both self-join sides): cache it for the computation and checkpoint
+    // the (small) result.
+    Materialize.cached(shingles(df, idCol, textCol, n)) { sh =>
       val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
       // Frequency cap: a shingle occurring in k docs contributes k² join
       // rows; capping drops only stop-shingles that carry no dedup signal.
@@ -91,14 +86,13 @@ object Dedup {
           col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
         .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
         .agg(count(lit(1)).as("inter"))
-      inter
+      Materialize(inter
         .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("sz", "sz1"), Seq("id1"))
         .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("sz", "sz2"), Seq("id2"))
         .select(col("id1"), col("id2"),
           (col("inter").cast("double") /
-            (col("sz1") + col("sz2") - col("inter")).cast("double")).as("jaccard"))
-        .localCheckpoint(true)
-    } finally { sh.unpersist(false); () }
+            (col("sz1") + col("sz2") - col("inter")).cast("double")).as("jaccard")))
+    }
   }
 
   /** Deterministic MinHash parameters (large prime; a/b from a fixed
@@ -181,9 +175,8 @@ object Dedup {
     * agreement fold runs on |pairs| rows, never the corpus. */
   def minhashEstimates(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 64, n: Int = 3): DataFrame = {
-    val pairs = prefixJaccardJoin(df, idCol, textCol, threshold, n)
-      .select(col("id1"), col("id2"), col("jaccard"))
-      .localCheckpoint(true)
+    val pairs = Materialize(prefixJaccardJoin(df, idCol, textCol, threshold, n)
+      .select(col("id1"), col("id2"), col("jaccard")))
     // signatures only for pair PARTICIPANTS (duplicate-relation-sized,
     // the newVsCorpusPairs candIds stance) — the audit never pays a
     // corpus-wide 64-aggregate signature pass for docs no pair needs
@@ -239,24 +232,19 @@ object Dedup {
     // Jaccard — correctness does not depend on the distinct.)
     // Shingles are carried as 64-bit hashes (codegen'd NGramHashesExpr),
     // never strings: the dedup shuffles move fixed-width longs no matter
-    // how large documents are. The small verified-pairs result is
-    // materialized eagerly so the persisted intermediates can be dropped
-    // before returning — at warehouse scale these would be written
-    // shingle/signature tables.
-    val sh = shingleHashes(df, idCol, textCol, n).persist()
-    val banded = bandedBuckets(sh, numHashes, bandsN).persist() // both self-join sides
-    try {
+    // how large documents are. The shingles and the band relation (both
+    // self-join sides) are cached for the computation and the small
+    // verified-pairs result is checkpointed — at warehouse scale these
+    // would be written shingle/signature tables.
+    Materialize.cached(shingleHashes(df, idCol, textCol, n)) { sh =>
+    Materialize.cached(bandedBuckets(sh, numHashes, bandsN)) { banded =>
       val cands = banded.as("x").join(banded.as("y"),
           col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
             col("x.id") < col("y.id"))
         .select(col("x.id").as("id1"), col("y.id").as("id2"))
         .distinct()
-      verifyPairs(sh, cands, threshold).localCheckpoint(true)
-    } finally {
-      banded.unpersist(false)
-      sh.unpersist(false)
-      ()
-    }
+      Materialize(verifyPairs(sh, cands, threshold))
+    }}
   }
 
   /** Fused signature+banding aggregation: ONE groupBy emits the
@@ -465,15 +453,14 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16, n: Int = 3,
       threshold: Double = 0.5, maxIters: Int = 10): DataFrame = {
     val b = if (bands > 0) bands else lshParamsFor(threshold, numHashes)._1
-    val sh = shingleHashes(df, idCol, textCol, n).persist()
-    try {
+    Materialize.cached(shingleHashes(df, idCol, textCol, n)) { sh =>
       val banded = bandedBuckets(sh, numHashes, b)
       val verified = verifyPairs(sh,
           starEdges(banded).toDF("id1", "id2"), threshold)
         .select(col("id1").as("id"), col("id2").as("root"))
       componentsFromStar(df.select(col(idCol).as("id")).distinct(),
         verified, maxIters)
-    } finally { sh.unpersist(false); () }
+    }
   }
 
   /** Edge count under which [[componentsFromStar]] resolves components
@@ -511,8 +498,7 @@ object Dedup {
   def componentsFromStar(ids: DataFrame, star: DataFrame,
       maxIters: Int = 10,
       localEdgeThreshold: Long = ComponentsLocalEdgeThreshold): DataFrame = {
-    val st = star.persist()
-    try {
+    Materialize.cached(star) { st =>
       // Size-aware dispatch — the thing that makes small-graph latency
       // AND 100 TB scale both work. The component GRAPH (verified
       // near-dup edges) is bounded by duplicate structure, orders of
@@ -550,61 +536,61 @@ object Dedup {
         val spark = ids.sparkSession
         import spark.implicits._
         val comps = compMap.toSeq.toDF("id", "component")
-        return ids.join(broadcast(comps), Seq("id"), "left")
+        ids.join(broadcast(comps), Seq("id"), "left")
           .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+      } else {
+        // Both edge directions from one pass — a union of `st` with its
+        // own swapped projection trips Catalyst's union constraint
+        // rewrite on some input lineages (self-union attribute aliasing).
+        val edges = st.select(explode(array(
+            struct(col("id").cast("long").as("id"), col("root").cast("long").as("root")),
+            struct(col("root").cast("long").as("id"), col("id").cast("long").as("root"))))
+            .as("e"))
+          .select(col("e.id").as("id"), col("e.root").as("root"))
+        var labels = Materialize(ids.withColumn("label", col("id")))
+        // Convergence detection: labels are node ids with the invariant
+        // label(x) <= x, and every step takes a min — so per-id labels are
+        // monotonically non-increasing and the label SUM is strictly
+        // decreasing iff anything changed. Comparing exact sums (decimal —
+        // id magnitudes are unconstrained) costs one tiny aggregation over
+        // the just-checkpointed relation, instead of the join-with-previous
+        // + filter + count job the first version ran each iteration.
+        def labelSum(df: DataFrame): java.math.BigDecimal =
+          df.agg(sum(col("label").cast("decimal(38,0)"))).first().getDecimal(0)
+        var prevSum = labelSum(labels)
+        var converged = false
+        var iter = 0
+        while (!converged && iter < maxIters) {
+          // min over neighbors' labels, then least() with the node's own —
+          // deliberately NOT formulated as `labels UNION viaEdges` →
+          // groupBy: both union children would share the `labels`
+          // attributes, which Catalyst's union constraint rewrite rejects
+          // on some lineages (key-not-found during rewriteConstraints).
+          val nbrMin = edges.join(labels, edges("root") === labels("id"))
+            .select(edges("id").as("id"), col("label"))
+            .groupBy("id").agg(min(col("label")).as("_nlabel"))
+          val relabeled = labels
+            .join(nbrMin.withColumnRenamed("id", "_nid"),
+              col("id") === col("_nid"), "left")
+            .select(col("id"),
+              least(col("label"), coalesce(col("_nlabel"), col("label"))).as("label"))
+          // pointer jumping: follow the label's own label (labels are ids
+          // of the same node set, so the self-join always resolves; label
+          // values only ever decrease, so label(label(id)) <= label(id))
+          val next = Materialize(relabeled.as("a")
+            .join(relabeled.select(col("id").as("_lid"), col("label").as("_llabel")),
+              col("a.label") === col("_lid"))
+            .select(col("a.id").as("id"), col("_llabel").as("label")))
+          val newSum = labelSum(next)
+          Materialize.release(labels)
+          labels = next
+          converged = newSum.compareTo(prevSum) == 0
+          prevSum = newSum
+          iter += 1
+        }
+        labels.select(col("id"), col("label").as("component"))
       }
-
-      // Both edge directions from one pass — a union of `st` with its
-      // own swapped projection trips Catalyst's union constraint
-      // rewrite on some input lineages (self-union attribute aliasing).
-      val edges = st.select(explode(array(
-          struct(col("id").cast("long").as("id"), col("root").cast("long").as("root")),
-          struct(col("root").cast("long").as("id"), col("id").cast("long").as("root"))))
-          .as("e"))
-        .select(col("e.id").as("id"), col("e.root").as("root"))
-      var labels = ids.withColumn("label", col("id")).localCheckpoint(true)
-      // Convergence detection: labels are node ids with the invariant
-      // label(x) <= x, and every step takes a min — so per-id labels are
-      // monotonically non-increasing and the label SUM is strictly
-      // decreasing iff anything changed. Comparing exact sums (decimal —
-      // id magnitudes are unconstrained) costs one tiny aggregation over
-      // the just-checkpointed relation, instead of the join-with-previous
-      // + filter + count job the first version ran each iteration.
-      def labelSum(df: DataFrame): java.math.BigDecimal =
-        df.agg(sum(col("label").cast("decimal(38,0)"))).first().getDecimal(0)
-      var prevSum = labelSum(labels)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        // min over neighbors' labels, then least() with the node's own —
-        // deliberately NOT formulated as `labels UNION viaEdges` →
-        // groupBy: both union children would share the `labels`
-        // attributes, which Catalyst's union constraint rewrite rejects
-        // on some lineages (key-not-found during rewriteConstraints).
-        val nbrMin = edges.join(labels, edges("root") === labels("id"))
-          .select(edges("id").as("id"), col("label"))
-          .groupBy("id").agg(min(col("label")).as("_nlabel"))
-        val relabeled = labels
-          .join(nbrMin.withColumnRenamed("id", "_nid"),
-            col("id") === col("_nid"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("_nlabel"), col("label"))).as("label"))
-        // pointer jumping: follow the label's own label (labels are ids
-        // of the same node set, so the self-join always resolves; label
-        // values only ever decrease, so label(label(id)) <= label(id))
-        val next = relabeled.as("a")
-          .join(relabeled.select(col("id").as("_lid"), col("label").as("_llabel")),
-            col("a.label") === col("_lid"))
-          .select(col("a.id").as("id"), col("_llabel").as("label"))
-          .localCheckpoint(true)
-        val newSum = labelSum(next)
-        labels = next
-        converged = newSum.compareTo(prevSum) == 0
-        prevSum = newSum
-        iter += 1
-      }
-      labels.select(col("id"), col("label").as("component"))
-    } finally { st.unpersist(false); () }
+    }
   }
 
   /** SimHash cluster dedup: the [[minhashLshComponents]] shape over
@@ -620,8 +606,7 @@ object Dedup {
     require(bits % bands == 0, s"bits $bits not divisible by $bands bands")
     val bandBits = bits / bands
     val mask = (1L << bandBits) - 1
-    val sigs = simhashSignatures(df, idCol, textCol, tokenHash, bits).persist()
-    try {
+    Materialize.cached(simhashSignatures(df, idCol, textCol, tokenHash, bits)) { sigs =>
       val banded = sigs.select(col("id"),
         posexplode(array((0 until bands).map(b =>
           shiftright(col("sig"), b * bandBits).bitwiseAND(mask)): _*)))
@@ -633,7 +618,7 @@ object Dedup {
         .select(col("id"), col("root"))
       componentsFromStar(df.select(col(idCol).as("id")).distinct(),
         verified, maxIters)
-    } finally { sigs.unpersist(false); () }
+    }
   }
 
   /** The corpus band index for INCREMENTAL ingestion dedup: (id, band,
@@ -675,13 +660,11 @@ object Dedup {
       newDocs: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, n: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    val newSh = shingleHashes(newDocs, idCol, textCol, n).persist()
-    val cands = index.toDF("cid", "band", "bucket")
+    Materialize.cached(shingleHashes(newDocs, idCol, textCol, n)) { newSh =>
+    Materialize.cached(index.toDF("cid", "band", "bucket")
       .join(bandedBuckets(newSh, numHashes, bands).toDF("nid", "band", "bucket"),
         Seq("band", "bucket"))
-      .select(col("cid").as("id1"), col("nid").as("id2")).distinct()
-      .persist()
-    try {
+      .select(col("cid").as("id1"), col("nid").as("id2")).distinct()) { cands =>
       val candIds = cands.select(col("id1").as(idCol)).distinct()
       val corpusSh = shingleHashes(
         corpus.join(broadcast(candIds), Seq(idCol), "left_semi"),
@@ -696,14 +679,9 @@ object Dedup {
         .union(newSh.select(tagged(1, col("id")).as("id"), col("shingle")))
       val taggedCands = cands.select(
         tagged(0, col("id1")).as("id1"), tagged(1, col("id2")).as("id2"))
-      verifyPairs(taggedSh, taggedCands, threshold)
-        .select(col("id1.v").as("id1"), col("id2.v").as("id2"), col("jaccard"))
-        .localCheckpoint(true)
-    } finally {
-      cands.unpersist(false)
-      newSh.unpersist(false)
-      ()
-    }
+      Materialize(verifyPairs(taggedSh, taggedCands, threshold)
+        .select(col("id1.v").as("id1"), col("id2.v").as("id2"), col("jaccard")))
+    }}
   }
 
   /** Keep one representative (the component's min id) per near-dup
@@ -743,24 +721,22 @@ object Dedup {
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3): DataFrame = {
-    // Signatures feed both sides of the banding self-join — persist once
-    // and return the (small) pair set eagerly, same shape as the
+    // Signatures feed both sides of the banding self-join — cache them
+    // once and checkpoint the (small) pair set, same shape as the
     // MinHash-LSH pipeline.
-    val sigs = simhashSignatures(df, idCol, textCol).persist()
-    try {
+    Materialize.cached(simhashSignatures(df, idCol, textCol)) { sigs =>
       val banded = sigs.select(col("id"), col("sig"),
         posexplode(array((0 until 4).map(b =>
           shiftright(col("sig"), b * 16).bitwiseAND(0xffffL)): _*)))
         .toDF("id", "sig", "band", "bucket")
-      banded.as("x").join(banded.as("y"),
+      Materialize(banded.as("x").join(banded.as("y"),
           col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
             col("x.id") < col("y.id"))
         .select(col("x.id").as("id1"), col("y.id").as("id2"),
           hamming(col("x.sig"), col("y.sig")).as("dist"))
         .distinct()
-        .filter(col("dist") <= maxDist)
-        .localCheckpoint(true)
-    } finally { sigs.unpersist(false); () }
+        .filter(col("dist") <= maxDist))
+    }
   }
 
   /** SemDeDup-style semantic drop list (Abbas et al. 2023, "SemDeDup:
@@ -930,8 +906,7 @@ object Dedup {
     // [[shingleHashes]] trade the whole LSH path already makes); the
     // rarity order becomes (freq, hash) — a different but equally
     // total global order, which is all completeness needs.
-    val sh = shingleHashes(df, idCol, textCol, n).persist()
-    try {
+    Materialize.cached(shingleHashes(df, idCol, textCol, n)) { sh =>
       val prefix = rarityPrefix(sh, threshold)
       // PPJoin's POSITIONAL filter (Xiao et al. WWW'08 §3.2), lossless:
       // a pair sharing the prefix shingle at ranks (posA, posB) has at
@@ -978,13 +953,12 @@ object Dedup {
         .join(bSets.select(col("id").as("id2"), col("set").as("setB"),
           col("sz").as("sz2")), Seq("id2"))
         .withColumn("inter", size(array_intersect(col("setA"), col("setB"))))
-      inter
+      Materialize(inter
         .select(col("id1"), col("id2"),
           (col("inter").cast("double") /
             (col("sz1") + col("sz2") - col("inter")).cast("double")).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .localCheckpoint(true)
-    } finally { sh.unpersist(false); () }
+        .filter(col("jaccard") >= threshold))
+    }
   }
 
   /** Exact CONTAINMENT similarity join — the ASYMMETRIC twin of
@@ -1023,8 +997,7 @@ object Dedup {
       maxBroadcastDocSetBytes: Long = DocSetBroadcastMaxBytes): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val sh = shingleHashes(df, idCol, textCol, n).persist()
-    try {
+    Materialize.cached(shingleHashes(df, idCol, textCol, n)) { sh =>
       val prefix = rarityPrefix(sh, threshold)
       val cands = prefix.as("a").join(sh.as("b"),
           col("a.shingle") === col("b.shingle") && col("a.id") =!= col("b.id"))
@@ -1034,7 +1007,7 @@ object Dedup {
         .agg(sort_array(collect_list(col("shingle"))).as("set"),
           count(lit(1)).as("sz"))
       val bSets = maybeBroadcastDocSets(sh, docSets, maxBroadcastDocSetBytes)
-      cands
+      Materialize(cands
         .join(bSets.select(col("id").as("id1"),
           col("set").as("setA"), col("sz").as("sz1")), Seq("id1"))
         .join(bSets.select(col("id").as("id2"),
@@ -1043,9 +1016,8 @@ object Dedup {
         .select(col("id1"), col("id2"),
           (col("inter").cast("double") / col("sz1").cast("double"))
             .as("containment"), col("sz1"), col("sz2"))
-        .filter(col("containment") >= threshold)
-        .localCheckpoint(true)
-    } finally { sh.unpersist(false); () }
+        .filter(col("containment") >= threshold))
+    }
   }
 
   /** The on-disk CONTAINMENT index — the corpus's full shingle relation
@@ -1100,8 +1072,7 @@ object Dedup {
       n: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val newSh = shingleHashes(newDocs, idCol, textCol, n).persist()
-    try {
+    Materialize.cached(shingleHashes(newDocs, idCol, textCol, n)) { newSh =>
       val batchShingles = newSh.select("shingle").distinct()
       val freq = index.join(batchShingles, Seq("shingle"), "left_semi")
         .groupBy("shingle").agg(count(lit(1)).as("freq"))
@@ -1124,16 +1095,15 @@ object Dedup {
         .join(broadcast(candIds), Seq("id"), "left_semi")
         .groupBy("id")
         .agg(sort_array(collect_list(col("shingle"))).as("setB"))
-      cands
+      Materialize(cands
         .join(newSets.withColumnRenamed("id", "id1"), Seq("id1"))
         .join(corpSets.withColumnRenamed("id", "id2"), Seq("id2"))
         .withColumn("inter", size(array_intersect(col("setA"), col("setB"))))
         .select(col("id1"), col("id2"),
           (col("inter").cast("double") / col("sz1").cast("double"))
             .as("containment"))
-        .filter(col("containment") >= threshold)
-        .localCheckpoint(true)
-    } finally { newSh.unpersist(false); () }
+        .filter(col("containment") >= threshold))
+    }
   }
 
   /** The on-disk EXACT-JACCARD prefix index — [[writeContainmentIndex]]'s
@@ -1151,8 +1121,7 @@ object Dedup {
     * convention (the [[bandIndex]] stance). */
   def writeJaccardIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, n: Int = 3): Unit = {
-    val sh = shingleHashes(corpus, idCol, textCol, n).persist()
-    try {
+    Materialize.cached(shingleHashes(corpus, idCol, textCol, n)) { sh =>
       val freq = sh.groupBy("shingle").agg(count(lit(1)).as("freq"))
       val w = Window.partitionBy(col("id")).orderBy(col("freq"), col("shingle"))
       val wAll = Window.partitionBy(col("id"))
@@ -1162,7 +1131,7 @@ object Dedup {
         .select(col("id"), col("shingle"), col("sz"), col("pos"))
         .write.mode("overwrite").parquet(s"$path/postings")
       freq.write.mode("overwrite").parquet(s"$path/freq")
-    } finally { sh.unpersist(false); () }
+    }
   }
 
   /** Probe a NEW batch against a [[writeJaccardIndex]] store: every
@@ -1195,8 +1164,7 @@ object Dedup {
       s"threshold must be in (0, 1], got $threshold")
     val postings = spark.read.parquet(s"$indexPath/postings")
     val freq = spark.read.parquet(s"$indexPath/freq")
-    val newSh = shingleHashes(newDocs, idCol, textCol, n).persist()
-    try {
+    Materialize.cached(shingleHashes(newDocs, idCol, textCol, n)) { newSh =>
       val batchShingles = newSh.select("shingle").distinct()
       val frozenFreq = freq.join(batchShingles, Seq("shingle"), "left_semi")
       val w = Window.partitionBy(col("id")).orderBy(col("freq"), col("shingle"))
@@ -1227,7 +1195,7 @@ object Dedup {
       val bSets = newSh.groupBy("id")
         .agg(sort_array(collect_list(col("shingle"))).as("setB"),
           count(lit(1)).as("sz2"))
-      cands
+      Materialize(cands
         .join(cSets.withColumnRenamed("id", "id1"), Seq("id1"))
         .join(bSets.withColumnRenamed("id", "id2"), Seq("id2"))
         .withColumn("inter", size(array_intersect(col("setA"), col("setB"))))
@@ -1235,9 +1203,8 @@ object Dedup {
           (col("inter").cast("double") /
             (col("sz1") + col("sz2") - col("inter")).cast("double"))
             .as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .localCheckpoint(true)
-    } finally { newSh.unpersist(false); () }
+        .filter(col("jaccard") >= threshold))
+    }
   }
 
   /** The ACTIONABLE form of [[prefixContainmentJoin]]: drop every
@@ -1476,10 +1443,9 @@ object Dedup {
     // the surviving-bucket probe, and the RETURNED DataFrames re-derive
     // their subtrees per action — checkpoint so tokenize+md5+sign runs
     // once, not once per consumer
-    val probeBlocks = simhashBlocks(
+    val probeBlocks = Materialize(simhashBlocks(
         simhashSignatures(newDocs, idCol, textCol, tokenHash, bits),
-        bits, blocks)
-      .localCheckpoint()
+        bits, blocks))
     val probeOcc = probeBlocks.groupBy(col("b"), col("key"))
       .agg(count(lit(1)).as("np"))
     val storeOcc = storeBlocks

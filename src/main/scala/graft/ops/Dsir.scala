@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -105,24 +106,20 @@ object Dsir {
             (lit(tN) + lit(buckets.toLong)).cast("double")) -
           log((coalesce(col("rc"), lit(0L)) + lit(1L)).cast("double") /
             (lit(rN) + lit(buckets.toLong)).cast("double"))).as("llr"))
-      .localCheckpoint()
-    DsirModel(ratios, buckets, tN, rN)
+    DsirModel(Materialize(ratios), buckets, tN, rN)
   }
 
-  /** Train on `docs` inline: explode once, persist the feature relation
-    * for the duration of training (raw agg + target agg + two collects
-    * all read the cache, not four re-explodes), then release it — the
-    * returned model's ratios are checkpointed, so nothing retains the
-    * lineage. Production pipelines should [[writeFeatures]] at ingest
-    * and call [[trainFeatures]]/[[logWeightsFeatures]] on the store. */
+  /** Train on `docs` inline: explode once and cache the feature
+    * relation for training (raw agg + target agg + two collects all read
+    * the cache, not four re-explodes). Production pipelines should
+    * [[writeFeatures]] at ingest and call
+    * [[trainFeatures]]/[[logWeightsFeatures]] on the store. */
   def train(docs: DataFrame, idCol: String, textCol: String,
       targetFilter: Column, buckets: Int): DsirModel = {
-    val feats = hashedFeatures(docs, idCol, textCol, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tIds = docs.filter(targetFilter)
       .select(col(idCol).as("id")).distinct()
-    try trainFeatures(feats, tIds, buckets)
-    finally feats.unpersist()
+    Materialize.cached(hashedFeatures(docs, idCol, textCol, buckets))(
+      trainFeatures(_, tIds, buckets))
   }
 
   /** The model frozen to plain arrays — serialization-safe and free of

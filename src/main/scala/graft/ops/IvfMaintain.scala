@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -135,9 +136,9 @@ object IvfMaintain {
       return MaintainResult(psi, cosDrop, retrained = false)
 
     // retrain at the committed protocol, epoch-folded seed (replay ≡)
-    val corpus = spark.read.parquet(s"$path/live/blocks")
-      .select(col("batch"), col("id"), col("vec"))
-      .localCheckpoint() // sever lineage from the tree about to swap out
+    // sever lineage from the tree about to swap out
+    val corpus = Materialize(spark.read.parquet(s"$path/live/blocks")
+      .select(col("batch"), col("id"), col("vec")))
     val newCents = IvfIndex.train(corpus, "id", "vec", cents.length, iters,
       seed = s"$seed-r$epoch")
     // a tmp surviving recovery is a crashed FIRST swap's partial write
@@ -146,15 +147,16 @@ object IvfMaintain {
     val p = (s: String) => new org.apache.hadoop.fs.Path(s)
     if (hfs.exists(p(s"$path/.live-tmp"))) hfs.delete(p(s"$path/.live-tmp"), true)
     writeQuantizer(spark, newCents, s"$path/.live-tmp/quantizer")
-    val reassigned = corpus
-      .withColumn("cell", IvfIndex.bestCell(col("vec"), newCents))
-      .localCheckpoint()
+    val reassigned = Materialize(corpus
+      .withColumn("cell", IvfIndex.bestCell(col("vec"), newCents)))
+    Materialize.release(corpus)
     reassigned
       .repartition(col("batch"), col("cell"))
       .write.mode("overwrite").partitionBy("batch", "cell")
       .parquet(s"$path/.live-tmp/blocks")
     // per-epoch quality stats are quantizer-relative — rewrite them all
     writeStats(reassigned, newCents, s"$path/.live-tmp/stats")
+    Materialize.release(reassigned)
     val live = p(s"$path/live")
     if (hfs.exists(live)) hfs.rename(live, p(s"$path/.live-aside"))
     hfs.rename(p(s"$path/.live-tmp"), live)
@@ -183,15 +185,15 @@ object IvfMaintain {
     * live root (both overwrite-by-epoch). */
   private def writeEpoch(rows: DataFrame, cents: Array[Array[Double]],
       liveDir: String, epoch: Long): Unit = {
-    val assigned = rows.select(col("id"), col("vec"))
-      .withColumn("cell", IvfIndex.bestCell(col("vec"), cents))
-      .localCheckpoint()
+    val assigned = Materialize(rows.select(col("id"), col("vec"))
+      .withColumn("cell", IvfIndex.bestCell(col("vec"), cents)))
     assigned
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$liveDir/blocks/batch=$epoch")
     writeStats(assigned.withColumn("batch", lit(epoch)), cents,
       s"$liveDir/stats", epochLeaf = Some(epoch))
+    Materialize.release(assigned)
   }
 
   /** Per-epoch mean best-cell cosine rows (batch, n, mean_bc_cos) —

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -87,23 +88,28 @@ object NnDescent {
     * Random jumps restore the paper's uniform init while staying an
     * exact function of (seed, rank, j) the oracle replays. Duplicate
     * jump targets collapse (DISTINCT), so a node may start with < k
-    * neighbors — the first sweep's top-k refills. */
-  private[ops] def randomInit(nodes: DataFrame, k: Int, seed: String): DataFrame = {
+    * neighbors — the first sweep's top-k refills.
+    *
+    * `use` receives the lazy init edges; the rank relation they read is
+    * released when it returns. */
+  private[ops] def randomInit[R](nodes: DataFrame, k: Int, seed: String)(
+      use: DataFrame => R): R = {
     // The rank relation feeds the jump derivation AND the r2-lookup join
     // below — materialize once so the bucketed rank window (a corpus
     // pass) isn't replayed per reference.
     val (ranked0, n) = rankByHash(nodes, seed)
-    val ranked = ranked0.localCheckpoint()
     require(n >= 2, s"NN-Descent needs >= 2 nodes (jump ∈ [1, n−1]); got $n")
+    val ranked = Materialize(ranked0)
     val offDf = nodes.sparkSession.range(1, k + 1).toDF("j")
-    ranked.crossJoin(broadcast(offDf))
+    try use(ranked.crossJoin(broadcast(offDf))
       .withColumn("jump", pmod(Dedup.md5TokenHash60(concat(lit(seed),
         col("r").cast("string"), lit("_"), col("j").cast("string"))),
         lit(n - 1)) + 1)
       .withColumn("r2", pmod(col("r") - 1 + col("jump"), lit(n)) + 1)
       .join(ranked.select(col("r").as("r2"), col("id").as("nbr")), Seq("r2"))
       .filter(col("id") =!= col("nbr"))
-      .select("id", "nbr").distinct()
+      .select("id", "nbr").distinct())
+    finally Materialize.release(ranked)
   }
 
   /** One NN-Descent sweep over the scored edge set (id, nbr, score):
@@ -171,21 +177,20 @@ object NnDescent {
       k: Int, iters: Int, sample: Int = 0, seed: String = "nnd"): DataFrame = {
     require(iters >= 1 && k >= 1)
     val cap = if (sample > 0) sample else 2 * k
-    val deltaInit = randomInit(allNodes, k, seed)
-      .join(delta.select(col("id")), Seq("id"), "left_semi")
-      .join(allNodes.select(col("id"), col("vec")), Seq("id"))
-      .join(allNodes.select(col("id").as("nbr"), col("vec").as("nvec")), Seq("nbr"))
-      .select(col("id"), col("nbr"), cosRounded(col("vec"), col("nvec")).as("score"))
-    val seeded = graph.select(col("id"), col("nbr"), col("score"))
-      .union(deltaInit)
-      .groupBy("id", "nbr").agg(max("score").as("score"))
-    var g = Skew.saltedTopK(seeded, Seq("id"),
-        Seq(col("score").desc, col("nbr").asc), k, saltBy = col("nbr"))
-      .select(col("id"), col("nbr"), col("score"), col("rank"))
-    (1 to iters).foreach { _ =>
-      g = sweep(g, allNodes, k, cap, seed).localCheckpoint()
+    randomInit(allNodes, k, seed) { init =>
+      val deltaInit = init
+        .join(delta.select(col("id")), Seq("id"), "left_semi")
+        .join(allNodes.select(col("id"), col("vec")), Seq("id"))
+        .join(allNodes.select(col("id").as("nbr"), col("vec").as("nvec")), Seq("nbr"))
+        .select(col("id"), col("nbr"), cosRounded(col("vec"), col("nvec")).as("score"))
+      val seeded = graph.select(col("id"), col("nbr"), col("score"))
+        .union(deltaInit)
+        .groupBy("id", "nbr").agg(max("score").as("score"))
+      val g = Skew.saltedTopK(seeded, Seq("id"),
+          Seq(col("score").desc, col("nbr").asc), k, saltBy = col("nbr"))
+        .select(col("id"), col("nbr"), col("score"), col("rank"))
+      Materialize.iterate(g, iters)(sweep(_, allNodes, k, cap, seed))
     }
-    g
   }
 
   /** Query-time GRAPH-ANN search over a built k-NN graph — the SERVING
@@ -316,7 +321,7 @@ object NnDescent {
       df.withColumn("hop_rank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id"))))
     var parts = List(
-      ranked(score(entryPairs.select("qid", "id"))).localCheckpoint())
+      Materialize(ranked(score(entryPairs.select("qid", "id")))))
     def visitedAll: DataFrame =
       parts.map(_.select("qid", "id", "score")).reduceLeft(_ union _)
     def beamOf(part: DataFrame): DataFrame =
@@ -325,7 +330,7 @@ object NnDescent {
     (1 to hops).foreach { _ =>
       val cand = expand(frontier)
         .join(visitedAll.select("qid", "id"), Seq("qid", "id"), "left_anti")
-      val sc = ranked(score(cand)).localCheckpoint()
+      val sc = Materialize(ranked(score(cand)))
       parts ::= sc
       frontier = beamOf(sc)
     }
@@ -349,7 +354,7 @@ object NnDescent {
       queries: DataFrame, k: Int, entryIds: DataFrame, beam: Int,
       hops: Int): DataFrame = {
     require(k >= 1 && beam >= 1 && hops >= 0)
-    val und = if (hops > 0) undirected(graph).localCheckpoint()
+    val und = if (hops > 0) Materialize(undirected(graph))
       else undirected(graph)
     beamWalk(nodes, queries, k, entryIds, beam, hops, frontier =>
       broadcast(frontier.select(col("qid"), col("id").as("c")))
@@ -400,7 +405,7 @@ object NnDescent {
       queries: DataFrame, k: Int, centroids: Array[Array[Double]],
       nCells: Int, perCell: Int, beam: Int, hops: Int): DataFrame = {
     require(k >= 1 && beam >= 1 && hops >= 0)
-    val und = if (hops > 0) undirected(graph).localCheckpoint()
+    val und = if (hops > 0) Materialize(undirected(graph))
       else undirected(graph)
     topPerQ(beamWalkVisitedPairs(nodes, queries,
         cellSeededEntryPairs(nodes, queries, centroids, nCells, perCell),
@@ -454,7 +459,7 @@ object NnDescent {
       queries: DataFrame, k: Int, entryIds: DataFrame, beam: Int,
       hops: Int, predicate: Column): DataFrame = {
     require(k >= 1 && beam >= 1 && hops >= 0)
-    val und = if (hops > 0) undirected(graph).localCheckpoint()
+    val und = if (hops > 0) Materialize(undirected(graph))
       else undirected(graph)
     val visited = beamWalkVisited(nodes, queries, entryIds, beam, hops,
       frontier => broadcast(frontier.select(col("qid"), col("id").as("c")))
@@ -692,14 +697,13 @@ object NnDescent {
         s"retention-deleted (state holds epochs $allStates) — an epoch " +
         "outside the retention window cannot be replayed faithfully; " +
         "rebuild the store or raise retainStates")
-    val refreshed = priorEpochs.lastOption match {
+    // the last sweep's checkpoint feeds the snapshot AND the index delta
+    val out = priorEpochs.lastOption match {
       case Some(pe) =>
         appendNodes(spark.read.parquet(s"$dir/state/batch=$pe"),
           allNodes, delta, k, iters)
       case None => knnGraph(allNodes, k, iters)
     }
-    // one materialization feeds the snapshot AND the index delta
-    val out = refreshed.localCheckpoint()
     out.write.mode("overwrite").parquet(s"$dir/state/batch=$batchId")
     val indexRoot = new org.apache.hadoop.fs.Path(s"$dir/index")
     if (fs.exists(indexRoot))
@@ -766,14 +770,10 @@ object NnDescent {
     // exchanges) whose rank column no sweep reads. Checkpointed
     // because the sweep reads its edge input three times (both
     // undirect directions + the old∪candidate union).
-    var g = randomInit(nodes, k, seed)
+    val init = randomInit(nodes, k, seed)(edges => Materialize(edges
       .join(nodes.select(col("id"), col("vec")), Seq("id"))
       .join(nodes.select(col("id").as("nbr"), col("vec").as("nvec")), Seq("nbr"))
-      .select(col("id"), col("nbr"), cosRounded(col("vec"), col("nvec")).as("score"))
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
-      g = sweep(g, nodes, k, cap, seed).localCheckpoint()
-    }
-    g
+      .select(col("id"), col("nbr"), cosRounded(col("vec"), col("nvec")).as("score"))))
+    Materialize.iterate(init, iters)(sweep(_, nodes, k, cap, seed))
   }
 }

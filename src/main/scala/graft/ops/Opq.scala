@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -154,9 +155,9 @@ object Opq {
     // Lloyd reads the rotated corpus once for its seeds and once per
     // iteration — materialize the rotation (the d² matvec pass) once
     // instead of re-rotating per read.
-    val unit = corpus.select(col("id"),
+    val unit = Materialize(corpus.select(col("id"),
       graft.functions.functions.rotate_project(col("vec"), mat,
-        normalize = true).as("v")).localCheckpoint()
+        normalize = true).as("v")))
 
     Model(order, PqIndex.lloydL2(unit, d, m, k, iters))
   }
@@ -358,9 +359,9 @@ object Opq {
       // per round instead of four; the cross pass derives its encode
       // input from the stored v (augmentVecCol ≡ appendEvery = dsub on
       // the same rotated floats) rather than re-rotating.
-      val unit = corpus.select(col("id"),
+      val unit = Materialize(corpus.select(col("id"),
         graft.functions.functions.rotate_project(col("vec"), rot,
-          normalize = true).as("v")).localCheckpoint()
+          normalize = true).as("v")))
       val cb = PqIndex.lloydL2(unit, d, m, k, pqIters)
       val rows = unit.select(col("v"),
           PqIndex.encode(PqIndex.augmentVecCol(col("v"), d, dsub),
@@ -368,6 +369,7 @@ object Opq {
         .as[CrossRow]
       // one whole-dataset typed aggregation → d² buffer + scalars
       val buf = rows.select(new CrossMomentAgg(cb, d).toColumn).head()
+      Materialize.release(unit)
       val e = buf.s(2) + buf.s(1) - 2.0 * buf.s(0)
       if (e < bestE) { bestE = e; best = RotModel(rot, cb) }
       if (it < optIters) {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -180,7 +181,7 @@ object PqRelation {
       sqrt(graft.functions.functions.dot_product(col(vecCol), col(vecCol)))
         .as("nrm"))
     val w = Window.orderBy(QuantizerRelation.seedHash(col("id"), seed), col("id"))
-    var cb = base.orderBy(QuantizerRelation.seedHash(col("id"), seed), col("id"))
+    val seeds = Materialize(base.orderBy(QuantizerRelation.seedHash(col("id"), seed), col("id"))
       .limit(k)
       .withColumn("cell", (row_number().over(w) - 1).cast("int"))
       .select(col("cell"),
@@ -189,9 +190,8 @@ object PqRelation {
           .otherwise(col("v").cast("array<double>")).as("nv"))
       .withColumn("sub", explode(sequence(lit(0), lit(m - 1))))
       .select(col("sub"), col("cell"),
-        slice(col("nv"), col("sub") * dsub + 1, lit(dsub)).as("cvec"))
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
+        slice(col("nv"), col("sub") * dsub + 1, lit(dsub)).as("cvec")))
+    Materialize.iterate(seeds, iters) { cb =>
       val asg = encodeCells(base, "id", "v", cb)
       // null-vec rows posexplode to nothing — exactly the driver loop's
       // contribution (its expression encode also skips them)
@@ -206,14 +206,12 @@ object PqRelation {
           QuantizerRelation.MeanScale).as("mean"))
         .groupBy("sub", "cell").agg(map_from_arrays(
           collect_list(col("p")), collect_list(col("mean"))).as("byPos"))
-      cb = cb.join(means, Seq("sub", "cell"), "left")
+      cb.join(means, Seq("sub", "cell"), "left")
         .select(col("sub"), col("cell"),
           when(col("byPos").isNull, col("cvec"))
             .otherwise(transform(sequence(lit(0), size(col("cvec")) - 1),
               i => coalesce(element_at(col("byPos"), i),
                 element_at(col("cvec"), i + 1)))).as("cvec"))
-        .localCheckpoint()
     }
-    cb
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -165,13 +166,12 @@ object QuantizerRelation {
   def train(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 2, seed: String = "km"): DataFrame = {
     val w = Window.orderBy(seedHash(col(idCol), seed), col(idCol))
-    var cents = corpus
+    val seeds = Materialize(corpus
       .orderBy(seedHash(col(idCol), seed), col(idCol)).limit(k)
       .select(col(idCol), col(vecCol))
       .withColumn("cell", (row_number().over(w) - 1).cast("int"))
-      .select(col("cell"), col(vecCol).cast("array<double>").as("cvec"))
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
+      .select(col("cell"), col(vecCol).cast("array<double>").as("cvec")))
+    Materialize.iterate(seeds, iters) { cents =>
       val asg = assignCells(
         corpus.select(col(idCol), col(vecCol)), idCol, vecCol,
         normalizeRows(cents))
@@ -181,15 +181,13 @@ object QuantizerRelation {
         .agg(round(avg(col("x").cast("double")), MeanScale).as("m"))
         .groupBy("cell").agg(map_from_arrays(
           collect_list(col("pos")), collect_list(col("m"))).as("byPos"))
-      cents = cents.join(means, Seq("cell"), "left")
+      cents.join(means, Seq("cell"), "left")
         .select(col("cell"),
           when(col("byPos").isNull, col("cvec"))
             .otherwise(transform(sequence(lit(0), size(col("cvec")) - 1),
               i => coalesce(element_at(col("byPos"), i),
                 element_at(col("cvec"), i + 1)))).as("cvec"))
-        .localCheckpoint()
     }
-    cents
   }
 
   /** One driver collect at the END of training (k×dim — the object the

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,13 +50,12 @@ object ResidualPq {
     // materialize the residual pass (cell assignment k·d matvec +
     // residual, plus the rotation in the rotated form) once instead of
     // re-running it per read.
-    val resid = IvfIndex.assignCells(
+    val resid = Materialize(IvfIndex.assignCells(
         corpus.select(col("id"), col("vec")), "id", "vec", centroids)
       .select(col("id"),
         graft.functions.functions.cell_residual(col("vec"), col("cell"),
           IvfIndex.unitRows(centroids), normalize = true).as("v"))
-      .filter(col("v").isNotNull)
-      .localCheckpoint()
+      .filter(col("v").isNotNull))
     PqIndex.lloydL2(resid, dim, m, k, iters, seed)
   }
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -135,19 +136,16 @@ object TextIndex {
     // delta writes NOTHING — neither postings nor a (0, NULL) estats
     // row whose sum_dl would null the summed avgdl in a store holding
     // only such epochs. One bounded probe; the postings slice is
-    // delta-sized, so the localCheckpoint is batch-cost — and released
-    // before returning, so a foreachBatch caller's epochs don't pin
-    // executor storage for the stream's lifetime.
-    val post = postings(delta, idCol, textCol)
-      .withColumn("tb", pmod(xxhash64(col("token")), lit(nBuckets)))
-      .localCheckpoint()
+    // delta-sized, so its checkpoint is batch-cost.
+    val post = Materialize(postings(delta, idCol, textCol)
+      .withColumn("tb", pmod(xxhash64(col("token")), lit(nBuckets))))
     try {
       if (post.isEmpty) return
       post.write.mode("overwrite").partitionBy("tb")
         .parquet(s"$path/postings/batch=$epoch")
       epochStats(post)
         .write.mode("overwrite").parquet(s"$path/estats/batch=$epoch")
-    } finally { post.unpersist(false); () }
+    } finally Materialize.release(post)
   }
 
   /** The additive per-epoch statistics relation from a postings slice:

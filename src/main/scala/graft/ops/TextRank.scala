@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -70,22 +71,21 @@ object TextRank {
     val deg = edges.groupBy(col("a")).agg(sum(col("w")).as("deg"))
     // edges with out-degree denormalized: the relation every iteration
     // joins — materialized once, vocabulary²-bounded, lineage cut
-    val ew = edges.join(deg, Seq("a"))
-      .select(col("a").as("src"), col("b").as("dst"), col("w"), col("deg"))
-      .localCheckpoint()
-    val nRel = deg.agg(count(lit(1)).cast("double").as("n")).localCheckpoint()
-    var ranks = deg.select(col("a").as("node")).crossJoin(broadcast(nRel))
+    val ew = Materialize(edges.join(deg, Seq("a"))
+      .select(col("a").as("src"), col("b").as("dst"), col("w"), col("deg")))
+    val nRel = Materialize(deg.agg(count(lit(1)).cast("double").as("n")))
+    val init = deg.select(col("a").as("node")).crossJoin(broadcast(nRel))
       .select(col("node"), (lit(1.0) / col("n")).as("r"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      ranks = ew.join(ranks, col("src") === col("node"))
+    val ranks = Materialize.iterate(Materialize(init), iterations) { rs =>
+      ew.join(rs, col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(sum(col("r") * col("w") / col("deg")).as("s"))
         .crossJoin(broadcast(nRel))
         .select(col("dst").as("node"),
           (lit(1.0 - damping) / col("n") + lit(damping) * col("s")).as("r"))
-        .localCheckpoint()
     }
+    Materialize.release(ew)
+    Materialize.release(nRel)
     import org.apache.spark.sql.expressions.Window
     // TakeOrdered cut FIRST (bounded ≤ k), window over the survivors
     // only — rk is 1..k by construction because limit and window share

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.ops.{Chunking, Curation, Dedup, Sampling, TextAnalysis, TextIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -341,11 +341,11 @@ object CorpusOpsQueries {
     // the final anti-join), and v2/v3 re-reference the clean relation
     // again downstream — without a materialization every reference
     // re-runs the whole curate→simhash-collapse machinery (the v2 plan
-    // held 20 `documents` scans). localCheckpoint truncates the plan at
+    // held 20 `documents` scans). A checkpoint truncates the plan at
     // the chokepoint (guide §3.3): the collapse runs once per
     // invocation, every downstream stage reads its blocks.
-    val curated = Curation.curateNearDupSimhash(gated, "doc_id", "text",
-      minQuality = 0.55).localCheckpoint()
+    val curated = Materialize(Curation.curateNearDupSimhash(gated, "doc_id", "text",
+      minQuality = 0.55))
     Curation.decontaminate(curated, "doc_id", "text",
       bench, "doc_id", "text", n = 3)
   }
@@ -380,7 +380,7 @@ object CorpusOpsQueries {
   private def packScrubbed(cleanIn: DataFrame): DataFrame = {
     // Referenced twice below (span scrub + the pack join) — materialize
     // once so the decontaminate tail isn't replayed per reference.
-    val clean = cleanIn.localCheckpoint()
+    val clean = Materialize(cleanIn)
     val scrubbed = Chunking.scrubRepeatedSpans(
       clean.select(col("doc_id"), col("text")), "doc_id", "text",
       span = 8, maxDf = 1L)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.ops.{Retrieval, Similarity, Skew}
 import org.apache.spark.sql.functions._
 
@@ -459,9 +459,8 @@ object EvalQueries {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     // The rotated corpus feeds the coarse trainer's seed pass and every
     // Lloyd iteration — materialize the rotation once per invocation.
-    val rotated = corpus.select(col("id"),
-      graft.functions.functions.rotate_project(col("vec"), rot).as("vec"))
-      .localCheckpoint()
+    val rotated = Materialize(corpus.select(col("id"),
+      graft.functions.functions.rotate_project(col("vec"), rot).as("vec")))
     val centroids = graft.ops.IvfIndex.train(rotated, "id", "vec",
       k = 8, iters = 2, seed = graft.ops.SelectedSeeds.opq)
     val cb = graft.ops.ResidualPq.trainCodebooksRotated(corpus, rot,
@@ -545,9 +544,8 @@ object EvalQueries {
         round(Similarity.cosine(col("vec"), col("qvec")), 4).as("rel"))
     // checkpoint the shortlist: the corpus-wide salted top-m must not
     // recompute for each of the sims/candidates/mmr actions
-    val cands = Skew.saltedTopK(scored, Seq("qid"),
-      Seq(col("rel").desc, col("id").asc), MmrM, saltBy = col("id"))
-      .localCheckpoint(true)
+    val cands = Materialize(Skew.saltedTopK(scored, Seq("qid"),
+      Seq(col("rel").desc, col("id").asc), MmrM, saltBy = col("id")))
     val sims = Retrieval.pairwiseSims(cands.select(col("id"), col("vec")))
     Retrieval.mmr(cands.select(col("id"), col("rel")), sims,
         k = MmrK, lambda = MmrLambda)
@@ -639,10 +637,9 @@ object EvalQueries {
     // checkpoint the fused shortlist's vectors: the hybrid rankers (the
     // query's dominant cost) must not recompute for each of the
     // re-score/sims/mmr actions
-    val candVecs = corpus
+    val candVecs = Materialize(corpus
       .select(col("doc_id").as("id"), col("embedding").as("vec"))
-      .join(fusedIds, Seq("id"), "left_semi")
-      .localCheckpoint(true)
+      .join(fusedIds, Seq("id"), "left_semi"))
     val cands = candVecs.crossJoin(broadcast(qv))
       .select(col("id"),
         round(Similarity.cosine(col("vec"), col("qvec")), 4).as("rel"))
@@ -679,10 +676,9 @@ object EvalQueries {
         annPath, cents, Seq("spark", "window", "merge"), qv,
         k = PipeCand, m = MmrM, nProbe = 8)
       .select("id")
-    val candVecs = corpus
+    val candVecs = Materialize(corpus
       .select(col("doc_id").as("id"), col("embedding").as("vec"))
-      .join(fusedIds, Seq("id"), "left_semi")
-      .localCheckpoint(true)
+      .join(fusedIds, Seq("id"), "left_semi"))
     val cands = candVecs.crossJoin(broadcast(qv))
       .select(col("id"),
         round(Similarity.cosine(col("vec"), col("qvec")), 4).as("rel"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.functions._
 
 /** Seventh wave of the query surface (round 17): the LIFECYCLE /
@@ -164,10 +164,9 @@ object LifecycleQueries {
     // `uniq` feeds the collapse twice and `unquoted` is referenced by
     // THREE stages (feature store, target ids, the selection semi-join)
     // — checkpoint both chokepoints so each stage computes once.
-    val uniq = docs.join(keepIds.select("doc_id"), Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    val unquoted = graft.ops.Dedup.containmentCollapse(uniq, "doc_id",
-      "text", threshold = 0.8).localCheckpoint()
+    val uniq = Materialize(docs.join(keepIds.select("doc_id"), Seq("doc_id"), "left_semi"))
+    val unquoted = Materialize(graft.ops.Dedup.containmentCollapse(uniq, "doc_id",
+      "text", threshold = 0.8))
     val featPath = graft.Staging.dirFor("dsir-feats-v5")
     graft.ops.Dsir.writeFeatures(unquoted, "doc_id", "text", 512, featPath)
     val feats = graft.ops.Dsir.readFeatures(s, featPath)

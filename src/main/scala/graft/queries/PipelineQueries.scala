@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.RangeJoin
 import graft.ops.{Curation, Dedup, IvfIndex, IvfPq, PqIndex, Sampling, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
@@ -992,9 +992,8 @@ object PipelineQueries {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     // The rotated corpus feeds the coarse trainer's seed pass and every
     // Lloyd iteration — materialize the rotation once per invocation.
-    val rotated = corpus.select(col("id"),
-      graft.functions.functions.rotate_project(col("vec"), rot).as("vec"))
-      .localCheckpoint()
+    val rotated = Materialize(corpus.select(col("id"),
+      graft.functions.functions.rotate_project(col("vec"), rot).as("vec")))
     val centroids = IvfIndex.train(rotated, "id", "vec", k = 8, iters = 2)
     val cb = graft.ops.ResidualPq.trainCodebooksRotated(corpus, rot,
       centroids, m = 8, k = 16, iters = 2)
@@ -1024,9 +1023,8 @@ object PipelineQueries {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     // The rotated corpus feeds the coarse trainer's seed pass and every
     // Lloyd iteration — materialize the rotation once per invocation.
-    val rotated = corpus.select(col("id"),
-      graft.functions.functions.rotate_project(col("vec"), rot).as("vec"))
-      .localCheckpoint()
+    val rotated = Materialize(corpus.select(col("id"),
+      graft.functions.functions.rotate_project(col("vec"), rot).as("vec")))
     val centroids = IvfIndex.train(rotated, "id", "vec", k = 8, iters = 2,
       seed = graft.ops.SelectedSeeds.opq)
     val cb = graft.ops.ResidualPq.trainCodebooksRotated(corpus, rot,

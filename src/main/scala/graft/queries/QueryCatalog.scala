@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.model.{ResourceRule, SyncerConfig}
 import graft.operators.{ExportOps, SyncOps}
 import graft.ops.{Dedup, IvfIndex, Multimodal, Similarity, TextAnalysis}
@@ -1248,12 +1248,11 @@ object QueryCatalog {
   private[queries] def phashExemplars(s: SparkSession): DataFrame = {
     val bf = s.read.format("binaryFile")
       .load(s"${graft.Tables.fixturesDir}/images_dup")
-    val sigs = bf.select(
+    val sigs = Materialize(bf.select(
         element_at(split(col("path"), "/"), -1).as("file"), col("content"))
       .withColumn("ph", graft.functions.functions.image_phash(col("content")))
       .select(col("file"), Dedup.md5TokenHash60(col("file")).as("id"),
-        col("ph.ahash").as("ahash"), col("ph.dhash").as("dhash"))
-      .localCheckpoint()
+        col("ph.ahash").as("ahash"), col("ph.dhash").as("dhash")))
     val banded = Dedup.simhashBlocks(
         sigs.select(col("id"), col("ahash").as("sig")), bits = 64, blocks = 4)
       .select(col("id"), col("b").as("band"), col("key").as("bucket"))
@@ -1333,12 +1332,11 @@ object QueryCatalog {
   val multimodalPhashInc: Q = (s, dir) => {
     val bf = s.read.format("binaryFile")
       .load(s"${graft.Tables.fixturesDir}/images_dup")
-    val all = bf.select(
+    val all = Materialize(bf.select(
         element_at(split(col("path"), "/"), -1).as("file"), col("content"))
       .withColumn("ph", graft.functions.functions.image_phash(col("content")))
       .select(col("file"), Dedup.md5TokenHash60(col("file")).as("id"),
-        col("ph.ahash").as("sig"), col("ph.dhash").as("dsig"))
-      .localCheckpoint()
+        col("ph.ahash").as("sig"), col("ph.dhash").as("dsig")))
     val isArrival = col("file").rlike("copy|q90|q70|pixel")
     val storeDir = graft.Staging.dirFor("phash-inc-q")
     Multimodal.appendPhashIndexEpoch(all.filter(!isArrival), storeDir,
@@ -1400,15 +1398,14 @@ object QueryCatalog {
   val multimodalVideoDedup: Q = (s, dir) => {
     val bf = s.read.format("binaryFile")
       .load(s"${graft.Tables.fixturesDir}/video")
-    val frames = bf.select(
+    val frames = Materialize(bf.select(
         element_at(split(col("path"), "/"), -1).as("file"), col("content"))
       .withColumn("fr",
         explode(graft.functions.functions.image_frame_phashes(col("content"))))
       .select(col("file"),
         Dedup.md5TokenHash60(concat(col("file"), lit("#"),
           col("fr.frame_idx").cast("string"))).as("id"),
-        col("fr.ahash").as("sig"), col("fr.dhash").as("dsig"))
-      .localCheckpoint()
+        col("fr.ahash").as("sig"), col("fr.dhash").as("dsig")))
     val blk = Dedup.simhashBlocks(frames.select("id", "sig", "dsig"),
       bits = 64, blocks = 4, carry = Seq("dsig"))
     // verified frame matches INCLUDING within-clip pairs — scene

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.functions._
 
 /** Sixth wave of the query surface (round 16): the SERVING half of two
@@ -459,8 +459,7 @@ object ServeQueries {
       .agg(min("doc_id").as("doc_id"))
     // `uniq` feeds the containment collapse's prefix join AND its final
     // anti-join — checkpoint so the exact-dedup semi-join runs once.
-    val uniq = docs.join(keepIds.select("doc_id"), Seq("doc_id"), "left_semi")
-      .localCheckpoint()
+    val uniq = Materialize(docs.join(keepIds.select("doc_id"), Seq("doc_id"), "left_semi"))
     val unquoted = graft.ops.Dedup.containmentCollapse(uniq, "doc_id",
       "text", threshold = 0.8)
     val lm = graft.ops.LanguageModel.trainKnBigramLm(

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.ops.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -61,8 +62,7 @@ object ContainmentGate {
         inBatch.join(dupIds, Seq(idCol), "left_anti")
       case None => inBatch
     }
-    val accepted = survivors.persist()
-    try {
+    Materialize.cached(survivors) { accepted =>
       val nAccepted = accepted.count()
       accepted.write.mode("overwrite")
         .parquet(s"$acceptedDir/batch=$batchId")
@@ -70,7 +70,7 @@ object ContainmentGate {
         .write.mode("overwrite")
         .parquet(s"$indexDir/batch=$batchId")
       nAccepted
-    } finally { accepted.unpersist(false); () }
+    }
   }
 
   /** Run the gate over a streaming document feed. */

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -50,8 +51,7 @@ private[streaming] object GateProtocol {
     val spark = batch.sparkSession
     // ONE signature pass per micro-batch: the in-batch self-probe, the
     // store probe, and the index write all reuse this persisted relation
-    val blk = blk0.persist()
-    try {
+    Materialize.cached(blk0) { blk =>
       val inBatchDropped = probe(blk, blk)
         .filter(col("id2") < col("id1"))
         .select(col("id1").as("id")).distinct()
@@ -69,8 +69,7 @@ private[streaming] object GateProtocol {
       val acceptedBlk = inBatchBlk.join(storeDropped, Seq("id"), "left_anti")
       val rejected = inBatchDropped.union(storeDropped)
         .select(col("id").as(idCol)).distinct()
-      val accepted = batch.join(rejected, Seq(idCol), "left_anti").persist()
-      try {
+      Materialize.cached(batch.join(rejected, Seq(idCol), "left_anti")) { accepted =>
         val nAccepted = accepted.count()
         // overwrite-by-epoch: a replayed batch replaces its own output
         accepted.write.mode("overwrite")
@@ -79,8 +78,8 @@ private[streaming] object GateProtocol {
           .write.mode("overwrite")
           .parquet(s"$indexDir/batch=$batchId")
         nAccepted
-      } finally { accepted.unpersist(false); () }
-    } finally { blk.unpersist(false); () }
+      }
+    }
   }
 
   /** The gate family's foreachBatch wrapper: requires a streaming

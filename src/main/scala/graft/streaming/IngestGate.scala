@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -117,8 +118,7 @@ object IngestGate {
         inBatch.join(dupIds, Seq(idCol), "left_anti")
       case None => inBatch
     }
-    val accepted = survivors.persist()
-    try {
+    Materialize.cached(survivors) { accepted =>
       val nAccepted = accepted.count()
       // overwrite-by-epoch: a replayed batch replaces its own output
       accepted.write.mode("overwrite")
@@ -150,14 +150,13 @@ object IngestGate {
         if (nAccepted > 0) {
           val allNodes = spark.read.parquet(acceptedDir)
             .select(col(idCol).as("id"), col(g.vecCol).as("vec"))
-          graft.ops.NnDescent.maintainGraphEpoch(
+          Materialize.release(graft.ops.NnDescent.maintainGraphEpoch(
             accepted.select(col(idCol).as("id"), col(g.vecCol).as("vec")),
-            allNodes, g.dir, batchId, g.k, g.iters, g.numBuckets)
-          ()
+            allNodes, g.dir, batchId, g.k, g.iters, g.numBuckets))
         }
       }
       nAccepted
-    } finally { accepted.unpersist(false); () }
+    }
   }
 
   /** Run the gate over a streaming document feed. */

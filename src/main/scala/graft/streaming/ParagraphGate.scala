@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.ops.{Chunking, Dedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -50,10 +51,8 @@ object ParagraphGate {
       acceptedDir: String, idCol: String, textCol: String,
       window: Int = 20): Long = {
     val spark = batch.sparkSession
-    val chunks = Chunking.paragraphChunks(batch, idCol, textCol, window)
-      .withColumn("key", Dedup.md5TokenHash60(col("chunk")))
-      .persist()
-    try {
+    Materialize.cached(Chunking.paragraphChunks(batch, idCol, textCol, window)
+        .withColumn("key", Dedup.md5TokenHash60(col("chunk")))) { chunks =>
       // (1) in-batch keep-first collapse (the batch operator's rank)
       val w = Window.partitionBy(col("key")).orderBy(col("id"), col("idx"))
       val firsts = chunks.withColumn("rk", row_number().over(w))
@@ -65,8 +64,7 @@ object ParagraphGate {
             Seq("key"), "left_anti")
         case None => firsts
       }
-      val kept = survivors.persist()
-      try {
+      Materialize.cached(survivors) { kept =>
         val nKept = kept.count()
         // overwrite-by-epoch: a replayed batch replaces its own output
         Chunking.rebuildFromKept(chunks, kept)
@@ -75,8 +73,8 @@ object ParagraphGate {
         kept.select("key").write.mode("overwrite")
           .parquet(s"$keyDir/batch=$batchId")
         nKept
-      } finally { kept.unpersist(false); () }
-    } finally { chunks.unpersist(false); () }
+      }
+    }
   }
 
   /** Run the gate over a streaming document feed. */

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.ops.LanguageModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -60,12 +61,11 @@ object PplGate {
         LanguageModel.bandOfCuts(gate.cuts))
       .filter(col("band") <= maxBand)
       .select(col("id").as(idCol))
-    val accepted = batch.join(keptIds, Seq(idCol), "left_semi").persist()
-    try {
+    Materialize.cached(batch.join(keptIds, Seq(idCol), "left_semi")) { accepted =>
       val n = accepted.count()
       accepted.write.mode("overwrite").parquet(s"$acceptedDir/batch=$batchId")
       n
-    } finally { accepted.unpersist(false); () }
+    }
   }
 
   /** Run the gate over a streaming document feed. */

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.ops.{IvfIndex, Retrieval, Similarity, TextIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -121,15 +122,13 @@ object RecallStream {
     // write, the isEmpty probe, and the maintenance delta below would
     // otherwise each recompute the in-batch window plus the
     // cross-epoch anti-join (including a store re-read)
-    val fresh = uniqueArrivals(batch, batchId, nodesDir).localCheckpoint()
+    val fresh = Materialize(uniqueArrivals(batch, batchId, nodesDir))
     fresh.write.mode("overwrite").parquet(s"$nodesDir/batch=$batchId")
     val all = spark.read.parquet(nodesDir).select(col("id"), col("vec"))
     if (!fresh.isEmpty)
-      graft.ops.NnDescent.maintainGraphEpoch(fresh, all, graphDir,
-        batchId, buildK, buildIters, numBuckets)
-    // release the epoch's checkpointed slice — a forever-running
-    // monitor must not accumulate one pinned RDD per micro-batch
-    fresh.unpersist(false)
+      Materialize.release(graft.ops.NnDescent.maintainGraphEpoch(fresh, all,
+        graphDir, batchId, buildK, buildIters, numBuckets))
+    Materialize.release(fresh)
     // COLD START with nothing to serve: if no non-empty epoch has ever
     // maintained the index (an empty or fully-duplicate first batch —
     // the replayed-empty-trigger case), there is no graph to probe and
@@ -145,17 +144,20 @@ object RecallStream {
       empty.write.mode("overwrite").parquet(s"$metricsDir/batch=$batchId")
       return empty
     }
-    val sys = graft.ops.NnDescent.searchGraphIndexed(spark,
-      s"$graphDir/index", all, queries, k, entries, beam, hops, numBuckets)
-    // exact ground truth under the family's 4-dp convention
-    val scored = all.crossJoin(broadcast(queries))
-      .select(col("qid"), col("id"),
-        round(Similarity.cosine(col("qvec"), col("vec")), 4).as("score"))
-    val gt = graft.ops.Skew.saltedTopK(scored, Seq("qid"),
-      Seq(col("score").desc, col("id").asc), k, saltBy = col("id"))
-    val metrics = Retrieval.rankingMetrics(sys, gt, k)
-    metrics.write.mode("overwrite").parquet(s"$metricsDir/batch=$batchId")
-    metrics
+    // the walk's checkpoints end with the epoch: serve the written metrics
+    Materialize.scope {
+      val sys = graft.ops.NnDescent.searchGraphIndexed(spark,
+        s"$graphDir/index", all, queries, k, entries, beam, hops, numBuckets)
+      // exact ground truth under the family's 4-dp convention
+      val scored = all.crossJoin(broadcast(queries))
+        .select(col("qid"), col("id"),
+          round(Similarity.cosine(col("qvec"), col("vec")), 4).as("score"))
+      val gt = graft.ops.Skew.saltedTopK(scored, Seq("qid"),
+        Seq(col("score").desc, col("id").asc), k, saltBy = col("id"))
+      Retrieval.rankingMetrics(sys, gt, k)
+        .write.mode("overwrite").parquet(s"$metricsDir/batch=$batchId")
+    }
+    spark.read.parquet(s"$metricsDir/batch=$batchId")
   }
 
   /** A standing query for the FUSED hybrid monitor: lexical terms and
@@ -203,21 +205,20 @@ object RecallStream {
     val collapsed = batch.select(col("id"), col("text"), col("vec"))
       .withColumn("rn", row_number().over(wId))
       .filter(col("rn") === 1).drop("rn")
-    val fresh = (IngestGate.readIfAny(spark, rawDir) match {
+    val fresh = Materialize(IngestGate.readIfAny(spark, rawDir) match {
       case Some(store) =>
         val existing = store.filter(col("batch") =!= batchId)
           .select(col("id")).distinct()
         collapsed.join(existing, Seq("id"), "left_anti")
       case None => collapsed
-    }).localCheckpoint()
+    })
     fresh.write.mode("overwrite").parquet(s"$rawDir/batch=$batchId")
     // maintain BOTH real serving sinks
     TextIndex.appendPostingsEpoch(fresh, "id", "text", lexDir, batchId,
       nBuckets)
     IvfIndex.writeIndexed(fresh.select(col("id"), col("vec")), centroids,
       s"$annDir/batch=$batchId")
-    // release the epoch's checkpointed slice (the graph monitor's rule)
-    fresh.unpersist(false)
+    Materialize.release(fresh)
     // cold start: nothing servable yet (empty/duplicate-only epochs) —
     // the graph monitor's empty-metrics convention
     if (IngestGate.readIfAny(spark, s"$lexDir/postings").isEmpty ||

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.ops.{Dedup, IvfIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -53,11 +54,10 @@ object SemanticGate {
       threshold: Double): Long = {
     val spark = batch.sparkSession
     // The in-batch quadratic collapse is consumed twice below (probed-cell
-    // collect + the final anti-join) — persist so it runs once per epoch,
-    // the same discipline as `accepted` at the write.
-    val inBatch = Dedup.semanticDedup(batch, idCol, vecCol, centroids, threshold)
-      .persist()
-    try {
+    // collect + the final anti-join) — cache it so it runs once per
+    // epoch, the same discipline as `accepted` at the write.
+    Materialize.cached(
+        Dedup.semanticDedup(batch, idCol, vecCol, centroids, threshold)) { inBatch =>
       val survivors = IngestGate.readIfAny(spark, acceptedDir) match {
         case Some(corpusRaw) =>
           val nb = inBatch.select(
@@ -74,16 +74,14 @@ object SemanticGate {
           inBatch.join(dupIds, Seq(idCol), "left_anti")
         case None => inBatch
       }
-      val accepted = survivors
-        .withColumn("cell", IvfIndex.bestCell(col(vecCol), centroids))
-        .persist()
-      try {
+      Materialize.cached(survivors
+          .withColumn("cell", IvfIndex.bestCell(col(vecCol), centroids))) { accepted =>
         val n = accepted.count()
         accepted.write.mode("overwrite").partitionBy("cell")
           .parquet(s"$acceptedDir/batch=$batchId")
         n
-      } finally { accepted.unpersist(false); () }
-    } finally { inBatch.unpersist(false); () }
+      }
+    }
   }
 
   /** Run the gate over a streaming embedding feed. */

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.model.{KrmModel, SyncerConfig, WatcherId}
 import graft.operators.SyncOps
 import graft.functions.functions.json_valid
@@ -149,16 +150,15 @@ object SyncStream {
     if (configs.isEmpty) return
     val (projected, errors) =
       planWithErrors(events, SyncOps.rulesDF(spark, configs), watcher)
-    // The projection is referenced once per destination — persist it
-    // so the scan→join→project stage runs once, not per destination.
-    projected.persist()
-    try {
+    // The projection is referenced once per destination — cache it so
+    // the scan→join→project stage runs once, not per destination.
+    Materialize.cached(projected) { rows =>
       onErrors(errors)
       destKeys(configs, watcher).foreach { k =>
         ParquetDest.mergeIncremental(spark, destDirFor(k),
-          projected.filter(col("destKey") === k).drop("destKey"), numBuckets)
+          rows.filter(col("destKey") === k).drop("destKey"), numBuckets)
       }
-    } finally { projected.unpersist(); () }
+    }
   }
 
   /** Snapshot-source sync: each micro-batch is a FULL state snapshot
@@ -356,40 +356,39 @@ object ParquetDest {
     */
   def mergeIncremental(spark: SparkSession, dir: String, updates: DataFrame,
       numBuckets: Int = 16): Unit = {
-    val u = updates.withColumn("bucket", bucketOf(numBuckets))
-    u.persist()
-    try {
+    Materialize.cached(updates.withColumn("bucket", bucketOf(numBuckets))) { u =>
       val touched = u.select("bucket").distinct().collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) return
-      val (fs, root) = hadoopFs(spark, dir)
-      val mdir = new Path(root, ManifestDirName)
-      var committed = false
-      while (!committed) {
-        val base = latestId(fs, mdir)
-        val current: Map[Int, String] =
-          if (base < 0) Map.empty else readManifest(fs, mdir, base)
-        val touchedPaths = touched.toSeq.flatMap(current.get)
-          .map(rel => new Path(root, rel).toString)
-        val destTouched =
-          if (touchedPaths.nonEmpty) spark.read.parquet(touchedPaths: _*)
-          else empty(spark)
-        val merged = SyncOps.mergeBatch(destTouched, u.drop("bucket"))
-        val genId = base + 1
-        val genRel = f"gen-$genId%09d-${java.util.UUID.randomUUID()}"
-        val genPath = new Path(root, genRel)
-        merged.withColumn("bucket", bucketOf(numBuckets))
-          .write.partitionBy("bucket").mode("overwrite").parquet(genPath.toString)
-        // buckets that actually produced rows; a fully-tombstoned bucket
-        // writes no partition dir and falls out of the manifest
-        val staged = fs.listStatus(genPath).iterator.map(_.getPath.getName)
-          .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt).toSet
-        val next = (current -- touched) ++
-          staged.map(b => b -> s"$genRel/bucket=$b")
-        committed = writeManifest(fs, mdir, genId, next)
-        if (!committed) { fs.delete(genPath, true); () } // lost the race: retry from new base
-        else gc(fs, root, mdir)
+      if (touched.nonEmpty) {
+        val (fs, root) = hadoopFs(spark, dir)
+        val mdir = new Path(root, ManifestDirName)
+        var committed = false
+        while (!committed) {
+          val base = latestId(fs, mdir)
+          val current: Map[Int, String] =
+            if (base < 0) Map.empty else readManifest(fs, mdir, base)
+          val touchedPaths = touched.toSeq.flatMap(current.get)
+            .map(rel => new Path(root, rel).toString)
+          val destTouched =
+            if (touchedPaths.nonEmpty) spark.read.parquet(touchedPaths: _*)
+            else empty(spark)
+          val merged = SyncOps.mergeBatch(destTouched, u.drop("bucket"))
+          val genId = base + 1
+          val genRel = f"gen-$genId%09d-${java.util.UUID.randomUUID()}"
+          val genPath = new Path(root, genRel)
+          merged.withColumn("bucket", bucketOf(numBuckets))
+            .write.partitionBy("bucket").mode("overwrite").parquet(genPath.toString)
+          // buckets that actually produced rows; a fully-tombstoned bucket
+          // writes no partition dir and falls out of the manifest
+          val staged = fs.listStatus(genPath).iterator.map(_.getPath.getName)
+            .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt).toSet
+          val next = (current -- touched) ++
+            staged.map(b => b -> s"$genRel/bucket=$b")
+          committed = writeManifest(fs, mdir, genId, next)
+          if (!committed) { fs.delete(genPath, true); () } // lost the race: retry from new base
+          else gc(fs, root, mdir)
+        }
       }
-    } finally { u.unpersist(); () }
+    }
   }
 
   /** Drop manifests older than the two most recent, and any generation

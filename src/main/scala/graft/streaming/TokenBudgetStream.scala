@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.ops.Bpe
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -25,14 +26,12 @@ object TokenBudgetStream {
   /** Budget ONE batch; returns the number of documents written. */
   def statsBatch(batch: DataFrame, batchId: Long, sinkDir: String,
       idCol: String, textCol: String, merges: Seq[Bpe.Merge]): Long = {
-    val stats = Bpe.encodeStatsFrozen(batch, idCol, textCol, merges)
-      .withColumnRenamed("id", idCol)
-      .persist()
-    try {
+    Materialize.cached(Bpe.encodeStatsFrozen(batch, idCol, textCol, merges)
+        .withColumnRenamed("id", idCol)) { stats =>
       val n = stats.count()
       stats.write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
       n
-    } finally { stats.unpersist(false); () }
+    }
   }
 
   /** Run the budget sink over a streaming document feed. */

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, Materialize, SparkEntry}
 
 /** Dump `.explain("formatted")` for a comma-separated list of declared
   * queries (or every declared query with `all`) to
@@ -24,9 +24,8 @@ object DumpPlans {
     java.nio.file.Files.createDirectories(dir)
     names.foreach { n =>
       try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan = Materialize.scope(SparkEntry.queries(n)(spark, sfDir)
+          .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.writeString(dir.resolve(s"${n}_$suffix.txt"), plan)
         println(s"[plans] wrote $n")
       } catch { case scala.util.control.NonFatal(e) =>

@@ -3,7 +3,7 @@ package graft.tools
 import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, Materialize, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import scala.jdk.CollectionConverters._
 
@@ -32,8 +32,8 @@ object ProfileQuery {
     def jitMillis: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
     for (name <- names; i <- 1 to runs) {
       val n0 = jobs.get; val g0 = gcMillis; val j0 = jitMillis; val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      Materialize.scope(SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save())
       val wall = (System.nanoTime() - t0) / 1e9
       val gc = (gcMillis - g0) / 1000.0; val jit = (jitMillis - j0) / 1000.0
       // the listener bus delivers asynchronously: let it drain, outside

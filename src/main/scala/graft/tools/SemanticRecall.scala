@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Materialize, Tables}
 import graft.ops.{Dedup, IvfIndex, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -33,9 +33,8 @@ object SemanticRecall {
       else Seq(0.35, 0.8, 0.95)
     val spark = GraftSession(16)
     spark.sparkContext.setLogLevel("WARN")
-    try {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding")).persist()
+    try Materialize.cached(Tables.embeddings(spark, sfDir)
+        .select(col("vec_id"), col("embedding"))) { emb =>
       val n = emb.count().toInt
 
       // exact ground truth: normalized matrix broadcast, row scan
@@ -109,21 +108,19 @@ object SemanticRecall {
           (x + 0.01 * math.abs(x) * (if ((id + i) % 2 == 0) 1 else -1)).toFloat }
         (id + 10000000L, p.toSeq)
       }
-      val planted = emb.union(twins.toSeq.toDF("vec_id", "embedding")).persist()
-      val tauT = 0.99
-      println(s"-- planted twins: ${twins.length} pairs at cos≈0.9999, tau=$tauT")
-      configs.foreach { case (name, cents) =>
-        val dropped = Dedup.semanticDropList(planted, "vec_id", "embedding",
-            cents, tauT)
-          .select("dropped_id").collect().map(_.getLong(0)).toSet
-        val expect = twins.map(_._1).toSet
-        val recall = (dropped intersect expect).size.toDouble / expect.size
-        println(f"$name%-28s cells=${cents.length}%4d recall=$recall%.4f " +
-          f"(false drops=${(dropped diff expect).size})")
+      Materialize.cached(emb.union(twins.toSeq.toDF("vec_id", "embedding"))) { planted =>
+        val tauT = 0.99
+        println(s"-- planted twins: ${twins.length} pairs at cos≈0.9999, tau=$tauT")
+        configs.foreach { case (name, cents) =>
+          val dropped = Dedup.semanticDropList(planted, "vec_id", "embedding",
+              cents, tauT)
+            .select("dropped_id").collect().map(_.getLong(0)).toSet
+          val expect = twins.map(_._1).toSet
+          val recall = (dropped intersect expect).size.toDouble / expect.size
+          println(f"$name%-28s cells=${cents.length}%4d recall=$recall%.4f " +
+            f"(false drops=${(dropped diff expect).size})")
+        }
       }
-      planted.unpersist()
-      emb.unpersist()
-      ()
     } finally spark.stop()
   }
 }

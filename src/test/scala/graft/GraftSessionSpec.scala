@@ -3,9 +3,13 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkConf
+
 /** [[GraftSession]] is the only session builder: no other source file
   * may build its own session (their settings used to drift apart), and
-  * the suite's shared session carries the factory's settings. */
+  * the suite's shared session carries the factory's settings. Likewise
+  * [[Materialize]] is the only code that checkpoints, caches or
+  * releases. */
 class GraftSessionSpec extends SparkSpec {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -20,6 +24,23 @@ class GraftSessionSpec extends SparkSpec {
     val builders = files.filter(f => Files.readString(f).contains(builder))
       .map(_.getFileName.toString)
     assert(builders == Seq("GraftSession.scala"))
+  }
+
+  test("only Materialize.scala checkpoints, persists or unpersists") {
+    val calls = Seq("localCheckpoint", "persist", "unpersist").map("." + _ + "(")
+    val sites = scalaFiles("src/main/scala")
+      .filter(f => calls.exists(Files.readString(f).contains))
+      .map(_.getFileName.toString)
+    assert(sites == Seq("Materialize.scala"))
+  }
+
+  test("a launch conf's master and shuffle width are kept; unset, the local sizing applies") {
+    val launched = new SparkConf(false)
+      .set("spark.master", "k8s://https://kubernetes.default.svc")
+      .set("spark.sql.shuffle.partitions", "96")
+    assert(GraftSession.sizing(launched, 8).isEmpty)
+    assert(GraftSession.sizing(new SparkConf(false), 8) == Seq(
+      "spark.master" -> "local[8]", "spark.sql.shuffle.partitions" -> "8"))
   }
 
   test("the shared test session carries the factory settings") {
