@@ -5,6 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.bridge
 
 /** The one way an intermediate is materialized and released.
   *
@@ -15,9 +16,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * an executor holding its blocks is lost, every plan still reading it
   * fails. `Dataset.unpersist` leaves a checkpoint's blocks in place
   * (they belong to the RDD under its `LogicalRDD`); `release` drops
-  * them. Whatever supersedes a checkpoint releases it, else the
-  * enclosing `scope` does; outside any scope it stays until a driver GC
-  * lets Spark's ContextCleaner drop it. Releases never block.
+  * them, without `RDD.unpersist`'s warning that a local checkpoint
+  * cannot be recomputed. Whatever supersedes a checkpoint releases it,
+  * else the enclosing `scope` does; outside any scope it stays until a
+  * driver GC lets Spark's ContextCleaner drop it. Releases never block.
   */
 object Materialize {
   private val current = new ThreadLocal[ArrayBuffer[RDD[_]]]
@@ -50,10 +52,16 @@ object Materialize {
       next
     }
 
+  /** A local checkpoint (checkpointed, no checkpoint file) drops its
+    * blocks through the bridge; any other RDD is unpersisted. */
+  private def free(rdd: RDD[_]): Unit =
+    if (rdd.isCheckpointed && rdd.getCheckpointFile.isEmpty) bridge.dropCheckpointBlocks(rdd)
+    else rdd.unpersist(blocking = false)
+
   /** Drops the blocks of a checkpoint or of a cached frame. */
   def release(ds: Dataset[_]): Unit = rddOf(ds) match {
     case Some(rdd) =>
-      rdd.unpersist(blocking = false)
+      free(rdd)
       Option(current.get).foreach(_ -= rdd)
     case None => ds.unpersist(blocking = false)
   }
@@ -66,7 +74,7 @@ object Materialize {
     current.set(mine)
     try body finally {
       current.set(outer)
-      mine.foreach(_.unpersist(blocking = false))
+      mine.foreach(free)
     }
   }
 }

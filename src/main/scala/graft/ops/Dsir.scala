@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   *     ≤ `buckets` rows per task). At production scale the bucketed
   *     relation is WRITTEN AT INGEST ([[writeFeatures]], the band-index
   *     pattern) and training/scoring become scans of that store
-  *     ([[trainFeatures]]/[[logWeightsFeatures]]); the inline [[train]]
-  *     persists its explode so no action recomputes it.
+  *     ([[trainFeatures]]/[[logWeightsFeatures]]); training reads the
+  *     features once, inline or stored.
   *   - The MODEL is `buckets` rows (one llr per bucket) — broadcast to
   *     the scoring join; the per-doc aggregation collapses the exploded
   *     stream immediately. Nothing document-sized crosses more than one
@@ -84,42 +84,44 @@ object Dsir {
       targetTotal: Long, rawTotal: Long)
 
   /** Train from a FEATURE relation ((id, bucket, cnt) — a
-    * [[writeFeatures]] store or an inline [[hashedFeatures]]): target
-    * distribution from the `targetIds` slice, raw from the whole pool.
-    * Two aggregations + two scalar counts; the dense ratios relation is
-    * ≤ `buckets` rows, localCheckpointed so the model carries no
-    * lineage back to the features. */
+    * [[writeFeatures]] store or an inline [[hashedFeatures]], hashed to
+    * the same `buckets`): target distribution from the `targetIds`
+    * slice, raw from the whole pool. One aggregation reads `feats` once
+    * for both per-bucket counts; the dense (bucket, rc, tc) relation,
+    * ≤ `buckets` rows, is checkpointed so the model carries no lineage
+    * back to the features, and the totals tN and rN are read back from
+    * that checkpoint. An empty target slice fails: it would train a
+    * target distribution on nothing. */
   def trainFeatures(feats: DataFrame, targetIds: DataFrame,
       buckets: Int): DsirModel = {
     val spark = feats.sparkSession
-    val tFeats = feats.join(broadcast(targetIds), Seq("id"), "left_semi")
-    val raw = feats.groupBy("bucket").agg(sum("cnt").as("rc"))
-    val tgt = tFeats.groupBy("bucket").agg(sum("cnt").as("tc"))
-    val rN = raw.agg(sum("rc")).collect().head.getLong(0)
-    val tN = tgt.agg(sum("tc")).collect().head.getLong(0)
-    val spine = spark.range(buckets).select(col("id").cast("int").as("bucket"))
-    val ratios = spine.join(raw, Seq("bucket"), "left")
-      .join(tgt, Seq("bucket"), "left")
+    val isTarget = targetIds.select(col("id")).distinct().withColumn("_t", lit(true))
+    val counts = feats.join(broadcast(isTarget), Seq("id"), "left")
+      .groupBy("bucket")
+      .agg(sum("cnt").as("rc"), sum(when(col("_t"), col("cnt"))).as("tc"))
+    val dense = Materialize(spark.range(buckets).select(col("id").cast("int").as("bucket"))
+      .join(counts, Seq("bucket"), "left")
       .select(col("bucket"), coalesce(col("rc"), lit(0L)).as("rc"),
-        coalesce(col("tc"), lit(0L)).as("tc"),
-        (log((coalesce(col("tc"), lit(0L)) + lit(1L)).cast("double") /
-            (lit(tN) + lit(buckets.toLong)).cast("double")) -
-          log((coalesce(col("rc"), lit(0L)) + lit(1L)).cast("double") /
-            (lit(rN) + lit(buckets.toLong)).cast("double"))).as("llr"))
-    DsirModel(Materialize(ratios), buckets, tN, rN)
+        coalesce(col("tc"), lit(0L)).as("tc")))
+    val totals = dense.agg(sum("tc"), sum("rc")).head()
+    val (tN, rN) = (totals.getLong(0), totals.getLong(1))
+    require(tN > 0, "DSIR target slice is empty: no features to train the target distribution on")
+    val llr = log((col("tc") + lit(1L)).cast("double") /
+        (lit(tN) + lit(buckets.toLong)).cast("double")) -
+      log((col("rc") + lit(1L)).cast("double") /
+        (lit(rN) + lit(buckets.toLong)).cast("double"))
+    DsirModel(dense.withColumn("llr", llr), buckets, tN, rN)
   }
 
-  /** Train on `docs` inline: explode once and cache the feature
-    * relation for training (raw agg + target agg + two collects all read
-    * the cache, not four re-explodes). Production pipelines should
+  /** Train on `docs` inline: [[trainFeatures]] reads the explode once,
+    * inside its one checkpoint. Production pipelines should
     * [[writeFeatures]] at ingest and call
     * [[trainFeatures]]/[[logWeightsFeatures]] on the store. */
   def train(docs: DataFrame, idCol: String, textCol: String,
       targetFilter: Column, buckets: Int): DsirModel = {
     val tIds = docs.filter(targetFilter)
       .select(col(idCol).as("id")).distinct()
-    Materialize.cached(hashedFeatures(docs, idCol, textCol, buckets))(
-      trainFeatures(_, tIds, buckets))
+    trainFeatures(hashedFeatures(docs, idCol, textCol, buckets), tIds, buckets)
   }
 
   /** The model frozen to plain arrays — serialization-safe and free of

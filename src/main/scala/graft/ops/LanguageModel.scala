@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.Materialize
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** N-gram language-model scoring — the CCNet/KenLM-style quality signal
@@ -30,11 +31,13 @@ import org.apache.spark.sql.functions._
   *     a single pass, no self-join on token position), and the per-doc
   *     aggregation collapses it right after the model join. Nothing
   *     document-sized crosses more than the one aggregation exchange.
-  *   - Training is two aggregations over the reference slice (bigram
-  *     counts, then context counts derived FROM the bigram relation —
-  *     the invariant c1(w) = Σ_w2 c12(w, w2) is by construction, not a
-  *     second corpus pass). The vocabulary size is a driver scalar, a
-  *     model parameter like the classifier's weight array.
+  *   - Training reads the reference slice ONCE: one tokenized pass
+  *     aggregates the bigram counts into a checkpoint, and every model
+  *     relation derives FROM it (contexts: the invariant
+  *     c1(w) = Σ_w2 c12(w, w2) is by construction, not a second corpus
+  *     pass). The vocabulary size and the count-of-counts are driver
+  *     scalars, model parameters like the classifier's weight array,
+  *     collected together from that checkpoint.
   *
   * Cross-engine determinism (the oracle replays everything): all counts
   * are exact integers; the per-bigram negative log-likelihood
@@ -66,17 +69,44 @@ object LanguageModel {
       .select(col("id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
   }
 
-  /** Train on a reference slice. Runs one explode→count aggregation for
-    * the bigram relation; contexts derive from it (no second text pass).
-    * The vocabulary count is the only action — a scalar model param. */
+  /** What one pass over a reference slice yields: the checkpointed
+    * bigram counts (w1, w2, c12) and the scalars both trainers need —
+    * vocabulary size, distinct bigrams, and the count-of-counts n₁/n₂. */
+  private final case class RefCounts(bigrams: DataFrame, vocab: Long,
+      n1all: Long, n1: Long, n2: Long)
+
+  /** Every token position emits (w1 = token, w2 = next token or null),
+    * so each token occurrence is a w1 exactly once: the distinct w1 are
+    * the vocabulary, the rows with a w2 are the bigram counts. The
+    * count relation is checkpointed once and every scalar comes from
+    * one collect over it. An empty slice fails here: it has no
+    * vocabulary, so every smoothed probability would divide by zero. */
+  private def refCounts(ref: DataFrame, textCol: String): RefCounts = {
+    val ts = ref.filter(col(textCol).isNotNull)
+      .select(TextAnalysis.tokens(col(textCol)).as("ts"))
+    val next = slice(col("ts"), lit(2), greatest(size(col("ts")) - 1, lit(0)))
+    val counts = Materialize(ts
+      .select(explode(zip_with(col("ts"), next,
+        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
+      .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+      .agg(count(lit(1)).as("c12")))
+    val isBigram = col("w2").isNotNull
+    val r = counts.agg(countDistinct(col("w1")), count(when(isBigram, 1)),
+        count(when(isBigram && col("c12") === 1, 1)),
+        count(when(isBigram && col("c12") === 2, 1)))
+      .collect().head
+    require(r.getLong(0) > 0,
+      "language-model reference slice is empty: no tokens to train on")
+    RefCounts(counts.filter(isBigram), r.getLong(0), r.getLong(1),
+      r.getLong(2), r.getLong(3))
+  }
+
+  /** Train on a reference slice: one pass ([[refCounts]]) for the bigram
+    * relation and the vocabulary; contexts derive from the bigrams. */
   def trainBigramLm(ref: DataFrame, textCol: String): BigramLm = {
-    val pairs = docBigrams(ref.select(lit(0L).as("_id"), col(textCol)), "_id", textCol)
-    val bigrams = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    val contexts = bigrams.groupBy("w1").agg(sum("c12").as("c1"))
-    val vocab = ref.filter(col(textCol).isNotNull)
-      .select(explode(TextAnalysis.tokens(col(textCol))).as("t"))
-      .agg(countDistinct(col("t"))).collect().head.getLong(0)
-    BigramLm(bigrams, contexts, vocab)
+    val rc = refCounts(ref, textCol)
+    val contexts = rc.bigrams.groupBy("w1").agg(sum("c12").as("c1"))
+    BigramLm(rc.bigrams, contexts, rc.vocab)
   }
 
   /** Per-document mean negative log-likelihood under `lm` (natural log;
@@ -130,24 +160,15 @@ object LanguageModel {
   final case class KnBigramLm(bigrams: DataFrame, contexts: DataFrame,
       rights: DataFrame, n1all: Long, vocab: Long, discount: Double)
 
-  /** Train the KN model: the add-one trainer's two aggregations plus
-    * the right-context counts and two scalar count-of-counts. */
+  /** Train the KN model: the add-one trainer's pass plus the
+    * right-context counts, all over the one bigram checkpoint. */
   def trainKnBigramLm(ref: DataFrame, textCol: String): KnBigramLm = {
-    val pairs = docBigrams(ref.select(lit(0L).as("_id"), col(textCol)), "_id", textCol)
-    val bigrams = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    val contexts = bigrams.groupBy("w1")
+    val rc = refCounts(ref, textCol)
+    val contexts = rc.bigrams.groupBy("w1")
       .agg(sum("c12").as("c1"), count(lit(1)).as("n1fwd"))
-    val rights = bigrams.groupBy("w2").agg(count(lit(1)).as("n1bwd"))
-    val cc = bigrams.agg(
-      sum((col("c12") === 1).cast("long")).as("n1"),
-      sum((col("c12") === 2).cast("long")).as("n2"),
-      count(lit(1)).as("n1all")).collect().head
-    val (n1, n2, n1all) = (cc.getLong(0), cc.getLong(1), cc.getLong(2))
-    val vocab = ref.filter(col(textCol).isNotNull)
-      .select(explode(TextAnalysis.tokens(col(textCol))).as("t"))
-      .agg(countDistinct(col("t"))).collect().head.getLong(0)
-    val d = if (n1 + 2 * n2 > 0) n1.toDouble / (n1 + 2 * n2) else 0.5
-    KnBigramLm(bigrams, contexts, rights, n1all, vocab, d)
+    val rights = rc.bigrams.groupBy("w2").agg(count(lit(1)).as("n1bwd"))
+    val d = if (rc.n1 + 2 * rc.n2 > 0) rc.n1.toDouble / (rc.n1 + 2 * rc.n2) else 0.5
+    KnBigramLm(rc.bigrams, contexts, rights, rc.n1all, rc.vocab, d)
   }
 
   /** Per-document mean negative log-likelihood under interpolated KN:
@@ -229,15 +250,17 @@ object LanguageModel {
       acc + when(col("nll") > cv, 1).otherwise(0)
     }
 
+  /** Checkpoints `ppl` first: the cuts are collected from it and the
+    * bands assigned over it, so the scoring chain runs once. */
   def perplexityBuckets(ppl: DataFrame, bands: Int = 3): DataFrame = {
-    val cuts = perplexityCuts(ppl, bands)
-    val bandCol = bandOfCuts(cuts)
+    val scored = Materialize(ppl)
+    val bandCol = bandOfCuts(perplexityCuts(scored, bands))
     val tier =
       if (bands == 3)
         when(col("band") === 0, lit("head"))
           .when(col("band") === 1, lit("middle"))
           .otherwise(lit("tail"))
       else col("band").cast("string")
-    ppl.withColumn("band", bandCol).withColumn("tier", tier)
+    scored.withColumn("band", bandCol).withColumn("tier", tier)
   }
 }

@@ -86,6 +86,45 @@ class DsirSpec extends SparkSpec {
       s"both novel bigrams must be scored: ${w.toSeq}")
   }
 
+  test("trainFeatures: the same dense ratios and totals as two collected totals, bit for bit") {
+    val feats = Dsir.hashedFeatures(docs, "doc_id", "text", 512)
+    // duplicated target ids must not double-count (semi-join semantics)
+    val ids = docs.filter(col("lang") === "en").select(col("doc_id").as("id"))
+    val tIds = ids.union(ids)
+    // the formula trainFeatures replaced: rN and tN collected to the
+    // driver, then the ratios computed over them as literals
+    val raw = feats.groupBy("bucket").agg(sum("cnt").as("rc"))
+    val tgt = feats.join(broadcast(tIds), Seq("id"), "left_semi")
+      .groupBy("bucket").agg(sum("cnt").as("tc"))
+    val rN = raw.agg(sum("rc")).collect().head.getLong(0)
+    val tN = tgt.agg(sum("tc")).collect().head.getLong(0)
+    val expected = spark.range(512).select(col("id").cast("int").as("bucket"))
+      .join(raw, Seq("bucket"), "left").join(tgt, Seq("bucket"), "left")
+      .select(col("bucket"), coalesce(col("rc"), lit(0L)).as("rc"),
+        coalesce(col("tc"), lit(0L)).as("tc"),
+        (log((coalesce(col("tc"), lit(0L)) + lit(1L)).cast("double") /
+            (lit(tN) + lit(512L)).cast("double")) -
+          log((coalesce(col("rc"), lit(0L)) + lit(1L)).cast("double") /
+            (lit(rN) + lit(512L)).cast("double"))).as("llr"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("bucket", "rc", "tc", "llr").as[(Int, Long, Long, Double)].collect()
+        .sortBy(_._1).map { case (b, r, t, l) => (b, r, t, java.lang.Double.doubleToRawLongBits(l)) }
+        .toSeq
+    val m = Dsir.trainFeatures(feats, tIds, buckets = 512)
+    assert(m.targetTotal == tN && m.rawTotal == rN)
+    assert(rows(m.ratios) == rows(expected))
+  }
+
+  test("an empty target slice fails loudly instead of training on nothing") {
+    val feats = Dsir.hashedFeatures(docs, "doc_id", "text", 512)
+    val e = intercept[IllegalArgumentException](
+      Dsir.trainFeatures(feats, Seq.empty[Long].toDF("id"), buckets = 512))
+    assert(e.getMessage.contains("DSIR target slice is empty"), e.getMessage)
+    val inline = intercept[IllegalArgumentException](
+      Dsir.train(docs, "doc_id", "text", col("lang") === "no-such-lang", buckets = 512))
+    assert(inline.getMessage.contains("DSIR target slice is empty"), inline.getMessage)
+  }
+
   test("plan: the model side broadcasts into the scoring join") {
     val df = Dsir.logWeights(docs, "doc_id", "text", model)
     df.collect()

@@ -68,4 +68,13 @@ class KnLmSpec extends SparkSpec {
     assert(nb("a") > nb("b"),
       s"continuation counts must rank contexts, not frequency: $nb")
   }
+
+  test("an empty reference slice fails loudly instead of dividing by a zero vocabulary") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val nullText = Seq((1L, null.asInstanceOf[String])).toDF("doc_id", "text")
+    Seq(empty, nullText).foreach { ref =>
+      val e = intercept[IllegalArgumentException](LanguageModel.trainKnBigramLm(ref, "text"))
+      assert(e.getMessage.contains("reference slice is empty"), e.getMessage)
+    }
+  }
 }
