@@ -33,13 +33,19 @@ object ExportJob {
     * canonical JSON.
     */
   def entriesFor(df: DataFrame): DataFrame = {
-    val cols = df.columns.toSet
-    require(Set("kind", "name").subsetOf(cols), s"not a KRM table: ${cols.mkString(",")}")
+    val cols = krmColumns(df)
     val ns = if (cols.contains("namespace")) col("namespace") else lit(null).cast("string")
     val group = if (cols.contains("apiGroup")) col("apiGroup") else lit(null).cast("string")
     df.select(
       ExportOps.krmPath(ns, group, col("kind"), col("name")).as("path"),
       ExportOps.serializeJson(struct(df.columns.map(col).toIndexedSeq: _*)).as("data"))
+  }
+
+  /** The columns of a canonical-KRM table; any other table fails here. */
+  private def krmColumns(df: DataFrame): Set[String] = {
+    val cols = df.columns.toSet
+    require(Set("kind", "name").subsetOf(cols), s"not a KRM table: ${cols.mkString(",")}")
+    cols
   }
 
   /** The 100 TB export path: no archive at all — write the rendered
@@ -49,43 +55,47 @@ object ExportJob {
     * for reference-parity single-archive exports.
     */
   def runPartitioned(spark: SparkSession, root: String, outDir: String): ExportResult = {
-    val (tables, discErrs) = Catalog.discover(spark, root)
-    val scan = Catalog.scanAll(spark, tables)
-    val frames = scan.groups.map(_.frame).flatMap { df =>
-      val cols = df.columns.toSet
-      if (!Set("kind", "name").subsetOf(cols)) None
-      else {
-        val ns = if (cols.contains("namespace")) col("namespace") else lit(null).cast("string")
-        Some(df.select(
-          ExportOps.defaultNamespace(ns).as("namespace"),
-          col("kind"),
-          col("name"),
-          ExportOps.serializeJson(struct(df.columns.map(col).toIndexedSeq: _*)).as("doc")))
-      }
+    val (frames, errs) = scanned(spark, root) { df =>
+      val cols = krmColumns(df)
+      val ns = if (cols.contains("namespace")) col("namespace") else lit(null).cast("string")
+      df.select(
+        ExportOps.defaultNamespace(ns).as("namespace"),
+        col("kind"),
+        col("name"),
+        ExportOps.serializeJson(struct(df.columns.map(col).toIndexedSeq: _*)).as("doc"))
     }
-    if (frames.isEmpty) return ExportResult(0L, discErrs ++ scan.errors)
+    if (frames.isEmpty) return ExportResult(0L, errs)
     // the entry count is an observed metric of the write itself, not a
     // second job over the output
     val written = Observation("export")
     frames.reduce(_ union _).observe(written, count(lit(1)).as("entries"))
       .write.mode("overwrite").partitionBy("namespace", "kind").parquet(outDir)
-    ExportResult(written.get("entries").asInstanceOf[Long], discErrs ++ scan.errors)
+    ExportResult(written.get("entries").asInstanceOf[Long], errs)
+  }
+
+  /** Discover and scan every table under `root`, and shape each scan
+    * group with `shape`. A group `shape` rejects is reported under each
+    * of its tables' names, next to the discovery and scan errors (B11 —
+    * never fail-fast). */
+  private def scanned(spark: SparkSession, root: String)(shape: DataFrame => DataFrame)
+      : (Seq[DataFrame], Seq[String]) = {
+    val (tables, discErrs) = Catalog.discover(spark, root)
+    val scan = Catalog.scanAll(spark, tables)
+    val attempts = scan.groups.map { g =>
+      scala.util.Try(shape(g.frame)).toEither.left
+        .map(ex => g.tables.map(t => s"${t.name}: ${ex.getMessage}"))
+    }
+    (attempts.collect { case Right(df) => df },
+      discErrs ++ scan.errors ++ attempts.collect { case Left(e) => e }.flatten)
   }
 
   /** Discover, scan, render: the shared head of every zip-mode export.
     * Returns the rendered (path, data) frame (None when no table
-    * survived) plus accumulated errors (B11 — never fail-fast).
+    * survived) plus accumulated errors.
     */
   private def renderedEntries(spark: SparkSession, root: String)
       : (Option[DataFrame], Seq[String]) = {
-    val (tables, discErrs) = Catalog.discover(spark, root)
-    val scan = Catalog.scanAll(spark, tables)
-    val attempts = scan.groups.map { g =>
-      scala.util.Try(entriesFor(g.frame)).toEither.left
-        .map(ex => g.tables.map(t => s"${t.name}: ${ex.getMessage}"))
-    }
-    val frames = attempts.collect { case Right(df) => df }
-    val errs = discErrs ++ scan.errors ++ attempts.collect { case Left(e) => e }.flatten
+    val (frames, errs) = scanned(spark, root)(entriesFor)
     if (frames.isEmpty) (None, errs)
     else {
       val unioned = frames.reduce(_ union _)

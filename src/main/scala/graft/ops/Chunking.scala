@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.EpochStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -207,7 +208,7 @@ object Chunking {
   /** Persisted gram-occurrence store for the INCREMENTAL substring
     * scrub: one `(gh, occ)` count relation per epoch under
     * `path/batch=<id>/`, OVERWRITE per epoch so a replay replaces its
-    * own output (the [[graft.streaming.IngestGate]] sink discipline).
+    * own output ([[EpochStore]]).
     * Occurrence counts are additive, so epochs UNION correctly — the
     * probe sums per gram across epochs — and [[Compaction]] applies
     * unchanged (row union preserves the sums). Store width is 16 B per
@@ -215,9 +216,8 @@ object Chunking {
     * (see [[scrubIncremental]]). */
   def writeGramEpoch(docs: DataFrame, idCol: String, textCol: String,
       minLen: Int, path: String, batchId: Long = 0L): Unit =
-    slidingGrams(tokenized(docs, idCol, textCol), minLen)
-      .groupBy(col("gh")).agg(count(lit(1)).as("occ"))
-      .write.mode("overwrite").parquet(s"$path/batch=$batchId")
+    EpochStore.write(slidingGrams(tokenized(docs, idCol, textCol), minLen)
+      .groupBy(col("gh")).agg(count(lit(1)).as("occ")), path, batchId)
 
   /** Scrub a NEW batch against corpus-so-far ∪ the batch itself —
     * the incremental form of [[scrubRepeatedSubstrings]], same Lee
@@ -245,8 +245,8 @@ object Chunking {
     val grams = slidingGrams(base, minLen)
     val batchCnt = grams.groupBy(col("gh")).agg(count(lit(1)).as("bocc"))
     appendBatchId.foreach { bid =>
-      batchCnt.select(col("gh"), col("bocc").as("occ"))
-        .write.mode("overwrite").parquet(s"$indexPath/batch=$bid")
+      EpochStore.write(batchCnt.select(col("gh"), col("bocc").as("occ")),
+        indexPath, bid)
     }
     val spark = batch.sparkSession
     // history counts for exactly the batch's grams: store scan +
@@ -255,21 +255,17 @@ object Chunking {
     // gate's self-rejection lesson applied to counts (a replayed
     // batch's own committed counts would double its occurrences; a
     // replay must pass the SAME appendBatchId, as gateBatch does).
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasHistory = fs.exists(root) && fs.listStatus(root).exists { s =>
-      val nm = s.getPath.getName
-      s.isDirectory && nm.startsWith("batch=") &&
-        scala.util.Try(nm.stripPrefix("batch=").toLong).toOption
-          .forall(id => !appendBatchId.contains(id))
+    val history = appendBatchId match {
+      case Some(bid) => EpochStore.prior(spark, indexPath, bid)
+      case None => EpochStore.read(spark, indexPath)
     }
-    val hist =
-      if (!hasHistory)
+    val hist = history match {
+      case None =>
         batchCnt.select(col("gh"), col("bocc").cast("long").as("hocc")).limit(0)
-      else spark.read.parquet(indexPath)
-        .filter(appendBatchId.map(bid => col("batch") =!= bid).getOrElse(lit(true)))
+      case Some(store) => store
         .join(broadcast(batchCnt.select(col("gh"))), Seq("gh"))
         .groupBy(col("gh")).agg(sum(col("occ")).as("hocc"))
+    }
     val repeatedGrams = batchCnt.join(hist, Seq("gh"), "left")
       .filter(col("bocc") + coalesce(col("hocc"), lit(0L)) > maxOcc)
       .select(col("gh"))

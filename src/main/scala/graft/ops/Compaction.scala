@@ -1,17 +1,20 @@
 package graft.ops
 
+import graft.EpochStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-/** Epoch compaction for batch-partitioned sinks — the small-files
+/** Epoch compaction for [[graft.EpochStore]] sinks — the small-files
   * control every epoch-appending layout eventually needs: each gated
   * micro-batch adds a `batch=<id>` directory
   * ([[graft.streaming.IngestGate]]), so a long-running stream
   * accumulates thousands of small partitions whose listing and footer
   * overhead comes to dominate probe cost. Compaction collapses the
-  * selected epochs into ONE base generation (`batch=<baseId>`,
-  * default −1), preserving nested partition levels (the ANN index's
-  * `cell=`).
+  * selected epochs into ONE base generation, the epoch
+  * [[graft.EpochStore.BaseEpoch]] (−1), preserving nested partition
+  * levels (the ANN index's `cell=`). The epoch column and the base id
+  * are the store's, not parameters: every caller compacts an epoch
+  * store.
   *
   * Swap discipline (same as [[Retraction]]): the base is fully written
   * to a temp dir FIRST; the victim epochs are then parked aside (dot-
@@ -38,6 +41,11 @@ object Compaction {
 
   private def path(s: String) = new org.apache.hadoop.fs.Path(s)
 
+  /** Where the base is written before the swap, and the prefix an epoch
+    * parked aside carries; both dot-names are invisible to readers. */
+  private val Tmp = s".compact-${EpochStore.Col}"
+  private val Aside = s".compact-aside-${EpochStore.Col}-"
+
   /** Crash recovery for an interrupted [[compactEpochs]] swap — run on
     * entry. States, by crash window:
     *   - temp base present, no asides → crash during/after the base
@@ -49,63 +57,54 @@ object Compaction {
     *     parking and renaming: if the temp exists it is complete
     *     (written before any parking) — rename it in and drop asides;
     *     otherwise restore the asides (compaction just re-runs). */
-  def recover(spark: SparkSession, dir: String, partCol: String = "batch",
-      baseId: Long = -1L): Unit = {
+  def recover(spark: SparkSession, dir: String): Unit = {
     val root = path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return
     val names = fs.listStatus(root).map(_.getPath.getName)
-    val tmp = path(s"$dir/.compact-$partCol")
-    val base = path(s"$dir/$partCol=$baseId")
-    val asides = names.filter(_.startsWith(s".compact-aside-$partCol-"))
+    val tmp = path(s"$dir/$Tmp")
+    val base = path(EpochStore.path(dir, EpochStore.BaseEpoch))
+    val asides = names.filter(_.startsWith(Aside))
     if (asides.nonEmpty) {
       if (!fs.exists(base) && fs.exists(tmp)) fs.rename(tmp, base)
       if (fs.exists(base))
         asides.foreach(a => fs.delete(path(s"$dir/$a"), true))
       else asides.foreach { a =>
-        fs.rename(path(s"$dir/$a"),
-          path(s"$dir/${a.stripPrefix(s".compact-aside-$partCol-")}"))
+        fs.rename(path(s"$dir/$a"), path(s"$dir/${a.stripPrefix(Aside)}"))
       }
     }
     if (fs.exists(tmp)) fs.delete(tmp, true)
   }
 
-  /** Collapse the `partCol=` partitions with epoch id ≤ `maxEpochId`
-    * under `dir` into one base partition (id parse failures are left
+  /** Collapse the epochs with id ≤ `maxEpochId` under `dir` into the
+    * base epoch (partition names that are not a number are left
     * untouched). Returns the number of epoch partitions collapsed.
     *
     * @param maxEpochId the committed checkpoint horizon: epochs ABOVE
     *        it are still replayable by the stream and are never
     *        touched. Pass `Long.MaxValue` only for a stopped stream. */
   def compactEpochs(spark: SparkSession, dir: String, maxEpochId: Long,
-      partCol: String = "batch", nestedPartCols: Seq[String] = Nil,
-      baseId: Long = -1L): Int = {
+      nestedPartCols: Seq[String] = Nil): Int = {
     val root = path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return 0
-    recover(spark, dir, partCol, baseId) // repair any interrupted swap
-    val epochDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .map(_.getPath)
-      .filter { p =>
-        val id = p.getName.stripPrefix(s"$partCol=")
-        scala.util.Try(id.toLong).toOption.exists(_ <= maxEpochId)
-      }
+    recover(spark, dir) // repair any interrupted swap
+    val epochDirs = EpochStore.epochs(spark, dir).filter(_ <= maxEpochId)
+      .map(e => path(EpochStore.path(dir, e)))
     if (epochDirs.length <= 1) return 0
-    val tmp = path(s"$dir/.compact-$partCol")
+    val tmp = path(s"$dir/$Tmp")
     // only the selected epochs feed the base — later epochs stay live
     val all = spark.read.parquet(dir)
-      .where(col(partCol).cast("long") <= maxEpochId)
-      .drop(partCol)
+      .where(col(EpochStore.Col).cast("long") <= maxEpochId)
+      .drop(EpochStore.Col)
     val writer = all.write.mode("overwrite")
     (if (nestedPartCols.nonEmpty) writer.partitionBy(nestedPartCols: _*)
      else writer).parquet(tmp.toString)
     // park victims aside (readers skip dot-dirs), swap the base in,
     // then drop the asides — deletion strictly after the base is live
-    val asides = epochDirs.map(p =>
-      p -> path(s"$dir/.compact-aside-$partCol-${p.getName}"))
+    val asides = epochDirs.map(p => p -> path(s"$dir/$Aside${p.getName}"))
     asides.foreach { case (src, dst) => fs.rename(src, dst) }
-    fs.rename(tmp, path(s"$dir/$partCol=$baseId"))
+    fs.rename(tmp, path(EpochStore.path(dir, EpochStore.BaseEpoch)))
     asides.foreach { case (_, dst) => fs.delete(dst, true) }
     epochDirs.length
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1317,8 +1317,8 @@ object Dedup {
     // id would otherwise rename into the live store
     if (fs.exists(p(s"$path/.blocks-tmp")))
       fs.delete(p(s"$path/.blocks-tmp"), true)
-    writeSimhashBlocksTo(corpus, idCol, textCol,
-      s"$path/.blocks-tmp/batch=$epoch", tokenHash, bits, blocks)
+    writeSimhashBlocksTo(corpus, idCol, textCol, s"$path/.blocks-tmp", epoch,
+      tokenHash, bits, blocks)
     val live = p(s"$path/blocks")
     if (fs.exists(live)) fs.rename(live, p(s"$path/.blocks-aside"))
     fs.rename(p(s"$path/.blocks-tmp"), live)
@@ -1336,22 +1336,22 @@ object Dedup {
       textCol: String, path: String, epoch: Long,
       tokenHash: Column => Column = md5TokenHash60,
       bits: Int = 60, blocks: Int = 4): Unit =
-    writeSimhashBlocksTo(delta, idCol, textCol,
-      s"$path/blocks/batch=$epoch", tokenHash, bits, blocks)
+    writeSimhashBlocksTo(delta, idCol, textCol, s"$path/blocks", epoch,
+      tokenHash, bits, blocks)
 
-  /** The shared epoch write: sign, block, land sorted block rows at
-    * `target` (a `.../batch=<epoch>` leaf — live for appends, the tmp
-    * root for [[writeSimhashIndex]]'s crash-safe rebuild swap). */
+  /** The shared epoch write: sign, block, land sorted block rows as
+    * epoch `epoch` of the store at `root` — live for appends, the tmp
+    * root for [[writeSimhashIndex]]'s crash-safe rebuild swap. */
   private def writeSimhashBlocksTo(delta: DataFrame, idCol: String,
-      textCol: String, target: String, tokenHash: Column => Column,
-      bits: Int, blocks: Int): Unit =
-    simhashBlocks(
-        simhashSignatures(delta, idCol, textCol, tokenHash, bits),
-        bits, blocks)
-      .repartition(col("b"))
-      .sortWithinPartitions(col("key"))
-      .write.mode("overwrite").partitionBy("b")
-      .parquet(target)
+      textCol: String, root: String, epoch: Long,
+      tokenHash: Column => Column, bits: Int, blocks: Int): Unit =
+    EpochStore.write(
+      simhashBlocks(
+          simhashSignatures(delta, idCol, textCol, tokenHash, bits),
+          bits, blocks)
+        .repartition(col("b"))
+        .sortWithinPartitions(col("key")),
+      root, epoch, "b")
 
   /** The probe core shared by [[newVsCorpusSimhash]] (serving store)
     * and [[graft.streaming.SimhashGate]] (accumulated epoch rows):

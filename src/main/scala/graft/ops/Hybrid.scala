@@ -37,8 +37,8 @@ object Hybrid {
     * add left to right, so the same list order replays the same IEEE
     * sum in any engine (the 2-ranker (lexical, vector) convention,
     * generalized). Output: (id, rrf, rk), rk ∈ [1, k]; the fused
-    * relation is ≤ N·m rows by construction, so the global window is
-    * bounded by the rankers' list sizes, never the corpus. */
+    * relation is cut to its top k before the rank window, so the
+    * window never sees more than k rows. */
   def rrfTopKN(rankers: Seq[(String, DataFrame)], k: Int,
       k0: Int = 60): DataFrame = {
     require(rankers.nonEmpty, "rrfTopKN needs at least one ranker")
@@ -58,10 +58,12 @@ object Hybrid {
     val rrf = aliases
       .map(a => coalesce(lit(1.0) / (lit(k0) + col(a)), lit(0.0)))
       .reduce(_ + _)
+    // distributed top-k first (TextIndex.bm25TopK's cut): the rank
+    // window then only ever sees k rows
     joined.select(col("id"), round(rrf, 6).as("rrf"))
+      .orderBy(col("rrf").desc, col("id")).limit(k)
       .withColumn("rk", row_number().over(
         Window.orderBy(col("rrf").desc, col("id"))))
-      .filter(col("rk") <= k)
   }
 
   /** Fuse two (id, rk) rankings — [[rrfTopKN]] at the classic

@@ -159,6 +159,13 @@ object IvfIndex {
   def writeIndexed(corpus: DataFrame, centroids: Array[Array[Double]],
       path: String,
       cutoverCells: Int = QuantizerRelation.CutoverCells): Unit =
+    indexed(corpus, centroids, cutoverCells)
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
+
+  /** [[writeIndexed]]'s rows, clustered by cell for a `cell`-partitioned
+    * write (also of an epoch, [[graft.EpochStore.write]]). */
+  def indexed(corpus: DataFrame, centroids: Array[Array[Double]],
+      cutoverCells: Int = QuantizerRelation.CutoverCells): DataFrame =
     // cluster by cell before the partitioned write: without it every
     // write task emits one file per cell it happens to hold, and at
     // large k the file count explodes multiplicatively (task × cell —
@@ -167,7 +174,6 @@ object IvfIndex {
     // non-empty cell, which is also the layout probes want to prune
     assignCells(corpus, "id", "vec", centroids, cutoverCells = cutoverCells)
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
 
   /** Probe a [[writeIndexed]] corpus: the probed cell ids (at most
     * queries × nProbe ints — queries are small by contract) are

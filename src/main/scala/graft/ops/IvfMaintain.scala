@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -113,12 +113,13 @@ object IvfMaintain {
     // the prior epochs' (tiny stats rows, one per epoch). An empty
     // epoch, or a store with no prior non-empty epoch, has nothing to
     // drift from.
-    val stats = spark.read.parquet(s"$path/live/stats")
-    val curRow = stats.filter(col("batch") === epoch && col("n") > 0)
-      .select("mean_bc_cos").collect()
-    val refRow = stats.filter(col("batch") =!= epoch && col("n") > 0)
-      .select((sum(col("mean_bc_cos") * col("n")) / sum(col("n"))).as("m"))
-      .collect().filter(!_.isNullAt(0))
+    val stats = s"$path/live/stats"
+    val curRow = spark.read.parquet(EpochStore.path(stats, epoch))
+      .filter(col("n") > 0).select("mean_bc_cos").collect()
+    val refRow = EpochStore.prior(spark, stats, epoch).toSeq.flatMap(
+      _.filter(col("n") > 0)
+        .select((sum(col("mean_bc_cos") * col("n")) / sum(col("n"))).as("m"))
+        .collect().filter(!_.isNullAt(0)))
     if (curRow.isEmpty || refRow.isEmpty)
       return MaintainResult(0.0, 0.0, retrained = false)
     val cosDrop = refRow.head.getDouble(0) - curRow.head.getDouble(0)
@@ -187,10 +188,8 @@ object IvfMaintain {
       liveDir: String, epoch: Long): Unit = {
     val assigned = Materialize(rows.select(col("id"), col("vec"))
       .withColumn("cell", IvfIndex.bestCell(col("vec"), cents)))
-    assigned
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$liveDir/blocks/batch=$epoch")
+    EpochStore.write(assigned.repartition(col("cell")), s"$liveDir/blocks",
+      epoch, "cell")
     writeStats(assigned.withColumn("batch", lit(epoch)), cents,
       s"$liveDir/stats", epochLeaf = Some(epoch))
     Materialize.release(assigned)
@@ -214,8 +213,7 @@ object IvfMaintain {
       .agg(count(lit(1)).as("n"), avg(col("bc")).as("mean_bc_cos"))
     epochLeaf match {
       case Some(epoch) =>
-        stats.drop("batch").coalesce(1)
-          .write.mode("overwrite").parquet(s"$statsDir/batch=$epoch")
+        EpochStore.write(stats.drop("batch").coalesce(1), statsDir, epoch)
       case None =>
         stats.repartition(col("batch")).write.mode("overwrite")
           .partitionBy("batch").parquet(statsDir)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.EpochStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -100,9 +101,9 @@ object IvfPq {
       cb: PqIndex.Codebooks, path: String, batchId: Long,
       idCol: String = "id", vecCol: String = "vec",
       cutoverCells: Int = QuantizerRelation.CutoverCells): Unit =
-    encodeBoth(delta, centroids, cb, cutoverCells, idCol, vecCol)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/batch=$batchId")
+    EpochStore.write(
+      encodeBoth(delta, centroids, cb, cutoverCells, idCol, vecCol),
+      path, batchId, "cell")
 
   /** Probe a [[writeIndex]] corpus: `nProbe` cells per query pushed as
     * a literal partition filter; ADC over (id, codes) inside the probed

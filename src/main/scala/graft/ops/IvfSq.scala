@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.EpochStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
@@ -78,10 +79,8 @@ object IvfSq {
     * live in exactly the base index's residual space. */
   def appendIndexEpoch(delta: DataFrame, centroids: Array[Array[Double]],
       b: Sq.SqBounds, path: String, batchId: Long): Unit =
-    encoded(delta, centroids, b)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/batch=$batchId")
+    EpochStore.write(encoded(delta, centroids, b).repartition(col("cell")),
+      path, batchId, "cell")
 
   /** Probe: partition-pruned cells, broadcast query side, codes-only
     * ADC scan (`qc + sq_dot`), two-phase shortlist, exact re-rank on

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.EpochStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,12 +37,12 @@ object Multimodal {
     * verify BOTH signatures index-locally. */
   def appendPhashIndexEpoch(sigs: DataFrame, path: String,
       epoch: Long, blocks: Int = 4): Unit =
-    Dedup.simhashBlocks(sigs.select(col("id"), col("sig"), col("dsig")),
-        bits = 64, blocks = blocks, carry = Seq("dsig"))
-      .repartition(col("b"))
-      .sortWithinPartitions(col("key"))
-      .write.mode("overwrite").partitionBy("b")
-      .parquet(s"$path/blocks/batch=$epoch")
+    EpochStore.write(
+      Dedup.simhashBlocks(sigs.select(col("id"), col("sig"), col("dsig")),
+          bits = 64, blocks = blocks, carry = Seq("dsig"))
+        .repartition(col("b"))
+        .sortWithinPartitions(col("key")),
+      s"$path/blocks", epoch, "b")
 
   /** Probe a NEW batch of image signatures against an
     * [[appendPhashIndexEpoch]] store: every (new, stored) pair within

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -494,13 +494,16 @@ object NnDescent {
   def writeGraphIndex(graph: DataFrame, path: String,
       numBuckets: Int = DefaultGraphBuckets, epoch: Long = 0L): Unit = {
     require(numBuckets > 0)
-    undirected(graph)
+    writeEdges(undirected(graph), path, epoch, numBuckets)
+  }
+
+  /** Lands undirected (c, v) edges as one epoch of the serving index. */
+  private def writeEdges(edges: DataFrame, path: String, epoch: Long,
+      numBuckets: Int): Unit =
+    EpochStore.write(edges
       .withColumn("nb", bucketOf(col("c"), numBuckets))
       .repartition(col("nb"))
-      .sortWithinPartitions("c")
-      .write.mode("overwrite").partitionBy("nb")
-      .parquet(s"$path/batch=$epoch")
-  }
+      .sortWithinPartitions("c"), path, epoch, "nb")
 
   /** Epoch APPEND for the graph index: the undirected edges of a
     * refreshed graph ([[appendNodes]]' result) that are NOT yet in the
@@ -511,20 +514,18 @@ object NnDescent {
     * standard DiskANN/HNSW incremental stance — and visited-set growth
     * is bounded by the stale fraction. Reads exclude `batch = epoch`
     * itself so a replay recomputes the same delta instead of
-    * self-cancelling ([[graft.streaming.IngestGate]]'s exclusion).
-    * Periodic rebuild = [[writeGraphIndex]] (full overwrite). */
+    * self-cancelling ([[EpochStore.prior]]); on an empty store every
+    * edge is new. Periodic rebuild = [[writeGraphIndex]] (full
+    * overwrite). */
   def appendGraphIndexEpoch(refreshed: DataFrame, path: String,
       epoch: Long, numBuckets: Int = DefaultGraphBuckets): Unit = {
-    val spark = refreshed.sparkSession
-    val existing = spark.read.parquet(path)
-      .filter(col("batch") =!= epoch).select("c", "v")
-    undirected(refreshed)
-      .join(existing, Seq("c", "v"), "left_anti")
-      .withColumn("nb", bucketOf(col("c"), numBuckets))
-      .repartition(col("nb"))
-      .sortWithinPartitions("c")
-      .write.mode("overwrite").partitionBy("nb")
-      .parquet(s"$path/batch=$epoch")
+    val edges = undirected(refreshed)
+    val fresh = EpochStore.prior(refreshed.sparkSession, path, epoch) match {
+      case Some(store) =>
+        edges.join(store.select("c", "v"), Seq("c", "v"), "left_anti")
+      case None => edges
+    }
+    writeEdges(fresh, path, epoch, numBuckets)
   }
 
   /** Frontier-size cutover for the indexed walk's per-hop pruning
@@ -676,15 +677,8 @@ object NnDescent {
       retainStates: Int = 2): DataFrame = {
     require(retainStates >= 2, s"need current+prior snapshots, got $retainStates")
     val spark = delta.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    val stateRoot = new org.apache.hadoop.fs.Path(s"$dir/state")
-    val fs = stateRoot.getFileSystem(conf)
-    val allStates: Seq[Long] =
-      if (fs.exists(stateRoot))
-        fs.listStatus(stateRoot).filter(_.isDirectory)
-          .map(_.getPath.getName).filter(_.startsWith("batch="))
-          .map(_.stripPrefix("batch=").toLong).toSeq.sorted
-      else Nil
+    val state = s"$dir/state"
+    val allStates = EpochStore.epochs(spark, state)
     val priorEpochs = allStates.filter(_ < batchId)
     // Replay-window guard: a cold start is legitimate ONLY on a fresh
     // store (or a replay of the very first epoch, whose "prior input"
@@ -700,18 +694,16 @@ object NnDescent {
     // the last sweep's checkpoint feeds the snapshot AND the index delta
     val out = priorEpochs.lastOption match {
       case Some(pe) =>
-        appendNodes(spark.read.parquet(s"$dir/state/batch=$pe"),
+        appendNodes(spark.read.parquet(EpochStore.path(state, pe)),
           allNodes, delta, k, iters)
       case None => knnGraph(allNodes, k, iters)
     }
-    out.write.mode("overwrite").parquet(s"$dir/state/batch=$batchId")
-    val indexRoot = new org.apache.hadoop.fs.Path(s"$dir/index")
-    if (fs.exists(indexRoot))
-      appendGraphIndexEpoch(out, s"$dir/index", batchId, numBuckets)
-    else
-      writeGraphIndex(out, s"$dir/index", numBuckets, epoch = batchId)
+    EpochStore.write(out, state, batchId)
+    appendGraphIndexEpoch(out, s"$dir/index", batchId, numBuckets)
+    val fs = new org.apache.hadoop.fs.Path(state)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     priorEpochs.dropRight(retainStates - 1).foreach { e =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/state/batch=$e"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(EpochStore.path(state, e)), true)
     }
     out
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -170,10 +170,9 @@ object ResidualPq {
   def appendIndexEpochRotated(delta: DataFrame, rot: Array[Array[Double]],
       centroids: Array[Array[Double]], cb: PqIndex.Codebooks,
       path: String, batchId: Long): Unit =
-    encodedRotated(delta, rot, centroids, cb)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/batch=$batchId")
+    EpochStore.write(
+      encodedRotated(delta, rot, centroids, cb).repartition(col("cell")),
+      path, batchId, "cell")
 
   /** Streaming-epoch append with FROZEN quantizers —
     * [[IvfPq.appendIndexEpoch]]'s contract for the residual-encoded
@@ -200,10 +199,8 @@ object ResidualPq {
     * residual-encoded index. */
   def appendIndexEpoch(delta: DataFrame, centroids: Array[Array[Double]],
       cb: PqIndex.Codebooks, path: String, batchId: Long): Unit =
-    encoded(delta, centroids, cb)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/batch=$batchId")
+    EpochStore.write(encoded(delta, centroids, cb).repartition(col("cell")),
+      path, batchId, "cell")
 
   /** Probe: [[IvfPq.topK]]'s pipeline plus the exact q·centroid term —
     * the query's dot with EVERY cell centroid is one reference-object

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -141,10 +141,8 @@ object TextIndex {
       .withColumn("tb", pmod(xxhash64(col("token")), lit(nBuckets))))
     try {
       if (post.isEmpty) return
-      post.write.mode("overwrite").partitionBy("tb")
-        .parquet(s"$path/postings/batch=$epoch")
-      epochStats(post)
-        .write.mode("overwrite").parquet(s"$path/estats/batch=$epoch")
+      EpochStore.write(post, s"$path/postings", epoch, "tb")
+      EpochStore.write(epochStats(post), s"$path/estats", epoch)
     } finally Materialize.release(post)
   }
 

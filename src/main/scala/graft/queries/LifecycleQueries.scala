@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Materialize, Tables}
+import graft.{EpochStore, Materialize, Tables}
 import org.apache.spark.sql.functions._
 
 /** Seventh wave of the query surface (round 17): the LIFECYCLE /
@@ -306,7 +306,7 @@ object LifecycleQueries {
     graft.streaming.ParagraphGate.gateBatch(
       docs.filter(col("doc_id") % 5 === 0), 1L, keyDir, accDir,
       "doc_id", "text", window = 20)
-    s.read.parquet(s"$accDir/batch=1")
+    s.read.parquet(EpochStore.path(accDir, 1))
       .select(col("doc_id"), col("n_chunks"), col("n_kept"), col("kept_text"))
       .orderBy(col("doc_id"))
   }

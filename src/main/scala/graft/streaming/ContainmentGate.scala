@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import graft.ops.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -32,7 +32,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch-prefix-sized; verification reads index rows — the
   * accumulated corpus text is never re-read.
   *
-  * Replay idempotence ([[IngestGate]]'s discipline): overwrite-by-epoch
+  * Replay idempotence ([[graft.EpochStore]]'s rules): overwrite-by-epoch
   * sinks, and the probe excludes `batch = batchId` from the index read
   * — a foreachBatch retry would otherwise find its own shingle rows
   * (containment of a doc in its own stored copy is exactly 1.0),
@@ -52,10 +52,9 @@ object ContainmentGate {
     val inBatch = Dedup.containmentCollapse(batch, idCol, textCol,
       threshold, n)
     // (2) probe the accumulated index, excluding this epoch (replay)
-    val survivors = IngestGate.readIfAny(spark, indexDir) match {
+    val survivors = EpochStore.prior(spark, indexDir, batchId) match {
       case Some(idxRaw) =>
-        val idx = idxRaw.filter(col("batch") =!= batchId)
-          .select("id", "shingle", "sz")
+        val idx = idxRaw.select("id", "shingle", "sz")
         val dupIds = Dedup.newVsCorpusContainment(idx, inBatch,
             idCol, textCol, threshold, n)
           .select(col("id1").as(idCol)).distinct()
@@ -63,12 +62,9 @@ object ContainmentGate {
       case None => inBatch
     }
     Materialize.cached(survivors) { accepted =>
-      val nAccepted = accepted.count()
-      accepted.write.mode("overwrite")
-        .parquet(s"$acceptedDir/batch=$batchId")
-      Dedup.containmentIndex(accepted, idCol, textCol, n)
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/batch=$batchId")
+      val nAccepted = EpochStore.write(accepted, acceptedDir, batchId)
+      EpochStore.write(Dedup.containmentIndex(accepted, idCol, textCol, n),
+        indexDir, batchId)
       nAccepted
     }
   }
@@ -77,16 +73,9 @@ object ContainmentGate {
   def start(docs: DataFrame, indexDir: String, acceptedDir: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.8,
-      n: Int = 3): StreamingQuery = {
-    require(docs.isStreaming, "ContainmentGate.start needs a streaming " +
-      "input; use Dedup.newVsCorpusContainment for a one-shot batch")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        gateBatch(b, id, indexDir, acceptedDir, idCol, textCol,
-          threshold, n)
-        ()
-      }
-      .start()
-  }
+      n: Int = 3): StreamingQuery =
+    GateProtocol.start(docs, checkpointDir, "ContainmentGate.start",
+      "Dedup.newVsCorpusContainment") { (b, id) =>
+      gateBatch(b, id, indexDir, acceptedDir, idCol, textCol, threshold, n)
+    }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.EpochStore
 import graft.ops.Dsir
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * parallel implementation.
   *
   * Replay idempotence: one `batch=<id>` subdirectory per epoch in
-  * OVERWRITE mode (the [[IngestGate]] convention) — scoring is
+  * OVERWRITE mode ([[graft.EpochStore]]) — scoring is
   * stateless across epochs, so a foreachBatch retry simply rewrites
   * the identical partition.
   *
@@ -45,25 +45,16 @@ object DsirGate {
       model.thaw(batch.sparkSession))
     val keptIds = scored.filter(col("logw") >= threshold)
       .select(col("id").as(idCol))
-    Materialize.cached(batch.join(keptIds, Seq(idCol), "left_semi")) { accepted =>
-      val n = accepted.count()
-      accepted.write.mode("overwrite").parquet(s"$acceptedDir/batch=$batchId")
-      n
-    }
+    EpochStore.write(batch.join(keptIds, Seq(idCol), "left_semi"),
+      acceptedDir, batchId)
   }
 
   /** Run the gate over a streaming document feed. */
   def start(docs: DataFrame, acceptedDir: String, checkpointDir: String,
       idCol: String, textCol: String, model: Dsir.FrozenModel,
-      threshold: Double): StreamingQuery = {
-    require(docs.isStreaming, "DsirGate.start needs a streaming input; " +
-      "use Dsir.logWeights + a filter for a one-shot batch")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        gateBatch(b, id, acceptedDir, idCol, textCol, model, threshold)
-        ()
-      }
-      .start()
-  }
+      threshold: Double): StreamingQuery =
+    GateProtocol.start(docs, checkpointDir, "DsirGate.start",
+      "Dsir.logWeights + a filter") { (b, id) =>
+      gateBatch(b, id, acceptedDir, idCol, textCol, model, threshold)
+    }
 }

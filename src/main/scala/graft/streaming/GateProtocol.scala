@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -31,11 +31,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * [[SimhashGate]] (60-bit text signatures) and [[PhashGate]] (64-bit
   * dual image signatures) instantiate this skeleton with their sign
-  * and verify steps; [[IngestGate]] (banded MinHash + Jaccard verify)
-  * and [[SemanticGate]] (quantizer cells + cosine verify) share the
-  * collapse-then-probe-then-dual-append shape and the [[start]]
-  * wrapper but carry their own probe machinery (banding recall and
-  * cell pruning don't reduce to block equality).
+  * and verify steps; [[IngestGate]] (banded MinHash + Jaccard verify),
+  * [[ContainmentGate]], [[ParagraphGate]] and [[SemanticGate]] share
+  * the collapse-then-probe-then-append shape but carry their own probe
+  * machinery (banding recall, containment, block keys and cell pruning
+  * don't reduce to block equality). Every store they write and probe
+  * is a [[graft.EpochStore]].
+  *
+  * [[start]] is the one streaming entry point of every gate, of the
+  * stateless per-epoch sinks ([[DsirGate]], [[PplGate]],
+  * [[TokenBudgetStream]]) and of the three [[RecallStream]] monitors.
   */
 private[streaming] object GateProtocol {
 
@@ -56,11 +61,9 @@ private[streaming] object GateProtocol {
         .filter(col("id2") < col("id1"))
         .select(col("id1").as("id")).distinct()
       val inBatchBlk = blk.join(inBatchDropped, Seq("id"), "left_anti")
-      val storeDropped = IngestGate.readIfAny(spark, indexDir) match {
-        case Some(storeRaw) =>
-          val store = storeRaw.filter(col("batch") =!= batchId)
-            .select(storeCols.map(col): _*)
-          probe(store, inBatchBlk)
+      val storeDropped = EpochStore.prior(spark, indexDir, batchId) match {
+        case Some(store) =>
+          probe(store.select(storeCols.map(col): _*), inBatchBlk)
             .select(col("id1").as("id")).distinct()
         case None => // no prior epochs — nothing to defer to
           import spark.implicits._
@@ -69,29 +72,24 @@ private[streaming] object GateProtocol {
       val acceptedBlk = inBatchBlk.join(storeDropped, Seq("id"), "left_anti")
       val rejected = inBatchDropped.union(storeDropped)
         .select(col("id").as(idCol)).distinct()
-      Materialize.cached(batch.join(rejected, Seq(idCol), "left_anti")) { accepted =>
-        val nAccepted = accepted.count()
-        // overwrite-by-epoch: a replayed batch replaces its own output
-        accepted.write.mode("overwrite")
-          .parquet(s"$acceptedDir/batch=$batchId")
-        acceptedBlk.select(storeCols.map(col): _*)
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/batch=$batchId")
-        nAccepted
-      }
+      val nAccepted = EpochStore.write(
+        batch.join(rejected, Seq(idCol), "left_anti"), acceptedDir, batchId)
+      EpochStore.write(acceptedBlk.select(storeCols.map(col): _*), indexDir, batchId)
+      nAccepted
     }
   }
 
-  /** The gate family's foreachBatch wrapper: requires a streaming
-    * input (pointing batch callers at the one-shot operator named in
-    * `batchAlternative`) and runs `gate` per micro-batch. */
-  def start(docs: DataFrame, checkpointDir: String, gateName: String,
-      batchAlternative: String)(gate: (DataFrame, Long) => Unit): StreamingQuery = {
-    require(docs.isStreaming, s"$gateName.start needs a streaming " +
+  /** The foreachBatch wrapper every epoch-store stream starts through:
+    * requires a streaming input (pointing batch callers at the
+    * one-shot operator named in `batchAlternative`) and runs `epoch`
+    * per micro-batch. */
+  def start(docs: DataFrame, checkpointDir: String, entry: String,
+      batchAlternative: String)(epoch: (DataFrame, Long) => Any): StreamingQuery = {
+    require(docs.isStreaming, s"$entry needs a streaming " +
       s"input; use $batchAlternative for a one-shot batch")
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) => gate(b, id); () }
+      .foreachBatch { (b: DataFrame, id: Long) => epoch(b, id); () }
       .start()
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -106,12 +106,11 @@ object IngestGate {
     // Excluding batch=batchId also keeps newVsCorpusPairs' disjoint-id
     // contract: the replayed docs exist on the corpus side only in the
     // excluded partition.
-    val survivors = readIfAny(spark, indexDir) match {
+    val survivors = EpochStore.prior(spark, indexDir, batchId) match {
       case Some(indexRaw) =>
-        val index = indexRaw.filter(col("batch") =!= batchId)
-          .select("id", "band", "bucket")
-        val corpus = spark.read.parquet(acceptedDir)
-          .filter(col("batch") =!= batchId)
+        val index = indexRaw.select("id", "band", "bucket")
+        val corpus = EpochStore.prior(spark, acceptedDir, batchId).getOrElse(
+          sys.error(s"$acceptedDir holds no epoch, but its index $indexDir does"))
         val dupIds = Dedup.newVsCorpusPairs(corpus, index, inBatch,
             idCol, textCol, numHashes, bands, n, threshold)
           .select(col("id2").as(idCol)).distinct()
@@ -119,13 +118,10 @@ object IngestGate {
       case None => inBatch
     }
     Materialize.cached(survivors) { accepted =>
-      val nAccepted = accepted.count()
-      // overwrite-by-epoch: a replayed batch replaces its own output
-      accepted.write.mode("overwrite")
-        .parquet(s"$acceptedDir/batch=$batchId")
-      Dedup.bandIndex(accepted, idCol, textCol, numHashes, bands, n)
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/batch=$batchId")
+      val nAccepted = EpochStore.write(accepted, acceptedDir, batchId)
+      EpochStore.write(
+        Dedup.bandIndex(accepted, idCol, textCol, numHashes, bands, n),
+        indexDir, batchId)
       ann.foreach { a =>
         if (a.residual)
           graft.ops.ResidualPq.appendIndexEpoch(
@@ -167,31 +163,9 @@ object IngestGate {
       ann: Option[AnnSink] = None,
       graph: Option[GraphSink] = None,
       postings: Option[PostingsSink] = None): StreamingQuery =
-    GateProtocol.start(docs, checkpointDir, "IngestGate",
+    GateProtocol.start(docs, checkpointDir, "IngestGate.start",
       "Dedup.newVsCorpusPairs") { (b, id) =>
       gateBatch(b, id, indexDir, acceptedDir, idCol, textCol,
         numHashes, bands, n, threshold, ann, graph, postings)
-      ()
     }
-
-  /** The accumulated parquet relation under `dir`, or None before the
-    * first epoch commits. Cold start is detected by LISTING (missing
-    * root or no files yet), never by swallowing read errors — a
-    * corrupt or unreadable index must fail the epoch loudly, not
-    * silently skip the dedup probe and let duplicates contaminate the
-    * accepted corpus. */
-  private[streaming] def readIfAny(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasData = fs.exists(path) && {
-      val it = fs.listFiles(path, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        found = f.isFile && f.getLen > 0 && !f.getPath.getName.startsWith("_")
-      }
-      found
-    }
-    if (hasData) Some(spark.read.parquet(dir)) else None
-  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import graft.ops.{Chunking, Dedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -30,7 +30,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * warehouse scale the store is the narrow key relation, one 8-byte
   * hash per accepted block). The accumulated corpus is never re-read.
   *
-  * Replay idempotence ([[IngestGate]]'s discipline): both sinks write
+  * Replay idempotence ([[graft.EpochStore]]'s rules): both sinks write
   * one OVERWRITE `batch=<id>` partition per epoch, and the probe
   * excludes `batch = batchId` from the store read — a foreachBatch
   * retry of a committed epoch would otherwise find its own keys and
@@ -58,21 +58,16 @@ object ParagraphGate {
       val firsts = chunks.withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1).drop("rk")
       // (2) probe the accumulated key store, excluding this epoch
-      val survivors = IngestGate.readIfAny(spark, keyDir) match {
+      val survivors = EpochStore.prior(spark, keyDir, batchId) match {
         case Some(store) =>
-          firsts.join(store.filter(col("batch") =!= batchId).select("key"),
-            Seq("key"), "left_anti")
+          firsts.join(store.select("key"), Seq("key"), "left_anti")
         case None => firsts
       }
       Materialize.cached(survivors) { kept =>
-        val nKept = kept.count()
         // overwrite-by-epoch: a replayed batch replaces its own output
-        Chunking.rebuildFromKept(chunks, kept)
-          .withColumnRenamed("id", idCol)
-          .write.mode("overwrite").parquet(s"$acceptedDir/batch=$batchId")
-        kept.select("key").write.mode("overwrite")
-          .parquet(s"$keyDir/batch=$batchId")
-        nKept
+        EpochStore.write(Chunking.rebuildFromKept(chunks, kept)
+          .withColumnRenamed("id", idCol), acceptedDir, batchId)
+        EpochStore.write(kept.select("key"), keyDir, batchId)
       }
     }
   }
@@ -80,15 +75,9 @@ object ParagraphGate {
   /** Run the gate over a streaming document feed. */
   def start(docs: DataFrame, keyDir: String, acceptedDir: String,
       checkpointDir: String, idCol: String = "doc_id",
-      textCol: String = "text", window: Int = 20): StreamingQuery = {
-    require(docs.isStreaming, "ParagraphGate.start needs a streaming " +
-      "input; use Chunking.dedupParagraphs for a one-shot batch")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        gateBatch(b, id, keyDir, acceptedDir, idCol, textCol, window)
-        ()
-      }
-      .start()
-  }
+      textCol: String = "text", window: Int = 20): StreamingQuery =
+    GateProtocol.start(docs, checkpointDir, "ParagraphGate.start",
+      "Chunking.dedupParagraphs") { (b, id) =>
+      gateBatch(b, id, keyDir, acceptedDir, idCol, textCol, window)
+    }
 }

@@ -70,10 +70,9 @@ object PhashGate {
       checkpointDir: String, idCol: String = "doc_id",
       contentCol: String = "content", blocks: Int = 4,
       maxDist: Int = 3): StreamingQuery =
-    GateProtocol.start(images, checkpointDir, "PhashGate",
+    GateProtocol.start(images, checkpointDir, "PhashGate.start",
       "Multimodal.newVsCorpusPhash") { (b, id) =>
       gateBatch(b, id, indexDir, acceptedDir, idCol, contentCol,
         blocks, maxDist)
-      ()
     }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.EpochStore
 import graft.ops.LanguageModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Per batch the scoring IS the batch operator ([[LanguageModel
   * .perplexityKn]] + the same `nll > cut` fold), so the twin property
   * is by construction. Replay idempotence: one OVERWRITE
-  * `batch=<id>` partition per epoch (the [[IngestGate]] convention).
+  * `batch=<id>` partition per epoch ([[graft.EpochStore]]).
   *
   * Boundary: a document with no bigrams (< 2 tokens) has no
   * perplexity evidence and is REJECTED (the [[DsirGate]] direction;
@@ -61,25 +61,16 @@ object PplGate {
         LanguageModel.bandOfCuts(gate.cuts))
       .filter(col("band") <= maxBand)
       .select(col("id").as(idCol))
-    Materialize.cached(batch.join(keptIds, Seq(idCol), "left_semi")) { accepted =>
-      val n = accepted.count()
-      accepted.write.mode("overwrite").parquet(s"$acceptedDir/batch=$batchId")
-      n
-    }
+    EpochStore.write(batch.join(keptIds, Seq(idCol), "left_semi"),
+      acceptedDir, batchId)
   }
 
   /** Run the gate over a streaming document feed. */
   def start(docs: DataFrame, acceptedDir: String, checkpointDir: String,
       idCol: String, textCol: String, gate: FrozenGate,
-      maxBand: Int): StreamingQuery = {
-    require(docs.isStreaming, "PplGate.start needs a streaming input; " +
-      "use perplexityBuckets + a filter for a one-shot batch")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        gateBatch(b, id, acceptedDir, idCol, textCol, gate, maxBand)
-        ()
-      }
-      .start()
-  }
+      maxBand: Int): StreamingQuery =
+    GateProtocol.start(docs, checkpointDir, "PplGate.start",
+      "perplexityBuckets + a filter") { (b, id) =>
+      gateBatch(b, id, acceptedDir, idCol, textCol, gate, maxBand)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import graft.ops.{IvfIndex, Retrieval, Similarity, TextIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -51,10 +51,9 @@ object RecallStream {
     val collapsed = batch.select(col("id"), col("vec"))
       .withColumn("rn", row_number().over(wId))
       .filter(col("rn") === 1).drop("rn")
-    IngestGate.readIfAny(batch.sparkSession, storeDir) match {
+    EpochStore.prior(batch.sparkSession, storeDir, batchId) match {
       case Some(store) =>
-        val existing = store.filter(col("batch") =!= batchId)
-          .select(col("id")).distinct()
+        val existing = store.select(col("id")).distinct()
         collapsed.join(existing, Seq("id"), "left_anti")
       case None => collapsed
     }
@@ -83,13 +82,13 @@ object RecallStream {
     // window; arrays order lexicographically, so the pick is stable
     // under partitioning and replay)
     val fresh = uniqueArrivals(batch, batchId, annDir)
-    IvfIndex.writeIndexed(fresh, centroids, s"$annDir/batch=$batchId")
+    EpochStore.write(IvfIndex.indexed(fresh, centroids), annDir, batchId, "cell")
     val sys = IvfIndex.topKIndexed(spark, annDir, queries, centroids,
       k, nProbe)
     val corpus = spark.read.parquet(annDir).select(col("id"), col("vec"))
     val gt = Similarity.bruteForceTopK(queries, corpus, k)
     val metrics = Retrieval.rankingMetrics(sys, gt, k)
-    metrics.write.mode("overwrite").parquet(s"$metricsDir/batch=$batchId")
+    EpochStore.write(metrics, metricsDir, batchId)
     metrics
   }
 
@@ -119,13 +118,13 @@ object RecallStream {
       numBuckets: Int = graft.ops.NnDescent.DefaultGraphBuckets): DataFrame = {
     val spark = batch.sparkSession
     // materialize the collapsed arrivals ONCE (batch-sized): the store
-    // write, the isEmpty probe, and the maintenance delta below would
-    // otherwise each recompute the in-batch window plus the
-    // cross-epoch anti-join (including a store re-read)
+    // write and the maintenance delta below would otherwise each
+    // recompute the in-batch window plus the cross-epoch anti-join
+    // (including a store re-read); the write's count is the empty probe
     val fresh = Materialize(uniqueArrivals(batch, batchId, nodesDir))
-    fresh.write.mode("overwrite").parquet(s"$nodesDir/batch=$batchId")
+    val nFresh = EpochStore.write(fresh, nodesDir, batchId)
     val all = spark.read.parquet(nodesDir).select(col("id"), col("vec"))
-    if (!fresh.isEmpty)
+    if (nFresh > 0)
       Materialize.release(graft.ops.NnDescent.maintainGraphEpoch(fresh, all,
         graphDir, batchId, buildK, buildIters, numBuckets))
     Materialize.release(fresh)
@@ -135,13 +134,13 @@ object RecallStream {
     // no meaningful ground truth either; emit this epoch's metrics as
     // the EMPTY relation instead of dying on a missing index path, and
     // let the first real arrivals start the series.
-    if (IngestGate.readIfAny(spark, s"$graphDir/index").isEmpty) {
+    if (EpochStore.read(spark, s"$graphDir/index").isEmpty) {
       val empty = Retrieval.rankingMetrics(
         queries.select(col("qid"), col("qid").as("id"), lit(1).as("rank"))
           .limit(0),
         queries.select(col("qid"), col("qid").as("id"), lit(1).as("rank"))
           .limit(0), k)
-      empty.write.mode("overwrite").parquet(s"$metricsDir/batch=$batchId")
+      EpochStore.write(empty, metricsDir, batchId)
       return empty
     }
     // the walk's checkpoints end with the epoch: serve the written metrics
@@ -154,10 +153,9 @@ object RecallStream {
           round(Similarity.cosine(col("qvec"), col("vec")), 4).as("score"))
       val gt = graft.ops.Skew.saltedTopK(scored, Seq("qid"),
         Seq(col("score").desc, col("id").asc), k, saltBy = col("id"))
-      Retrieval.rankingMetrics(sys, gt, k)
-        .write.mode("overwrite").parquet(s"$metricsDir/batch=$batchId")
+      EpochStore.write(Retrieval.rankingMetrics(sys, gt, k), metricsDir, batchId)
     }
-    spark.read.parquet(s"$metricsDir/batch=$batchId")
+    spark.read.parquet(EpochStore.path(metricsDir, batchId))
   }
 
   /** A standing query for the FUSED hybrid monitor: lexical terms and
@@ -205,27 +203,26 @@ object RecallStream {
     val collapsed = batch.select(col("id"), col("text"), col("vec"))
       .withColumn("rn", row_number().over(wId))
       .filter(col("rn") === 1).drop("rn")
-    val fresh = Materialize(IngestGate.readIfAny(spark, rawDir) match {
+    val fresh = Materialize(EpochStore.prior(spark, rawDir, batchId) match {
       case Some(store) =>
-        val existing = store.filter(col("batch") =!= batchId)
-          .select(col("id")).distinct()
+        val existing = store.select(col("id")).distinct()
         collapsed.join(existing, Seq("id"), "left_anti")
       case None => collapsed
     })
-    fresh.write.mode("overwrite").parquet(s"$rawDir/batch=$batchId")
+    EpochStore.write(fresh, rawDir, batchId)
     // maintain BOTH real serving sinks
     TextIndex.appendPostingsEpoch(fresh, "id", "text", lexDir, batchId,
       nBuckets)
-    IvfIndex.writeIndexed(fresh.select(col("id"), col("vec")), centroids,
-      s"$annDir/batch=$batchId")
+    EpochStore.write(IvfIndex.indexed(fresh.select(col("id"), col("vec")),
+      centroids), annDir, batchId, "cell")
     Materialize.release(fresh)
     // cold start: nothing servable yet (empty/duplicate-only epochs) —
     // the graph monitor's empty-metrics convention
-    if (IngestGate.readIfAny(spark, s"$lexDir/postings").isEmpty ||
-        IngestGate.readIfAny(spark, annDir).isEmpty) {
+    if (EpochStore.read(spark, s"$lexDir/postings").isEmpty ||
+        EpochStore.read(spark, annDir).isEmpty) {
       val none = Seq.empty[(Long, Long, Int)].toDF("qid", "id", "rank")
       val empty = Retrieval.rankingMetrics(none, none, k)
-      empty.write.mode("overwrite").parquet(s"$metricsDir/batch=$batchId")
+      EpochStore.write(empty, metricsDir, batchId)
       return empty
     }
     val corpus = spark.read.parquet(rawDir)
@@ -240,7 +237,7 @@ object RecallStream {
         .select(lit(q.qid).as("qid"), col("id"), col("rk").as("rank"))
       Retrieval.rankingMetrics(sys, gt, k)
     }.reduce(_.unionByName(_))
-    metrics.write.mode("overwrite").parquet(s"$metricsDir/batch=$batchId")
+    EpochStore.write(metrics, metricsDir, batchId)
     metrics
   }
 
@@ -249,50 +246,31 @@ object RecallStream {
       rawDir: String, metricsDir: String, checkpointDir: String,
       standing: Seq[HybridQuery], centroids: Array[Array[Double]],
       k: Int = 10, m: Int = 20, nProbe: Int = 2,
-      nBuckets: Int = 64): StreamingQuery = {
-    require(rows.isStreaming, "RecallStream.startHybrid needs a " +
-      "streaming input; call monitorHybridBatch for a one-shot epoch")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        monitorHybridBatch(b, id, lexDir, annDir, rawDir, metricsDir,
-          standing, centroids, k, m, nProbe, nBuckets)
-        ()
-      }
-      .start()
-  }
+      nBuckets: Int = 64): StreamingQuery =
+    GateProtocol.start(rows, checkpointDir, "RecallStream.startHybrid",
+      "monitorHybridBatch") { (b, id) =>
+      monitorHybridBatch(b, id, lexDir, annDir, rawDir, metricsDir,
+        standing, centroids, k, m, nProbe, nBuckets)
+    }
 
   /** Run the GRAPH monitor over a streaming (id, vec) feed. */
   def startGraph(vectors: DataFrame, graphDir: String, nodesDir: String,
       metricsDir: String, checkpointDir: String, queries: DataFrame,
       k: Int = 10, entries: Int = 8, beam: Int = 5, hops: Int = 3,
-      buildK: Int = 5, buildIters: Int = 1): StreamingQuery = {
-    require(vectors.isStreaming, "RecallStream.startGraph needs a " +
-      "streaming input; call monitorGraphBatch for a one-shot epoch")
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        monitorGraphBatch(b, id, graphDir, nodesDir, metricsDir, queries,
-          k, entries, beam, hops, buildK, buildIters)
-        ()
-      }
-      .start()
-  }
+      buildK: Int = 5, buildIters: Int = 1): StreamingQuery =
+    GateProtocol.start(vectors, checkpointDir, "RecallStream.startGraph",
+      "monitorGraphBatch") { (b, id) =>
+      monitorGraphBatch(b, id, graphDir, nodesDir, metricsDir, queries,
+        k, entries, beam, hops, buildK, buildIters)
+    }
 
   /** Run the monitor over a streaming (id, vec) feed. */
   def start(vectors: DataFrame, annDir: String, metricsDir: String,
       checkpointDir: String, queries: DataFrame,
       centroids: Array[Array[Double]], k: Int = 10,
-      nProbe: Int = 2): StreamingQuery = {
-    require(vectors.isStreaming, "RecallStream.start needs a streaming " +
-      "input; call monitorBatch for a one-shot epoch")
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        monitorBatch(b, id, annDir, metricsDir, queries, centroids,
-          k, nProbe)
-        ()
-      }
-      .start()
-  }
+      nProbe: Int = 2): StreamingQuery =
+    GateProtocol.start(vectors, checkpointDir, "RecallStream.start",
+      "monitorBatch") { (b, id) =>
+      monitorBatch(b, id, annDir, metricsDir, queries, centroids, k, nProbe)
+    }
 }

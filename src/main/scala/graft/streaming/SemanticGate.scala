@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.{EpochStore, Materialize}
 import graft.ops.{Dedup, IvfIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -55,17 +55,17 @@ object SemanticGate {
     val spark = batch.sparkSession
     // The in-batch quadratic collapse is consumed twice below (probed-cell
     // collect + the final anti-join) — cache it so it runs once per
-    // epoch, the same discipline as `accepted` at the write.
+    // epoch.
     Materialize.cached(
         Dedup.semanticDedup(batch, idCol, vecCol, centroids, threshold)) { inBatch =>
-      val survivors = IngestGate.readIfAny(spark, acceptedDir) match {
+      val survivors = EpochStore.prior(spark, acceptedDir, batchId) match {
         case Some(corpusRaw) =>
           val nb = inBatch.select(
             IvfIndex.bestCell(col(vecCol), centroids).as("cell"),
             col(idCol).as("id2"), col(vecCol).as("v2"))
           val probed = nb.select("cell").distinct()
             .filter(col("cell").isNotNull).collect().map(_.getInt(0))
-          val cb = corpusRaw.filter(col("batch") =!= batchId)
+          val cb = corpusRaw
             .filter(col("cell").isin(probed.map(Integer.valueOf).toIndexedSeq: _*))
             .select(col("cell"), col(vecCol).as("v1"))
           val dupIds = cb.join(nb, Seq("cell"))
@@ -74,13 +74,9 @@ object SemanticGate {
           inBatch.join(dupIds, Seq(idCol), "left_anti")
         case None => inBatch
       }
-      Materialize.cached(survivors
-          .withColumn("cell", IvfIndex.bestCell(col(vecCol), centroids))) { accepted =>
-        val n = accepted.count()
-        accepted.write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$acceptedDir/batch=$batchId")
-        n
-      }
+      EpochStore.write(
+        survivors.withColumn("cell", IvfIndex.bestCell(col(vecCol), centroids)),
+        acceptedDir, batchId, "cell")
     }
   }
 
@@ -88,9 +84,8 @@ object SemanticGate {
   def start(docs: DataFrame, acceptedDir: String, checkpointDir: String,
       idCol: String, vecCol: String, centroids: Array[Array[Double]],
       threshold: Double): StreamingQuery =
-    GateProtocol.start(docs, checkpointDir, "SemanticGate",
+    GateProtocol.start(docs, checkpointDir, "SemanticGate.start",
       "Dedup.semanticProbe") { (b, id) =>
       gateBatch(b, id, acceptedDir, idCol, vecCol, centroids, threshold)
-      ()
     }
 }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *   3. accepted docs append to the corpus sink AND their block rows
   *      to the store, so batch N+1's probe sees batch N's acceptances.
   *
-  * Replay idempotence ([[IngestGate]]'s discipline): overwrite-by-epoch
+  * Replay idempotence ([[graft.EpochStore]]'s rules): overwrite-by-epoch
   * sinks, and the probe excludes `batch = batchId` from the store read
   * — a foreachBatch retry would otherwise find its own block rows at
   * distance 0, self-reject the whole epoch, and overwrite its committed
@@ -56,10 +56,9 @@ object SimhashGate {
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text", bits: Int = 60, blocks: Int = 4,
       maxDist: Int = 3): StreamingQuery =
-    GateProtocol.start(docs, checkpointDir, "SimhashGate",
+    GateProtocol.start(docs, checkpointDir, "SimhashGate.start",
       "Dedup.newVsCorpusSimhash") { (b, id) =>
       gateBatch(b, id, indexDir, acceptedDir, idCol, textCol,
         bits, blocks, maxDist)
-      ()
     }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.EpochStore
 import graft.ops.Bpe
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -18,33 +18,22 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * dropping from the vocabulary join.
   *
   * Replay idempotence: one `batch=<id>` subdirectory per epoch in
-  * OVERWRITE mode ([[IngestGate]] convention) — budgets are stateless
+  * OVERWRITE mode ([[graft.EpochStore]]) — budgets are stateless
   * per document, so a foreachBatch retry rewrites its own partition.
   */
 object TokenBudgetStream {
 
   /** Budget ONE batch; returns the number of documents written. */
   def statsBatch(batch: DataFrame, batchId: Long, sinkDir: String,
-      idCol: String, textCol: String, merges: Seq[Bpe.Merge]): Long = {
-    Materialize.cached(Bpe.encodeStatsFrozen(batch, idCol, textCol, merges)
-        .withColumnRenamed("id", idCol)) { stats =>
-      val n = stats.count()
-      stats.write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-      n
-    }
-  }
+      idCol: String, textCol: String, merges: Seq[Bpe.Merge]): Long =
+    EpochStore.write(Bpe.encodeStatsFrozen(batch, idCol, textCol, merges)
+      .withColumnRenamed("id", idCol), sinkDir, batchId)
 
   /** Run the budget sink over a streaming document feed. */
   def start(docs: DataFrame, sinkDir: String, checkpointDir: String,
-      idCol: String, textCol: String, merges: Seq[Bpe.Merge]): StreamingQuery = {
-    require(docs.isStreaming, "TokenBudgetStream.start needs a streaming input; " +
-      "use Bpe.encodeStats for a one-shot batch")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        statsBatch(b, id, sinkDir, idCol, textCol, merges)
-        ()
-      }
-      .start()
-  }
+      idCol: String, textCol: String, merges: Seq[Bpe.Merge]): StreamingQuery =
+    GateProtocol.start(docs, checkpointDir, "TokenBudgetStream.start",
+      "Bpe.encodeStats") { (b, id) =>
+      statsBatch(b, id, sinkDir, idCol, textCol, merges)
+    }
 }

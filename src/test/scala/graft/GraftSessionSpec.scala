@@ -9,7 +9,9 @@ import org.apache.spark.SparkConf
   * may build its own session (their settings used to drift apart), and
   * the suite's shared session carries the factory's settings. Likewise
   * [[Materialize]] is the only code that checkpoints, caches or
-  * releases. */
+  * releases, [[EpochStore]] the only code that lays out epochs, and
+  * [[graft.streaming.GateProtocol.start]] the one way an epoch stream
+  * starts. */
 class GraftSessionSpec extends SparkSpec {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -32,6 +34,21 @@ class GraftSessionSpec extends SparkSpec {
       .filter(f => calls.exists(Files.readString(f).contains))
       .map(_.getFileName.toString)
     assert(sites == Seq("Materialize.scala"))
+  }
+
+  test("only EpochStore.scala names an epoch partition or excludes an epoch") {
+    val layout = Seq("batch=" + "$", "col(\"batch\") " + "=!=", "readIf" + "Any")
+    val sites = scalaFiles("src/main/scala")
+      .filter(f => layout.exists(Files.readString(f).contains))
+      .map(_.getFileName.toString).filterNot(_ == "EpochStore.scala")
+    assert(sites.isEmpty, s"epoch layout outside EpochStore: $sites")
+  }
+
+  test("every stream under graft/streaming but SyncStream starts through GateProtocol.start") {
+    val starts = scalaFiles("src/main/scala/graft/streaming")
+      .filter(f => Files.readString(f).contains("." + "writeStream"))
+      .map(_.getFileName.toString).sorted
+    assert(starts == Seq("GateProtocol.scala", "SyncStream.scala"))
   }
 
   test("a launch conf's master and shuffle width are kept; unset, the local sizing applies") {

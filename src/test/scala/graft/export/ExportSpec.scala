@@ -156,6 +156,19 @@ class ExportSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [isnotnull(namespace"), plan)
   }
 
+  test("partitioned export reports a non-KRM table under its name, as the zip modes do") {
+    val root = java.nio.file.Files.createTempDirectory("exportnonkrm").toFile.getAbsolutePath
+    krmFrame(krmRows("Pod", Seq("dev", "prod"), 2)).write.parquet(s"$root/Pod.parquet")
+    Seq((1L, 0.5)).toDF("ts", "value").write.parquet(s"$root/metrics.parquet")
+    val out = java.nio.file.Files.createTempDirectory("exportnonkrmout").toFile.getAbsolutePath
+    val part = ExportJob.runPartitioned(spark, root, out)
+    val zip = ExportJob.run(spark, root, s"$out.zip")
+    for (res <- Seq(part, zip)) {
+      assert(res.entries == 4)
+      assert(res.errors.map(_.takeWhile(_ != ':')) == Seq("metrics"), res.errors.mkString("; "))
+    }
+  }
+
   test("B1 CLI: flag contract matches the reference") {
     // missing --output → same message as the reference (export.go:44-47)
     assert(Main.parse(Seq("--root", "/x")) ==
