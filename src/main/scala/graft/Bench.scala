@@ -1,55 +1,26 @@
 package graft
 
-/** Benchmark main: times the headline queries on
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+/** Benchmark main: times every headline query on `SPARK_GRAFT_SF_DIR`,
+  * writes the full record to `bench_artifact.json` and prints it, then
+  * prints a lean JSON line LAST,
+  * `{"metric":"total","value":N,"unit":"sec",…,"n_queries":K,"sf":…}`;
+  * the per-query numbers live in the artifact only.
   *
   * Timing forces full materialization through the noop DSv2 sink (every
   * row produced, nothing collected to the driver) — `count()` alone
   * would let Catalyst prune aggregates and under-report scan cost.
   *
-  * Besides wall time the artifact records per-query SHUFFLE and SPILL
-  * bytes (`shuffle_bytes`/`spill_bytes`, from task metrics via a
-  * SparkListener). Bytes are the stall-immune half of the signal: a
-  * co-tenant CPU stall can triple a wall time but cannot move a byte
-  * count, and shuffle volume is the number that predicts 100 TB
-  * behavior — a query whose time regresses with unchanged bytes hit
-  * the host; one whose bytes grew hit a plan regression.
+  * Every run goes through [[RunMeter.query]], so its jobs are tagged
+  * `graft-query-<name>`. Besides wall time the artifact records the
+  * metered per-query jobs and SHUFFLE and SPILL bytes (`jobs`,
+  * `shuffle_bytes`, `spill_bytes`). Bytes are the stall-immune half of
+  * the signal: a co-tenant CPU stall can triple a wall time but cannot
+  * move a byte count, and shuffle volume is the number that predicts
+  * 100 TB behavior — a query whose time regresses with unchanged bytes
+  * hit the host; one whose bytes grew hit a plan regression.
   */
 object Bench {
-
-  /** Accumulates shuffle-write + disk-spill bytes from completed tasks.
-    * Registered once; per-sample values are snapshot diffs around each
-    * query run. The listener bus delivers asynchronously, so the
-    * snapshot reader ([[settle]]) polls until the counters go quiet. */
-  private final class ByteMetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val shuffle = new java.util.concurrent.atomic.AtomicLong
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    val gc = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled)
-        gc.addAndGet(m.jvmGCTime)
-      }
-    }
-    /** Wait for the async bus to drain: counters unchanged for two
-      * consecutive 100 ms polls, capped at 3 s. */
-    def settle(): (Long, Long, Long) = {
-      var last = (shuffle.get, spill.get, gc.get)
-      var quiet = 0
-      var waited = 0
-      while (quiet < 2 && waited < 3000) {
-        Thread.sleep(100); waited += 100
-        val now = (shuffle.get, spill.get, gc.get)
-        if (now == last) quiet += 1 else { quiet = 0; last = now }
-      }
-      last
-    }
-  }
+  import Verify.q
 
   /** Other java processes alive on the host at bench start — the known
     * confounder behind wall-time inflation on identical plans (the
@@ -379,46 +350,6 @@ object Bench {
     // the multiprobe candidate join + one exact pass + metric fold
     "q_retrieval_eval_lsh_mp" -> 5.0)
 
-  /** JSON string escape (same contract as Verify.q): backslash, quote,
-    * and ALL control chars < 0x20 — a subset name or path must never be
-    * able to corrupt the one-line artifact the driver parses. */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  /** Family-grouped JSON object for the lean line (`"dedup":{"exact":
-    * 0.8,…}`, family = first-underscore prefix; singletons stay flat).
-    * Object-level (not nested in main) so BenchJsonSpec can gate the
-    * duplicate-key fold directly. */
-  private[graft] def groupedObj(kv: Seq[(String, Double)],
-      fmt: Double => String): String = {
-    val clamped = kv.map { case (k, v) => k -> (if (v.isFinite) v else 9999.0) }
-    val byPrefix = clamped.groupBy(_._1.split("_", 2)(0))
-    val parts = clamped.map(_._1.split("_", 2)(0)).distinct.sorted.flatMap { p =>
-      val (grouped, flat) = byPrefix(p).sortBy(_._1)
-        .partition(m => m._1.contains("_") && byPrefix(p).length > 1)
-      // A query named exactly the family prefix (bare "ann" next to
-      // "ann_pq") would otherwise emit BOTH a flat "ann":1.2 and the
-      // group "ann":{...} — duplicate keys a parser silently drops
-      // one of. Fold the bare entry into its group under the "_"
-      // sentinel (reassembly rule: "_" means the family name itself).
-      val (collides, flatClean) =
-        flat.partition(m => grouped.nonEmpty && m._1 == p)
-      val flatParts = flatClean.map { case (k, v) => s"${q(k)}:${fmt(v)}" }
-      val groupPart =
-        if (grouped.isEmpty) Nil
-        else Seq(s"${q(p)}:" + (
-          collides.map { case (_, v) => s"${q("_")}:${fmt(v)}" } ++
-          grouped.map { case (k, v) =>
-            s"${q(k.split("_", 2)(1))}:${fmt(v)}" }).mkString("{", ",", "}"))
-      flatParts ++ groupPart
-    }
-    parts.mkString("{", ",", "}")
-  }
-
   /** FIXED-WORK single-core calibration kernel: 4·10⁸ xorshift64 steps
     * — pure register arithmetic, no allocation, no memory traffic, so
     * its wall time tracks the host's effective single-thread speed and
@@ -558,13 +489,10 @@ object Bench {
     jvms.foreach(j => System.err.println(s"[bench] competing JVM: $j"))
     // host-speed calibration, half the samples up front (min over all
     // wins — a stall can only inflate a sample, never deflate it)
-    val calStart = (1 to 2).map(_ => calibrationRun())
-    val calMemStart = (1 to 2).map(_ => calibrationMemRun())
-    val calParStart = (1 to 2).map(_ => calibrationParRun())
+    val kernels = Seq(calibrationRun _, calibrationMemRun _, calibrationParRun _)
+    val calStarts = kernels.map(k => (1 to 2).map(_ => k()))
     val loadStart = loadAvg1()
     val statStart = cpuStatTicks()
-    val byteMetrics = new ByteMetricsListener
-    spark.sparkContext.addSparkListener(byteMetrics)
 
     // Warm the JVM/codegen once so measured times are compute, not
     // first-call classloading. A warmup failure must not kill the run
@@ -572,17 +500,9 @@ object Bench {
     // surface the same error as a per-query hard failure.
     // NonFatal only: an OutOfMemoryError/VM failure must abort the run —
     // timings measured after one are untrustworthy.
-    try SparkEntry.queries("q1_agg")(spark, sfDir).write.format("noop").mode("overwrite").save()
+    try RunMeter.query(spark, "q1_agg", sfDir)(RunMeter.noop)
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
-
-    // Only headline names that actually resolve in the registry can run;
-    // validate the subset against THIS list (not raw `headline`) so a
-    // name that is headline-listed but missing from SparkEntry.queries
-    // cannot quietly yield a partial run.
-    val runnable = headline.filter(SparkEntry.queries.contains)
-    headline.filterNot(SparkEntry.queries.contains).foreach(n =>
-      System.err.println(s"[bench] WARNING: headline query missing from registry: $n"))
 
     // Optional comma-separated subset for focused local iteration, e.g.
     // SPARK_GRAFT_BENCH_QUERIES=dedup_minhash_lsh,dedup_simhash.
@@ -591,16 +511,16 @@ object Bench {
     // A subset naming no valid query must fail loudly, not print a
     // clean-looking zero-total result.
     subset.foreach { s =>
-      val unknown = s -- runnable.toSet
+      val unknown = s -- headline.toSet
       if (unknown.nonEmpty)
         System.err.println(s"[bench] WARNING: unknown subset queries: ${unknown.toSeq.sorted.mkString(",")}")
-      if (s.intersect(runnable.toSet).isEmpty) {
-        System.err.println(s"[bench] FATAL: subset matches no runnable headline query")
+      if (s.intersect(headline.toSet).isEmpty) {
+        System.err.println(s"[bench] FATAL: subset matches no headline query")
         spark.stop()
         sys.exit(2)
       }
     }
-    val present = runnable.filter(n => subset.forall(_.contains(n)))
+    val present = headline.filter(n => subset.forall(_.contains(n)))
     // A sample that THROWS must never masquerade as a fast run: an
     // instant failure records a near-zero wall time, wins the min, and
     // sails under every budget (exactly how the seed-selection bug at
@@ -609,32 +529,14 @@ object Bench {
     // samples that produced every row. A query with NO successful
     // sample stays infinite, is reported in `failures`, and is forced
     // into `budget_violations` with sentinel 9999 (never into the
-    // finite `queries`/total numbers).
-    // (sec, shuffleBytes, spillBytes); byte counts are snapshot diffs
-    // around the run, and the end-settle snapshot carries forward as
-    // the next sample's baseline — one ~200 ms bus-drain poll per
-    // sample instead of two, never inside a timing. A FAILED sample
-    // still settles so its straggler task events cannot leak into the
-    // next query's byte delta.
-    var settled = byteMetrics.settle()
-    // (sec, shuffleBytes, spillBytes, taskGcMs); GC ms is the wall-
-    // time-inflation attributor — a sample whose wall runs hot WITH a
-    // hot GC delta hit memory pressure, one without hit the host.
-    def timeOnce(name: String): (Double, Long, Long, Long) = {
-      val (sh0, sp0, gc0) = settled
-      val t0 = System.nanoTime()
-      try {
-        Materialize.scope(SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save())
-        val sec = (System.nanoTime() - t0) / 1e9
-        settled = byteMetrics.settle()
-        (sec, settled._1 - sh0, settled._2 - sp0, settled._3 - gc0)
-      } catch { case scala.util.control.NonFatal(e) =>
+    // finite `queries`/total numbers). None is a failed sample.
+    def timeOnce(name: String): Option[RunMeter.Run[Unit]] =
+      try Some(RunMeter.query(spark, name, sfDir)(RunMeter.noop))
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        settled = byteMetrics.settle()
-        (Double.PositiveInfinity, -1L, -1L, -1L)
+        None
       }
-    }
+    def wall(r: Option[RunMeter.Run[Unit]]): Double = r.fold(Double.PositiveInfinity)(_.wallSec)
     // Three timed rounds, INTERLEAVED (round 1 of every query before
     // round 2 of any), min per query: the shared VM shows intermittent
     // multi-minute stalls (high host sys-time), and back-to-back samples
@@ -642,23 +544,22 @@ object Bench {
     // interleaving spreads a query's samples minutes apart so one stall
     // can contaminate at most one of them.
     val rounds = (1 to 3).map(_ => present.map(n => n -> timeOnce(n)).toMap)
-    val firstPass = present.map(n => n -> rounds.map(_(n)._1).min)
+    val firstPass = present.map(n => n -> rounds.map(r => wall(r(n))).min)
     // Per-query bytes: min over SUCCESSFUL samples. Shuffle volume is
     // deterministic modulo AQE runtime decisions; the min is the
     // leanest plan observed and is what byte budgets would gate on.
-    def byteMin(sel: ((Double, Long, Long, Long)) => Long): Seq[(String, Long)] =
-      present.flatMap { n =>
-        val vs = rounds.map(_(n)).filter(s => s._1.isFinite && sel(s) >= 0).map(sel)
-        if (vs.nonEmpty) Some(n -> vs.min) else None
-      }
-    val shuffleBytes = byteMin(_._2)
-    val spillBytes = byteMin(_._3)
-    // GC ms of the WINNING (min-wall) sample per query: even the best
-    // observed run's time decomposes into compute + this.
-    val gcOfMin: Seq[(String, Long)] = present.flatMap { n =>
-      val ok = rounds.map(_(n)).filter(_._1.isFinite)
-      if (ok.isEmpty) None else Some(n -> ok.minBy(_._1)._4)
-    }
+    def byteMin(sel: RunMeter.Run[Unit] => Long): Seq[(String, Long)] =
+      present.flatMap(n => rounds.flatMap(_(n)).map(sel).minOption.map(n -> _))
+    val shuffleBytes = byteMin(_.shuffleWriteBytes)
+    val spillBytes = byteMin(_.spillBytes)
+    // GC ms and jobs of the WINNING (min-wall) sample per query: even
+    // the best observed run's time decomposes into compute + this. GC
+    // ms is the wall-time-inflation attributor — a sample whose wall
+    // runs hot WITH a hot GC delta hit memory pressure, one without hit
+    // the host.
+    val winners = present.flatMap(n => rounds.flatMap(_(n)).minByOption(_.wallSec).map(n -> _))
+    val gcOfMin = winners.map { case (n, w) => n -> w.gcMs }
+    val jobsOfMin = winners.map { case (n, w) => n -> w.jobs.toLong }
     val budgets = if (sfDir.endsWith("sf0.1")) budgetsSf01 else Map.empty[String, Double]
     val firstViolations = firstPass.filter { case (n, t) => budgets.get(n).exists(t > _) }
 
@@ -678,7 +579,7 @@ object Bench {
         System.err.println(s"[bench] re-measuring solo (stall check): ${names.mkString(",")}")
         val extras = (1 to 4).map { r =>
           if (r > 1) Thread.sleep(20000)
-          names.map(n => n -> timeOnce(n)._1).toMap
+          names.map(n => n -> wall(timeOnce(n))).toMap
         }
         names.map(n => n -> extras.map(_(n)).min).toMap
       }
@@ -703,10 +604,9 @@ object Bench {
     }
     // Non-finite values (hard-failure sentinels) must never reach the
     // JSON line — clamp to the 9999 failure sentinel.
+    def num(v: Double): String = f"${if (v.isFinite) v else 9999.0}%.3f"
     def obj(kv: Seq[(String, Double)]): String =
-      kv.map { case (k, v) =>
-        f"${q(k)}:${if (v.isFinite) v else 9999.0}%.3f"
-      }.mkString("{", ",", "}")
+      kv.map { case (k, v) => s"${q(k)}:${num(v)}" }.mkString("{", ",", "}")
     def objL(kv: Seq[(String, Long)]): String =
       kv.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -717,11 +617,11 @@ object Bench {
     }
     // Record when a subset was active so a partial run's lower total can
     // never be mistaken for a full-gate result in round artifacts; emit
-    // only the validated names that actually ran.
-    if (subset.isDefined)
-      extraJson ++= s""","subset":${present.sorted.map(q).mkString("[", ",", "]")}"""
-    if (failures.nonEmpty)
-      extraJson ++= s""","failures":${failures.sorted.map(q).mkString("[", ",", "]")}"""
+    // only the validated names that actually ran. Both lines carry these.
+    val runNotes =
+      (if (subset.isDefined) s""","subset":${present.sorted.map(q).mkString("[", ",", "]")}""" else "") +
+      (if (failures.nonEmpty) s""","failures":${failures.sorted.map(q).mkString("[", ",", "]")}""" else "")
+    extraJson ++= runNotes
     extraJson ++= s""","shuffle_bytes":${objL(shuffleBytes)}"""
     extraJson ++= s""","spill_bytes":${objL(spillBytes.filter(_._2 > 0))}"""
     // Full-artifact-only session-noise audit trail (round-13 "What's
@@ -731,42 +631,28 @@ object Bench {
     // observed at start (the cmdlines are on stderr).
     extraJson ++= s""","samples":${
       present.map { n =>
-        s"${q(n)}:" + rounds.map { r =>
-          val t = r(n)._1
-          f"${if (t.isFinite) t else 9999.0}%.3f"
-        }.mkString("[", ",", "]")
+        s"${q(n)}:" + rounds.map(r => num(wall(r(n)))).mkString("[", ",", "]")
       }.mkString("{", ",", "}")}"""
     extraJson ++= s""","gc_ms":${objL(gcOfMin.filter(_._2 > 0))}"""
+    extraJson ++= s""","jobs":${objL(jobsOfMin)}"""
     extraJson ++= s""","competing_jvms":${jvms.length}"""
     // close the calibration sampling (other half at the end) and emit
     // the host-speed scalar + the self-normalized total next to raw —
     // the round-15 verdict's cross-session noise mitigation
-    val calAll = calStart ++ (1 to 2).map(_ => calibrationRun())
-    val calSec = calAll.map(_._1).min
-    val calRef =
-      if (ReferenceCalibrationSec > 0) ReferenceCalibrationSec else calSec
-    val calMemAll = calMemStart ++ (1 to 2).map(_ => calibrationMemRun())
-    val calMemSec = calMemAll.map(_._1).min
-    val calMemRef =
-      if (ReferenceCalibrationMemSec > 0) ReferenceCalibrationMemSec
-      else calMemSec
-    val calParAll = calParStart ++ (1 to 2).map(_ => calibrationParRun())
-    val calParSec = calParAll.map(_._1).min
-    val calParRef =
-      if (ReferenceCalibrationParSec > 0) ReferenceCalibrationParSec
-      else calParSec
+    val calAlls = kernels.zip(calStarts).map { case (k, s) => s ++ (1 to 2).map(_ => k()) }
+    val Seq(calSec, calMemSec, calParSec) = calAlls.map(_.map(_._1).min)
     val loadEnd = loadAvg1()
     val statEnd = cpuStatTicks()
     val stealFrac =
       if (statEnd._2 > statStart._2)
         (statEnd._1 - statStart._1).toDouble / (statEnd._2 - statStart._2)
       else 0.0
-    val totalNorm = total * (calRef / calSec)
+    val totalNorm = total * (ReferenceCalibrationSec / calSec)
     // the PARALLEL normalization is the honest one for a 32-thread
     // local-mode run: Spark pays multi-core contention in full even
     // when the single-thread kernel reads quiet (r18 What's-wrong #2)
-    val totalNormPar = total * (calParRef / calParSec)
-    extraJson ++= f""","calibration":{"sec":$calSec%.3f,"ref":$calRef%.3f,"checksum":"${calAll.head._2}%016x","mem_sec":$calMemSec%.3f,"mem_ref":$calMemRef%.3f,"par_sec":$calParSec%.3f,"par_ref":$calParRef%.3f}"""
+    val totalNormPar = total * (ReferenceCalibrationParSec / calParSec)
+    extraJson ++= f""","calibration":{"sec":$calSec%.3f,"ref":$ReferenceCalibrationSec%.3f,"checksum":"${calAlls.head.head._2}%016x","mem_sec":$calMemSec%.3f,"mem_ref":$ReferenceCalibrationMemSec%.3f,"par_sec":$calParSec%.3f,"par_ref":$ReferenceCalibrationParSec%.3f}"""
     extraJson ++= f""","host":{"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"steal_frac":$stealFrac%.4f}"""
     extraJson ++= f""","value_normalized":$totalNorm%.3f"""
     extraJson ++= f""","value_normalized_par":$totalNormPar%.3f"""
@@ -783,55 +669,14 @@ object Bench {
       System.err.println(s"[bench] WARNING: bench_artifact.json not written: ${e.getMessage}") }
     println(fullLine)
     // Lean twin printed LAST so one COMPLETE parseable JSON line always
-    // sits inside the driver's 2000-char tail window: no byte maps
-    // (those live in bench_artifact.json), and SELF-SIZING — as the
-    // headline grows, the per-query WALL-TIME map degrades gracefully
-    // instead of vanishing (the round-12 record's tail carried only the
-    // shuffle-bytes fragment of the full line, forcing round-over-round
-    // per-query comparison through bench_artifact.json): flat 2dp →
-    // flat 1dp → grouped-by-family 1dp (`"dedup":{"exact":0.8,…}`,
-    // family = first-underscore prefix, singletons stay flat —
-    // reassemble as family_member, a "_" member as the bare family
-    // name) → grouped integer DECIseconds
-    // (`queries_ds`, value = round(10·sec)) → and only then the bare
-    // count. A truncated-at-the-front JSON line parses as nothing, so
-    // fitting beats fidelity; the full-precision flat map stays in the
-    // committed artifact either way.
-    def objP(kv: Seq[(String, Double)], dp: Int): String =
-      kv.map { case (k, v) =>
-        val x = if (v.isFinite) v else 9999.0
-        s"${q(k)}:" + String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(x))
-      }.mkString("{", ",", "}")
-    def leanLine(queriesField: String): String = {
-      val extra = new StringBuilder
-      extra ++= queriesField
-      // violations matter exactly when non-empty; omitting the empty map
-      // buys headroom against the tail cap
-      if (violations.nonEmpty)
-        extra ++= s""","budget_violations":${objP(violations, 1)}"""
-      if (subset.isDefined)
-        extra ++= s""","subset":${present.sorted.map(q).mkString("[", ",", "]")}"""
-      if (failures.nonEmpty)
-        extra ++= s""","failures":${failures.sorted.map(q).mkString("[", ",", "]")}"""
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","value_normalized":$totalNorm%.2f,"calibration_sec":$calSec%.2f$extra,"sf":${q(sfDir)}}"""
-    }
-    def dp(n: Int)(v: Double): String =
-      String.format(java.util.Locale.ROOT, s"%.${n}f", Double.box(v))
-    val leanFit = Seq(
-      leanLine(s""","queries":${objP(results, 2)}"""),
-      leanLine(s""","queries":${objP(results, 1)}"""),
-      leanLine(s""","queries":${groupedObj(results, dp(1))}"""),
-      leanLine(s""","queries_ds":${groupedObj(results, v => math.round(v * 10).toString)}"""),
-      leanLine(s""","n_queries":${results.length}"""))
-    // the line + trailing newline must sit WHOLLY inside the 2000-char
-    // window even with a few chars of full-line fragment ahead of it
-    val lean = leanFit.init.find(_.length <= 1990)
-    if (lean.isEmpty)
-      System.err.println(s"[bench] WARNING lean-map-dropped: no per-query map fits the " +
-        s"1990-char lean line (smallest ${leanFit.init.map(_.length).min} chars for " +
-        s"${results.length} queries); printing n_queries only, per-query times are in " +
-        "bench_artifact.json")
-    println(lean.getOrElse(leanFit.last))
+    // sits inside the 2000-char output tail a caller parses: the per-query
+    // maps (3–4 KB at 178 queries) live in bench_artifact.json only.
+    val leanViolations =
+      if (violations.isEmpty) ""
+      else s""","budget_violations":${violations.map { case (k, v) =>
+        s"${q(k)}:" + String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+      }.mkString("{", ",", "}")}"""
+    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","value_normalized":$totalNorm%.2f,"calibration_sec":$calSec%.2f,"n_queries":${results.length}$leanViolations$runNotes,"sf":${q(sfDir)}}""")
     spark.stop()
   }
 }

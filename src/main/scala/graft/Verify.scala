@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Each query
+  * runs through [[RunMeter.query]], so its jobs are tagged
+  * `graft-query-<name>`. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
@@ -12,32 +15,31 @@ object Verify {
     // changed physical types cost a full round once (round 9).
     SchemaGuard.warnOnDrift(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.keys
+      .filter(name => only.isEmpty || only.contains(name))
+      .foreach { name =>
       try {
         // one output file per query keeps the oracle compare simple
-        Materialize.scope(fn(spark, sfDir).coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/$name"))
-      } catch { case e: Throwable =>
+        RunMeter.query(spark, name, sfDir)(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      } catch { case NonFatal(e) => // a fatal error stops the dump
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** JSON string escape for oracle_sql.json and the bench artifact:
+    * backslash, quote, and ALL control chars (< 0x20) as 4-hex-digit
+    * escapes — a raw tab or CR in the oracle SQL would otherwise make
+    * json.load of the file fail and silently zero the correctness check. */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

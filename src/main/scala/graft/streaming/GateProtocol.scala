@@ -69,13 +69,16 @@ private[streaming] object GateProtocol {
           import spark.implicits._
           Seq.empty[Long].toDF("id")
       }
-      val acceptedBlk = inBatchBlk.join(storeDropped, Seq("id"), "left_anti")
-      val rejected = inBatchDropped.union(storeDropped)
-        .select(col("id").as(idCol)).distinct()
-      val nAccepted = EpochStore.write(
-        batch.join(rejected, Seq(idCol), "left_anti"), acceptedDir, batchId)
-      EpochStore.write(acceptedBlk.select(storeCols.map(col): _*), indexDir, batchId)
-      nAccepted
+      // the probes run once: both writes read the rejected ids (batch-
+      // sized, ids only) from this cache
+      Materialize.cached(inBatchDropped.union(storeDropped).distinct()) { rejected =>
+        val nAccepted = EpochStore.write(
+          batch.join(rejected.select(col("id").as(idCol)), Seq(idCol), "left_anti"),
+          acceptedDir, batchId)
+        EpochStore.write(blk.join(rejected, Seq("id"), "left_anti")
+          .select(storeCols.map(col): _*), indexDir, batchId)
+        nAccepted
+      }
     }
   }
 

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -10,7 +11,9 @@ import org.apache.spark.sql.types.StructType
   * Column↔Expression conversion (the standard extension-library pattern
   * for registering custom Catalyst expressions as user-facing Columns on
   * Spark 4.x, where `new Column(expr)` is no longer public API), the
-  * schema merge and the block release of a local checkpoint.
+  * schema merge, the block release of a local checkpoint, and the
+  * listener-bus drain and job-tag lookup [[graft.RunMeter]] measures
+  * with.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -26,4 +29,12 @@ object bridge {
     * be recomputed afterwards: freeing it is the caller's intent. */
   def dropCheckpointBlocks(rdd: RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** Blocks until every listener event posted so far was delivered. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The job tags a job started with, from its local properties. */
+  def jobTags(props: java.util.Properties): Set[String] =
+    Option(props).flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_TAGS)))
+      .map(_.split(SparkContext.SPARK_JOB_TAGS_SEP).toSet).getOrElse(Set.empty)
 }

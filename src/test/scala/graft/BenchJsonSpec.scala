@@ -4,23 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench artifact's JSON helpers — pure string logic, no Spark. */
 class BenchJsonSpec extends AnyFunSuite {
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-
-  test("groupedObj folds a bare family-prefix query into its group (no duplicate keys)") {
-    // bare "ann" next to "ann_pq"/"ann_ivf" must NOT emit both a flat
-    // "ann":1.0 and a group "ann":{...} — parsers silently drop one
-    val out = Bench.groupedObj(Seq(
-      "ann" -> 1.0, "ann_pq" -> 2.0, "ann_ivf" -> 3.0, "q1_agg" -> 4.0), fmt)
-    assert(out == """{"ann":{"_":1.0,"ivf":3.0,"pq":2.0},"q1_agg":4.0}""", out)
-    val keys = """"(\w+)":\{""".r.findAllMatchIn(out).map(_.group(1)).toSeq
-    assert(keys == keys.distinct, s"duplicate group keys in $out")
-  }
-
-  test("groupedObj: singletons stay flat, non-finite values clamp to the 9999 sentinel") {
-    val out = Bench.groupedObj(Seq(
-      "dedup_exact" -> 0.8, "dedup_simhash" -> 1.2, "q_pivot" -> Double.PositiveInfinity), fmt)
-    assert(out == """{"dedup":{"exact":0.8,"simhash":1.2},"q_pivot":9999.0}""", out)
+  test("the JSON string escape covers quote, backslash and every control char") {
+    assert(Verify.q("a\"b\\c\n\u0001") == "\"a\\\"b\\\\c\\u000a\\u0001\"")
   }
 
   test("calibration kernel: fixed work, deterministic checksum, plausible wall") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkConf
@@ -11,44 +11,48 @@ import org.apache.spark.SparkConf
   * [[Materialize]] is the only code that checkpoints, caches or
   * releases, [[EpochStore]] the only code that lays out epochs, and
   * [[graft.streaming.GateProtocol.start]] the one way an epoch stream
-  * starts. */
+  * starts, and [[RunMeter]] the only code that listens to or drains the
+  * listener bus. */
 class GraftSessionSpec extends SparkSpec {
 
-  private def scalaFiles(root: String): Seq[Path] = {
-    val s = Files.walk(Paths.get(root))
-    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally s.close()
-  }
+  private val Main = "src/main/scala"
+  private val Both = Seq(Main, "src/test/scala")
+
+  /** Names of the .scala files under `roots` that contain any of
+    * `needles`, sorted. */
+  private def sites(roots: String*)(needles: String*): Seq[String] =
+    roots.flatMap { root =>
+      val s = Files.walk(Paths.get(root))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }.filter(f => needles.exists(Files.readString(f).contains))
+      .map(_.getFileName.toString).sorted
 
   test("only GraftSession.scala builds a SparkSession") {
-    val builder = "SparkSession" + ".builder"
-    val files = scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala")
-    val builders = files.filter(f => Files.readString(f).contains(builder))
-      .map(_.getFileName.toString)
-    assert(builders == Seq("GraftSession.scala"))
+    assert(sites(Both: _*)("SparkSession" + ".builder") == Seq("GraftSession.scala"))
   }
 
   test("only Materialize.scala checkpoints, persists or unpersists") {
     val calls = Seq("localCheckpoint", "persist", "unpersist").map("." + _ + "(")
-    val sites = scalaFiles("src/main/scala")
-      .filter(f => calls.exists(Files.readString(f).contains))
-      .map(_.getFileName.toString)
-    assert(sites == Seq("Materialize.scala"))
+    assert(sites(Main)(calls: _*) == Seq("Materialize.scala"))
   }
 
   test("only EpochStore.scala names an epoch partition or excludes an epoch") {
-    val layout = Seq("batch=" + "$", "col(\"batch\") " + "=!=", "readIf" + "Any")
-    val sites = scalaFiles("src/main/scala")
-      .filter(f => layout.exists(Files.readString(f).contains))
-      .map(_.getFileName.toString).filterNot(_ == "EpochStore.scala")
-    assert(sites.isEmpty, s"epoch layout outside EpochStore: $sites")
+    val outside = sites(Main)("batch=" + "$", "col(\"batch\") " + "=!=", "readIf" + "Any")
+      .filterNot(_ == "EpochStore.scala")
+    assert(outside.isEmpty, s"epoch layout outside EpochStore: $outside")
   }
 
   test("every stream under graft/streaming but SyncStream starts through GateProtocol.start") {
-    val starts = scalaFiles("src/main/scala/graft/streaming")
-      .filter(f => Files.readString(f).contains("." + "writeStream"))
-      .map(_.getFileName.toString).sorted
-    assert(starts == Seq("GateProtocol.scala", "SyncStream.scala"))
+    assert(sites("src/main/scala/graft/streaming")("." + "writeStream") ==
+      Seq("GateProtocol.scala", "SyncStream.scala"))
+  }
+
+  test("only RunMeter.scala and the bridge listen or drain the bus; the meters it replaced are gone") {
+    assert(sites(Both: _*)("addSparkListener" + "(", "waitUntil" + "Empty") ==
+      Seq("RunMeter.scala", "bridge.scala"))
+    assert(sites(Both: _*)("ByteMetrics" + "Listener", "Site" + "Listener", "grouped" + "Obj",
+      "lean" + "Fit", "ListenerBus" + "Access").isEmpty)
   }
 
   test("a launch conf's master and shuffle width are kept; unset, the local sizing applies") {

@@ -65,8 +65,7 @@ class MaterializeSpec extends SparkSpec with Eventually {
 
   test("a scoped query leaves no blocks: ann_graph_search, corpus_pipeline_v5") {
     Seq("ann_graph_search", "corpus_pipeline_v5").foreach { name =>
-      leavesOnly(Materialize.scope(SparkEntry.queries(name)(spark, sf001)
-        .write.format("noop").mode("overwrite").save()))(_ => Set.empty)
+      leavesOnly(RunMeter.query(spark, name, sf001)(RunMeter.noop))(_ => Set.empty)
     }
   }
 

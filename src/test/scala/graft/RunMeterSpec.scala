@@ -1,0 +1,49 @@
+package graft
+
+import org.apache.spark.StorageAccess
+
+/** [[RunMeter]]: every job a catalog query starts carries that query's
+  * tag, the meter reports the jobs that did not, and a metered run
+  * leaves no blocks behind. */
+class RunMeterSpec extends SparkSpec {
+
+  test("two catalog queries: every job carries its query's tag, and no blocks are left") {
+    val sc = spark.sparkContext
+    val before = StorageAccess.rddsWithBlocks()
+    Seq("q1_agg", "corpus_pipeline_v5").foreach { name =>
+      val run = RunMeter.query(spark, name, sf001)(RunMeter.noop)
+      info(s"$name: ${run.jobs} jobs, ${run.tasksPerStage.values.sum} tasks, " +
+        s"${run.sites.size} call sites")
+      assert(run.jobs > 0 && run.untagged == 0, s"$name started ${run.untagged} untagged jobs")
+      assert(run.sites.map(_.jobs).sum == run.jobs && run.sites.exists(_.wallMs > 0), name)
+      assert(run.tasksPerStage.nonEmpty && run.tasksPerStage.values.forall(_ > 0), name)
+      assert(!sc.getJobTags().contains(RunMeter.tagOf(name)), s"$name's tag outlived its run")
+      assert((StorageAccess.rddsWithBlocks() -- before).isEmpty, s"$name left blocks")
+    }
+  }
+
+  test("a job started without the run's tag is counted as untagged, not as the run's") {
+    val sc = spark.sparkContext
+    val run = RunMeter.measure(spark, "run-meter-spec") {
+      sc.parallelize(1 to 8, 2).count()
+      val other = new Thread(() => {
+        sc.clearJobTags() // the child thread inherits the tag; drop it
+        sc.parallelize(1 to 8, 2).count()
+        ()
+      })
+      other.start(); other.join()
+    }
+    assert(run.jobs == 1 && run.untagged == 1, run)
+    assert(run.tasksPerStage.values.toSeq == Seq(2), run)
+    assert(run.sites.map(_.jobs) == Seq(1), run)
+  }
+
+  test("a failing run drops its tag; the next run meters as usual") {
+    intercept[IllegalStateException] {
+      RunMeter.measure(spark, "run-meter-failing")(throw new IllegalStateException("boom"))
+    }
+    assert(!spark.sparkContext.getJobTags().contains("run-meter-failing"))
+    val next = RunMeter.measure(spark, "run-meter-next")(spark.range(10).count())
+    assert(next.untagged == 0 && next.jobs >= 1, next)
+  }
+}

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
@@ -16,4 +18,12 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf001 = "/root/testdata/sf0.001"
+
+  /** Every node of a physical plan, across AQE boundaries: a
+    * QueryStageExec's subtree hangs off `.plan`, not its children. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => planNodes(q.plan)
+    case _ => p.children.flatMap(planNodes)
+  })
 }

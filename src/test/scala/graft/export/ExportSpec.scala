@@ -1,13 +1,11 @@
 package graft.export
 
-import graft.SparkSpec
+import graft.{RunMeter, SparkSpec}
 import graft.functions.Yaml
 import graft.model.KrmModel
 import graft.operators.ExportOps
 import graft.sinks.ZipSink
 import graft.sources.Catalog
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -292,13 +290,6 @@ class ExportSpec extends SparkSpec {
   }
 
   test("partitioned-zip export: job count is fixed in the table count; writers stay parallel") {
-    val tasksPerStage = scala.collection.concurrent.TrieMap.empty[Int, Int]
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        tasksPerStage.updateWith(e.stageId)(n => Some(n.getOrElse(0) + 1))
-    }
     /** Jobs of one export of `tables` same-schema tables over `namespaces`
       * namespaces, and the task count of its last (writer) stage. */
     def exportOf(tables: Int, namespaces: Int): (Int, Int) = {
@@ -308,23 +299,18 @@ class ExportSpec extends SparkSpec {
           .write.parquet(s"$root/kind$t.parquet")
       }
       val out = java.nio.file.Files.createTempDirectory("exportjobsout").toString
-      ListenerBusAccess.drain(spark.sparkContext)
-      jobs.set(0); tasksPerStage.clear()
-      val res = ExportJob.runPartitionedZip(spark, root, out)
-      ListenerBusAccess.drain(spark.sparkContext)
+      val run = RunMeter.measure(spark, "export-jobs")(ExportJob.runPartitionedZip(spark, root, out))
+      val res = run.result
       assert(res.errors.isEmpty && res.entries == tables * namespaces * 2)
-      (jobs.get, tasksPerStage(tasksPerStage.keys.max))
+      assert(run.untagged == 0, s"${run.untagged} export jobs ran untagged")
+      (run.jobs, run.tasksPerStage(run.tasksPerStage.keys.max))
     }
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.sparkContext.addSparkListener(listener)
     try {
       val (jobs2, _) = exportOf(2, 4)
       val (jobs8, writers) = exportOf(8, 16)
       assert(jobs2 == jobs8, s"2 tables ran $jobs2 jobs, 8 tables ran $jobs8")
       assert(writers > 1, s"the writer stage ran $writers task(s) for 16 namespaces")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.unset("spark.sql.adaptive.enabled")
-    }
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 }

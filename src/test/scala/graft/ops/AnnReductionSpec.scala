@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,29 +35,18 @@ class AnnReductionSpec extends SparkSpec {
   private lazy val corpus = emb.filter($"vec_id" >= 4)
     .select($"vec_id".as("id"), $"embedding".as("vec"))
 
-  /** Flatten across AQE boundaries (QueryStageExec subtrees are not
-    * children — same helper as SkewSpec). */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec => flatten(q.plan)
-      case _ => p.children.flatMap(flatten)
-    })
-  }
-
   /** Assert the two-phase shape: ≥2 windows; every qid-only window has
     * a salted (2-key) window strictly below it in the same plan. */
   private def assertTwoPhase(df: DataFrame, what: String): Unit = {
     df.collect() // materialize so AQE finalizes the executed plan
     val plan = df.queryExecution.executedPlan
-    val wins = flatten(plan).collect { case w: WindowExec => w }
+    val wins = planNodes(plan).collect { case w: WindowExec => w }
     assert(wins.exists(_.partitionSpec.size >= 2),
       s"$what: no salted phase-1 window in plan")
     val qidOnly = wins.filter(_.partitionSpec.size == 1)
     assert(qidOnly.nonEmpty, s"$what: no final qid window found")
     qidOnly.foreach { w =>
-      val below = w.children.flatMap(flatten).collect { case x: WindowExec => x }
+      val below = w.children.flatMap(planNodes).collect { case x: WindowExec => x }
       assert(below.exists(_.partitionSpec.size >= 2),
         s"$what: a qid-only window consumes the scored scan directly " +
           "(no phase-1 salted window below it)")

@@ -174,23 +174,31 @@ class NnDescentSpec extends SparkSpec {
   }
 
   test("plan: the init rank never funnels the node set through an unpartitioned window") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec => flatten(q.plan)
-      case _ => p.children.flatMap(flatten)
-    })
     // randomInit checkpoints the rank relation (it feeds two joins), so
     // the window lives in rankByHash's own plan — assert there.
     val (ranked, _) = NnDescent.rankByHash(nodes, "nnd")
     ranked.collect()
-    val wins = flatten(ranked.queryExecution.executedPlan)
+    val wins = planNodes(ranked.queryExecution.executedPlan)
       .collect { case w: WindowExec => w }
     assert(wins.nonEmpty, "expected the within-bucket rank window")
     assert(wins.forall(_.partitionSpec.nonEmpty),
       "a global unpartitioned window survived in the init rank — the 10⁹-node bottleneck")
+  }
+
+  test("plan: randomInit's init edges read the rank checkpoint and rank nothing again") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val plan = NnDescent.randomInit(nodes, k = 3, seed = "nnd") { edges =>
+      edges.collect()
+      planNodes(edges.queryExecution.executedPlan)
+    }
+    assert(!plan.exists { case w: WindowExec => w.partitionSpec.isEmpty; case _ => false },
+      "an unpartitioned window sits in the init-edge plan")
+    // the jump side and the r2 lookup both scan the checkpointed ranks
+    assert(plan.count(_.isInstanceOf[RDDScanExec]) == 2,
+      "the jump side and the r2 lookup should each scan the rank checkpoint")
+    assert(!plan.exists(_.isInstanceOf[FileSourceScanExec]), "the init edges read the nodes again")
   }
 
   test("fewer than 2 nodes is rejected (the jump modulus would be zero)") {

@@ -37,19 +37,6 @@ class SkewSpec extends SparkSpec {
     assert(salts.size == 8, "hot key's rows must cover every salt bucket")
   }
 
-  /** Flatten a physical plan across AQE boundaries: QueryStageExec
-    * nodes are leaves whose real subtree hangs off `.plan`, so a plain
-    * `collect` never sees inside a materialized stage. */
-  private def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec => flatten(q.plan)
-      case _ => p.children.flatMap(flatten)
-    })
-  }
-
   private def withConfs[A](confs: Seq[(String, String)])(body: => A): A = {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -104,7 +91,7 @@ class SkewSpec extends SparkSpec {
       // collect() executes THIS DataFrame's QueryExecution (count()
       // would plan a different query and leave this one unexecuted).
       assert(joined.collect().length == 41000)
-      val nodes = flatten(joined.queryExecution.executedPlan)
+      val nodes = planNodes(joined.queryExecution.executedPlan)
       val smj = nodes.collect { case j: SortMergeJoinExec => j }
       assert(smj.nonEmpty,
         s"expected a sort-merge join:\n${joined.queryExecution.executedPlan}")

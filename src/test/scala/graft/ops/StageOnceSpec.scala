@@ -1,10 +1,6 @@
 package graft.ops
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import graft.{Materialize, SparkEntry, SparkSpec}
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{RunMeter, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.util.LongAccumulator
 
@@ -50,20 +46,12 @@ class StageOnceSpec extends SparkSpec {
   }
 
   test("corpus_pipeline_v5 runs a fixed number of Spark jobs (sf0.001)") {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Materialize.scope(SparkEntry.queries("corpus_pipeline_v5")(spark, sf001)
-        .write.format("noop").mode("overwrite").save())
-      ListenerBusAccess.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    info(s"corpus_pipeline_v5 ran ${jobs.get} jobs")
-    assert(jobs.get <= StageOnceSpec.V5Jobs,
-      s"corpus_pipeline_v5 ran ${jobs.get} jobs, more than ${StageOnceSpec.V5Jobs}")
+    val run = RunMeter.query(spark, "corpus_pipeline_v5", sf001)(RunMeter.noop)
+    val jobs = run.jobs
+    assert(run.untagged == 0, s"${run.untagged} corpus_pipeline_v5 jobs ran untagged")
+    info(s"corpus_pipeline_v5 ran $jobs jobs")
+    assert(jobs <= StageOnceSpec.V5Jobs,
+      s"corpus_pipeline_v5 ran $jobs jobs, more than ${StageOnceSpec.V5Jobs}")
   }
 }
 

@@ -89,18 +89,8 @@ class TextIndexSpec extends SparkSpec {
       s"bucket probe must be a partition filter:\n$plan")
     // and PHYSICALLY: the postings scan selects exactly one of the 16
     // bucket directories once its partition filters are applied.
-    // (Flatten across AQE wrappers — scans hide behind
-    // AdaptiveSparkPlanExec/QueryStageExec boundaries.)
-    def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      p +: (p match {
-        case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-        case qs: QueryStageExec => flatten(qs.plan)
-        case _ => p.children.flatMap(flatten)
-      })
-    }
-    val scans = flatten(q.queryExecution.executedPlan).collect {
+    // (SparkSpec.planNodes looks behind the AQE wrappers.)
+    val scans = planNodes(q.queryExecution.executedPlan).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
         if f.relation.location.rootPaths.exists(_.toString.contains("postings")) => f
     }

@@ -67,23 +67,17 @@ class TextRankSpec extends SparkSpec {
     * tokens and a global sort of it on one reducer is the straggler
     * this repo's every other global rank avoids. */
   test("rk window consumes a TakeOrdered cut, not the vocabulary") {
-    import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
     import org.apache.spark.sql.execution.window.WindowExec
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec => flatten(q.plan)
-      case _ => p.children.flatMap(flatten)
-    })
     val docs = (1 to 50).map(i => (i.toLong, s"w$i w${i % 7} shared w${i % 3}"))
       .toDF("doc_id", "text")
     val df = TextRank.tokenRank(docs, "text", k = 5)
     df.collect() // finalize AQE
-    val all = flatten(df.queryExecution.executedPlan)
+    val all = planNodes(df.queryExecution.executedPlan)
     val wins = all.collect { case w: WindowExec => w }
     assert(wins.nonEmpty, "expected the rk window in the plan")
     wins.foreach { w =>
-      assert(w.children.flatMap(flatten)
+      assert(w.children.flatMap(planNodes)
           .exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
         "rk window must sit above a TakeOrderedAndProject cut — " +
           "a window over the uncut vocabulary is the 100 TB straggler")
