@@ -82,7 +82,8 @@ object RunMeter {
       .getOrElse("(outside graft)")
 
   /** Counts the tagged jobs' events; jobs and wall per site key on the
-    * SQL execution that ran them. */
+    * SQL execution that ran them, or on the job's own call site when it
+    * ran outside one. */
   private final class Meter(tag: String) extends SparkListener {
     private var jobs, untagged, blocks = 0
     private var shuffle, spill, gc = 0L
@@ -100,8 +101,12 @@ object RunMeter {
         stages ++= e.stageIds
         val exec = Option(e.properties)
           .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        // a job outside any SQL execution is keyed by its own call site,
+        // which its result stage (the job's last-created) carries; a
+        // zero-partition job has no stage
         siteJobs(exec.flatMap(id => siteByExec.get(id.toLong))
-          .getOrElse("(no SQL execution)")) += 1
+          .orElse(e.stageInfos.maxByOption(_.stageId).map(st => siteOf(st.details)))
+          .getOrElse("(no stage)")) += 1
       }
     }
 

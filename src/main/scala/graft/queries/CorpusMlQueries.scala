@@ -27,14 +27,8 @@ object CorpusMlQueries {
     * integer-exact; no rounding (the round-14 ADVICE note on 4-dp ties,
     * applied). */
   val annSq8: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val b = graft.ops.Sq.train(corpus, "vec")
-    graft.ops.Sq.topKSym(queries, corpus, b, k = 10)
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.sq8(queries, corpus).orderBy(col("qid"), col("rank"))
   }
 
   /** The SQ8 symmetric-estimator replay chain, ending in
@@ -43,8 +37,8 @@ object CorpusMlQueries {
     * are sq-prefixed so the chain composes next to the DOUBLE-vec
     * `q`/`c` ground-truth chain without collision. */
   private[queries] val sq8RankedCtes: String =
-    """sqq AS (SELECT vec_id AS qid, embedding AS vec FROM embeddings WHERE vec_id < 5),
-      |sqc AS (SELECT vec_id AS id, embedding AS vec FROM embeddings WHERE vec_id >= 5),
+    s"""sqq AS (SELECT vec_id AS qid, embedding AS vec FROM embeddings WHERE ${AnnHarness.QueriesWhere}),
+      |sqc AS (SELECT vec_id AS id, embedding AS vec FROM embeddings WHERE ${AnnHarness.CorpusWhere}),
       |dims AS (SELECT unnest(range(1, (SELECT min(len(vec)) FROM sqc) + 1)) AS dim),
       |cx AS (SELECT id, dim, CAST(vec[dim] AS DOUBLE) AS x FROM sqc CROSS JOIN dims),
       |stats AS (SELECT dim, min(x) AS lo, max(x) AS hi FROM cx GROUP BY dim),
@@ -80,38 +74,19 @@ object CorpusMlQueries {
     * `ann_ivfpq`/`ann_ivfpq_res` argument). The pruned two-lever
     * configuration is recall- and plan-gated in IvfSqSpec. */
   val annIvfSq: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = graft.ops.IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2)
-    val b = graft.ops.IvfSq.trainBounds(corpus, centroids)
-    val path = graft.Staging.dirFor("ivfsq-q")
-    graft.ops.IvfSq.writeIndex(corpus, centroids, b, path)
-    graft.ops.IvfSq.topK(s, path, queries, centroids, b,
-        k = 10, nProbe = 8, shortlist = Int.MaxValue)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.ivfsq(s, queries, corpus,
+      nProbe = 8, shortlist = Int.MaxValue, seed = "km", staging = "ivfsq-q"))
   }
 
   /** PRODUCTION-pruned IVF-SQ8 in the timed surface — hash-gated
     * since round 18 ([[annIvfSqPrunedSql]] replays the whole chain;
     * the recall floor stays asserted in IvfSqSpec). */
   val annIvfSqPruned: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = graft.ops.IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2)
-    val b = graft.ops.IvfSq.trainBounds(corpus, centroids)
-    val path = graft.Staging.dirFor("ivfsq-pruned-q")
-    graft.ops.IvfSq.writeIndex(corpus, centroids, b, path)
-    graft.ops.IvfSq.topK(s, path, queries, centroids, b,
-        k = 10, nProbe = 2, shortlist = 50)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.ivfsq(s, queries, corpus,
+      nProbe = AnnHarness.PrunedProbe, shortlist = AnnHarness.PrunedShortlist, seed = "km",
+      staging = "ivfsq-pruned-q"))
   }
 
   /** Value of the first 15 hex digits of `h15` as a BIGINT — the
@@ -516,82 +491,11 @@ object CorpusMlQueries {
   val annKnnGraph: Q = (s, dir) => {
     val nodes = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    graft.ops.NnDescent.knnGraph(nodes, k = 5, iters = 2, sample = 10,
-        seed = "nnd")
-      .orderBy(col("id"), col("rank"))
-  }
-
-  /** CTE body (no leading WITH) that rebuilds the NN-Descent graph —
-    * shared by `ann_knn_graph`, the mutual-kNN clustering replay, and
-    * (with `nodesWhere = " WHERE vec_id >= 5"`) the graph-search replay
-    * over the corpus-only index ([[ServeQueries]]). */
-  private[queries] def knnGraphCtesBody(nodesWhere: String = ""): String = {
-    val k = 5; val cap = 10; val iters = 2
-    val cos = (a: String, b: String) =>
-      s"list_dot_product($a.vec, $b.vec) / " +
-        s"(sqrt(list_dot_product($a.vec, $a.vec)) * sqrt(list_dot_product($b.vec, $b.vec)))"
-    val sweeps = (1 to iters).map { i =>
-      s"""u$i AS MATERIALIZED (
-         |  SELECT id AS c, nbr AS v FROM g${i - 1}
-         |  UNION
-         |  SELECT nbr AS c, id AS v FROM g${i - 1}),
-         |cap$i AS MATERIALIZED (
-         |  SELECT c, v FROM (
-         |    SELECT c, v, row_number() OVER (PARTITION BY c ORDER BY CAST($hexVal AS BIGINT), v) AS hr
-         |    FROM (SELECT c, v,
-         |            substring(md5('nnd' || CAST(c AS VARCHAR) || '_' || CAST(v AS VARCHAR)), 1, 15) AS h15
-         |          FROM u$i))
-         |  WHERE hr <= $cap),
-         |cand$i AS MATERIALIZED (
-         |  SELECT DISTINCT a.v AS id, b.v AS nbr
-         |  FROM cap$i a JOIN cap$i b USING (c) WHERE a.v <> b.v),
-         |sc$i AS MATERIALIZED (
-         |  SELECT cand.id AS id, cand.nbr AS nbr, round(${cos("nv", "nn")}, 4) AS score
-         |  FROM cand$i cand JOIN nodes nv ON nv.id = cand.id
-         |  JOIN nodes nn ON nn.id = cand.nbr),
-         |al$i AS MATERIALIZED (
-         |  SELECT id, nbr, max(score) AS score FROM (
-         |    SELECT id, nbr, score FROM g${i - 1}
-         |    UNION ALL SELECT id, nbr, score FROM sc$i)
-         |  GROUP BY id, nbr),
-         |g$i AS MATERIALIZED (
-         |  SELECT id, nbr, score, rank FROM (
-         |    SELECT id, nbr, score,
-         |      row_number() OVER (PARTITION BY id ORDER BY score DESC, nbr) AS rank
-         |    FROM al$i)
-         |  WHERE rank <= $k)""".stripMargin
-    }.mkString(",\n")
-    s"""nodes AS MATERIALIZED (
-       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-       |  FROM embeddings$nodesWhere),
-       |rk AS MATERIALIZED (
-       |  SELECT id, row_number() OVER (ORDER BY CAST($hexVal AS BIGINT), id) AS r
-       |  FROM (SELECT id, substring(md5('nnd' || CAST(id AS VARCHAR)), 1, 15) AS h15
-       |        FROM nodes)),
-       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM rk),
-       |j0 AS MATERIALIZED (
-       |  SELECT a.r AS r, a.id AS id,
-       |    substring(md5('nnd' || CAST(a.r AS VARCHAR) || '_' || CAST(o.off AS VARCHAR)), 1, 15) AS h15
-       |  FROM rk a CROSS JOIN (SELECT unnest(range(1, ${k + 1})) AS off) o),
-       |e0 AS MATERIALIZED (
-       |  SELECT DISTINCT j0.id AS id, b.id AS nbr
-       |  FROM j0 CROSS JOIN tot
-       |  JOIN rk b ON b.r = (j0.r - 1 + (CAST($hexVal AS BIGINT) % (n - 1) + 1)) % n + 1
-       |  WHERE j0.id <> b.id),
-       |se0 AS MATERIALIZED (
-       |  SELECT e0.id AS id, e0.nbr AS nbr, round(${cos("nv", "nn")}, 4) AS score
-       |  FROM e0 JOIN nodes nv ON nv.id = e0.id JOIN nodes nn ON nn.id = e0.nbr),
-       |g0 AS MATERIALIZED (
-       |  SELECT id, nbr, score, rank FROM (
-       |    SELECT id, nbr, score,
-       |      row_number() OVER (PARTITION BY id ORDER BY score DESC, nbr) AS rank
-       |    FROM se0)
-       |  WHERE rank <= $k),
-       |$sweeps""".stripMargin
+    AnnHarness.graph(nodes).orderBy(col("id"), col("rank"))
   }
 
   val annKnnGraphSql: String =
-    s"""WITH ${knnGraphCtesBody()}
+    s"""WITH ${AnnHarness.graphCtes("")}
        |SELECT id, nbr, score, rank FROM g2
        |ORDER BY id, rank""".stripMargin
 
@@ -607,8 +511,7 @@ object CorpusMlQueries {
   val qGraphClusters: Q = (s, dir) => {
     val nodes = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = graft.ops.NnDescent.knnGraph(nodes, k = 5, iters = 2,
-      sample = 10, seed = "nnd")
+    val g = AnnHarness.graph(nodes)
     val rev = g.select(col("id").as("b_id"), col("nbr").as("b_nbr"))
     val mut = g.join(rev, col("id") === col("b_nbr") && col("nbr") === col("b_id"))
       .filter(col("id") < col("nbr"))
@@ -628,7 +531,7 @@ object CorpusMlQueries {
   // gained/lost mutual edge). Scoping RECURSIVE to the subquery keeps
   // the graph stages byte-identical between the two oracles.
   val qGraphClustersSql: String =
-    s"""WITH ${knnGraphCtesBody()},
+    s"""WITH ${AnnHarness.graphCtes("")},
        |mut AS MATERIALIZED (
        |  SELECT a.id AS id, a.nbr AS nbr
        |  FROM g2 a JOIN g2 b ON a.id = b.nbr AND a.nbr = b.id
@@ -731,20 +634,16 @@ object CorpusMlQueries {
     * hash-green): coarse chain, float-quantized residuals, SQ8 bounds/
     * codes/midpoint-decode, `qc + q·decoded` ADC, shortlist, exact
     * re-rank. */
-  val annIvfSqPrunedSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |${QuantizerReplay.ivfTrainCtes("c")},
+  val annIvfSqPrunedSql: String = AnnHarness.answerSql(
+    s"""${QuantizerReplay.ivfTrainCtes("c")},
        |${QuantizerReplay.ivfCcCte("c")},
        |${QuantizerReplay.residCte("c")},
-       |${QuantizerReplay.sqProbeCtes()}
-       |SELECT qid, id, round(score, 4) AS score, rank
-       |FROM sqrank WHERE rank <= 10
-       |ORDER BY qid, rank""".stripMargin
+       |${QuantizerReplay.sqProbeCtes()}""".stripMargin, "sqrank")
 
   val oracles: Map[String, String] = Map(
     "ann_sq8" -> annSq8Sql,
     // exhaustive mode ≡ brute force — the shared exact-top-k oracle
-    "ann_ivfsq" -> QueryCatalog.annTopKSql,
+    "ann_ivfsq" -> AnnHarness.exactSql(),
     "ann_ivfsq_pruned" -> annIvfSqPrunedSql,
     "ann_knn_graph" -> annKnnGraphSql,
     "q_cluster_eval" -> qClusterEvalSql,

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object EvalQueries {
   import QueryCatalog.Q
 
-  private val EvalK = 10
+  private val EvalK = AnnHarness.K
 
   /** Retrieval-quality metrics ([[graft.ops.Retrieval.rankingMetrics]])
     * of the seed-42 LSH ANN list (the `ann_lsh` configuration — 4-bit
@@ -32,15 +32,8 @@ object EvalQueries {
     * gain literals; all aggregation is integer, each metric one IEEE
     * division. */
   val qRetrievalEval: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val sys = Similarity.lshTopK(queries, corpus, k = EvalK, dim = 64,
-      bitsPerTable = 4, tables = 16)
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus, AnnHarness.lsh(queries, corpus))
   }
 
   /** The metric fold shared by every eval oracle: given an upstream
@@ -66,12 +59,16 @@ object EvalQueries {
        |ORDER BY qid""".stripMargin
   }
 
-  val qRetrievalEvalSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
-       |${QueryCatalog.annLshScoredCtes},
-       |sysk AS (SELECT qid, id, rank FROM lshscored WHERE rank <= $EvalK),
+  /** An audit oracle: the exact truth and `chain` over the split, then
+    * the metric fold over `rel(qid, id, rank)`'s top [[EvalK]]. */
+  private def auditSql(chain: String, rel: String): String =
+    s"""WITH ${AnnHarness.qcCtes()},
+       |${AnnHarness.gtScoredCte},
+       |$chain,
+       |sysk AS (SELECT qid, id, rank FROM $rel WHERE rank <= $EvalK),
        |$metricsTailSql""".stripMargin
+
+  val qRetrievalEvalSql: String = auditSql(QueryCatalog.annLshScoredCtes, "lshscored")
 
   /** [[qRetrievalEval]] pointed at the GRAPH-ANN family: the same
     * metric relation over [[graft.ops.NnDescent.searchGraph]]'s beam
@@ -81,31 +78,21 @@ object EvalQueries {
     * (NN-Descent build + every search hop) with the brute-force chain
     * and the shared metric fold. */
   val qRetrievalEvalGraph: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = graft.ops.NnDescent.knnGraph(corpus, k = 5, iters = 2,
-      sample = 10, seed = "nnd")
-    val sys = graft.ops.NnDescent.searchGraph(g, corpus, queries,
-      k = EvalK, entries = ServeQueries.SearchEntries,
-      beam = ServeQueries.SearchBeam, hops = ServeQueries.SearchHops,
-      seed = "nnd")
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus,
+      AnnHarness.walk(AnnHarness.graph(corpus), corpus, queries))
   }
 
   val qRetrievalEvalGraphSql: String =
-    s"""WITH ${CorpusMlQueries.knnGraphCtesBody(" WHERE vec_id >= 5")},
+    s"""WITH ${AnnHarness.corpusGraphCtes},
        |${ServeQueries.graphSearchCtes},
-       |${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
+       |${AnnHarness.qcCtes()},
+       |${AnnHarness.gtScoredCte},
        |sysk AS (
        |  SELECT qid, id, rank FROM (
        |    SELECT qid, id,
        |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank
-       |    FROM v${ServeQueries.SearchHops}) WHERE rank <= $EvalK),
+       |    FROM v${AnnHarness.SearchHops}) WHERE rank <= $EvalK),
        |$metricsTailSql""".stripMargin
 
   /** [[qRetrievalEvalGraph]] at the CELL-SEEDED entry configuration
@@ -115,35 +102,21 @@ object EvalQueries {
     * selection, so a drift in what quantizer-seeded entries buy is a
     * CORRECTNESS failure, not a spec constant. */
   val qRetrievalEvalGraphSeeded: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = graft.ops.NnDescent.knnGraph(corpus, k = 5, iters = 2,
-      sample = 10, seed = "nnd")
-    val cents = graft.ops.IvfIndex.train(corpus, "id", "vec",
-      k = ServeQueries.SeededK, iters = 2,
-      seed = graft.ops.SelectedSeeds.ivf)
-    val sys = graft.ops.NnDescent.searchGraphCellSeeded(g, corpus,
-      queries, k = EvalK, cents,
-      nCells = ServeQueries.SeededCells,
-      perCell = ServeQueries.SeededPerCell,
-      beam = ServeQueries.SearchBeam, hops = ServeQueries.SearchHops)
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus,
+      AnnHarness.seededWalk(AnnHarness.graph(corpus), corpus, queries))
   }
 
   val qRetrievalEvalGraphSeededSql: String =
-    s"""WITH ${CorpusMlQueries.knnGraphCtesBody(" WHERE vec_id >= 5")},
+    s"""WITH ${AnnHarness.corpusGraphCtes},
        |${ServeQueries.graphSearchSeededCtes},
-       |${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
+       |${AnnHarness.qcCtes()},
+       |${AnnHarness.gtScoredCte},
        |sysk AS (
        |  SELECT qid, id, rank FROM (
        |    SELECT qid, id,
        |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank
-       |    FROM v${ServeQueries.SearchHops}) WHERE rank <= $EvalK),
+       |    FROM v${AnnHarness.SearchHops}) WHERE rank <= $EvalK),
        |$metricsTailSql""".stripMargin
 
   /** [[qRetrievalEval]] pointed at the IVF family — the third audited
@@ -156,22 +129,9 @@ object EvalQueries {
     * embedded unit-centroid literals, the cell-restricted raw-cosine
     * ranking, the exact chain, and the shared metric fold. */
   val qRetrievalEvalIvf: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = QueryCatalog.semanticCentroids
-    val cc = graft.ops.IvfIndex.assignCells(corpus, "id", "vec", cents)
-    val qc = queries.withColumn("cell",
-      graft.ops.IvfIndex.bestCell(col("qvec"), cents))
-    val scored = cc.join(qc, Seq("cell"))
-      .select(col("qid"), col("id"),
-        Similarity.cosine(col("qvec"), col("vec")).as("score"))
-    val sys = Skew.saltedTopK(scored, Seq("qid"),
-      Seq(col("score").desc, col("id").asc), EvalK, saltBy = col("id"))
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus,
+      AnnHarness.fixedCell(queries, corpus, QueryCatalog.semanticCentroids))
   }
 
   val qRetrievalEvalIvfSql: String = {
@@ -179,8 +139,8 @@ object EvalQueries {
     val csLit = cs.map(_.mkString("[", ", ", "]"))
       .mkString("[", ",\n      ", "]")
     s"""WITH cents AS (SELECT $csLit AS cs),
-       |${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
+       |${AnnHarness.qcCtes()},
+       |${AnnHarness.gtScoredCte},
        |cc AS (
        |  SELECT id, vec,
        |    len(s) - list_position(list_reverse(s), list_max(s)) AS cell
@@ -211,21 +171,14 @@ object EvalQueries {
     * distance — the `ann_sq8` chain), so unlike the trained-codebook PQ
     * modes this audit is hash-gated end-to-end. */
   val qRetrievalEvalSq: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val b = graft.ops.Sq.train(corpus, "vec")
-    val sys = graft.ops.Sq.topKSym(queries, corpus, b, k = EvalK)
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus, AnnHarness.sq8(queries, corpus))
   }
 
   val qRetrievalEvalSqSql: String =
     s"""WITH ${CorpusMlQueries.sq8RankedCtes},
-       |${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
+       |${AnnHarness.qcCtes()},
+       |${AnnHarness.gtScoredCte},
        |sysk AS (SELECT qid, id, rank FROM sqranked WHERE rank <= $EvalK),
        |$metricsTailSql""".stripMargin
 
@@ -240,23 +193,15 @@ object EvalQueries {
     * everything; the knob a capacity planner actually turns (halve the
     * vector bytes → this relation says what recall it costs). */
   val qRetrievalEvalTrunc: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val sys = Similarity.bruteForceTopK(
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus, Similarity.bruteForceTopK(
       queries.select(col("qid"), slice(col("qvec"), 1, TruncDims).as("qvec")),
       corpus.select(col("id"), slice(col("vec"), 1, TruncDims).as("vec")),
-      k = EvalK)
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+      k = EvalK))
   }
 
-  val qRetrievalEvalTruncSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
-       |tq AS (SELECT qid, qvec[1:$TruncDims] AS qvec FROM q),
+  val qRetrievalEvalTruncSql: String = auditSql(
+    s"""tq AS (SELECT qid, qvec[1:$TruncDims] AS qvec FROM q),
        |tc AS (SELECT id, vec[1:$TruncDims] AS vec FROM c),
        |truncscored AS (
        |  SELECT qid, id,
@@ -264,9 +209,7 @@ object EvalQueries {
        |      list_dot_product(qvec, vec) /
        |        (sqrt(list_dot_product(qvec, qvec)) * sqrt(list_dot_product(vec, vec))) DESC,
        |      id) AS rank
-       |  FROM tc CROSS JOIN tq),
-       |sysk AS (SELECT qid, id, rank FROM truncscored WHERE rank <= $EvalK),
-       |$metricsTailSql""".stripMargin
+       |  FROM tc CROSS JOIN tq)""".stripMargin, "truncscored")
 
   /** The MULTI-PROBE LSH audit — the one serving configuration that
     * was rows-only-by-design (`ann_lsh_multiprobe`) gets its recall
@@ -280,15 +223,8 @@ object EvalQueries {
     * (|margin|, flipped key) and keep two, union the base keys, join
     * the corpus's base buckets, re-rank exactly, fold the metrics. */
   val qRetrievalEvalLshMp: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val sys = Similarity.lshTopKMultiProbe(queries, corpus, k = EvalK,
-      dim = 64, bitsPerTable = 4, tables = 8, nProbes = 3)
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus, AnnHarness.lshMultiprobe(queries, corpus))
   }
 
   /** The multi-probe selection → candidate join → exact re-rank chain
@@ -342,22 +278,12 @@ object EvalQueries {
        |  FROM cands JOIN q ON q.qid = cands.qid JOIN c ON c.id = cands.id)""".stripMargin
   }
 
-  val qRetrievalEvalLshMpSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
-       |$lshMpChainCtes,
-       |sysk AS (SELECT qid, id, rank FROM mpscored WHERE rank <= $EvalK),
-       |$metricsTailSql""".stripMargin
+  val qRetrievalEvalLshMpSql: String = auditSql(lshMpChainCtes, "mpscored")
 
   /** The `ann_lsh_multiprobe` QUERY oracle — the last rows-only ANN
     * mode promoted to hash-green: the same probe-selection replay the
     * eval audit already validated, cut at the query's top-10. */
-  val annLshMultiprobeSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |$lshMpChainCtes
-       |SELECT qid, id, round(raw, 4) AS score, rank
-       |FROM mpscored WHERE rank <= 10
-       |ORDER BY qid, rank""".stripMargin
+  val annLshMultiprobeSql: String = AnnHarness.answerSql(lshMpChainCtes, "mpscored", "raw")
 
   /** The PQ-code-domain audits (round-18 directive #1) — the LOWEST-
     * recall production modes were the only serving rankers without an
@@ -369,116 +295,45 @@ object EvalQueries {
     * recall numbers (SCALING addendum) become continuously checked
     * relations. */
   val qRetrievalEvalPqQ: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cb = graft.ops.PqIndex.train(corpus, "id", "vec",
-      m = 8, k = 16, iters = 2, seed = graft.ops.SelectedSeeds.pq)
-    val sys = graft.ops.PqIndex.topK(queries, corpus, cb,
-      k = EvalK, shortlist = 100)
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus, AnnHarness.pq(queries, corpus,
+      AnnHarness.PqShortlist, graft.ops.SelectedSeeds.pq))
   }
 
-  val qRetrievalEvalPqSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
-       |${QuantizerReplay.pqTrainCtes("c", seed = graft.ops.SelectedSeeds.pq)},
-       |${QuantizerReplay.pqProbeCtes("pqcent2", shortlist = 100)},
-       |sysk AS (SELECT qid, id, rank FROM pqrank WHERE rank <= $EvalK),
-       |$metricsTailSql""".stripMargin
+  val qRetrievalEvalPqSql: String = auditSql(
+    s"""${QuantizerReplay.pqTrainCtes("c", seed = graft.ops.SelectedSeeds.pq)},
+       |${QuantizerReplay.pqProbeCtes("pqcent2", shortlist = AnnHarness.PqShortlist)}""".stripMargin,
+    "pqrank")
 
   /** The IVF-PQ audit at the `ann_ivfpq_pruned` production
     * configuration (nProbe = 2, shortlist = 50). */
   val qRetrievalEvalIvfPqQ: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = graft.ops.IvfIndex.train(corpus, "id", "vec",
-      k = 8, iters = 2, seed = graft.ops.SelectedSeeds.ivfpq)
-    val cb = graft.ops.PqIndex.train(corpus, "id", "vec",
-      m = 8, k = 16, iters = 2, seed = graft.ops.SelectedSeeds.ivfpq)
-    val path = graft.Staging.dirFor("eval-ivfpq-q")
-    graft.ops.IvfPq.writeIndex(corpus, centroids, cb, path)
-    val sys = graft.ops.IvfPq.topK(s, path, queries, centroids, cb,
-      k = EvalK, nProbe = 2, shortlist = 50)
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus,
+      AnnHarness.ivfpqPruned(s, queries, corpus, "eval-ivfpq-q"))
   }
 
-  val qRetrievalEvalIvfPqSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
-       |${PipelineQueries.ivfPqPrunedChain},
-       |sysk AS (SELECT qid, id, rank FROM pqrank WHERE rank <= $EvalK),
-       |$metricsTailSql""".stripMargin
+  val qRetrievalEvalIvfPqSql: String = auditSql(PipelineQueries.ivfPqPrunedChain, "pqrank")
 
   /** The residual-IVF-PQ audit at the `ann_ivfpq_res_pruned`
     * production configuration. */
   val qRetrievalEvalResQ: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = graft.ops.IvfIndex.train(corpus, "id", "vec",
-      k = 8, iters = 2, seed = graft.ops.SelectedSeeds.res)
-    val cb = graft.ops.ResidualPq.trainCodebooks(corpus, centroids,
-      m = 8, k = 16, iters = 2, seed = graft.ops.SelectedSeeds.res)
-    val path = graft.Staging.dirFor("eval-res-q")
-    graft.ops.ResidualPq.writeIndex(corpus, centroids, cb, path)
-    val sys = graft.ops.ResidualPq.topK(s, path, queries, centroids, cb,
-      k = EvalK, nProbe = 2, shortlist = 50)
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus,
+      AnnHarness.residualPruned(s, queries, corpus, "eval-res-q"))
   }
 
-  val qRetrievalEvalResSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
-       |${PipelineQueries.resPrunedChain},
-       |sysk AS (SELECT qid, id, rank FROM rqrank WHERE rank <= $EvalK),
-       |$metricsTailSql""".stripMargin
+  val qRetrievalEvalResSql: String = auditSql(PipelineQueries.resPrunedChain, "rqrank")
 
   /** The rotated-residual ("OPQ,IVF,PQ") audit at the
     * `ann_ivfpq_opq_pruned` production configuration. */
   val qRetrievalEvalOpqQ: Q = (s, dir) => {
-    val basis = graft.ops.Pca.loadBasis(s,
-      s"${graft.Tables.fixturesDir}/pca_basis.parquet")
-    val order = graft.ops.Opq.allocate(
-      basis.sortBy(_.component).map(_.eigenvalue), 8)
-    val rot = graft.ops.Opq.rotation(basis, order)
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    // The rotated corpus feeds the coarse trainer's seed pass and every
-    // Lloyd iteration — materialize the rotation once per invocation.
-    val rotated = Materialize(corpus.select(col("id"),
-      graft.functions.functions.rotate_project(col("vec"), rot).as("vec")))
-    val centroids = graft.ops.IvfIndex.train(rotated, "id", "vec",
-      k = 8, iters = 2, seed = graft.ops.SelectedSeeds.opq)
-    val cb = graft.ops.ResidualPq.trainCodebooksRotated(corpus, rot,
-      centroids, m = 8, k = 16, iters = 2, seed = graft.ops.SelectedSeeds.opq)
-    val path = graft.Staging.dirFor("eval-opq-q")
-    graft.ops.ResidualPq.writeIndexRotated(corpus, rot, centroids, cb, path)
-    val sys = graft.ops.ResidualPq.topKRotated(s, path, queries, rot,
-      centroids, cb, k = EvalK, nProbe = 2, shortlist = 50)
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.audit(queries, corpus,
+      AnnHarness.opqPruned(s, queries, corpus, "eval-opq-q"))
   }
 
-  val qRetrievalEvalOpqSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |${QueryCatalog.annGtScoredCte},
-       |${PipelineQueries.opqPrunedChain},
-       |sysk AS (SELECT qid, id, rank FROM rqrank WHERE rank <= $EvalK),
-       |$metricsTailSql""".stripMargin
+  val qRetrievalEvalOpqSql: String = auditSql(PipelineQueries.opqPrunedChain, "rqrank")
 
   /** The HYBRID stack's audit — the one serving path the eval layer
     * still skipped: the RRF-fused BM25 + dense list (the
@@ -491,22 +346,13 @@ object EvalQueries {
     * an oracle-checked relation). Single standing query (vector 3, the
     * hybrid family's convention) — one metrics row. */
   val qRetrievalEvalHybridQ: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val corpus = Tables.documents(s, dir)
-      .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
-        Seq("doc_id"))
-      .filter(col("doc_id") >= 5)
-    val qv = emb.filter(col("vec_id") === 3)
-      .select(col("embedding").as("qvec"))
+    val (corpus, qv) = AnnHarness.hybrid(s, dir)
     val sys = graft.ops.Hybrid.hybridTopK(corpus, "doc_id", "text",
         "embedding", Seq("spark", "window", "merge"), qv,
         k = EvalK, m = 20)
       .select(lit(0L).as("qid"), col("id"), col("rk").as("rank"))
-    val gt = Similarity.bruteForceTopK(
-      qv.select(lit(0L).as("qid"), col("qvec")),
-      corpus.select(col("doc_id").as("id"), col("embedding").as("vec")),
-      k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    AnnHarness.audit(qv.select(lit(0L).as("qid"), col("qvec")),
+      corpus.select(col("doc_id").as("id"), col("embedding").as("vec")), sys)
   }
 
   val qRetrievalEvalHybridSql: String =
@@ -534,11 +380,8 @@ object EvalQueries {
     * and EVERY greedy pick as an unrolled stage — the graph-search
     * hop-replay stance applied to re-ranking. */
   val qRetrievalMmr: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val qv = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    val qv = queries.filter(col("qid") === 0).select(col("qvec"))
     val scored = corpus.crossJoin(broadcast(qv))
       .select(lit(0).as("qid"), col("id"), col("vec"),
         round(Similarity.cosine(col("vec"), col("qvec")), 4).as("rel"))
@@ -598,7 +441,7 @@ object EvalQueries {
        |  FROM embeddings WHERE vec_id = 0),
        |corp AS (
        |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-       |  FROM embeddings WHERE vec_id >= 5),
+       |  FROM embeddings WHERE ${AnnHarness.CorpusWhere}),
        |cand AS MATERIALIZED (
        |  SELECT id, vec, rel FROM (
        |    SELECT id, vec, round(${cosSql("qvec", "vec")}, 4) AS rel,
@@ -623,13 +466,7 @@ object EvalQueries {
     * composition — both rankers, the fusion, the re-score, the
     * pairwise matrix, and every greedy pick — in ONE DuckDB query. */
   val qRetrievalPipeline: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val corpus = Tables.documents(s, dir)
-      .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
-        Seq("doc_id"))
-      .filter(col("doc_id") >= 5)
-    val qv = emb.filter(col("vec_id") === 3)
-      .select(col("embedding").as("qvec"))
+    val (corpus, qv) = AnnHarness.hybrid(s, dir)
     val fusedIds = graft.ops.Hybrid.hybridTopK(corpus, "doc_id", "text",
         "embedding", Seq("spark", "window", "merge"), qv,
         k = PipeCand, m = MmrM)
@@ -658,13 +495,7 @@ object EvalQueries {
     * [[qRetrievalPipelineSql]] byte for byte — serving the flagship
     * from stores must change NOTHING about its answers. */
   val qRetrievalPipelineIndexed: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val corpus = Tables.documents(s, dir)
-      .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
-        Seq("doc_id"))
-      .filter(col("doc_id") >= 5)
-    val qv = emb.filter(col("vec_id") === 3)
-      .select(col("embedding").as("qvec"))
+    val (corpus, qv) = AnnHarness.hybrid(s, dir)
     val bm25Path = graft.Staging.dirFor("pipe-bm25")
     graft.ops.TextIndex.writePostings(corpus, "doc_id", "text", bm25Path)
     val vecCorpus = corpus.select(col("doc_id").as("id"),
@@ -815,16 +646,7 @@ object EvalQueries {
       .parquet(s"${graft.Tables.fixturesDir}/mm_centroids.parquet")
       .orderBy(col("cid")).select("cvec").collect()
       .map(_.getSeq[Double](0).toArray)
-    val cc = graft.ops.IvfIndex.assignCells(corpus, "id", "vec", cents)
-    val qc = queries.withColumn("cell",
-      graft.ops.IvfIndex.bestCell(col("qvec"), cents))
-    val scored = cc.join(qc, Seq("cell"))
-      .select(col("qid"), col("id"),
-        Similarity.cosine(col("qvec"), col("vec")).as("score"))
-    val sys = Skew.saltedTopK(scored, Seq("qid"),
-      Seq(col("score").desc, col("id").asc), EvalK, saltBy = col("id"))
-    val gt = Similarity.bruteForceTopK(queries, corpus, k = EvalK)
-    Retrieval.rankingMetrics(sys, gt, EvalK).orderBy(col("qid"))
+    AnnHarness.audit(queries, corpus, AnnHarness.fixedCell(queries, corpus, cents))
   }
 
   /** Path-portable; the centroid unit-normalization is replayed with
@@ -843,7 +665,7 @@ object EvalQueries {
        |cents AS (SELECT list_transform(cs0,
        |    c2 -> list_transform(c2, x -> x / sqrt(list_dot_product(c2, c2)))) AS cs
        |  FROM cents0),
-       |${QueryCatalog.annGtScoredCte},
+       |${AnnHarness.gtScoredCte},
        |cc AS (
        |  SELECT id, vec,
        |    len(s) - list_position(list_reverse(s), list_max(s)) AS cell

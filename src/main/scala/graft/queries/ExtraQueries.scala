@@ -306,15 +306,8 @@ object ExtraQueries {
     * configuration (nProbe < k) is approximate by design; its recall is
     * asserted in IvfIndexSpec. */
   val annIvf: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2)
-    IvfIndex.topK(queries, corpus, centroids, k = 10, nProbe = 8)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.ivf(queries, corpus, nProbe = 8, seed = "km"))
   }
 
   /** Metadata-FILTERED vector search
@@ -327,35 +320,14 @@ object ExtraQueries {
     * the oracle replays with a WHERE clause; the production lever is
     * `nProbe`, same as `ann_ivf_pruned`. */
   val annFiltered: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"), col("label"))
+    val (queries, corpus) = AnnHarness.split(s, dir, "label")
     val centroids = IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2)
     val path = graft.Staging.dirFor("ann-filtered-ivf")
     IvfIndex.writeIndexed(corpus, centroids, path)
-    IvfIndex.topKIndexedFiltered(s, path, queries, centroids,
-        k = 10, nProbe = 8, predicate = col("label") % 3 === 0)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    AnnHarness.answer(IvfIndex.topKIndexedFiltered(s, path, queries, centroids,
+      k = AnnHarness.K, nProbe = 8, predicate = col("label") % 3 === 0))
   }
-  val annFilteredSql: String =
-    """WITH q AS (SELECT vec_id AS qid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
-      |           FROM embeddings WHERE vec_id < 5),
-      |c AS (SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      |      FROM embeddings WHERE vec_id >= 5 AND label % 3 = 0),
-      |scored AS (
-      |  SELECT qid, id,
-      |    list_dot_product(qvec, vec) /
-      |      (sqrt(list_dot_product(qvec, qvec)) * sqrt(list_dot_product(vec, vec))) AS raw,
-      |    row_number() OVER (PARTITION BY qid ORDER BY
-      |      list_dot_product(qvec, vec) /
-      |      (sqrt(list_dot_product(qvec, qvec)) * sqrt(list_dot_product(vec, vec))) DESC, id) AS rank
-      |  FROM c CROSS JOIN q)
-      |SELECT qid, id, round(raw, 4) AS score, rank
-      |FROM scored WHERE rank <= 10
-      |ORDER BY qid, rank""".stripMargin
+  val annFilteredSql: String = AnnHarness.exactSql(" AND label % 3 = 0")
 
   /** Funnel analysis — the batch twin of the streaming funnel in
     * [[graft.streaming.EventAggregates]]: users whose FIRST click is
@@ -763,7 +735,7 @@ object ExtraQueries {
     "q_sessionize" -> qSessionizeSql,
     "q_percentiles" -> qPercentilesSql,
     "q_pivot" -> qPivotSql,
-    "ann_ivf" -> QueryCatalog.annTopKSql,
+    "ann_ivf" -> AnnHarness.exactSql(),
     "ann_filtered" -> annFilteredSql,
     "q_embedding_stats" -> qEmbeddingStatsSql,
     "q_funnel" -> qFunnelSql,

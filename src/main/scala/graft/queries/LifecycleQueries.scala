@@ -23,19 +23,14 @@ object LifecycleQueries {
     * contract (cf. `text_bm25_indexed`), so the oracle is byte-for-byte
     * [[ServeQueries.annGraphSearchSql]] — the same hop-by-hop replay. */
   val annGraphSearchIndexed: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = graft.ops.NnDescent.knnGraph(corpus, k = 5, iters = 2,
-      sample = 10, seed = "nnd")
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    val g = AnnHarness.graph(corpus)
     val path = graft.Staging.dirFor("graph-serving-index")
     graft.ops.NnDescent.writeGraphIndex(g, path)
     graft.ops.NnDescent.searchGraphIndexed(s, path, corpus, queries,
-        k = ServeQueries.SearchK, entries = ServeQueries.SearchEntries,
-        beam = ServeQueries.SearchBeam, hops = ServeQueries.SearchHops,
-        seed = "nnd")
+        k = AnnHarness.K, entries = AnnHarness.SearchEntries,
+        beam = AnnHarness.SearchBeam, hops = AnnHarness.SearchHops,
+        seed = AnnHarness.GraphSeed)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -50,20 +45,14 @@ object LifecycleQueries {
     * is [[annGraphSearchFilteredSql]] byte for byte; GraphSearchSpec
     * additionally pins both prunings in the probe plan. */
   val annGraphSearchFilteredIndexed: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = graft.ops.NnDescent.knnGraph(corpus, k = 5, iters = 2,
-      sample = 10, seed = "nnd")
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    val g = AnnHarness.graph(corpus)
     val path = graft.Staging.dirFor("graph-filtered-index")
     graft.ops.NnDescent.writeGraphIndex(g, path)
     graft.ops.NnDescent.searchGraphIndexedFiltered(s, path, corpus,
-        queries, k = ServeQueries.SearchK,
-        entries = ServeQueries.SearchEntries,
-        beam = ServeQueries.SearchBeam, hops = ServeQueries.SearchHops,
-        predicate = col("id") % 3 === 0, seed = "nnd")
+        queries, k = AnnHarness.K, entries = AnnHarness.SearchEntries,
+        beam = AnnHarness.SearchBeam, hops = AnnHarness.SearchHops,
+        predicate = col("id") % 3 === 0, seed = AnnHarness.GraphSeed)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -408,28 +397,23 @@ object LifecycleQueries {
     * the same hop-by-hop replay with the predicate applied to the
     * final ranking only. */
   val annGraphSearchFiltered: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = graft.ops.NnDescent.knnGraph(corpus, k = 5, iters = 2,
-      sample = 10, seed = "nnd")
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    val g = AnnHarness.graph(corpus)
     graft.ops.NnDescent.searchGraphFiltered(g, corpus, queries,
-        k = ServeQueries.SearchK, entries = ServeQueries.SearchEntries,
-        beam = ServeQueries.SearchBeam, hops = ServeQueries.SearchHops,
-        predicate = col("id") % 3 === 0, seed = "nnd")
+        k = AnnHarness.K, entries = AnnHarness.SearchEntries,
+        beam = AnnHarness.SearchBeam, hops = AnnHarness.SearchHops,
+        predicate = col("id") % 3 === 0, seed = AnnHarness.GraphSeed)
       .orderBy(col("qid"), col("rank"))
   }
 
   val annGraphSearchFilteredSql: String =
-    s"""WITH ${CorpusMlQueries.knnGraphCtesBody(" WHERE vec_id >= 5")},
+    s"""WITH ${AnnHarness.corpusGraphCtes},
        |${ServeQueries.graphSearchCtes}
        |SELECT qid, id, score, rank FROM (
        |  SELECT qid, id, score,
        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank
-       |  FROM v${ServeQueries.SearchHops} WHERE id % 3 = 0)
-       |WHERE rank <= ${ServeQueries.SearchK}
+       |  FROM v${AnnHarness.SearchHops} WHERE id % 3 = 0)
+       |WHERE rank <= ${AnnHarness.K}
        |ORDER BY qid, rank""".stripMargin
 
   /** HYBRID retrieval ([[graft.ops.Hybrid.hybridTopK]], RRF — Cormack
@@ -441,13 +425,7 @@ object LifecycleQueries {
     * the full BM25 formula over the restricted corpus and the 4-dp
     * cosine ranking — and the fusion sum in the same term order. */
   val qHybridRrf: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val corpus = Tables.documents(s, dir)
-      .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
-        Seq("doc_id"))
-      .filter(col("doc_id") >= 5)
-    val qv = emb.filter(col("vec_id") === 3)
-      .select(col("embedding").as("qvec"))
+    val (corpus, qv) = AnnHarness.hybrid(s, dir)
     graft.ops.Hybrid.hybridTopK(corpus, "doc_id", "text", "embedding",
         Seq("spark", "window", "merge"), qv, k = 10, m = 20)
       .orderBy(col("rk"))
@@ -481,7 +459,7 @@ object LifecycleQueries {
        |  SELECT d.doc_id AS doc_id, d.text AS text,
        |    list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS vec
        |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-       |  WHERE d.doc_id >= 5),
+       |  WHERE d.doc_id >= ${AnnHarness.NQueries}),
        |toks AS (
        |  SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'), t -> t <> '')) AS token
        |  FROM corpus WHERE text IS NOT NULL),
@@ -503,7 +481,7 @@ object LifecycleQueries {
        |    FROM lexscored) WHERE rk <= $m),
        |qv AS (
        |  SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
-       |  FROM embeddings WHERE vec_id = 3),
+       |  FROM embeddings WHERE vec_id = ${AnnHarness.HybridQuery}),
        |vecranked AS (
        |  SELECT id, rk FROM (
        |    SELECT doc_id AS id,
@@ -526,11 +504,7 @@ object LifecycleQueries {
     * oracle is [[qHybridRrfSql]] byte-for-byte; HybridSpec floors the
     * recall of the pruned production probe). */
   val qHybridRrfIndexed: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val corpus = Tables.documents(s, dir)
-      .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
-        Seq("doc_id"))
-      .filter(col("doc_id") >= 5)
+    val (corpus, qv) = AnnHarness.hybrid(s, dir)
     val bm25Path = graft.Staging.dirFor("hybrid-bm25")
     graft.ops.TextIndex.writePostings(corpus, "doc_id", "text", bm25Path)
     val vecCorpus = corpus.select(col("doc_id").as("id"),
@@ -538,8 +512,6 @@ object LifecycleQueries {
     val cents = graft.ops.IvfIndex.train(vecCorpus, "id", "vec", k = 8)
     val annPath = graft.Staging.dirFor("hybrid-ann")
     graft.ops.IvfIndex.writeIndexed(vecCorpus, cents, annPath)
-    val qv = emb.filter(col("vec_id") === 3)
-      .select(col("embedding").as("qvec"))
     graft.ops.Hybrid.hybridTopKIndexed(s, bm25Path, annPath, cents,
         Seq("spark", "window", "merge"), qv, k = 10, m = 20, nProbe = 8)
       .orderBy(col("rk"))
@@ -557,13 +529,7 @@ object LifecycleQueries {
     * replay over the hybrid corpus slice) — and the three-term fusion
     * sum left to right. */
   val qHybridRrf3: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val corpus = Tables.documents(s, dir)
-      .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
-        Seq("doc_id"))
-      .filter(col("doc_id") >= 5)
-    val qv = emb.filter(col("vec_id") === 3)
-      .select(col("embedding").as("qvec"))
+    val (corpus, qv) = AnnHarness.hybrid(s, dir)
     val m = 20
     val lex = graft.ops.TextIndex.bm25TopK(corpus, "doc_id", "text",
         Seq("spark", "window", "merge"), m)

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Materialize, Tables}
 import graft.operators.RangeJoin
-import graft.ops.{Curation, Dedup, IvfIndex, IvfPq, PqIndex, Sampling, TextAnalysis}
+import graft.ops.{Curation, Dedup, Sampling, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -205,15 +205,8 @@ object PipelineQueries {
     * pruned configuration is approximate by design; its recall and the
     * codes-only-scan property are asserted in PqIndexSpec. */
   val annPq: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cb = PqIndex.train(corpus, "id", "vec", m = 8, k = 16, iters = 2)
-    PqIndex.topK(queries, corpus, cb, k = 10, shortlist = Int.MaxValue)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.pq(queries, corpus, shortlist = Int.MaxValue, seed = "km"))
   }
 
   /** The COMPOSED IVF-PQ index, oracle-gated the same way: the query
@@ -223,19 +216,9 @@ object PipelineQueries {
     * reproduce brute force exactly. The pruned two-lever configuration
     * is recall- and plan-gated in IvfPqSpec. */
   val annIvfPq: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2)
-    val cb = PqIndex.train(corpus, "id", "vec", m = 8, k = 16, iters = 2)
-    val path = graft.Staging.dirFor("ivfpq-q")
-    IvfPq.writeIndex(corpus, centroids, cb, path)
-    IvfPq.topK(s, path, queries, centroids, cb,
-        k = 10, nProbe = 8, shortlist = Int.MaxValue)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.ivfpq(s, queries, corpus,
+      nProbe = 8, shortlist = Int.MaxValue, seed = "km", staging = "ivfpq-q"))
   }
 
   /** PRODUCTION-pruned ANN configurations in the timed surface — and,
@@ -249,43 +232,23 @@ object PipelineQueries {
     * oracles (they prove the shortlist plumbing); these rows carry the
     * operator's real probe cost in the timing artifact. */
   val annIvfPruned: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2,
-      seed = graft.ops.SelectedSeeds.ivf)
-    IvfIndex.topK(queries, corpus, centroids, k = 10, nProbe = 2)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.ivf(queries, corpus,
+      nProbe = AnnHarness.PrunedProbe, seed = graft.ops.SelectedSeeds.ivf))
   }
 
   val annIvfPqPruned: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2,
-      seed = graft.ops.SelectedSeeds.ivfpq)
-    val cb = PqIndex.train(corpus, "id", "vec", m = 8, k = 16, iters = 2,
-      seed = graft.ops.SelectedSeeds.ivfpq)
-    val path = graft.Staging.dirFor("ivfpq-pruned-q")
-    IvfPq.writeIndex(corpus, centroids, cb, path)
-    IvfPq.topK(s, path, queries, centroids, cb,
-        k = 10, nProbe = 2, shortlist = 50)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.ivfpqPruned(s, queries, corpus, "ivfpq-pruned-q"))
   }
 
   /** [[annIvfPruned]]'s replay: coarse k-means + nProbe=2 cell probe +
     * exact cosine within the probed cells. */
   val annIvfPrunedSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
+    s"""WITH ${AnnHarness.qcCtes()},
        |${QuantizerReplay.ivfTrainCtes("c", seed = graft.ops.SelectedSeeds.ivf)},
        |${QuantizerReplay.ivfCcCte("c")},
-       |${QuantizerReplay.ivfQcellCte("q", nProbe = 2)}
+       |${QuantizerReplay.ivfQcellCte("q", nProbe = AnnHarness.PrunedProbe)}
        |SELECT qid, id, score, rank FROM (
        |  SELECT s.qid, s.id, round(s.raw, 4) AS score,
        |    row_number() OVER (PARTITION BY s.qid ORDER BY s.raw DESC, s.id) AS rank
@@ -304,19 +267,14 @@ object PipelineQueries {
   private[queries] def ivfPqPrunedChain: String =
     s"""${QuantizerReplay.ivfTrainCtes("c", seed = graft.ops.SelectedSeeds.ivfpq)},
        |${QuantizerReplay.ivfCcCte("c")},
-       |${QuantizerReplay.ivfQcellCte("q", nProbe = 2)},
+       |${QuantizerReplay.ivfQcellCte("q", nProbe = AnnHarness.PrunedProbe)},
        |${QuantizerReplay.pqTrainCtes("c", seed = graft.ops.SelectedSeeds.ivfpq)},
        |ivcand AS (
        |  SELECT qc.qid, cc.id FROM ivcc cc JOIN ivqcell qc ON qc.cell = cc.cell),
-       |${QuantizerReplay.pqProbeCtes("pqcent2", shortlist = 50,
+       |${QuantizerReplay.pqProbeCtes("pqcent2", shortlist = AnnHarness.PrunedShortlist,
             cand = Some("ivcand"))}""".stripMargin
 
-  val annIvfPqPrunedSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |$ivfPqPrunedChain
-       |SELECT qid, id, round(score, 4) AS score, rank
-       |FROM pqrank WHERE rank <= 10
-       |ORDER BY qid, rank""".stripMargin
+  val annIvfPqPrunedSql: String = AnnHarness.answerSql(ivfPqPrunedChain, "pqrank")
 
   /** [[annIvfPqResPruned]]'s replay: coarse chain, float-quantized
     * residuals, the L2 Lloyd chain, qc-term ADC probe. */
@@ -327,12 +285,7 @@ object PipelineQueries {
        |${QuantizerReplay.lloydL2Ctes(seed = graft.ops.SelectedSeeds.res)},
        |${QuantizerReplay.resProbeCtes("q", "rqcent2")}""".stripMargin
 
-  val annIvfPqResPrunedSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |$resPrunedChain
-       |SELECT qid, id, round(score, 4) AS score, rank
-       |FROM rqrank WHERE rank <= 10
-       |ORDER BY qid, rank""".stripMargin
+  val annIvfPqResPrunedSql: String = AnnHarness.answerSql(resPrunedChain, "rqrank")
 
   /** [[annIvfPqOpqPruned]]'s replay: the residual chain in the
     * fixture-rotated space (coarse cells, residuals and LUT read the
@@ -345,12 +298,7 @@ object PipelineQueries {
        |${QuantizerReplay.lloydL2Ctes(seed = graft.ops.SelectedSeeds.opq)},
        |${QuantizerReplay.resProbeCtes("rqv", "rqcent2")}""".stripMargin
 
-  val annIvfPqOpqPrunedSql: String =
-    s"""WITH ${QueryCatalog.annQcCtes},
-       |$opqPrunedChain
-       |SELECT qid, id, round(score, 4) AS score, rank
-       |FROM rqrank WHERE rank <= 10
-       |ORDER BY qid, rank""".stripMargin
+  val annIvfPqOpqPrunedSql: String = AnnHarness.answerSql(opqPrunedChain, "rqrank")
 
   /** Deterministic stratified mix sampling ([[graft.ops.Sampling]]):
     * per-language keep rates over the documents table, membership a
@@ -610,12 +558,8 @@ object PipelineQueries {
   val annPca: Q = (s, dir) => {
     val basis = graft.ops.Pca.loadBasis(s,
       s"${graft.Tables.fixturesDir}/pca_basis.parquet")
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    graft.ops.Pca.topKProjected(queries, corpus, basis, r = 16, k = 10)
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    graft.ops.Pca.topKProjected(queries, corpus, basis, r = 16, k = AnnHarness.K)
       .select(col("qid"), col("id"), round(col("d2"), 4).as("d2"), col("rank"))
       .orderBy(col("qid"), col("rank"))
   }
@@ -632,8 +576,8 @@ object PipelineQueries {
        |  SELECT vec_id,
        |    list(list_dot_product(vec, evec) - off ORDER BY component) AS pv
        |  FROM e CROSS JOIN b GROUP BY vec_id),
-       |q AS (SELECT vec_id AS qid, pv AS qp FROM p WHERE vec_id < 5),
-       |c AS (SELECT vec_id AS id, pv AS vp FROM p WHERE vec_id >= 5),
+       |q AS (SELECT vec_id AS qid, pv AS qp FROM p WHERE ${AnnHarness.QueriesWhere}),
+       |c AS (SELECT vec_id AS id, pv AS vp FROM p WHERE ${AnnHarness.CorpusWhere}),
        |scored AS (
        |  SELECT qid, id,
        |    list_dot_product(qp, qp) + list_dot_product(vp, vp)
@@ -659,16 +603,10 @@ object PipelineQueries {
   val annOpq: Q = (s, dir) => {
     val basis = graft.ops.Pca.loadBasis(s,
       s"${graft.Tables.fixturesDir}/pca_basis.parquet")
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
     val model = graft.ops.Opq.train(corpus, basis, m = 8, k = 16, iters = 2)
-    graft.ops.Opq.topK(queries, corpus, basis, model, k = 10,
-        shortlist = Int.MaxValue)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    AnnHarness.answer(graft.ops.Opq.topK(queries, corpus, basis, model, k = AnnHarness.K,
+      shortlist = Int.MaxValue))
   }
 
   /** NON-PARAMETRIC (iterative) OPQ ([[graft.ops.Opq.trainIterative]],
@@ -683,17 +621,11 @@ object PipelineQueries {
   val annOpqIter: Q = (s, dir) => {
     val basis = graft.ops.Pca.loadBasis(s,
       s"${graft.Tables.fixturesDir}/pca_basis.parquet")
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
     val model = graft.ops.Opq.trainIterative(corpus, basis,
       m = 8, k = 16, pqIters = 2, optIters = 2)
-    graft.ops.Opq.topKIterative(queries, corpus, model, k = 10,
-        shortlist = Int.MaxValue)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    AnnHarness.answer(graft.ops.Opq.topKIterative(queries, corpus, model, k = AnnHarness.K,
+      shortlist = Int.MaxValue))
   }
 
   /** Per-component variance of the projected coordinates over the whole
@@ -932,20 +864,9 @@ object PipelineQueries {
     * `ann_ivfpq` gate; the recall advantage over raw encoding at a
     * pruned shortlist is ResidualPqSpec's clustered-data property. */
   val annIvfPqRes: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2)
-    val cb = graft.ops.ResidualPq.trainCodebooks(corpus, centroids,
-      m = 8, k = 16, iters = 2)
-    val path = graft.Staging.dirFor("ivfpqres-q")
-    graft.ops.ResidualPq.writeIndex(corpus, centroids, cb, path)
-    graft.ops.ResidualPq.topK(s, path, queries, centroids, cb,
-        k = 10, nProbe = 8, shortlist = Int.MaxValue)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.residual(s, queries, corpus,
+      nProbe = 8, shortlist = Int.MaxValue, seed = "km", staging = "ivfpqres-q"))
   }
 
   /** The PRODUCTION-pruned residual configuration (nProbe=2,
@@ -955,21 +876,8 @@ object PipelineQueries {
     * ([[annIvfPqResPrunedSql]]); ResidualPqSpec pins residual ≥ raw
     * recall at this same pruned probe/code budget. */
   val annIvfPqResPruned: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2,
-      seed = graft.ops.SelectedSeeds.res)
-    val cb = graft.ops.ResidualPq.trainCodebooks(corpus, centroids,
-      m = 8, k = 16, iters = 2, seed = graft.ops.SelectedSeeds.res)
-    val path = graft.Staging.dirFor("ivfpqres-pruned-q")
-    graft.ops.ResidualPq.writeIndex(corpus, centroids, cb, path)
-    graft.ops.ResidualPq.topK(s, path, queries, centroids, cb,
-        k = 10, nProbe = 2, shortlist = 50)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.residualPruned(s, queries, corpus, "ivfpqres-pruned-q"))
   }
 
   /** The FULL FAISS production recipe "OPQ,IVF,PQ"
@@ -980,29 +888,9 @@ object PipelineQueries {
     * oracle is the shared exact-top-k SQL. The rotated-vs-plain
     * residual recall comparison is ResidualPqSpec's measured table. */
   val annIvfPqOpq: Q = (s, dir) => {
-    val basis = graft.ops.Pca.loadBasis(s,
-      s"${graft.Tables.fixturesDir}/pca_basis.parquet")
-    val order = graft.ops.Opq.allocate(
-      basis.sortBy(_.component).map(_.eigenvalue), 8)
-    val rot = graft.ops.Opq.rotation(basis, order)
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    // The rotated corpus feeds the coarse trainer's seed pass and every
-    // Lloyd iteration — materialize the rotation once per invocation.
-    val rotated = Materialize(corpus.select(col("id"),
-      graft.functions.functions.rotate_project(col("vec"), rot).as("vec")))
-    val centroids = IvfIndex.train(rotated, "id", "vec", k = 8, iters = 2)
-    val cb = graft.ops.ResidualPq.trainCodebooksRotated(corpus, rot,
-      centroids, m = 8, k = 16, iters = 2)
-    val path = graft.Staging.dirFor("ivfpqopq-q")
-    graft.ops.ResidualPq.writeIndexRotated(corpus, rot, centroids, cb, path)
-    graft.ops.ResidualPq.topKRotated(s, path, queries, rot, centroids, cb,
-        k = 10, nProbe = 8, shortlist = Int.MaxValue)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.opq(s, queries, corpus,
+      nProbe = 8, shortlist = Int.MaxValue, seed = "km", staging = "ivfpqopq-q"))
   }
 
   /** The rotated stack's PRODUCTION configuration (nProbe=2,
@@ -1011,30 +899,8 @@ object PipelineQueries {
     * the unrotated residual stack at this budget is ResidualPqSpec's
     * measured table (0.84 vs 0.66 on anisotropic clusters). */
   val annIvfPqOpqPruned: Q = (s, dir) => {
-    val basis = graft.ops.Pca.loadBasis(s,
-      s"${graft.Tables.fixturesDir}/pca_basis.parquet")
-    val order = graft.ops.Opq.allocate(
-      basis.sortBy(_.component).map(_.eigenvalue), 8)
-    val rot = graft.ops.Opq.rotation(basis, order)
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    // The rotated corpus feeds the coarse trainer's seed pass and every
-    // Lloyd iteration — materialize the rotation once per invocation.
-    val rotated = Materialize(corpus.select(col("id"),
-      graft.functions.functions.rotate_project(col("vec"), rot).as("vec")))
-    val centroids = IvfIndex.train(rotated, "id", "vec", k = 8, iters = 2,
-      seed = graft.ops.SelectedSeeds.opq)
-    val cb = graft.ops.ResidualPq.trainCodebooksRotated(corpus, rot,
-      centroids, m = 8, k = 16, iters = 2, seed = graft.ops.SelectedSeeds.opq)
-    val path = graft.Staging.dirFor("ivfpqopq-pruned-q")
-    graft.ops.ResidualPq.writeIndexRotated(corpus, rot, centroids, cb, path)
-    graft.ops.ResidualPq.topKRotated(s, path, queries, rot, centroids, cb,
-        k = 10, nProbe = 2, shortlist = 50)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.opqPruned(s, queries, corpus, "ivfpqopq-pruned-q"))
   }
 
   /** Multi-probe LSH ([[graft.ops.Similarity.lshTopKMultiProbe]], Lv
@@ -1047,15 +913,8 @@ object PipelineQueries {
     * replays it relationally (the eval audit's chain, cut at the
     * query's top-10). */
   val annLshMultiprobe: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    graft.ops.Similarity.lshTopKMultiProbe(queries, corpus, k = 10,
-        dim = 64, bitsPerTable = 4, tables = 8, nProbes = 3)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.lshMultiprobe(queries, corpus))
   }
 
   val all: Map[String, Q] = Map(
@@ -1096,20 +955,20 @@ object PipelineQueries {
     "text_tfidf" -> textTfidfSql,
     "q_mix_divergence" -> qMixDivergenceSql,
     "q_sample_quota" -> qSampleQuotaSql,
-    "ann_pq" -> QueryCatalog.annTopKSql,
-    "ann_ivfpq" -> QueryCatalog.annTopKSql,
+    "ann_pq" -> AnnHarness.exactSql(),
+    "ann_ivfpq" -> AnnHarness.exactSql(),
     "ann_ivf_pruned" -> annIvfPrunedSql,
     "ann_ivfpq_pruned" -> annIvfPqPrunedSql,
     "ann_ivfpq_res_pruned" -> annIvfPqResPrunedSql,
     "ann_ivfpq_opq_pruned" -> annIvfPqOpqPrunedSql,
     "ann_pca" -> annPcaSql,
-    "ann_opq" -> QueryCatalog.annTopKSql,
-    "ann_opq_iter" -> QueryCatalog.annTopKSql,
+    "ann_opq" -> AnnHarness.exactSql(),
+    "ann_opq_iter" -> AnnHarness.exactSql(),
     "q_pca_variance" -> qPcaVarianceSql,
     "q_pca_outlier" -> qPcaOutlierSql,
     "q_drift" -> qDriftSql,
     "dedup_jaccard_join" -> dedupJaccardJoinSql,
     "q_split_leakage" -> qSplitLeakageSql,
-    "ann_ivfpq_res" -> QueryCatalog.annTopKSql,
-    "ann_ivfpq_opq" -> QueryCatalog.annTopKSql)
+    "ann_ivfpq_res" -> AnnHarness.exactSql(),
+    "ann_ivfpq_opq" -> AnnHarness.exactSql())
 }

@@ -87,7 +87,7 @@ object QuantizerReplay {
     * lexicographic-(score, index) top-`nProbe`): `{pfx}qcell(qid,
     * cell)`. */
   def ivfQcellCte(qrel: String, pfx: String = "iv", iters: Int = 2,
-      nProbe: Int = 2): String =
+      nProbe: Int = AnnHarness.PrunedProbe): String =
     s"""${pfx}qcell AS MATERIALIZED (
        |  SELECT qid, cell FROM (
        |    SELECT qq.qid, u.cell,
@@ -271,7 +271,8 @@ object QuantizerReplay {
     * Ends in `{pfx}rank(qid, id, score, rank)`. */
   def resProbeCtes(qrel: String, cent: String, pfx: String = "rq",
       ivPfx: String = "iv", m: Int = 8, k: Int = 16, dsub: Int = 8,
-      iters: Int = 2, nProbe: Int = 2, shortlist: Int = 50): String = {
+      iters: Int = 2, nProbe: Int = AnnHarness.PrunedProbe,
+      shortlist: Int = AnnHarness.PrunedShortlist): String = {
     val adcTerms = (0 until m)
       .map(mi => s"lut[${mi * k} + codes[${mi + 1}] + 1]").mkString(" + ")
     s"""${pfx}codes AS MATERIALIZED (
@@ -315,8 +316,8 @@ object QuantizerReplay {
     * [[graft.functions.SqDotExpr]]'s in-order accumulation. Ends in
     * `{pfx}rank(qid, id, score, rank)`. */
   def sqProbeCtes(qrel: String = "q", pfx: String = "sq",
-      ivPfx: String = "iv", iters: Int = 2, nProbe: Int = 2,
-      shortlist: Int = 50, dim: Int = 64): String =
+      ivPfx: String = "iv", iters: Int = 2, nProbe: Int = AnnHarness.PrunedProbe,
+      shortlist: Int = AnnHarness.PrunedShortlist, dim: Int = 64): String =
     s"""${pfx}bounds AS MATERIALIZED (
        |  SELECT list(lo ORDER BY dim) AS lo, list(hi ORDER BY dim) AS hi FROM (
        |    SELECT dim, min(x) AS lo, max(x) AS hi FROM (

@@ -793,53 +793,16 @@ object QueryCatalog {
   /** Brute-force cosine top-k ANN (exact baseline): 5 query vectors,
     * k=10 neighbors each (self excluded). */
   val annTopK: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    Similarity.bruteForceTopK(queries, corpus, k = 10)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(Similarity.bruteForceTopK(queries, corpus, k = AnnHarness.K))
   }
-  /** Shared oracle CTEs: the standing queries (vec_id < 5) and corpus
-    * (vec_id ≥ 5) split — used by [[annTopKSql]], [[annLshSql]], and
-    * the retrieval-eval oracle, which composes both rankings. */
-  private[queries] val annQcCtes: String =
-    """q AS (SELECT vec_id AS qid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
-      |      FROM embeddings WHERE vec_id < 5),
-      |c AS (SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      |      FROM embeddings WHERE vec_id >= 5)""".stripMargin
 
-  /** Exact brute-force ranking chain over [[annQcCtes]], ending in
-    * `gtscored(qid, id, raw, rank)`. */
-  private[queries] val annGtScoredCte: String =
-    """gtscored AS (
-      |  SELECT qid, id,
-      |    list_dot_product(qvec, vec) /
-      |      (sqrt(list_dot_product(qvec, qvec)) * sqrt(list_dot_product(vec, vec))) AS raw,
-      |    row_number() OVER (PARTITION BY qid ORDER BY
-      |      list_dot_product(qvec, vec) /
-      |      (sqrt(list_dot_product(qvec, qvec)) * sqrt(list_dot_product(vec, vec))) DESC, id) AS rank
-      |  FROM c CROSS JOIN q)""".stripMargin
-
-  val annTopKSql: String =
-    s"""WITH $annQcCtes,
-       |$annGtScoredCte
-       |SELECT qid, id, round(raw, 4) AS score, rank
-       |FROM gtscored WHERE rank <= 10
-       |ORDER BY qid, rank""".stripMargin
-
-  /** DuckDB oracle for [[annLsh]]: the sign-random-projection planes are
-    * deterministic constants (seed 42), so the oracle SQL embeds the
-    * same 64 hyperplanes as list literals and recomputes bucketing →
-    * candidate join → exact cosine re-rank independently. A sign
-    * disagreement would need |v·p| inside double rounding error —
-    * checked green at both gate scales.
-    */
   /** The seed-42 LSH bucketing → candidate join → exact cosine re-rank
-    * chain over [[annQcCtes]], ending in `lshscored(qid, id, raw,
-    * rank)` — shared by [[annLshSql]] and the retrieval-eval oracle. */
+    * chain over [[AnnHarness.qcCtes]], ending in `lshscored(qid, id,
+    * raw, rank)` — shared by [[annLshSql]] and the retrieval-eval
+    * oracle. The planes are deterministic constants, so the oracle
+    * embeds the same 64 hyperplanes as list literals; a sign
+    * disagreement would need |v·p| inside double rounding error. */
   private[queries] val annLshScoredCtes: String = {
     val planes = Similarity.hyperplanes(dim = 64, numBits = 64, seed = 42L)
     val planesLit = planes.map(p => p.mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -872,27 +835,15 @@ object QueryCatalog {
        |  FROM cands JOIN q ON q.qid = cands.qid JOIN c ON c.id = cands.id)""".stripMargin
   }
 
-  val annLshSql: String =
-    s"""WITH $annQcCtes,
-       |$annLshScoredCtes
-       |SELECT qid, id, round(raw, 4) AS score, rank
-       |FROM lshscored WHERE rank <= 10
-       |ORDER BY qid, rank""".stripMargin
+  val annLshSql: String = AnnHarness.answerSql(annLshScoredCtes, "lshscored", "raw")
 
   /** LSH-bucketed ANN, oracle-gated (see [[annLshSql]]); recall vs the
-    * exact baseline across parameters is asserted in SimilaritySpec. */
+    * exact baseline across parameters is asserted in SimilaritySpec.
+    * Coarse buckets: tuned to this corpus's weak neighbor similarities
+    * (cos ≈ 0.3-0.5); see SimilaritySpec. */
   val annLsh: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    // Coarse buckets (4 bits × 16 tables): tuned to this corpus's weak
-    // neighbor similarities (cos ≈ 0.3-0.5); see SimilaritySpec.
-    Similarity.lshTopK(queries, corpus, k = 10, dim = 64,
-      bitsPerTable = 4, tables = 16)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.answer(AnnHarness.lsh(queries, corpus))
   }
 
   /** Per-class audit of the TRAINED classifier against the committed
@@ -1581,7 +1532,7 @@ object QueryCatalog {
     "dedup_embedding_cos" -> dedupEmbeddingCosSql,
     "dedup_semantic" -> dedupSemanticSql,
     "dedup_semantic_incremental" -> dedupSemanticIncrementalSql,
-    "ann_topk" -> annTopKSql,
+    "ann_topk" -> AnnHarness.exactSql(),
     "ann_lsh" -> annLshSql,
     "text_stats" -> textStatsSql,
     "text_fingerprint" -> textFingerprintSql,

@@ -15,18 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object ServeQueries {
   import QueryCatalog.Q
-
-  private[queries] val SearchK = 10
-  private[queries] val SearchEntries = 3
-  private[queries] val SearchBeam = 5
-  private[queries] val SearchHops = 3
-  // the cell-seeded walk's entry budget: 3 cells × 1 node = the SAME
-  // 3 entries per query the uniform configuration scores; the coarse
-  // quantizer is TRAINED (16 Voronoi cells at the IVF family's
-  // selected seed — the A/B showed random-projection cells lose)
-  private[queries] val SeededCells = 3
-  private[queries] val SeededPerCell = 1
-  private[queries] val SeededK = 16
+  import AnnHarness.{K, SearchBeam, SearchEntries, SearchHops,
+    SeededCells, SeededK, SeededPerCell}
 
   /** Graph-ANN SEARCH ([[graft.ops.NnDescent.searchGraph]]): build the
     * k-NN graph over the corpus slice, then answer the 5 standing query
@@ -40,16 +30,8 @@ object ServeQueries {
     * The exhaustive-expansion ≡ brute-force gate and the recall floor
     * vs the flat scan live in GraphSearchSpec. */
   val annGraphSearch: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = graft.ops.NnDescent.knnGraph(corpus, k = 5, iters = 2,
-      sample = 10, seed = "nnd")
-    graft.ops.NnDescent.searchGraph(g, corpus, queries, k = SearchK,
-        entries = SearchEntries, beam = SearchBeam, hops = SearchHops,
-        seed = "nnd")
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.walk(AnnHarness.graph(corpus), corpus, queries)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -96,7 +78,7 @@ object ServeQueries {
        |  SELECT nbr AS c, id AS v FROM g2),
        |qv AS MATERIALIZED (
        |  SELECT vec_id AS qid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
-       |  FROM embeddings WHERE vec_id < 5)""".stripMargin
+       |  FROM embeddings WHERE ${AnnHarness.QueriesWhere})""".stripMargin
 
   private def walkTailCtes(v0: String): String =
     s"""$v0,
@@ -152,12 +134,12 @@ object ServeQueries {
   }
 
   val annGraphSearchSql: String =
-    s"""WITH ${CorpusMlQueries.knnGraphCtesBody(" WHERE vec_id >= 5")},
+    s"""WITH ${AnnHarness.corpusGraphCtes},
        |$graphSearchCtes
        |SELECT qid, id, score, rank FROM (
        |  SELECT qid, id, score,
        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank
-       |  FROM v$SearchHops) WHERE rank <= $SearchK
+       |  FROM v$SearchHops) WHERE rank <= $K
        |ORDER BY qid, rank""".stripMargin
 
   /** CELL-SEEDED graph-ANN search
@@ -175,29 +157,18 @@ object ServeQueries {
     * oracle replays cell assignment, per-cell rank, the probe rule,
     * and every hop. */
   val annGraphSearchSeeded: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = graft.ops.NnDescent.knnGraph(corpus, k = 5, iters = 2,
-      sample = 10, seed = "nnd")
-    val cents = graft.ops.IvfIndex.train(corpus, "id", "vec",
-      k = SeededK, iters = 2, seed = graft.ops.SelectedSeeds.ivf)
-    graft.ops.NnDescent.searchGraphCellSeeded(g, corpus, queries,
-        k = SearchK, cents,
-        nCells = SeededCells, perCell = SeededPerCell,
-        beam = SearchBeam, hops = SearchHops)
+    val (queries, corpus) = AnnHarness.split(s, dir)
+    AnnHarness.seededWalk(AnnHarness.graph(corpus), corpus, queries)
       .orderBy(col("qid"), col("rank"))
   }
 
   val annGraphSearchSeededSql: String =
-    s"""WITH ${CorpusMlQueries.knnGraphCtesBody(" WHERE vec_id >= 5")},
+    s"""WITH ${AnnHarness.corpusGraphCtes},
        |$graphSearchSeededCtes
        |SELECT qid, id, score, rank FROM (
        |  SELECT qid, id, score,
        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank
-       |  FROM v$SearchHops) WHERE rank <= $SearchK
+       |  FROM v$SearchHops) WHERE rank <= $K
        |ORDER BY qid, rank""".stripMargin
 
   /** Shared calibration-fit CTE chain: score the committed labeled

@@ -3,10 +3,10 @@ package graft.tools
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import graft.GraftSession
-import graft.ops._
+import graft.{GraftSession, Materialize}
+import graft.ops.Similarity
+import graft.queries.AnnHarness
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Seed SELECTION for the trained-quantizer production configurations
   * — the round-18 "the audited number is seed luck" fix: because every
@@ -59,13 +59,9 @@ object SelectQuantizerSeeds {
       allRows: scala.collection.mutable.ArrayBuffer[(String, String, String, Double)]): Unit = {
     val sfName = sfDir.split('/').last
     println(s"\n== sweeping $sfName ==")
-    val emb = graft.Tables.embeddings(spark, sfDir)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val (queries, corpus) = AnnHarness.split(spark, sfDir)
 
-    val exact = Similarity.bruteForceTopK(queries, corpus, 10)
+    val exact = Similarity.bruteForceTopK(queries, corpus, AnnHarness.K)
       .select("qid", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(sys: DataFrame): Double = {
       val got = sys.select("qid", "id").collect()
@@ -73,48 +69,20 @@ object SelectQuantizerSeeds {
       math.round((exact intersect got).size.toDouble / exact.size * 10000) / 10000.0
     }
 
-    // the OPQ rotation is the committed fixture — fixed across seeds
-    // (only the k-means trainings are seeded)
-    val basis = Pca.loadBasis(spark, s"${graft.Tables.fixturesDir}/pca_basis.parquet")
-    val order = Opq.allocate(basis.sortBy(_.component).map(_.eigenvalue), 8)
-    val rot = Opq.rotation(basis, order)
-
-    val tmp = Files.createTempDirectory("seedsweep").toFile.getAbsolutePath
     val rows = scala.collection.mutable.ArrayBuffer[(String, String, Double)]()
-
-    for (seed <- CandidateSeeds) {
-      // each family at its production pruned configuration
-      val cents = IvfIndex.train(corpus, "id", "vec", k = 8, iters = 2, seed = seed)
-      rows += (("ivf", seed, recall(
-        IvfIndex.topK(queries, corpus, cents, k = 10, nProbe = 2))))
-
-      val pqCb = PqIndex.train(corpus, "id", "vec", m = 8, k = 16, iters = 2,
-        seed = seed)
-      rows += (("pq", seed, recall(
-        PqIndex.topK(queries, corpus, pqCb, k = 10, shortlist = 100))))
-
-      IvfPq.writeIndex(corpus, cents, pqCb, s"$tmp/ivfpq-$seed")
-      rows += (("ivfpq", seed, recall(
-        IvfPq.topK(spark, s"$tmp/ivfpq-$seed", queries, cents, pqCb,
-          k = 10, nProbe = 2, shortlist = 50))))
-
-      val resCb = ResidualPq.trainCodebooks(corpus, cents, m = 8, k = 16,
-        iters = 2, seed = seed)
-      ResidualPq.writeIndex(corpus, cents, resCb, s"$tmp/res-$seed")
-      rows += (("res", seed, recall(
-        ResidualPq.topK(spark, s"$tmp/res-$seed", queries, cents, resCb,
-          k = 10, nProbe = 2, shortlist = 50))))
-
-      val rotated = corpus.select(col("id"),
-        graft.functions.functions.rotate_project(col("vec"), rot).as("vec"))
-      val rCents = IvfIndex.train(rotated, "id", "vec", k = 8, iters = 2,
-        seed = seed)
-      val rCb = ResidualPq.trainCodebooksRotated(corpus, rot, rCents,
-        m = 8, k = 16, iters = 2, seed = seed)
-      ResidualPq.writeIndexRotated(corpus, rot, rCents, rCb, s"$tmp/opq-$seed")
-      rows += (("opq", seed, recall(
-        ResidualPq.topKRotated(spark, s"$tmp/opq-$seed", queries, rot,
-          rCents, rCb, k = 10, nProbe = 2, shortlist = 50))))
+    import AnnHarness.{PqShortlist, PrunedProbe, PrunedShortlist}
+    for (seed <- CandidateSeeds) Materialize.scope {
+      // each family at its production pruned configuration; the OPQ
+      // rotation is the committed fixture, fixed across seeds (only the
+      // k-means trainings are seeded)
+      rows += (("ivf", seed, recall(AnnHarness.ivf(queries, corpus, PrunedProbe, seed))))
+      rows += (("pq", seed, recall(AnnHarness.pq(queries, corpus, PqShortlist, seed))))
+      rows += (("ivfpq", seed, recall(AnnHarness.ivfpq(spark, queries, corpus,
+        PrunedProbe, PrunedShortlist, seed, "seedsweep-ivfpq"))))
+      rows += (("res", seed, recall(AnnHarness.residual(spark, queries, corpus,
+        PrunedProbe, PrunedShortlist, seed, "seedsweep-res"))))
+      rows += (("opq", seed, recall(AnnHarness.opq(spark, queries, corpus,
+        PrunedProbe, PrunedShortlist, seed, "seedsweep-opq"))))
 
       println(s"seed $seed: " + rows.takeRight(5)
         .map { case (f, _, r) => f"$f=$r%.3f" }.mkString(" "))

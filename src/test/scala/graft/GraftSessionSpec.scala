@@ -12,7 +12,8 @@ import org.apache.spark.SparkConf
   * releases, [[EpochStore]] the only code that lays out epochs, and
   * [[graft.streaming.GateProtocol.start]] the one way an epoch stream
   * starts, and [[RunMeter]] the only code that listens to or drains the
-  * listener bus. */
+  * listener bus. [[graft.queries.AnnHarness]] alone decides which
+  * vectors are the standing ANN queries. */
 class GraftSessionSpec extends SparkSpec {
 
   private val Main = "src/main/scala"
@@ -53,6 +54,11 @@ class GraftSessionSpec extends SparkSpec {
       Seq("RunMeter.scala", "bridge.scala"))
     assert(sites(Both: _*)("ByteMetrics" + "Listener", "Site" + "Listener", "grouped" + "Obj",
       "lean" + "Fit", "ListenerBus" + "Access").isEmpty)
+  }
+
+  test("only AnnHarness.scala splits the standing queries from the corpus or allocates the OPQ basis") {
+    val split = Seq("col(\"vec_id\") < 5", "col(\"vec_id\") >= 5", "vec_id < 5", "vec_id >= 5")
+    assert(sites(Main)(split :+ ("Opq.allocate" + "("): _*) == Seq("AnnHarness.scala"))
   }
 
   test("a launch conf's master and shuffle width are kept; unset, the local sizing applies") {

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.StorageAccess
 
 /** [[RunMeter]]: every job a catalog query starts carries that query's
-  * tag, the meter reports the jobs that did not, and a metered run
-  * leaves no blocks behind. */
+  * tag and is filed under a `graft.*` call site, the meter reports the
+  * jobs that did not carry the tag, and a metered run leaves no blocks
+  * behind. */
 class RunMeterSpec extends SparkSpec {
 
   test("two catalog queries: every job carries its query's tag, and no blocks are left") {
@@ -13,9 +14,12 @@ class RunMeterSpec extends SparkSpec {
     Seq("q1_agg", "corpus_pipeline_v5").foreach { name =>
       val run = RunMeter.query(spark, name, sf001)(RunMeter.noop)
       info(s"$name: ${run.jobs} jobs, ${run.tasksPerStage.values.sum} tasks, " +
-        s"${run.sites.size} call sites")
+        s"${run.sites.size} call sites: ${run.sites.map(s => s"${s.site}=${s.jobs}").mkString(" ")}")
       assert(run.jobs > 0 && run.untagged == 0, s"$name started ${run.untagged} untagged jobs")
       assert(run.sites.map(_.jobs).sum == run.jobs && run.sites.exists(_.wallMs > 0), name)
+      // a job outside any SQL execution is filed under its own call site:
+      // the parquet schema read of a table the query loads
+      assert(run.sites.exists(_.site.startsWith("Tables.load:")), s"$name: ${run.sites}")
       assert(run.tasksPerStage.nonEmpty && run.tasksPerStage.values.forall(_ > 0), name)
       assert(!sc.getJobTags().contains(RunMeter.tagOf(name)), s"$name's tag outlived its run")
       assert((StorageAccess.rddsWithBlocks() -- before).isEmpty, s"$name left blocks")
