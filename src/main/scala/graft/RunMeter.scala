@@ -63,13 +63,12 @@ object RunMeter {
     }
   }
 
-  /** The first `graft.*` frame outside the meter and [[Materialize]] in
-    * a call-site stack, as `Class.method:line`; lambdas are named by
-    * their enclosing method. */
+  /** The first `graft.*` frame outside [[Materialize]] in a call-site
+    * stack, as `Class.method:line`; lambdas are named by their enclosing
+    * method, so the meter's own action is filed as `RunMeter.noop:<line>`. */
   private def siteOf(callStack: String): String =
     callStack.linesIterator.map(_.trim)
-      .find(l => l.startsWith("graft.") && !l.startsWith("graft.Materialize") &&
-        !l.startsWith("graft.RunMeter"))
+      .find(l => l.startsWith("graft.") && !l.startsWith("graft.Materialize"))
       .map { frame =>
         val call = frame.takeWhile(_ != '(')
         val cls = call.take(call.lastIndexOf('.')).split('.').last.stripSuffix("$")

@@ -212,24 +212,17 @@ object Dedup {
     val rows = numHashes / bandsN
     // Stage-count is the cost driver here (the signature math itself is
     // ~1s warm at sf0.1): the whole LSH DAG is three jobs —
-    //   1. shingle hashes (persisted; reused by signatures + both verify
-    //      joins),
+    //   1. shingle hashes (persisted; reused by signatures, banding and
+    //      the doc sets),
     //   2. ONE aggregation that emits signatures AND band buckets: the
     //      per-band bucket is a hash of that band's `rows` minima
     //      projected straight out of the 64-min groupBy, so banding is a
     //      projection, not a second pass over signatures,
-    //   3. the banding self-join, candidate de-dup, and verification.
-    // Candidates ARE de-duplicated before verification: a pair colliding
-    // in k of `bands` bands appears k times, and the verify join
-    // multiplies every candidate row by both docs' shingle counts — on a
-    // duplicate-cluster-heavy corpus (the realistic shape at scale; see
-    // SCALING.md) near-dup pairs collide in nearly ALL bands, so the
-    // skipped distinct measured 11×+ super-linear at 10× data. The
-    // distinct itself shuffles only (id1,id2) long pairs — negligible
-    // next to the shingle join it divides by up to `bands`.
-    // (Verification stays duplicate-TOLERANT regardless: it counts
-    // DISTINCT shared shingles, so multiplicity can never change the
-    // Jaccard — correctness does not depend on the distinct.)
+    //   3. the banding self-join and the doc-set verification.
+    // A pair colliding in k of `bands` bands appears k times; the
+    // verifier scores each distinct pair once (on a duplicate-cluster-
+    // heavy corpus near-dup pairs collide in nearly ALL bands, so the
+    // distinct divides the verify input by up to `bands` — SCALING.md).
     // Shingles are carried as 64-bit hashes (codegen'd NGramHashesExpr),
     // never strings: the dedup shuffles move fixed-width longs no matter
     // how large documents are. The shingles and the band relation (both
@@ -242,8 +235,9 @@ object Dedup {
           col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
             col("x.id") < col("y.id"))
         .select(col("x.id").as("id1"), col("y.id").as("id2"))
-        .distinct()
-      Materialize(verifyPairs(sh, cands, threshold))
+      val sets = SetSimilarity.docSets(sh)
+      Materialize(SetSimilarity.verify(cands, sets, sets, SetSimilarity.Jaccard, threshold)
+        .select("id1", "id2", "jaccard"))
     }}
   }
 
@@ -266,51 +260,6 @@ object Dedup {
       .agg(aggs.head, aggs.tail: _*)
       .select(col("id"), posexplode(array(buckets: _*)))
       .toDF("id", "band", "bucket")
-  }
-
-  /** Duplicate-tolerant exact-Jaccard verification: candidates need NO
-    * pre-distinct — a pair colliding in k bands appears k times, but the
-    * intersection counts DISTINCT shared shingles, so multiplicity
-    * cannot change the score; a zero-overlap coincidence scores 0 and
-    * dies at the threshold filter.
-    */
-  def verifyPairs(sh: DataFrame, cands: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-    val inter = cands
-      .join(sh.toDF("id1", "s1"), Seq("id1"))
-      .join(sh.toDF("id2", "s2"), Seq("id2"))
-      .filter(col("s1") === col("s2")) // folded into the join condition
-      .groupBy("id1", "id2").agg(count_distinct(col("s1")).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("sz", "sz1"), Seq("id1"))
-      .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("sz", "sz2"), Seq("id2"))
-      .select(col("id1"), col("id2"),
-        (col("inter").cast("double") /
-          (col("sz1") + col("sz2") - col("inter")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** Exact Jaccard restricted to a given candidate-pair set. */
-  def jaccardForPairs(df: DataFrame, idCol: String, textCol: String,
-      pairs: DataFrame, n: Int = 3): DataFrame =
-    jaccardForShingles(shingles(df, idCol, textCol, n), pairs)
-
-  /** Exact Jaccard of candidate pairs against a prebuilt (id, shingle)
-    * relation (callers persist `sh` when it is referenced repeatedly). */
-  def jaccardForShingles(sh: DataFrame, pairs: DataFrame): DataFrame = {
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-    val inter = pairs
-      .join(sh.toDF("id1", "s1"), Seq("id1"))
-      .join(sh.toDF("id2", "s2"), Seq("id2"))
-      .filter(col("s1") === col("s2")) // folded into the join condition by Catalyst
-      .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
-    pairs
-      .join(inter, Seq("id1", "id2"), "left")
-      .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("sz", "sz1"), Seq("id1"))
-      .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("sz", "sz2"), Seq("id2"))
-      .select(col("id1"), col("id2"),
-        (coalesce(col("inter"), lit(0L)).cast("double") /
-          (col("sz1") + col("sz2") - coalesce(col("inter"), lit(0L))).cast("double")).as("jaccard"))
   }
 
   /** SimHash signatures as a DataFrame op — the scale path: exploded
@@ -454,9 +403,10 @@ object Dedup {
       threshold: Double = 0.5, maxIters: Int = 10): DataFrame = {
     val b = if (bands > 0) bands else lshParamsFor(threshold, numHashes)._1
     Materialize.cached(shingleHashes(df, idCol, textCol, n)) { sh =>
-      val banded = bandedBuckets(sh, numHashes, b)
-      val verified = verifyPairs(sh,
-          starEdges(banded).toDF("id1", "id2"), threshold)
+      val sets = SetSimilarity.docSets(sh)
+      val verified = SetSimilarity.verify(
+          starEdges(bandedBuckets(sh, numHashes, b)).toDF("id1", "id2"),
+          sets, sets, SetSimilarity.Jaccard, threshold)
         .select(col("id1").as("id"), col("id2").as("root"))
       componentsFromStar(df.select(col(idCol).as("id")).distinct(),
         verified, maxIters)
@@ -643,10 +593,8 @@ object Dedup {
     *     candidate ids: the tiny candidate-id set broadcasts into a
     *     semi-join, so corpus shingling touches |candidates| docs,
     *     not the corpus.
-    * `corpus` and `newDocs` must come from separate reads (fresh scans)
-    * so the verify union's children carry distinct attribute ids.
-    * A doc id present on BOTH sides is safe: the verify union tags each
-    * side with a source marker, so the two docs stay distinct documents
+    * A doc id present on BOTH sides is safe: each side's doc sets come
+    * from its own shingle relation, so the two stay distinct documents
     * — a corpus doc and a new doc that share an id and identical text
     * score a true 1.0 (the new doc IS a duplicate of the stored one),
     * never a merged-shingle-set artifact. Callers that re-deliver the
@@ -669,18 +617,9 @@ object Dedup {
       val corpusSh = shingleHashes(
         corpus.join(broadcast(candIds), Seq(idCol), "left_semi"),
         idCol, textCol, n)
-      // Tag ids with their side before the union: without this, an id
-      // appearing in both relations would pool both docs' shingles
-      // under one key, doubling verifyPairs' size terms and roughly
-      // halving every jaccard that id participates in.
-      def tagged(side: Int, c: Column) =
-        struct(lit(side).as("side"), c.as("v"))
-      val taggedSh = corpusSh.select(tagged(0, col("id")).as("id"), col("shingle"))
-        .union(newSh.select(tagged(1, col("id")).as("id"), col("shingle")))
-      val taggedCands = cands.select(
-        tagged(0, col("id1")).as("id1"), tagged(1, col("id2")).as("id2"))
-      Materialize(verifyPairs(taggedSh, taggedCands, threshold)
-        .select(col("id1.v").as("id1"), col("id2.v").as("id2"), col("jaccard")))
+      Materialize(SetSimilarity.verify(cands, SetSimilarity.docSets(corpusSh),
+          SetSimilarity.docSets(newSh), SetSimilarity.Jaccard, threshold)
+        .select("id1", "id2", "jaccard"))
     }}
   }
 
@@ -825,63 +764,19 @@ object Dedup {
         min_by(col("cos"), col("id1")).as("cos"))
   }
 
-  /** Cutover for the prefix-join verify stage's doc-set broadcast:
-    * below this estimated size the per-doc sorted shingle arrays ride a
-    * broadcast hint (candidate relation never shuffles — the right
-    * gate-scale plan); above it the hint is DROPPED and the verify is a
-    * plain id-keyed join (explicit hints are honored unconditionally up
-    * to the 8 GB hard limit, so an unconditional hint is a scale-killer
-    * at 100 TB). 256 MB keeps every bench corpus on the broadcast plan
-    * while cutting over ~30× before the hard limit. */
-  private[ops] val DocSetBroadcastMaxBytes: Long = 256L << 20
-
-  /** The doc-set relation with a broadcast hint iff its estimated
-    * broadcast size (8 B per shingle hash + ~16 B per-doc row overhead,
-    * read as two scalars off the persisted shingle relation) fits
-    * `maxBytes`. Exposed for PrefixJoinSpec's plan assertions. */
-  private[ops] def maybeBroadcastDocSets(sh: DataFrame, docSets: DataFrame,
-      maxBytes: Long): DataFrame = {
-    val st = sh.agg(count(lit(1)).as("n_sh"),
-      count_distinct(col("id")).as("n_docs")).head()
-    val estBytes = 8L * st.getLong(0) + 16L * st.getLong(1)
-    if (estBytes <= maxBytes) broadcast(docSets) else docSets
-  }
-
-  /** Per-document PREFIX of the global-rarity-ordered shingle set — the
-    * candidate-generation half of [[prefixJaccardJoin]]. A set of size
-    * `sz` keeps its `sz − ⌈t·sz⌉ + 1` rarest shingles (ties broken on
-    * the shingle value, so the global order is total and identical
-    * everywhere). Exposed for the spec's candidate-count accounting. */
-  private[ops] def rarityPrefix(sh: DataFrame, threshold: Double): DataFrame = {
-    val freq = sh.groupBy("shingle").agg(count(lit(1)).as("freq"))
-    // one id-partitioned window pass supplies BOTH the rarity rank and
-    // the set size (the size is the partition row count) — no separate
-    // sizes aggregation + join on the data-sized relation
-    val w = Window.partitionBy(col("id")).orderBy(col("freq"), col("shingle"))
-    val wAll = Window.partitionBy(col("id"))
-    sh.join(freq, Seq("shingle"))
-      .withColumn("pos", row_number().over(w))
-      .withColumn("sz", count(lit(1)).over(wAll))
-      .filter(col("pos") <= col("sz") - ceil(col("sz") * threshold) + 1)
-      .select(col("id"), col("shingle"), col("sz"), col("pos"))
-  }
-
   /** Exact Jaccard similarity join via PREFIX FILTERING (the
-    * AllPairs/PPJoin family — Chaudhuri et al. "A Primitive Operator
-    * for Similarity Joins", ICDE 2006; Xiao et al. "Efficient
-    * Similarity Joins for Near Duplicate Detection", WWW 2008): every
-    * pair with Jaccard ≥ `threshold`, with NO all-pairs blowup and NO
-    * lossy frequency cap — the sub-quadratic exact twin of
-    * [[jaccardPairs]] (whose shingle-frequency self-join is the
-    * documented deliberately-quadratic diagnostic).
+    * AllPairs/PPJoin family — see [[SetSimilarity]]): every pair with
+    * Jaccard ≥ `threshold`, with NO all-pairs blowup and NO lossy
+    * frequency cap — the sub-quadratic exact twin of [[jaccardPairs]]
+    * (whose shingle-frequency self-join is the documented
+    * deliberately-quadratic diagnostic).
     *
-    * Why it is exact: order all shingles by global rarity (document
-    * frequency asc, shingle asc — a total order). If two sets A, B have
-    * J(A,B) ≥ t, they must share at least one shingle among the
-    * `|·| − ⌈t·|·|⌉ + 1` rarest of EACH (else the overlap is too small
-    * to reach t) — so joining prefix-to-prefix loses nothing, and the
-    * exact verification pass restores precision. The size filter
-    * min(szA,szB) ≥ t·max(szA,szB) is the same kind of lossless prune.
+    * Why it is exact: if J(A,B) ≥ t, A and B share at least one
+    * shingle among the `|·| − ⌈t·|·|⌉ + 1` rarest of EACH (else the
+    * overlap is too small to reach t) — so joining prefix-to-prefix
+    * loses nothing, and the exact verification pass restores precision.
+    * The size and positional filters are the same kind of lossless
+    * prune.
     *
     * Scale shape: the candidate join runs on PREFIXES of the RAREST
     * shingles — precisely the shingles with the smallest join fan-out
@@ -894,8 +789,7 @@ object Dedup {
     * only; its cost tracks the true near-dup count, not n².
     */
   def prefixJaccardJoin(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 3,
-      maxBroadcastDocSetBytes: Long = DocSetBroadcastMaxBytes): DataFrame = {
+      threshold: Double, n: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     // 8-byte shingle HASHES, not strings: every downstream pass (the
@@ -907,57 +801,12 @@ object Dedup {
     // rarity order becomes (freq, hash) — a different but equally
     // total global order, which is all completeness needs.
     Materialize.cached(shingleHashes(df, idCol, textCol, n)) { sh =>
-      val prefix = rarityPrefix(sh, threshold)
-      // PPJoin's POSITIONAL filter (Xiao et al. WWW'08 §3.2), lossless:
-      // a pair sharing the prefix shingle at ranks (posA, posB) has at
-      // most 1 + min(szA−posA, szB−posB) total overlap (everything
-      // before the shared shingle in either rarity order is disjoint —
-      // else an earlier shared shingle would exist), and J ≥ t needs
-      // overlap ≥ t/(1+t)·(szA+szB); candidates that cannot reach the
-      // bound never enter verification.
-      val bestOverlap = lit(1) +
-        least(col("a.sz") - col("a.pos"), col("b.sz") - col("b.pos"))
-      val needed = lit(threshold / (1.0 + threshold)) * (col("a.sz") + col("b.sz"))
-      val cands = prefix.as("a").join(prefix.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id") &&
-            least(col("a.sz"), col("b.sz")) >=
-              lit(threshold) * greatest(col("a.sz"), col("b.sz")) &&
-            bestOverlap >= needed)
-        .select(col("a.id").as("id1"), col("b.id").as("id2"))
-        .distinct()
-      // Verification via per-document shingle ARRAYS, not an exploded
-      // (pair × shingle) join: the explode form shuffles |cands|·sz
-      // narrow rows (measured 3·10⁸ rows and 219 s at sf1, where
-      // GenScale's ~10-doc near-dup clusters put 6.6M pairs through
-      // verification); here each candidate costs one O(sz) native
-      // array_intersect and the doc-set relation (one ~sz·8-byte array
-      // per doc) joins by id — broadcast-sized locally, an id-keyed
-      // shuffle of |docs| rows at scale, never |cands|·sz.
-      val docSets = sh.groupBy("id")
-        .agg(sort_array(collect_list(col("shingle"))).as("set"),
-          count(lit(1)).as("sz"))
-      // the doc-set relation is |docs|-sized (~sz·8 B per row) — at
-      // local/bench scale it broadcasts (the candidate relation never
-      // shuffles), but the hint is SIZE-GATED: an explicit broadcast
-      // hint is honored unconditionally (8 GB hard limit, driver OOM
-      // pressure long before), so past the cutover the hint is dropped
-      // and the verify runs as a plain id-keyed join — the correct
-      // cluster plan, and AQE may still choose broadcast if the
-      // runtime stats allow it ([[QuantizerRelation.CutoverCells]]'s
-      // two-form stance). The estimate reads two scalars off the
-      // persisted shingle relation; results are plan-independent.
-      val bSets = maybeBroadcastDocSets(sh, docSets, maxBroadcastDocSetBytes)
-      val inter = cands
-        .join(bSets.select(col("id").as("id1"), col("set").as("setA"),
-          col("sz").as("sz1")), Seq("id1"))
-        .join(bSets.select(col("id").as("id2"), col("set").as("setB"),
-          col("sz").as("sz2")), Seq("id2"))
-        .withColumn("inter", size(array_intersect(col("setA"), col("setB"))))
-      Materialize(inter
-        .select(col("id1"), col("id2"),
-          (col("inter").cast("double") /
-            (col("sz1") + col("sz2") - col("inter")).cast("double")).as("jaccard"))
-        .filter(col("jaccard") >= threshold))
+      val prefix = SetSimilarity.prefix(
+        SetSimilarity.ranked(sh, SetSimilarity.frequency(sh)), threshold)
+      val cands = SetSimilarity.candidates(prefix, prefix,
+        col("a.id") < col("b.id") && SetSimilarity.jaccardBound(threshold))
+      Materialize(SetSimilarity.verifyWithin(cands, sh, SetSimilarity.Jaccard, threshold)
+        .select("id1", "id2", "jaccard"))
     }
   }
 
@@ -973,7 +822,7 @@ object Dedup {
     *
     * Exactness: if C(A→B) ≥ t then |A∩B| ≥ ⌈t·|A|⌉, so ANY
     * |A| − ⌈t·|A|⌉ + 1 elements of A include at least one shared
-    * shingle — A's [[rarityPrefix]] (the same lossless prefix as the
+    * shingle — A's rarity prefix (the same lossless prefix as the
     * Jaccard join) must hit B. Because containment puts NO lower bound
     * on where the shared shingle sits in B's order, the index side is
     * B's FULL shingle relation (the inverted-index shape the BM25
@@ -985,38 +834,22 @@ object Dedup {
     * globally RAREST shingles by construction (a stop-shingle can only
     * enter the prefix of a document too small to have rare material,
     * where completeness requires it). Verification touches candidate
-    * pairs only; the doc-set relation joins by id — broadcast-hinted
-    * below [[DocSetBroadcastMaxBytes]], plain id-keyed join above (the
-    * same size-gated cutover as [[prefixJaccardJoin]]).
+    * pairs only, with the same size-gated doc-set broadcast as
+    * [[prefixJaccardJoin]].
     *
     * Output carries the pair's set sizes (id1, id2, containment, sz1,
     * sz2) so [[containmentCollapse]]'s dominance rule reuses the single
     * shingle pass instead of re-tokenizing the corpus. */
   def prefixContainmentJoin(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 3,
-      maxBroadcastDocSetBytes: Long = DocSetBroadcastMaxBytes): DataFrame = {
+      threshold: Double, n: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     Materialize.cached(shingleHashes(df, idCol, textCol, n)) { sh =>
-      val prefix = rarityPrefix(sh, threshold)
-      val cands = prefix.as("a").join(sh.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.id") =!= col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"))
-        .distinct()
-      val docSets = sh.groupBy("id")
-        .agg(sort_array(collect_list(col("shingle"))).as("set"),
-          count(lit(1)).as("sz"))
-      val bSets = maybeBroadcastDocSets(sh, docSets, maxBroadcastDocSetBytes)
-      Materialize(cands
-        .join(bSets.select(col("id").as("id1"),
-          col("set").as("setA"), col("sz").as("sz1")), Seq("id1"))
-        .join(bSets.select(col("id").as("id2"),
-          col("set").as("setB"), col("sz").as("sz2")), Seq("id2"))
-        .withColumn("inter", size(array_intersect(col("setA"), col("setB"))))
-        .select(col("id1"), col("id2"),
-          (col("inter").cast("double") / col("sz1").cast("double"))
-            .as("containment"), col("sz1"), col("sz2"))
-        .filter(col("containment") >= threshold))
+      val prefix = SetSimilarity.prefix(
+        SetSimilarity.ranked(sh, SetSimilarity.frequency(sh)), threshold)
+      val cands = SetSimilarity.candidates(prefix, sh, col("a.id") =!= col("b.id"))
+      Materialize(SetSimilarity.verifyWithin(cands, sh, SetSimilarity.Containment,
+        threshold))
     }
   }
 
@@ -1074,35 +907,19 @@ object Dedup {
       s"threshold must be in (0, 1], got $threshold")
     Materialize.cached(shingleHashes(newDocs, idCol, textCol, n)) { newSh =>
       val batchShingles = newSh.select("shingle").distinct()
-      val freq = index.join(batchShingles, Seq("shingle"), "left_semi")
-        .groupBy("shingle").agg(count(lit(1)).as("freq"))
-      val w = Window.partitionBy(col("id")).orderBy(col("freq"), col("shingle"))
-      val wAll = Window.partitionBy(col("id"))
-      val prefix = newSh.join(freq, Seq("shingle"), "left")
-        .withColumn("freq", coalesce(col("freq"), lit(0L)))
-        .withColumn("pos", row_number().over(w))
-        .withColumn("sz", count(lit(1)).over(wAll))
-        .filter(col("pos") <= col("sz") - ceil(col("sz") * threshold) + 1)
-        .select(col("id"), col("shingle"))
-      val cands = prefix.select(col("id").as("id1"), col("shingle"))
-        .join(index.select(col("id").as("id2"), col("shingle")), Seq("shingle"))
-        .select("id1", "id2").distinct()
-      val newSets = newSh.groupBy("id")
-        .agg(sort_array(collect_list(col("shingle"))).as("setA"),
-          count(lit(1)).as("sz1"))
+      val freq = SetSimilarity.frequency(
+        index.join(batchShingles, Seq("shingle"), "left_semi"))
+      val prefix = SetSimilarity.prefix(
+        SetSimilarity.rankedAgainst(newSh, freq), threshold)
+      // distinct here, not only in the verifier: the candidate-id prune
+      // reads the same distinct pairs
+      val cands = SetSimilarity.candidates(prefix, index, lit(true)).distinct()
       val candIds = cands.select(col("id2").as("id")).distinct()
-      val corpSets = index
-        .join(broadcast(candIds), Seq("id"), "left_semi")
-        .groupBy("id")
-        .agg(sort_array(collect_list(col("shingle"))).as("setB"))
-      Materialize(cands
-        .join(newSets.withColumnRenamed("id", "id1"), Seq("id1"))
-        .join(corpSets.withColumnRenamed("id", "id2"), Seq("id2"))
-        .withColumn("inter", size(array_intersect(col("setA"), col("setB"))))
-        .select(col("id1"), col("id2"),
-          (col("inter").cast("double") / col("sz1").cast("double"))
-            .as("containment"))
-        .filter(col("containment") >= threshold))
+      val corpSets = SetSimilarity.docSets(
+        index.join(broadcast(candIds), Seq("id"), "left_semi"))
+      Materialize(SetSimilarity.verify(cands, SetSimilarity.docSets(newSh),
+          corpSets, SetSimilarity.Containment, threshold)
+        .select("id1", "id2", "containment"))
     }
   }
 
@@ -1122,14 +939,8 @@ object Dedup {
   def writeJaccardIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, n: Int = 3): Unit = {
     Materialize.cached(shingleHashes(corpus, idCol, textCol, n)) { sh =>
-      val freq = sh.groupBy("shingle").agg(count(lit(1)).as("freq"))
-      val w = Window.partitionBy(col("id")).orderBy(col("freq"), col("shingle"))
-      val wAll = Window.partitionBy(col("id"))
-      sh.join(freq, Seq("shingle"))
-        .withColumn("pos", row_number().over(w))
-        .withColumn("sz", count(lit(1)).over(wAll))
-        .select(col("id"), col("shingle"), col("sz"), col("pos"))
-        .write.mode("overwrite").parquet(s"$path/postings")
+      val freq = SetSimilarity.frequency(sh)
+      SetSimilarity.ranked(sh, freq).write.mode("overwrite").parquet(s"$path/postings")
       freq.write.mode("overwrite").parquet(s"$path/freq")
     }
   }
@@ -1166,44 +977,16 @@ object Dedup {
     val freq = spark.read.parquet(s"$indexPath/freq")
     Materialize.cached(shingleHashes(newDocs, idCol, textCol, n)) { newSh =>
       val batchShingles = newSh.select("shingle").distinct()
-      val frozenFreq = freq.join(batchShingles, Seq("shingle"), "left_semi")
-      val w = Window.partitionBy(col("id")).orderBy(col("freq"), col("shingle"))
-      val wAll = Window.partitionBy(col("id"))
-      val bPrefix = newSh.join(frozenFreq, Seq("shingle"), "left")
-        .withColumn("freq", coalesce(col("freq"), lit(0L)))
-        .withColumn("pos", row_number().over(w))
-        .withColumn("sz", count(lit(1)).over(wAll))
-        .filter(col("pos") <= col("sz") - ceil(col("sz") * threshold) + 1)
-        .select(col("id"), col("shingle"), col("sz"), col("pos"))
-      val cPrefix = postings
-        .filter(col("pos") <= col("sz") - ceil(col("sz") * threshold) + 1)
-      val bestOverlap = lit(1) +
-        least(col("a.sz") - col("a.pos"), col("b.sz") - col("b.pos"))
-      val needed = lit(threshold / (1.0 + threshold)) * (col("a.sz") + col("b.sz"))
-      val cands = cPrefix.as("a").join(bPrefix.as("b"),
-          col("a.shingle") === col("b.shingle") &&
-            least(col("a.sz"), col("b.sz")) >=
-              lit(threshold) * greatest(col("a.sz"), col("b.sz")) &&
-            bestOverlap >= needed)
-        .select(col("a.id").as("id1"), col("b.id").as("id2"))
-        .distinct()
+      val bPrefix = SetSimilarity.prefix(SetSimilarity.rankedAgainst(newSh,
+        freq.join(batchShingles, Seq("shingle"), "left_semi")), threshold)
+      val cands = SetSimilarity.candidates(SetSimilarity.prefix(postings, threshold),
+        bPrefix, SetSimilarity.jaccardBound(threshold)).distinct() // shared with the prune
       val candIds = cands.select(col("id1").as("id")).distinct()
-      val cSets = postings.join(broadcast(candIds), Seq("id"), "left_semi")
-        .groupBy("id")
-        .agg(sort_array(collect_list(col("shingle"))).as("setA"),
-          count(lit(1)).as("sz1"))
-      val bSets = newSh.groupBy("id")
-        .agg(sort_array(collect_list(col("shingle"))).as("setB"),
-          count(lit(1)).as("sz2"))
-      Materialize(cands
-        .join(cSets.withColumnRenamed("id", "id1"), Seq("id1"))
-        .join(bSets.withColumnRenamed("id", "id2"), Seq("id2"))
-        .withColumn("inter", size(array_intersect(col("setA"), col("setB"))))
-        .select(col("id1"), col("id2"),
-          (col("inter").cast("double") /
-            (col("sz1") + col("sz2") - col("inter")).cast("double"))
-            .as("jaccard"))
-        .filter(col("jaccard") >= threshold))
+      val cSets = SetSimilarity.docSets(
+        postings.join(broadcast(candIds), Seq("id"), "left_semi"))
+      Materialize(SetSimilarity.verify(cands, cSets, SetSimilarity.docSets(newSh),
+          SetSimilarity.Jaccard, threshold)
+        .select("id1", "id2", "jaccard"))
     }
   }
 

@@ -100,12 +100,9 @@ object IngestGate {
     // CRITICAL on both reads: exclude THIS epoch's own partition — a
     // foreachBatch retry re-delivers an epoch whose output already
     // committed, and probing a doc against its own prior copy forms a
-    // self-pair ((x,x), union-doubled sizes → jaccard exactly 1/3)
-    // that at threshold ≤ 1/3 would self-reject the whole epoch and
-    // then OVERWRITE its committed output with an empty directory.
-    // Excluding batch=batchId also keeps newVsCorpusPairs' disjoint-id
-    // contract: the replayed docs exist on the corpus side only in the
-    // excluded partition.
+    // self-pair ((x,x), jaccard 1.0) that would self-reject the whole
+    // epoch and then OVERWRITE its committed output with an empty
+    // directory.
     val survivors = EpochStore.prior(spark, indexDir, batchId) match {
       case Some(indexRaw) =>
         val index = indexRaw.select("id", "band", "bucket")

@@ -13,7 +13,8 @@ import org.apache.spark.SparkConf
   * [[graft.streaming.GateProtocol.start]] the one way an epoch stream
   * starts, and [[RunMeter]] the only code that listens to or drains the
   * listener bus. [[graft.queries.AnnHarness]] alone decides which
-  * vectors are the standing ANN queries. */
+  * vectors are the standing ANN queries, and [[graft.ops.SetSimilarity]]
+  * alone builds, cuts and scores shingle sets. */
 class GraftSessionSpec extends SparkSpec {
 
   private val Main = "src/main/scala"
@@ -59,6 +60,13 @@ class GraftSessionSpec extends SparkSpec {
   test("only AnnHarness.scala splits the standing queries from the corpus or allocates the OPQ basis") {
     val split = Seq("col(\"vec_id\") < 5", "col(\"vec_id\") >= 5", "vec_id < 5", "vec_id >= 5")
     assert(sites(Main)(split :+ ("Opq.allocate" + "("): _*) == Seq("AnnHarness.scala"))
+  }
+
+  test("only SetSimilarity.scala builds, cuts or intersects shingle sets; the exploded and unused verifiers are gone") {
+    val setOps = Seq("array_intersect" + "(", "collect_list(col(\"shingle\")" + ")",
+      "ceil(col(\"sz\")")
+    assert(sites(Main)(setOps: _*) == Seq("SetSimilarity.scala"))
+    assert(sites(Both: _*)("verify" + "Pairs", "jaccardFor" + "Shingles", "jaccardFor" + "Pairs").isEmpty)
   }
 
   test("a launch conf's master and shuffle width are kept; unset, the local sizing applies") {

@@ -1,12 +1,17 @@
 package graft
 
 import org.apache.spark.StorageAccess
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.{Seconds, Span}
 
 /** [[RunMeter]]: every job a catalog query starts carries that query's
   * tag and is filed under a `graft.*` call site, the meter reports the
   * jobs that did not carry the tag, and a metered run leaves no blocks
-  * behind. */
-class RunMeterSpec extends SparkSpec {
+  * behind (releases are asynchronous, so that check polls). */
+class RunMeterSpec extends SparkSpec with Eventually {
+
+  override implicit val patienceConfig: PatienceConfig =
+    PatienceConfig(timeout = Span(20, Seconds))
 
   test("two catalog queries: every job carries its query's tag, and no blocks are left") {
     val sc = spark.sparkContext
@@ -17,12 +22,15 @@ class RunMeterSpec extends SparkSpec {
         s"${run.sites.size} call sites: ${run.sites.map(s => s"${s.site}=${s.jobs}").mkString(" ")}")
       assert(run.jobs > 0 && run.untagged == 0, s"$name started ${run.untagged} untagged jobs")
       assert(run.sites.map(_.jobs).sum == run.jobs && run.sites.exists(_.wallMs > 0), name)
+      // the final noop write is the meter's own action, filed under it
+      assert(!run.sites.exists(_.site == "(outside graft)"), s"$name: ${run.sites}")
+      assert(run.sites.exists(_.site.startsWith("RunMeter.noop:")), s"$name: ${run.sites}")
       // a job outside any SQL execution is filed under its own call site:
       // the parquet schema read of a table the query loads
       assert(run.sites.exists(_.site.startsWith("Tables.load:")), s"$name: ${run.sites}")
       assert(run.tasksPerStage.nonEmpty && run.tasksPerStage.values.forall(_ > 0), name)
       assert(!sc.getJobTags().contains(RunMeter.tagOf(name)), s"$name's tag outlived its run")
-      assert((StorageAccess.rddsWithBlocks() -- before).isEmpty, s"$name left blocks")
+      eventually(assert((StorageAccess.rddsWithBlocks() -- before).isEmpty, s"$name left blocks"))
     }
   }
 

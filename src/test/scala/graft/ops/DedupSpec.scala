@@ -65,6 +65,24 @@ class DedupSpec extends SparkSpec {
     assert(lsh == exact, s"LSH recall/precision vs oracle (lsh=$lsh exact=$exact)")
   }
 
+  test("the verifier scores each distinct candidate pair once, repeats and star edges included") {
+    // a pair colliding in several bands arrives once per band; a star
+    // edge (member, root) arrives root-last, once per band it shares
+    val cands = (Seq.fill(3)((0L, 100L)) ++ Seq.fill(2)((1L, 101L)) ++
+      Seq.fill(4)((102L, 2L)) ++ Seq.fill(2)((3L, 7L))).toDF("id1", "id2")
+    val sh = Dedup.shingleHashes(corpus, "doc_id", "text", 3)
+    val sets = SetSimilarity.docSets(sh)
+    val got = SetSimilarity.verify(cands, sets, sets, SetSimilarity.Jaccard, 0.5)
+      .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect()
+    val brute = Dedup.jaccardPairs(corpus, "doc_id", "text")
+      .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect()
+      .map { case (a, b, j) => (a, b) -> j }.toMap
+    val unordered = got.map { case (a, b, j) => (math.min(a, b), math.max(a, b)) -> j }
+    assert(unordered.length == 3 && unordered.toMap.keySet ==
+      Set((0L, 100L), (1L, 101L), (2L, 102L)), s"one row per distinct pair: ${got.toSeq}")
+    unordered.foreach { case (p, j) => assert(j == brute(p), s"$p: $j vs ${brute(p)}") }
+  }
+
   test("minhash signature similarity approximates jaccard") {
     val sigs = Dedup.minhashSignatures(corpus, "doc_id", "text").collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Seq[Long]]("sig")).toMap

@@ -34,6 +34,9 @@ class PrefixJoinSpec extends SparkSpec {
     docs ++ Seq(nearDup, nearDupTwin, exactDup)
   }
 
+  private def rarityPrefix(sh: org.apache.spark.sql.DataFrame, t: Double) =
+    SetSimilarity.prefix(SetSimilarity.ranked(sh, SetSimilarity.frequency(sh)), t)
+
   test("prefix join equals the brute-force join at every threshold tried") {
     val df = corpus.toDF("doc_id", "text")
     Seq(0.5, 0.6, 0.8).foreach { t =>
@@ -59,7 +62,7 @@ class PrefixJoinSpec extends SparkSpec {
   test("prefixes prune the candidate space the boilerplate would explode") {
     val df = corpus.toDF("doc_id", "text")
     val sh = Dedup.shingles(df, "doc_id", "text", 3)
-    val prefix = Dedup.rarityPrefix(sh, 0.6)
+    val prefix = rarityPrefix(sh, 0.6)
     def pairCount(rel: org.apache.spark.sql.DataFrame): Long =
       rel.as("a").join(rel.as("b"),
           col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
@@ -76,16 +79,14 @@ class PrefixJoinSpec extends SparkSpec {
   test("prefix relation keeps exactly sz - ceil(t*sz) + 1 rarest shingles") {
     val df = Seq((1L, "a b c d e f g h i j k l")).toDF("doc_id", "text")
     val sh = Dedup.shingles(df, "doc_id", "text", 3) // 10 distinct 3-grams
-    val n = Dedup.rarityPrefix(sh, 0.6).count()
+    val n = rarityPrefix(sh, 0.6).count()
     assert(n == 10 - 6 + 1, s"expected 5 prefix shingles, got $n")
   }
 
   test("verify-stage doc-set broadcast is SIZE-GATED: hint below the cutover, plain join above") {
     val df = corpus.toDF("doc_id", "text")
     val sh = Dedup.shingleHashes(df, "doc_id", "text", 3)
-    val docSets = sh.groupBy("id")
-      .agg(sort_array(collect_list(col("shingle"))).as("set"),
-        count(lit(1)).as("sz"))
+    val docSets = SetSimilarity.docSets(sh)
     val cands = sh.select(col("id").as("id1")).distinct()
       .crossJoin(sh.select(col("id").as("id2")).distinct())
       .filter(col("id1") < col("id2"))
@@ -100,7 +101,7 @@ class PrefixJoinSpec extends SparkSpec {
     try {
       def verifyPlan(maxBytes: Long): String = {
         val joined = cands.join(
-          Dedup.maybeBroadcastDocSets(sh, docSets, maxBytes)
+          SetSimilarity.maybeBroadcastDocSets(sh, docSets, maxBytes)
             .select(col("id").as("id1"), col("set").as("setA")), Seq("id1"))
         joined.collect() // finalize AQE before reading the plan
         joined.queryExecution.executedPlan.toString
@@ -112,13 +113,17 @@ class PrefixJoinSpec extends SparkSpec {
     } finally saved.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
-    // the gate is plan-only: both paths produce identical pair relations
-    def pairs(maxBytes: Long) =
-      Dedup.prefixJaccardJoin(df, "doc_id", "text", 0.6,
-          maxBroadcastDocSetBytes = maxBytes)
+    // the gate is plan-only: both paths produce identical pair relations,
+    // the prefix join's
+    def pairs(maxBytes: Long) = {
+      val sets = SetSimilarity.maybeBroadcastDocSets(sh, docSets, maxBytes)
+      SetSimilarity.verify(cands, sets, sets, SetSimilarity.Jaccard, 0.6)
         .select("id1", "id2", "jaccard").as[(Long, Long, Double)]
         .collect().toSet
-    assert(pairs(Long.MaxValue) == pairs(0L))
+    }
+    val joined = Dedup.prefixJaccardJoin(df, "doc_id", "text", 0.6)
+      .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect().toSet
+    assert(joined.nonEmpty && pairs(Long.MaxValue) == joined && pairs(0L) == joined)
   }
 
   test("exact incremental probe ≡ full join restricted cross-split ≡ the banded probe (real corpus)") {
