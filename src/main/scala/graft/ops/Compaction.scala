@@ -125,7 +125,7 @@ object Compaction {
     compactEpochs(spark, acceptedDir, maxEpochId)
     compactEpochs(spark, indexDir, maxEpochId)
     annDir.foreach(d => compactEpochs(spark, d, maxEpochId,
-      nestedPartCols = Seq("cell")))
+      nestedPartCols = Seq(CellIndex.Col)))
     graphDir.foreach(d => compactEpochs(spark, d, maxEpochId,
       nestedPartCols = Seq("nb")))
     simhashDir.foreach(d => compactEpochs(spark, s"$d/blocks", maxEpochId,

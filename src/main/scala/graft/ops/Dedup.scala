@@ -747,14 +747,11 @@ object Dedup {
     val nb = batch.select(
       IvfIndex.bestCell(col(vecCol), centroids).as("cell"),
       col(idCol).as("id2"), col(vecCol).as("v2"))
-    // Null vectors quantize to a null cell: excluded from the pushdown
-    // list (a null would NPE the driver-side getInt) and never join —
-    // null-vec arrivals report no corpus near-dup, matching the batch
-    // operators where null keys fall out of the cell self-join.
-    val probed = nb.select("cell").distinct()
-      .filter(col("cell").isNotNull).collect().map(_.getInt(0))
-    val cb = spark.read.parquet(indexPath)
-      .filter(col("cell").isin(probed.map(Integer.valueOf).toIndexedSeq: _*))
+    // Null vectors quantize to a null cell, which the probe drops and
+    // no join matches — null-vec arrivals report no corpus near-dup,
+    // matching the batch operators where null keys fall out of the cell
+    // self-join.
+    val cb = CellIndex.probe(spark.read.parquet(indexPath), nb)
       .select(col("cell"), col("id").as("id1"), col("vec").as("v1"))
     cb.join(nb, Seq("cell"))
       .withColumn("cos", Similarity.cosine(col("v1"), col("v2")))

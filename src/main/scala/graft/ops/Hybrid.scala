@@ -151,12 +151,8 @@ object Hybrid {
   private def prunedVecRanking(spark: org.apache.spark.sql.SparkSession,
       annPath: String, centroids: Array[Array[Double]], qvec: DataFrame,
       m: Int, nProbe: Int): DataFrame = {
-    val probed = qvec
-      .select(explode(IvfIndex.probeCells(col("qvec"), centroids,
-        math.min(nProbe, centroids.length))).as("cell"))
-      .distinct().collect().map(_.getInt(0))
-    val cb = spark.read.parquet(annPath)
-      .filter(col("cell").isin(probed.map(Integer.valueOf).toIndexedSeq: _*))
+    val cb = CellIndex.probe(spark.read.parquet(annPath), qvec.select(
+      explode(IvfIndex.probeCells(col("qvec"), centroids, nProbe)).as(CellIndex.Col)))
     val scored = cb.crossJoin(broadcast(qvec))
       .select(lit(0).as("qid"), col("id"),
         round(Similarity.cosine(col("vec"), col("qvec")), 4).as("score"))

@@ -159,40 +159,22 @@ object IvfIndex {
   def writeIndexed(corpus: DataFrame, centroids: Array[Array[Double]],
       path: String,
       cutoverCells: Int = QuantizerRelation.CutoverCells): Unit =
-    indexed(corpus, centroids, cutoverCells)
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-
-  /** [[writeIndexed]]'s rows, clustered by cell for a `cell`-partitioned
-    * write (also of an epoch, [[graft.EpochStore.write]]). */
-  def indexed(corpus: DataFrame, centroids: Array[Array[Double]],
-      cutoverCells: Int = QuantizerRelation.CutoverCells): DataFrame =
-    // cluster by cell before the partitioned write: without it every
-    // write task emits one file per cell it happens to hold, and at
-    // large k the file count explodes multiplicatively (task × cell —
-    // measured 4× wall on the k=10⁴ join form, SCALING.md "Round 13");
-    // clustered, each cell's rows land in one task → one file per
-    // non-empty cell, which is also the layout probes want to prune
-    assignCells(corpus, "id", "vec", centroids, cutoverCells = cutoverCells)
-      .repartition(col("cell"))
+    CellIndex.write(assignCells(corpus, "id", "vec", centroids,
+      cutoverCells = cutoverCells), path)
 
   /** Probe a [[writeIndexed]] corpus: the probed cell ids (at most
     * queries × nProbe ints — queries are small by contract) are
-    * collected and pushed as a literal partition filter, so the scan
-    * touches ONLY the probed cells' directories (IvfIndexSpec gates
-    * `PartitionFilters` in the plan and result-equality with the inline
-    * [[topK]]). This is the 100 TB probe path: cost scales with the
-    * probed fraction of the corpus, never the corpus.
+    * collected and pushed as a literal partition filter
+    * ([[CellIndex.probe]]), so the scan touches ONLY the probed cells'
+    * directories (IvfIndexSpec gates `PartitionFilters` in the plan and
+    * result-equality with the inline [[topK]]). This is the 100 TB
+    * probe path: cost scales with the probed fraction of the corpus,
+    * never the corpus.
     */
   def topKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, centroids: Array[Array[Double]],
-      k: Int, nProbe: Int): DataFrame = {
-    val qb = queries.withColumn("cell",
-      explode(probeCells(col("qvec"), centroids, nProbe)))
-    val probed = qb.select("cell").distinct().collect().map(_.getInt(0))
-    val cb = spark.read.parquet(path)
-      .filter(col("cell").isin(probed.map(Integer.valueOf).toIndexedSeq: _*))
-    probeJoin(cb, qb, k)
-  }
+      k: Int, nProbe: Int): DataFrame =
+    topKIndexedFiltered(spark, path, queries, centroids, k, nProbe, lit(true))
 
   /** METADATA-FILTERED probe of a [[writeIndexed]] corpus — the
     * "filtered vector search" every production retrieval system needs
@@ -210,12 +192,8 @@ object IvfIndex {
   def topKIndexedFiltered(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, centroids: Array[Array[Double]],
       k: Int, nProbe: Int, predicate: Column): DataFrame = {
-    val qb = queries.withColumn("cell",
+    val qb = queries.withColumn(CellIndex.Col,
       explode(probeCells(col("qvec"), centroids, nProbe)))
-    val probed = qb.select("cell").distinct().collect().map(_.getInt(0))
-    val cb = spark.read.parquet(path)
-      .filter(col("cell").isin(probed.map(Integer.valueOf).toIndexedSeq: _*))
-      .filter(predicate)
-    probeJoin(cb, qb, k)
+    probeJoin(CellIndex.probe(spark.read.parquet(path), qb).filter(predicate), qb, k)
   }
 }

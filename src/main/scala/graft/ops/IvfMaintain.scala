@@ -151,10 +151,7 @@ object IvfMaintain {
     val reassigned = Materialize(corpus
       .withColumn("cell", IvfIndex.bestCell(col("vec"), newCents)))
     Materialize.release(corpus)
-    reassigned
-      .repartition(col("batch"), col("cell"))
-      .write.mode("overwrite").partitionBy("batch", "cell")
-      .parquet(s"$path/.live-tmp/blocks")
+    CellIndex.writeEpochs(reassigned, s"$path/.live-tmp/blocks")
     // per-epoch quality stats are quantizer-relative — rewrite them all
     writeStats(reassigned, newCents, s"$path/.live-tmp/stats")
     Materialize.release(reassigned)
@@ -188,8 +185,7 @@ object IvfMaintain {
       liveDir: String, epoch: Long): Unit = {
     val assigned = Materialize(rows.select(col("id"), col("vec"))
       .withColumn("cell", IvfIndex.bestCell(col("vec"), cents)))
-    EpochStore.write(assigned.repartition(col("cell")), s"$liveDir/blocks",
-      epoch, "cell")
+    CellIndex.writeEpoch(assigned, s"$liveDir/blocks", epoch)
     writeStats(assigned.withColumn("batch", lit(epoch)), cents,
       s"$liveDir/stats", epochLeaf = Some(epoch))
     Materialize.release(assigned)

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.EpochStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,10 +18,10 @@ import org.apache.spark.sql.functions._
   * per row — and the exact re-rank fetches true vectors for shortlist
   * rows only.
   *
-  * Index layout on disk: `cell=<i>/…parquet(id, codes, vec)` — one
-  * directory per coarse cell (partition pruning), codes and vectors as
-  * separate columns in the same files (parquet's columnar layout makes
-  * the ADC scan codes-only; PqIndexSpec/IvfPqSpec gate the ReadSchema).
+  * The store is a [[CellIndex]] of (cell, id, codes, vec) — codes and
+  * vectors as separate columns in the same files, so parquet's
+  * columnar layout makes the ADC scan codes-only (PqIndexSpec/IvfPqSpec
+  * gate the ReadSchema) — and is probed through [[CellIndex.adcTopK]].
   *
   * Correctness gate: with every cell probed and an uncapped shortlist,
   * the pipeline must reproduce brute force exactly (IvfPqSpec) — the
@@ -31,57 +30,41 @@ import org.apache.spark.sql.functions._
   */
 object IvfPq {
 
-  /** Ingest-time: assign cells, encode codes, store partitioned by
-    * cell. Both assignments are computed once, at write time — and
-    * both route through their large-codebook cutovers
-    * ([[IvfIndex.assignCells]] for the coarse cells,
-    * [[PqIndex.encodeDispatch]] for the codes): this is the
-    * corpus-sized pass where the task-binary-vs-broadcast distinction
-    * bites. Layout is cutover-invariant (IvfPqSpec / PqRelationSpec). */
+  /** Ingest-time: assign cells, encode codes, store as a [[CellIndex]].
+    * Both assignments are computed once, at write time — and both route
+    * through their large-codebook cutovers ([[IvfIndex.assignCells]] for
+    * the coarse cells, [[PqIndex.encodeDispatch]] for the codes): this
+    * is the corpus-sized pass where the task-binary-vs-broadcast
+    * distinction bites. Layout is cutover-invariant (IvfPqSpec /
+    * PqRelationSpec). */
   def writeIndex(corpus: DataFrame, centroids: Array[Array[Double]],
-      cb: PqIndex.Codebooks, path: String,
-      cutoverCells: Int = QuantizerRelation.CutoverCells): Unit =
-    encodeBoth(corpus, centroids, cb, cutoverCells, "id", "vec")
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+      cb: PqIndex.Codebooks, path: String): Unit =
+    CellIndex.write(encoded(corpus, centroids, cb), path)
 
-  /** (cell, id, codes, vec) through both cutover dispatches, clustered
-    * by cell for the partitioned write (the [[IvfIndex.writeIndexed]]
-    * file-explosion rationale). */
-  private def encodeBoth(corpus: DataFrame, centroids: Array[Array[Double]],
-      cb: PqIndex.Codebooks, cutoverCells: Int,
-      idCol: String, vecCol: String): DataFrame = {
-    val assigned = IvfIndex.assignCells(
-      corpus.select(col(idCol).as("id"), col(vecCol).as("vec")),
-      "id", "vec", centroids, "cell", cutoverCells)
-    PqIndex.encodeDispatch(assigned, "id", "vec", cb, cutoverCells)
-      .select(col("cell"), col("id"), col("codes"), col("vec"))
-      .repartition(col("cell"))
+  /** (cell, id, codes, vec) of (id, vec) rows through both cutover
+    * dispatches. */
+  private def encoded(corpus: DataFrame, centroids: Array[Array[Double]],
+      cb: PqIndex.Codebooks): DataFrame = {
+    val assigned = IvfIndex.assignCells(corpus.select(col("id"), col("vec")),
+      "id", "vec", centroids)
+    PqIndex.encodeDispatch(assigned, "id", "vec", cb, QuantizerRelation.CutoverCells)
+      .select(col(CellIndex.Col), col("id"), col("codes"), col("vec"))
   }
 
-  /** Incremental maintenance: encode a DELTA batch with the EXISTING
-    * quantizers and append it into the partitioned layout — the daily
-    * ingest path at warehouse scale. No retraining, no rewrite: parquet
-    * append adds new files inside each touched `cell=` directory and
-    * never touches existing ones, so a concurrent prober keeps reading
-    * a consistent (slightly stale) index. Codebook drift under a
-    * shifting embedding distribution is handled by periodic
-    * retrain + [[writeIndex]] rewrite, not per-batch (the quantizers
-    * are frozen BETWEEN rewrites by design — recall degrades gradually
-    * and measurably, assignments never flap). */
-  def appendIndex(delta: DataFrame, centroids: Array[Array[Double]],
-      cb: PqIndex.Codebooks, path: String,
-      cutoverCells: Int = QuantizerRelation.CutoverCells): Unit =
-    encodeBoth(delta, centroids, cb, cutoverCells, "id", "vec")
-      .write.mode("append").partitionBy("cell").parquet(path)
-
-  /** Streaming-epoch variant of [[appendIndex]]: the delta lands under
+  /** Incremental maintenance: encode a DELTA batch of (id, vec) rows
+    * with the EXISTING quantizers and land it as one epoch of the store
+    * ([[CellIndex.writeEpoch]]): the delta lands under
     * `path/batch=<id>/cell=<c>/` in OVERWRITE mode, so a foreachBatch
     * RETRY of an epoch replaces its own prior output instead of
     * appending duplicates (the [[graft.streaming.IngestGate]] sink
     * discipline applied to the ANN index — plain `append` mode cannot
-    * be replay-idempotent). Probes read `path` whole: `batch` and
-    * `cell` are both partition columns, so the probed-cell filter still
-    * prunes directories, just one level down.
+    * be replay-idempotent), and earlier epochs' files are never
+    * touched. Probes read `path` whole: `batch` and `cell` are both
+    * partition columns, so the probed-cell filter still prunes
+    * directories, just one level down. An epoch-maintained index is
+    * batch-partitioned from birth (a full write lands at
+    * [[graft.EpochStore.BaseEpoch]]); the flat [[writeIndex]] layout
+    * and the epoch layout are alternative roots, never mixed.
     *
     * Quantizers stay FROZEN across epochs (passed in, never refit) —
     * assignments never flap, recall degrades gradually as the embedding
@@ -98,38 +81,19 @@ object IvfPq {
     * a retrain needs the original vectors, which this store by design
     * does not carry. */
   def appendIndexEpoch(delta: DataFrame, centroids: Array[Array[Double]],
-      cb: PqIndex.Codebooks, path: String, batchId: Long,
-      idCol: String = "id", vecCol: String = "vec",
-      cutoverCells: Int = QuantizerRelation.CutoverCells): Unit =
-    EpochStore.write(
-      encodeBoth(delta, centroids, cb, cutoverCells, idCol, vecCol),
-      path, batchId, "cell")
+      cb: PqIndex.Codebooks, path: String, batchId: Long): Unit =
+    CellIndex.writeEpoch(encoded(delta, centroids, cb), path, batchId)
 
-  /** Probe a [[writeIndex]] corpus: `nProbe` cells per query pushed as
-    * a literal partition filter; ADC over (id, codes) inside the probed
-    * cells; per-query shortlist; exact cosine re-rank. */
+  /** Probe a [[writeIndex]] or epoch store: [[CellIndex.adcTopK]] with
+    * the plain ADC score of each query's LUT (built through the
+    * codebook-form dispatch; the probe-cell explode stays an expression
+    * — it touches only the small query side). */
   def topK(spark: SparkSession, path: String, queries: DataFrame,
       centroids: Array[Array[Double]], cb: PqIndex.Codebooks,
-      k: Int, nProbe: Int, shortlist: Int,
-      cutoverCells: Int = QuantizerRelation.CutoverCells): DataFrame = {
-    // LUT through the codebook-form dispatch (the probe-cell explode
-    // stays an expression — it touches only the small query side)
-    val qb = queries.select(col("qid"),
-        explode(IvfIndex.probeCells(col("qvec"), centroids, nProbe)).as("cell"))
-      .join(PqIndex.lutDispatch(queries, cb, cutoverCells), Seq("qid"))
-    val probed = qb.select("cell").distinct().collect().map(_.getInt(0))
-    val stored = spark.read.parquet(path)
-      .filter(col("cell").isin(probed.map(Integer.valueOf).toIndexedSeq: _*))
-    // ADC stage: (cell, id, codes) joined to the broadcast query probes
-    // on cell — each corpus row lives in exactly one cell, so no
-    // candidate de-dup is needed (unlike multi-table LSH). Shortlist cut
-    // is two-phase (Similarity.rankPerQuery) so the qid-only window only
-    // sorts phase-1 survivors, never a query's whole probed-cell scan.
-    val scored = stored.select(col("cell"), col("id"), col("codes"))
-      .join(broadcast(qb), Seq("cell"))
-      .withColumn("adc", PqIndex.adcScore(col("codes"), col("lut"), cb.m, cb.k))
-    val shortIds = Similarity.rankPerQuery(scored, col("adc"), shortlist)
-      .select(col("qid"), col("id"))
-    PqIndex.rerank(shortIds, queries, stored.select(col("id"), col("vec")), k)
+      k: Int, nProbe: Int, shortlist: Int): DataFrame = {
+    val qb = CellIndex.probeRows(queries, centroids, nProbe, exactQc = false)
+      .join(PqIndex.lutDispatch(queries, cb, QuantizerRelation.CutoverCells), Seq("qid"))
+    CellIndex.adcTopK(spark, path, queries, qb,
+      PqIndex.adcScore(col("codes"), col("lut"), cb.m, cb.k), k, shortlist)
   }
 }

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.EpochStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
@@ -26,13 +25,11 @@ import graft.functions.SqDotExpr
   * only the residual is approximated, now per-dimension instead of
   * per-subspace.
   *
-  * Index layout, epoch lifecycle and probe mechanics are the residual
-  * family's verbatim: `cell=<i>/…(id, codes, vec)` (codes-only ADC
-  * scan, vectors touched only by the shortlist re-rank), frozen
-  * quantizers on epoch appends, generic `cell=`-nested retraction and
-  * compaction. Exhaustive mode (all cells probed, uncapped shortlist)
-  * re-ranks every row exactly — ≡ brute force, the same oracle argument
-  * as every other ANN gate (`ann_ivfsq`).
+  * Layout, epoch appends and probe are [[CellIndex]]'s: this family
+  * brings its encoder and its ADC score (`qc + sq_dot`), quantizers
+  * stay frozen on epoch appends, and retraction and compaction reach
+  * the store through the generic `cell=`-nested sweeps. Exhaustive mode
+  * is brute force ([[CellIndex]]; `ann_ivfsq`).
   */
 object IvfSq {
 
@@ -64,46 +61,28 @@ object IvfSq {
       col("vec"))
   }
 
-  /** Ingest-time: residual-SQ-encode and store partitioned by cell —
-    * the [[IvfPq.writeIndex]]/[[ResidualPq.writeIndex]] layout. */
+  /** Ingest-time: residual-SQ-encode and store as a [[CellIndex]]. */
   def writeIndex(corpus: DataFrame, centroids: Array[Array[Double]],
       b: Sq.SqBounds, path: String): Unit =
-    encoded(corpus, centroids, b)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+    CellIndex.write(encoded(corpus, centroids, b), path)
 
   /** Streaming-epoch append with FROZEN quantizers — the
-    * [[ResidualPq.appendIndexEpoch]] contract: overwrite-mode
-    * `batch=<id>/cell=<c>/` so a foreachBatch retry replaces its own
-    * prior output; centroids and bounds never refit, so appended codes
-    * live in exactly the base index's residual space. */
+    * [[ResidualPq.appendIndexEpoch]] contract: centroids and bounds
+    * never refit, so appended codes live in exactly the base index's
+    * residual space. */
   def appendIndexEpoch(delta: DataFrame, centroids: Array[Array[Double]],
       b: Sq.SqBounds, path: String, batchId: Long): Unit =
-    EpochStore.write(encoded(delta, centroids, b).repartition(col("cell")),
-      path, batchId, "cell")
+    CellIndex.writeEpoch(encoded(delta, centroids, b), path, batchId)
 
-  /** Probe: partition-pruned cells, broadcast query side, codes-only
-    * ADC scan (`qc + sq_dot`), two-phase shortlist, exact re-rank on
-    * original vectors. */
+  /** Probe: [[CellIndex.adcTopK]] with the exact q·centroid term plus
+    * the fused `sq_dot` of the query against the residual codes. */
   def topK(spark: SparkSession, path: String, queries: DataFrame,
       centroids: Array[Array[Double]], b: Sq.SqBounds,
       k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    val qb = queries.select(col("qid"), col("qvec"),
-        explode(IvfIndex.probeCells(col("qvec"), centroids, nProbe)).as("cell"),
-        graft.functions.functions.rotate_project(col("qvec"),
-          IvfIndex.unitRows(centroids)).as("qcAll"))
-      .withColumn("qc", element_at(col("qcAll"), col("cell") + 1))
-      .drop("qcAll")
-    val probed = qb.select("cell").distinct().collect().map(_.getInt(0))
-    val stored = spark.read.parquet(path)
-      .filter(col("cell").isin(probed.map(Integer.valueOf).toIndexedSeq: _*))
-    val scored = stored.select(col("cell"), col("id"), col("codes"))
-      .join(broadcast(qb), Seq("cell"))
-      .withColumn("adc", col("qc") + bridge.column(SqDotExpr(
+    val qb = CellIndex.probeRows(queries, centroids, nProbe, exactQc = true, col("qvec"))
+    CellIndex.adcTopK(spark, path, queries, qb,
+      col("qc") + bridge.column(SqDotExpr(
         bridge.expression(col("qvec")), bridge.expression(col("codes")),
-        b.lo, b.hi)))
-    val shortIds = Similarity.rankPerQuery(scored, col("adc"), shortlist)
-      .select(col("qid"), col("id"))
-    PqIndex.rerank(shortIds, queries, stored.select(col("id"), col("vec")), k)
+        b.lo, b.hi)), k, shortlist)
   }
 }

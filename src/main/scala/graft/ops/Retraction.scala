@@ -278,7 +278,7 @@ object Retraction {
       postingsEpochsDir: Option[String] = None): Unit = {
     retract(spark, acceptedDir, idCol, ids)
     retract(spark, indexDir, "id", ids)
-    annDir.foreach(d => retract(spark, d, "id", ids, nestedPartCols = Seq("cell")))
+    annDir.foreach(d => retract(spark, d, "id", ids, nestedPartCols = Seq(CellIndex.Col)))
     postingsDir.foreach(d => retractPostings(spark, d, ids))
     // the EPOCH-partitioned lexical store is the ninth store: postings
     // scrub + exact per-epoch stats rewrite in one sweep

@@ -212,9 +212,7 @@ object Similarity {
       explode(
         if (nProbes == 1) lshBuckets(col("qvec"), dim, bitsPerTable, tables, seed)
         else lshProbeBuckets(col("qvec"), dim, bitsPerTable, tables, nProbes, seed)))
-    val probed = qb.select("bucket").distinct().collect().map(_.getString(0))
-    val cb = spark.read.parquet(path)
-      .filter(col("bucket").isin(probed.toIndexedSeq: _*))
+    val cb = CellIndex.probe(spark.read.parquet(path), qb, "bucket")
     // The bucketed layout stores one posting (with its vector) per
     // table, so a candidate id can appear up to `tables` times;
     // dropDuplicates collapses postings AFTER the probe already bounded

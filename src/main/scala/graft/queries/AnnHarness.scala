@@ -113,12 +113,12 @@ object AnnHarness {
       nProbe: Int, shortlist: Int, seed: String, staging: String): DataFrame = {
     val rot = rotation(s)
     val centroids = cells(rotated(corpus, rot), seed)
-    val cb = ResidualPq.trainCodebooksRotated(corpus, rot, centroids,
-      m = 8, k = 16, iters = 2, seed = seed)
+    val cb = ResidualPq.trainCodebooks(corpus, centroids,
+      m = 8, k = 16, iters = 2, seed = seed, rot = Some(rot))
     val path = Staging.dirFor(staging)
-    ResidualPq.writeIndexRotated(corpus, rot, centroids, cb, path)
-    ResidualPq.topKRotated(s, path, queries, rot, centroids, cb,
-      k = K, nProbe = nProbe, shortlist = shortlist)
+    ResidualPq.writeIndex(corpus, centroids, cb, path, rot = Some(rot))
+    ResidualPq.topK(s, path, queries, centroids, cb,
+      k = K, nProbe = nProbe, shortlist = shortlist, rot = Some(rot))
   }
 
   /** The pruned production probe of the IVF families: 2 cells, a

@@ -881,7 +881,7 @@ object PipelineQueries {
   }
 
   /** The FULL FAISS production recipe "OPQ,IVF,PQ"
-    * ([[graft.ops.ResidualPq.topKRotated]]): the committed eigenbasis
+    * ([[graft.ops.ResidualPq.topK]] with a rotation): the committed eigenbasis
     * rotation (variance-balanced allocation) applied BEFORE the coarse
     * quantizer, residual codes in rotated space, exact re-rank on
     * ORIGINAL vectors — so exhaustive mode ≡ brute force and the

@@ -261,8 +261,8 @@ object QuantizerReplay {
     s"$head,\n$loops"
   }
 
-  /** Residual-IVF-PQ probe replay ([[graft.ops.ResidualPq.topK]] /
-    * `topKRotated`): codes by augmented-L2 over the residuals, probed
+  /** Residual-IVF-PQ probe replay ([[graft.ops.ResidualPq.topK]], with
+    * or without its rotation): codes by augmented-L2 over the residuals, probed
     * cells carrying the FLOAT-quantized exact `qc = q·centroid` term,
     * raw-query LUT against the PLAIN residual codebooks, `adc = qc +
     * (m lookup terms)` in that exact order, shortlist, exact re-rank

@@ -120,13 +120,11 @@ object IngestGate {
         Dedup.bandIndex(accepted, idCol, textCol, numHashes, bands, n),
         indexDir, batchId)
       ann.foreach { a =>
+        val vecs = accepted.select(col(idCol).as("id"), col(a.vecCol).as("vec"))
         if (a.residual)
-          graft.ops.ResidualPq.appendIndexEpoch(
-            accepted.select(col(idCol).as("id"), col(a.vecCol).as("vec")),
-            a.centroids, a.codebooks, a.dir, batchId)
+          graft.ops.ResidualPq.appendIndexEpoch(vecs, a.centroids, a.codebooks, a.dir, batchId)
         else
-          graft.ops.IvfPq.appendIndexEpoch(accepted, a.centroids, a.codebooks,
-            a.dir, batchId, idCol = idCol, vecCol = a.vecCol)
+          graft.ops.IvfPq.appendIndexEpoch(vecs, a.centroids, a.codebooks, a.dir, batchId)
       }
       postings.foreach { p =>
         // same empty-epoch policy as the graph sink: a fully-rejected

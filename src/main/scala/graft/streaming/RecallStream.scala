@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{EpochStore, Materialize}
-import graft.ops.{IvfIndex, Retrieval, Similarity, TextIndex}
+import graft.ops.{CellIndex, IvfIndex, Retrieval, Similarity, TextIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -82,7 +82,8 @@ object RecallStream {
     // window; arrays order lexicographically, so the pick is stable
     // under partitioning and replay)
     val fresh = uniqueArrivals(batch, batchId, annDir)
-    EpochStore.write(IvfIndex.indexed(fresh, centroids), annDir, batchId, "cell")
+    CellIndex.writeEpoch(IvfIndex.assignCells(fresh, "id", "vec", centroids),
+      annDir, batchId)
     val sys = IvfIndex.topKIndexed(spark, annDir, queries, centroids,
       k, nProbe)
     val corpus = spark.read.parquet(annDir).select(col("id"), col("vec"))
@@ -213,8 +214,8 @@ object RecallStream {
     // maintain BOTH real serving sinks
     TextIndex.appendPostingsEpoch(fresh, "id", "text", lexDir, batchId,
       nBuckets)
-    EpochStore.write(IvfIndex.indexed(fresh.select(col("id"), col("vec")),
-      centroids), annDir, batchId, "cell")
+    CellIndex.writeEpoch(IvfIndex.assignCells(fresh.select(col("id"), col("vec")),
+      "id", "vec", centroids), annDir, batchId)
     Materialize.release(fresh)
     // cold start: nothing servable yet (empty/duplicate-only epochs) —
     // the graph monitor's empty-metrics convention

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{EpochStore, Materialize}
-import graft.ops.{Dedup, IvfIndex, Similarity}
+import graft.ops.{CellIndex, Dedup, IvfIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -63,10 +63,7 @@ object SemanticGate {
           val nb = inBatch.select(
             IvfIndex.bestCell(col(vecCol), centroids).as("cell"),
             col(idCol).as("id2"), col(vecCol).as("v2"))
-          val probed = nb.select("cell").distinct()
-            .filter(col("cell").isNotNull).collect().map(_.getInt(0))
-          val cb = corpusRaw
-            .filter(col("cell").isin(probed.map(Integer.valueOf).toIndexedSeq: _*))
+          val cb = CellIndex.probe(corpusRaw, nb)
             .select(col("cell"), col(vecCol).as("v1"))
           val dupIds = cb.join(nb, Seq("cell"))
             .filter(Similarity.cosine(col("v1"), col("v2")) >= threshold)
@@ -74,9 +71,9 @@ object SemanticGate {
           inBatch.join(dupIds, Seq(idCol), "left_anti")
         case None => inBatch
       }
-      EpochStore.write(
-        survivors.withColumn("cell", IvfIndex.bestCell(col(vecCol), centroids)),
-        acceptedDir, batchId, "cell")
+      CellIndex.writeEpoch(
+        survivors.withColumn(CellIndex.Col, IvfIndex.bestCell(col(vecCol), centroids)),
+        acceptedDir, batchId)
     }
   }
 

@@ -13,8 +13,9 @@ import org.apache.spark.SparkConf
   * [[graft.streaming.GateProtocol.start]] the one way an epoch stream
   * starts, and [[RunMeter]] the only code that listens to or drains the
   * listener bus. [[graft.queries.AnnHarness]] alone decides which
-  * vectors are the standing ANN queries, and [[graft.ops.SetSimilarity]]
-  * alone builds, cuts and scores shingle sets. */
+  * vectors are the standing ANN queries, [[graft.ops.SetSimilarity]]
+  * alone builds, cuts and scores shingle sets, and [[graft.ops.CellIndex]]
+  * alone writes and probes the cell-partitioned ANN layout. */
 class GraftSessionSpec extends SparkSpec {
 
   private val Main = "src/main/scala"
@@ -67,6 +68,14 @@ class GraftSessionSpec extends SparkSpec {
       "ceil(col(\"sz\")")
     assert(sites(Main)(setOps: _*) == Seq("SetSimilarity.scala"))
     assert(sites(Both: _*)("verify" + "Pairs", "jaccardFor" + "Shingles", "jaccardFor" + "Pairs").isEmpty)
+  }
+
+  test("only CellIndex.scala writes or probes the cell layout; the rotated residual twins and the flat append are gone") {
+    val layout = Seq("isin(" + "probed", "partitionBy(\"cell\"" + ")", "repartition(col(\"cell\")" + ")")
+    assert(sites(Main)(layout: _*) == Seq("CellIndex.scala"))
+    val gone = Seq("trainCodebooks", "encoded", "writeIndex", "topK", "appendIndexEpoch")
+      .map(_ + "Rotated") :+ ("IvfPq.appendIndex" + "(")
+    assert(sites(Both: _*)(gone: _*).isEmpty)
   }
 
   test("a launch conf's master and shuffle width are kept; unset, the local sizing applies") {

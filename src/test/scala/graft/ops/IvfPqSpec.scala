@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{EpochStore, SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 class IvfPqSpec extends SparkSpec {
@@ -57,8 +57,9 @@ class IvfPqSpec extends SparkSpec {
     val base = corpus.filter($"id" < 60)
     val delta = corpus.filter($"id" >= 60)
 
+    // an epoch-layout root: the base generation, then the delta as epoch 0
     val incr = java.nio.file.Files.createTempDirectory("ivfpq-incr").toFile.getAbsolutePath
-    IvfPq.writeIndex(base, centroids, cb, incr)
+    IvfPq.appendIndexEpoch(base, centroids, cb, incr, EpochStore.BaseEpoch)
     def listFiles(dir: String): Map[String, Long] = {
       val root = new java.io.File(dir)
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -67,7 +68,7 @@ class IvfPqSpec extends SparkSpec {
         .map(f => f.getAbsolutePath -> f.lastModified()).toMap
     }
     val before = listFiles(incr)
-    IvfPq.appendIndex(delta, centroids, cb, incr)
+    IvfPq.appendIndexEpoch(delta, centroids, cb, incr, 0L)
     val after = listFiles(incr)
     assert(before.keySet.subsetOf(after.keySet) && before.forall { case (p, m) => after(p) == m },
       "append must only add files, never rewrite existing ones")

@@ -157,12 +157,12 @@ class ResidualPqSpec extends SparkSpec {
     val rotated = corpus.select(col("id"),
       graft.functions.functions.rotate_project(col("vec"), rot).as("vec"))
     val centroids = IvfIndex.train(rotated, "id", "vec", k = 8, iters = 2)
-    val cb = ResidualPq.trainCodebooksRotated(corpus, rot, centroids,
-      m = 4, k = 8, iters = 2)
+    val cb = ResidualPq.trainCodebooks(corpus, centroids,
+      m = 4, k = 8, iters = 2, rot = Some(rot))
     val path = java.nio.file.Files.createTempDirectory("respqrot").toFile.getAbsolutePath
-    ResidualPq.writeIndexRotated(corpus, rot, centroids, cb, path)
-    val got = key(ResidualPq.topKRotated(spark, path, queries, rot,
-      centroids, cb, k = 10, nProbe = 8, shortlist = Int.MaxValue))
+    ResidualPq.writeIndex(corpus, centroids, cb, path, rot = Some(rot))
+    val got = key(ResidualPq.topK(spark, path, queries,
+      centroids, cb, k = 10, nProbe = 8, shortlist = Int.MaxValue, rot = Some(rot)))
     assert(got == key(Similarity.bruteForceTopK(queries, corpus, 10)),
       "re-rank on originals: the rotation must be invisible in exhaustive mode")
   }
@@ -180,21 +180,21 @@ class ResidualPqSpec extends SparkSpec {
     val rotated = corpus.select(col("id"),
       graft.functions.functions.rotate_project(col("vec"), rot).as("vec"))
     val centroids = IvfIndex.train(rotated, "id", "vec", k = 8, iters = 2)
-    val cb = ResidualPq.trainCodebooksRotated(corpus, rot, centroids,
-      m = 4, k = 8, iters = 2)
+    val cb = ResidualPq.trainCodebooks(corpus, centroids,
+      m = 4, k = 8, iters = 2, rot = Some(rot))
     val tmp = java.nio.file.Files.createTempDirectory("respqrot3").toFile.getAbsolutePath
-    ResidualPq.writeIndexRotated(corpus, rot, centroids, cb, s"$tmp/full")
+    ResidualPq.writeIndex(corpus, centroids, cb, s"$tmp/full", rot = Some(rot))
     val even = corpus.filter(col("id") % 2 === 0)
     val odd = corpus.filter(col("id") % 2 === 1)
-    ResidualPq.appendIndexEpochRotated(even, rot, centroids, cb, s"$tmp/epoch", 0L)
-    ResidualPq.appendIndexEpochRotated(odd, rot, centroids, cb, s"$tmp/epoch", 1L)
-    ResidualPq.appendIndexEpochRotated(odd, rot, centroids, cb, s"$tmp/epoch", 1L)
+    ResidualPq.appendIndexEpoch(even, centroids, cb, s"$tmp/epoch", 0L, rot = Some(rot))
+    ResidualPq.appendIndexEpoch(odd, centroids, cb, s"$tmp/epoch", 1L, rot = Some(rot))
+    ResidualPq.appendIndexEpoch(odd, centroids, cb, s"$tmp/epoch", 1L, rot = Some(rot))
     assert(spark.read.parquet(s"$tmp/epoch").count() == corpus.count(),
       "epoch replay must be idempotent")
-    val full = key(ResidualPq.topKRotated(spark, s"$tmp/full", queries, rot,
-      centroids, cb, k = 10, nProbe = 8, shortlist = Int.MaxValue))
-    val epoch = key(ResidualPq.topKRotated(spark, s"$tmp/epoch", queries, rot,
-      centroids, cb, k = 10, nProbe = 8, shortlist = Int.MaxValue))
+    val full = key(ResidualPq.topK(spark, s"$tmp/full", queries,
+      centroids, cb, k = 10, nProbe = 8, shortlist = Int.MaxValue, rot = Some(rot)))
+    val epoch = key(ResidualPq.topK(spark, s"$tmp/epoch", queries,
+      centroids, cb, k = 10, nProbe = 8, shortlist = Int.MaxValue, rot = Some(rot)))
     assert(epoch == full, "streamed rotated appends must probe ≡ full rewrite")
     assert(full == key(Similarity.bruteForceTopK(queries, corpus, 10)))
   }
@@ -231,11 +231,11 @@ class ResidualPqSpec extends SparkSpec {
     val rotated = corpus.select(col("id"),
       graft.functions.functions.rotate_project(col("vec"), rot).as("vec"))
     val centsR = IvfIndex.train(rotated, "id", "vec", k = 8, iters = 2)
-    val cbR = ResidualPq.trainCodebooksRotated(corpus, rot, centsR,
-      m = 8, k = 32, iters = 3)
-    ResidualPq.writeIndexRotated(corpus, rot, centsR, cbR, s"$tmp/rot")
-    val rotRec = recall(ResidualPq.topKRotated(spark, s"$tmp/rot", queries, rot,
-      centsR, cbR, k = 10, nProbe = 2, shortlist = 15)
+    val cbR = ResidualPq.trainCodebooks(corpus, centsR,
+      m = 8, k = 32, iters = 3, rot = Some(rot))
+    ResidualPq.writeIndex(corpus, centsR, cbR, s"$tmp/rot", rot = Some(rot))
+    val rotRec = recall(ResidualPq.topK(spark, s"$tmp/rot", queries,
+      centsR, cbR, k = 10, nProbe = 2, shortlist = 15, rot = Some(rot))
       .select("qid", "id").as[(Long, Long)].collect())
     info(f"recall@10 shortlist=15 nProbe=2 on anisotropic clusters: plain=$plain%.3f rotated=$rotRec%.3f")
     // measured: plain=0.66, rotated=0.84 — balancing the residual

@@ -73,6 +73,22 @@ class SemanticGateSpec extends SparkSpec {
       centroids, tau) == 1)
   }
 
+  test("an epoch's accepted rows are clustered by cell: one data file per cell directory") {
+    val dir = graft.Staging.dirFor("semantic-gate-cluster")
+    // three distinct cell-0 directions, one per input partition
+    val b0 = spark.sparkContext.parallelize(Seq(
+      1L -> Seq(1.0f, 0.1f, 0.0f),
+      2L -> Seq(1.0f, -0.1f, 0.0f),
+      3L -> Seq(1.0f, 0.0f, 0.3f)), 3).toDF("id", "vec")
+    assert(b0.rdd.getNumPartitions == 3)
+    assert(SemanticGate.gateBatch(b0, 0L, dir, "id", "vec", centroids, tau) == 3)
+    val cells = new java.io.File(graft.EpochStore.path(dir, 0L)).listFiles()
+      .filter(_.getName.startsWith("cell="))
+    assert(cells.map(_.getName).toSeq == Seq("cell=0"))
+    val files = cells.flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+    assert(files.length == 1, s"cell=0 holds ${files.length} data files")
+  }
+
   test("foreachBatch wiring: streamed epochs land partitioned by (batch, cell)") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = graft.Staging.dirFor("semantic-gate-stream")
