@@ -54,9 +54,8 @@ object IvfIndex {
     * vectors, null vectors — pinned at k=1024 in
     * QuantizerRelationSpec. */
   def assignCells(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]], outCol: String = "cell",
-      cutoverCells: Int = QuantizerRelation.CutoverCells): DataFrame =
-    if (centroids.length < cutoverCells)
+      centroids: Array[Array[Double]], outCol: String = "cell"): DataFrame =
+    if (centroids.length < QuantizerRelation.CutoverCells)
       df.withColumn(outCol, bestCell(col(vecCol), centroids))
     else
       QuantizerRelation.assignCells(df, idCol, vecCol,
@@ -71,60 +70,23 @@ object IvfIndex {
     graft.functions.functions.probe_cells(vec, unitRows(centroids), nProbe)
   }
 
-  /** Train a deterministic coarse quantizer: evenly-spaced seed vectors
-    * (by id order) then `iters` Lloyd iterations executed as Spark
-    * aggregations (posexplode → per-(cell,dim) mean). Returns k×dim
-    * centroids.
-    *
-    * Two implementations behind one signature, chosen by k like
-    * [[assignCells]]: below the cutover the per-iteration means (≤
-    * k×dim doubles) collect to the driver between iterations — fewer
-    * Spark jobs, fine while k is small; at or above it the loop runs
-    * fully relationally ([[QuantizerRelation.train]] — per-iteration
-    * state is a k-row DataFrame, assignment is the broadcast join) and
-    * only the FINISHED matrix is collected once, so training scales
-    * with k the same way assignment does.
+  /** Train a deterministic coarse quantizer: [[Lloyd.fit]] as the
+    * m = 1 product quantizer — hash-ordered seed vectors, then `iters`
+    * Lloyd iterations of [[assignCells]] (the expression below the
+    * cutover, the broadcast relation at or above it) and one
+    * per-(cell, dim) mean. Returns k×dim centroids; only they reach the
+    * driver. Seeding MUST NOT assume anything about id layout: the
+    * previous `id mod (n/k) == 0` scheme silently selected ZERO rows on
+    * sparse shifted ids (sf1 replicas live at c×1e8 + base, and no id
+    * in the corpus was divisible by the step), killing training while
+    * the bench misread the instant failure as a fast run.
     */
   def train(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int = 2,
-      cutoverCells: Int = QuantizerRelation.CutoverCells,
-      seed: String = "km"): Array[Array[Double]] = {
-    if (k >= cutoverCells)
-      return QuantizerRelation.collectCentroids(
-        QuantizerRelation.train(corpus, idCol, vecCol, k, iters, seed))
-    // Deterministic pseudo-random seed sample: order by a hash of the id
-    // (id tiebreak) and take k — a top-k, not a global sort. Seeding
-    // MUST NOT assume anything about id layout: the previous
-    // `id mod (n/k) == 0` scheme silently selected ZERO rows on sparse
-    // shifted ids (sf1 replicas live at c×1e8 + base, and no id in the
-    // corpus was divisible by the step), killing training while the
-    // bench misread the instant failure as a fast run.
-    var centroids: Array[Array[Double]] = corpus
-      .orderBy(QuantizerRelation.seedHash(col(idCol), seed), col(idCol))
-      .limit(k)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    require(centroids.nonEmpty, "empty corpus")
-    (1 to iters).foreach { _ =>
-      val assigned = corpus.select(col(vecCol).as("v"),
-        bestCell(col(vecCol), centroids).as("cell"))
-      val means = assigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cell", "pos")
-        .agg(round(avg(col("x").cast("double")),
-          QuantizerRelation.MeanScale).as("m"))
-        .groupBy("cell").agg(map_from_arrays(
-          collect_list(col("pos")), collect_list(col("m"))).as("byPos"))
-        .collect()
-      means.foreach { r =>
-        val cell = r.getInt(0)
-        val byPos = r.getMap[Int, Double](1)
-        centroids(cell) = (0 until centroids(cell).length)
-          .map(i => byPos.getOrElse(i, centroids(cell)(i))).toArray
-      }
-    }
-    centroids
-  }
+      iters: Int = 2, seed: String = "km"): Array[Array[Double]] =
+    Lloyd.fit(corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
+        1, k, iters, seed) { (rows, cb) =>
+      assignCells(rows, "id", "v", cb.books(0)).withColumn("codes", array(col("cell")))
+    }.books(0)
 
   /** IVF top-k: assign corpus to cells, probe `nProbe` cells per query,
     * exact cosine re-rank inside the probed cells. */
@@ -157,10 +119,8 @@ object IvfIndex {
     * IvfIndexSpec pins it). Input contract: (id, vec) columns, `id`
     * unique. */
   def writeIndexed(corpus: DataFrame, centroids: Array[Array[Double]],
-      path: String,
-      cutoverCells: Int = QuantizerRelation.CutoverCells): Unit =
-    CellIndex.write(assignCells(corpus, "id", "vec", centroids,
-      cutoverCells = cutoverCells), path)
+      path: String): Unit =
+    CellIndex.write(assignCells(corpus, "id", "vec", centroids), path)
 
   /** Probe a [[writeIndexed]] corpus: the probed cell ids (at most
     * queries × nProbe ints — queries are small by contract) are

@@ -47,7 +47,7 @@ object IvfPq {
       cb: PqIndex.Codebooks): DataFrame = {
     val assigned = IvfIndex.assignCells(corpus.select(col("id"), col("vec")),
       "id", "vec", centroids)
-    PqIndex.encodeDispatch(assigned, "id", "vec", cb, QuantizerRelation.CutoverCells)
+    PqIndex.encodeDispatch(assigned, "id", "vec", cb)
       .select(col(CellIndex.Col), col("id"), col("codes"), col("vec"))
   }
 
@@ -92,7 +92,7 @@ object IvfPq {
       centroids: Array[Array[Double]], cb: PqIndex.Codebooks,
       k: Int, nProbe: Int, shortlist: Int): DataFrame = {
     val qb = CellIndex.probeRows(queries, centroids, nProbe, exactQc = false)
-      .join(PqIndex.lutDispatch(queries, cb, QuantizerRelation.CutoverCells), Seq("qid"))
+      .join(PqIndex.lutDispatch(queries, cb), Seq("qid"))
     CellIndex.adcTopK(spark, path, queries, qb,
       PqIndex.adcScore(col("codes"), col("lut"), cb.m, cb.k), k, shortlist)
   }

@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: rotation is d codegen'd dot products against literal
   * eigenvectors — a shuffle-free map fused into the encode scan;
-  * training is the same one-aggregation-per-Lloyd-iteration shape as
+  * training is [[Lloyd.fit]], one aggregation per iteration like
   * [[PqIndex.train]] (unit-norm rows make the update a plain mean);
   * everything downstream is PQ's m-bytes-per-row pipeline. At 100 TB
   * the added cost over plain PQ is one extra matrix-vector per row at
@@ -119,37 +119,27 @@ object Opq {
   /** Unit-normalized rotated vector (rotation preserves the norm, so
     * the divisor is the ORIGINAL vector's norm), with a constant-1
     * coordinate appended per subspace: the augmented layout whose
-    * argmax-dot against [[augment]]ed codebooks is exact L2
+    * argmax-dot against [[PqIndex.augmentL2]] codebooks is exact L2
     * nearest-centroid assignment. Zero vectors pass through unscaled. */
   private[ops] def encodeVecCol(vec: Column, basis: Seq[Pca.Component],
       order: Seq[Int], m: Int): Column =
     graft.functions.functions.rotate_project(vec, rotationMatrix(basis, order),
       normalize = true, appendEvery = order.length / m)
 
-  /** Encode-side codebooks: each centroid gains the −‖c‖²/2 coordinate
-    * that linearizes L2 assignment into argmax-dot. NEVER used for
-    * LUT/ADC scoring ([[PqIndex.augmentL2]]). */
-  private[ops] def augment(cb: PqIndex.Codebooks): PqIndex.Codebooks =
-    PqIndex.augmentL2(cb)
-
   /** L2 codes for the corpus: (id, codes) via the augmented layout. */
   private def encodeL2(corpus: DataFrame, basis: Seq[Pca.Component],
       model: Model): DataFrame =
     corpus.select(col("id"),
       PqIndex.encode(encodeVecCol(col("vec"), basis, model.order, model.cb.m),
-        augment(model.cb)).as("codes"))
+        PqIndex.augmentL2(model.cb)).as("codes"))
 
   /** Train: allocate components by the basis' eigenvalues, rotate +
-    * unit-normalize the corpus, run Lloyd with L2 assignment. Same
-    * one-distributed-aggregation-per-iteration shape as
-    * [[PqIndex.train]]; rows are unit-norm so the centroid update is a
-    * plain mean. Deterministic: id-hash-sampled seed rows, fixed
+    * unit-normalize the corpus, run [[Lloyd.fit]] with L2 assignment
+    * ([[PqIndex.assignL2]]); rows are unit-norm so the centroid update
+    * is a plain mean. Deterministic: id-hash-sampled seed rows, fixed
     * iterations, empty cells keep their previous centroid. */
   def train(corpus: DataFrame, basis: Seq[Pca.Component],
       m: Int = 8, k: Int = 16, iters: Int = 2): Model = {
-    val d = basis.length
-    require(d % m == 0, s"dim $d not divisible by m=$m subspaces")
-    val dsub = d / m
     val order = allocate(basis.sortBy(_.component).map(_.eigenvalue), m)
     val mat = rotationMatrix(basis, order)
     // Lloyd reads the rotated corpus once for its seeds and once per
@@ -159,7 +149,7 @@ object Opq {
       graft.functions.functions.rotate_project(col("vec"), mat,
         normalize = true).as("v")))
 
-    Model(order, PqIndex.lloydL2(unit, d, m, k, iters))
+    Model(order, Lloyd.fit(unit, m, k, iters)(PqIndex.assignL2))
   }
 
   /** Ingest-time half, mirroring [[PqIndex.writeEncoded]]: store
@@ -172,7 +162,7 @@ object Opq {
       model: Model, path: String): Unit =
     corpus.select(col("id"),
         PqIndex.encode(encodeVecCol(col("vec"), basis, model.order, model.cb.m),
-          augment(model.cb)).as("codes"),
+          PqIndex.augmentL2(model.cb)).as("codes"),
         col("vec"))
       .write.mode("overwrite").parquet(path)
 
@@ -345,8 +335,6 @@ object Opq {
   def trainIterative(corpus: DataFrame, basis: Seq[Pca.Component],
       m: Int = 8, k: Int = 16, pqIters: Int = 2, optIters: Int = 3): RotModel = {
     val d = basis.length
-    require(d % m == 0, s"dim $d not divisible by m=$m subspaces")
-    val dsub = d / m
     val order = allocate(basis.sortBy(_.component).map(_.eigenvalue), m)
     var rot = rotationMatrix(basis, order)
     var best: RotModel = null
@@ -357,15 +345,13 @@ object Opq {
       // iteration, AND the cross-moment pass — materialize it once per
       // optimization round so the d² matvec rotation is one corpus pass
       // per round instead of four; the cross pass derives its encode
-      // input from the stored v (augmentVecCol ≡ appendEvery = dsub on
-      // the same rotated floats) rather than re-rotating.
+      // input from the stored v (assignL2's augmentVecCol ≡ appendEvery
+      // = dsub on the same rotated floats) rather than re-rotating.
       val unit = Materialize(corpus.select(col("id"),
         graft.functions.functions.rotate_project(col("vec"), rot,
           normalize = true).as("v")))
-      val cb = PqIndex.lloydL2(unit, d, m, k, pqIters)
-      val rows = unit.select(col("v"),
-          PqIndex.encode(PqIndex.augmentVecCol(col("v"), d, dsub),
-            augment(cb)).as("codes"))
+      val cb = Lloyd.fit(unit, m, k, pqIters)(PqIndex.assignL2)
+      val rows = PqIndex.assignL2(unit, cb).select(col("v"), col("codes"))
         .as[CrossRow]
       // one whole-dataset typed aggregation → d² buffer + scalars
       val buf = rows.select(new CrossMomentAgg(cb, d).toColumn).head()
@@ -392,7 +378,7 @@ object Opq {
         PqIndex.encode(
           graft.functions.functions.rotate_project(col("vec"), model.rot,
             normalize = true, appendEvery = model.cb.dsub),
-          augment(model.cb)).as("codes"),
+          PqIndex.augmentL2(model.cb)).as("codes"),
         col("vec"))
       .write.mode("overwrite").parquet(path)
 
@@ -423,7 +409,7 @@ object Opq {
       PqIndex.encode(
         graft.functions.functions.rotate_project(col("vec"), model.rot,
           normalize = true, appendEvery = dsub),
-        augment(model.cb)).as("codes"))
+        PqIndex.augmentL2(model.cb)).as("codes"))
     val rotatedQueries = queries.select(col("qid"),
       graft.functions.functions.rotate_project(col("qvec"), model.rot).as("qvec"))
     val short = PqIndex.adcShortlist(encoded, rotatedQueries, model.cb, shortlist)

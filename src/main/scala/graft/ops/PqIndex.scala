@@ -85,74 +85,21 @@ object PqIndex {
       element_at(lutCol, lit(mi * k) + element_at(codes, mi + 1) + 1)
     }.reduce(_ + _)
 
-  /** Train `m` codebooks in parallel — every Lloyd iteration is ONE
-    * distributed aggregation covering all subspaces (assign all `m`
-    * codes per row, posexplode the vector once, mean per
-    * (subspace, cell, dim)); only `m×k×dsub` doubles reach the driver.
+  /** Train `m` codebooks in parallel through [[Lloyd.fit]] — every
+    * Lloyd iteration is ONE distributed aggregation covering all
+    * subspaces (assign all `m` codes per row, posexplode the vector
+    * once, mean per (subspace, cell, dim)); only `m×k×dsub` doubles
+    * reach the driver. Seeds and means are unit-normalized (the mean
+    * divides by the row norm inside the aggregation); codes assign by
+    * [[encodeDispatch]], so a codebook at or above the cutover (total
+    * centroids m·k) assigns through the broadcast relation.
     * Deterministic: id-hash-sampled seed rows, fixed iterations.
-    *
-    * Two implementations behind one signature, chosen like
-    * [[IvfIndex.train]] by TOTAL centroids m·k: below the cutover the
-    * per-iteration means (≤ m·k·dsub doubles) collect to the driver
-    * between iterations; at or above it the loop runs fully
-    * relationally ([[PqRelation.train]] — per-iteration state is the
-    * (sub, cell, cvec) relation, assignment the broadcast join) and
-    * only the FINISHED codebook is collected once.
     */
   def train(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, k: Int = 16, iters: Int = 2,
-      cutoverCells: Int = QuantizerRelation.CutoverCells,
-      seed: String = "km"): Codebooks = {
-    if (m * k >= cutoverCells)
-      return PqRelation.collectCodebooks(
-        PqRelation.train(corpus, idCol, vecCol, m, k, iters, seed))
-    val probe = corpus.select(size(col(vecCol)).as("d")).limit(1).collect()
-    require(probe.nonEmpty, "empty corpus")
-    val dim = probe(0).getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    // Raw vectors + a precomputed norm column: code assignment is
-    // scale-invariant, and the Lloyd mean divides by the norm inside
-    // the aggregation — no per-element lambda anywhere.
-    val base = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-      sqrt(graft.functions.functions.dot_product(col(vecCol), col(vecCol))).as("nrm"))
-
-    // Deterministic pseudo-random seed sample by id hash — same
-    // id-layout-independence fix as IvfIndex.train (modulo sampling
-    // returns zero seeds on sparse shifted id layouts).
-    val seeds = base
-      .orderBy(QuantizerRelation.seedHash(col("id"), seed), col("id")).limit(k)
-      .select(col("v")).collect()
-      .map { r =>
-        val v = r.getSeq[Float](0).map(_.toDouble).toArray
-        val nm = math.sqrt(v.map(x => x * x).sum)
-        if (nm > 0) v.map(_ / nm) else v
-      }
-    require(seeds.nonEmpty, "empty corpus")
-    val books: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(mi => seeds.map(_.slice(mi * dsub, (mi + 1) * dsub)))
-    var cb = Codebooks(m, dsub, books)
-
-    (1 to iters).foreach { _ =>
-      val assigned = base.select(col("v"), col("nrm"), encode(col("v"), cb).as("cells"))
-      val means = assigned
-        .select(col("cells"), col("nrm"), posexplode(col("v")).as(Seq("pos", "x")))
-        .withColumn("sub", (col("pos") / dsub).cast("int"))
-        .withColumn("cell", element_at(col("cells"), col("sub") + 1))
-        .groupBy(col("sub"), col("cell"), col("pos"))
-        .agg(round(avg(col("x").cast("double") /
-            when(col("nrm") > 0, col("nrm")).otherwise(lit(1.0))),
-          QuantizerRelation.MeanScale).as("mean"))
-        .collect()
-      val next = cb.books.map(_.map(_.clone()))
-      means.foreach { r =>
-        val (s, cell, pos) = (r.getInt(0), r.getInt(1), r.getInt(2))
-        next(s)(cell)(pos - s * dsub) = r.getDouble(3)
-      }
-      cb = Codebooks(m, dsub, next)
-    }
-    cb
-  }
+      seed: String = "km"): Codebooks =
+    Lloyd.fit(corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
+        m, k, iters, seed, unit = true)(encodeDispatch(_, "id", "v", _))
 
   /** Encode-side codebooks for TRUE L2 nearest-centroid assignment:
     * each centroid gains a −‖c‖²/2 coordinate, linearizing argmin-L2
@@ -169,46 +116,13 @@ object PqIndex {
     array((0 until dim).grouped(dsub).flatMap(g =>
       g.map(i => element_at(v, i + 1)) :+ lit(1.0f)).toSeq: _*)
 
-  /** Lloyd with TRUE L2 code assignment — for vector families where the
-    * scale-invariant argmax-dot assignment of [[train]] degenerates
-    * (near-1D rotated subspaces in OPQ; zero-centered residuals in
-    * residual PQ). Same one-distributed-aggregation-per-iteration
-    * shape; deterministic (id-hash seed rows, fixed iterations, empty
-    * cells keep their previous centroid).
-    *
-    * @param vecs (id, v: array<float>) with exactly `dim` elements
-    */
-  private[ops] def lloydL2(vecs: DataFrame, dim: Int, m: Int, k: Int,
-      iters: Int, seed: String = "km"): Codebooks = {
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    val seeds = vecs
-      .orderBy(QuantizerRelation.seedHash(col("id"), seed), col("id")).limit(k)
-      .select(col("v")).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    require(seeds.nonEmpty, "empty corpus")
-    var cb = Codebooks(m, dsub,
-      Array.tabulate(m)(mi => seeds.map(_.slice(mi * dsub, (mi + 1) * dsub))))
-    val aug = vecs.select(col("v"), augmentVecCol(col("v"), dim, dsub).as("av"))
-    (1 to iters).foreach { _ =>
-      val means = aug
-        .select(encode(col("av"), augmentL2(cb)).as("cells"),
-          posexplode(col("v")).as(Seq("pos", "x")))
-        .withColumn("sub", (col("pos") / dsub).cast("int"))
-        .withColumn("cell", element_at(col("cells"), col("sub") + 1))
-        .groupBy(col("sub"), col("cell"), col("pos"))
-        .agg(round(avg(col("x").cast("double")),
-          QuantizerRelation.MeanScale).as("mean"))
-        .collect()
-      val next = cb.books.map(_.map(_.clone()))
-      means.foreach { r =>
-        val (sub, cell, pos) = (r.getInt(0), r.getInt(1), r.getInt(2))
-        next(sub)(cell)(pos - sub * dsub) = r.getDouble(3)
-      }
-      cb = Codebooks(m, dsub, next)
-    }
-    cb
-  }
+  /** TRUE L2 code assignment of `rows(v)`, as a [[Lloyd.fit]]
+    * `assign`: for vector families where the scale-invariant argmax-dot
+    * assignment of [[train]] degenerates (near-1D rotated subspaces in
+    * OPQ; zero-centered residuals in residual PQ). */
+  private[ops] def assignL2(rows: DataFrame, cb: Codebooks): DataFrame =
+    rows.withColumn("codes",
+      encode(augmentVecCol(col("v"), cb.dim, cb.dsub), augmentL2(cb)))
 
   /** The codebook-form dispatch, shared by every encode/LUT site:
     * below the cutover (total centroids m·k) the reference-object
@@ -216,16 +130,15 @@ object PqIndex {
     * forms. Both semantics-identical — ties, degenerate windows, null
     * vectors — pinned at production shape in PqRelationSpec. */
   private[ops] def encodeDispatch(df: DataFrame, idCol: String,
-      vecCol: String, cb: Codebooks, cutoverCells: Int): DataFrame =
-    if (cb.m * cb.k < cutoverCells)
+      vecCol: String, cb: Codebooks): DataFrame =
+    if (cb.m * cb.k < QuantizerRelation.CutoverCells)
       df.withColumn("codes", encode(col(vecCol), cb))
     else
       PqRelation.encodeCells(df, idCol, vecCol,
         PqRelation.codebooksDf(df.sparkSession, cb))
 
-  private[ops] def lutDispatch(queries: DataFrame, cb: Codebooks,
-      cutoverCells: Int): DataFrame =
-    if (cb.m * cb.k < cutoverCells)
+  private[ops] def lutDispatch(queries: DataFrame, cb: Codebooks): DataFrame =
+    if (cb.m * cb.k < QuantizerRelation.CutoverCells)
       queries.select(col("qid"), lut(col("qvec"), cb).as("lut"))
     else
       PqRelation.lutRel(queries, "qid", "qvec",
@@ -235,21 +148,18 @@ object PqIndex {
     * re-rank of the shortlist against the raw vectors.
     * `shortlist >= |corpus|` degenerates to exact brute force. */
   def topK(queries: DataFrame, corpus: DataFrame, cb: Codebooks,
-      k: Int, shortlist: Int,
-      cutoverCells: Int = QuantizerRelation.CutoverCells): DataFrame = {
+      k: Int, shortlist: Int): DataFrame = {
     val encoded = encodeDispatch(corpus.select(col("id"), col("vec")),
-      "id", "vec", cb, cutoverCells).select(col("id"), col("codes"))
-    rerank(adcShortlist(encoded, queries, cb, shortlist, cutoverCells),
-      queries, corpus, k)
+      "id", "vec", cb).select(col("id"), col("codes"))
+    rerank(adcShortlist(encoded, queries, cb, shortlist), queries, corpus, k)
   }
 
   /** ADC + shortlist: the only stage that touches every corpus row, and
     * it carries (id, codes) ONLY — no embedding payload enters the
     * scan, the broadcast, or the shortlist shuffle. */
   private[ops] def adcShortlist(encoded: DataFrame, queries: DataFrame,
-      cb: Codebooks, shortlist: Int,
-      cutoverCells: Int = QuantizerRelation.CutoverCells): DataFrame = {
-    val ql = lutDispatch(queries, cb, cutoverCells)
+      cb: Codebooks, shortlist: Int): DataFrame = {
+    val ql = lutDispatch(queries, cb)
     // The ADC scan deliberately touches every corpus row, so the
     // shortlist cut MUST be two-phase (Similarity.rankPerQuery): a
     // qid-only window here would sort one query's entire scored corpus
@@ -280,10 +190,8 @@ object PqIndex {
     * re-rank fetches vectors for shortlist rows only. This is the
     * corpus-sized encode, so it routes through the same cutover as
     * [[topK]] — the layout is cutover-invariant (PqRelationSpec). */
-  def writeEncoded(corpus: DataFrame, cb: Codebooks, path: String,
-      cutoverCells: Int = QuantizerRelation.CutoverCells): Unit =
-    encodeDispatch(corpus.select(col("id"), col("vec")), "id", "vec",
-        cb, cutoverCells)
+  def writeEncoded(corpus: DataFrame, cb: Codebooks, path: String): Unit =
+    encodeDispatch(corpus.select(col("id"), col("vec")), "id", "vec", cb)
       .select(col("id"), col("codes"), col("vec"))
       .write.mode("overwrite").parquet(path)
 

@@ -1,8 +1,6 @@
 package graft.ops
 
-import graft.Materialize
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The LARGE-codebook form of product quantization: the m×k′×dsub
@@ -40,10 +38,9 @@ import org.apache.spark.sql.functions._
   *     ADC scan itself is UNCHANGED between forms (only how the table
   *     was built differs).
   *
-  * [[train]] is the per-subspace Lloyd loop in the same relational
-  * form — assignment is the broadcast join, per-iteration state is the
-  * m·k′-row relation, and nothing reaches the driver until
-  * [[collectCodebooks]] at the very end.
+  * Training is [[Lloyd.fit]] for every codebook size; at or above the
+  * cutover its assignment step is [[encodeCells]] here (through
+  * [[PqIndex.encodeDispatch]]).
   */
 object PqRelation {
 
@@ -54,17 +51,6 @@ object PqRelation {
       book.toIndexedSeq.zipWithIndex.map { case (c, cell) =>
         (mi, cell, c.toSeq) }
     }.toDF("sub", "cell", "cvec")
-  }
-
-  /** One driver collect at the END of training — the object the
-    * expression form carries. */
-  def collectCodebooks(cbDf: DataFrame): PqIndex.Codebooks = {
-    val rows = cbDf.orderBy("sub", "cell").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = rows.map(_._1).max + 1
-    val books = Array.tabulate(m)(mi =>
-      rows.filter(_._1 == mi).sortBy(_._2).map(_._3))
-    PqIndex.Codebooks(m, books(0)(0).length, books)
   }
 
   private def meta(cbDf: DataFrame): (Int, Int, Int) = {
@@ -160,58 +146,5 @@ object PqRelation {
       .select(col("qid"),
         when(col("_allok"),
           transform(col("_pairs"), p => p.getField("d"))).as("lut"))
-  }
-
-  /** Per-subspace Lloyd entirely in the relational form: the same
-    * deterministic hash-ordered seeds as [[PqIndex.train]] (whole-vector
-    * normalized, then sliced), each iteration assign (broadcast join)
-    * → per-(sub, cell, dim) norm-scaled mean → per-position coalesce
-    * against the previous centroid (empty cells keep their old
-    * coordinates). `localCheckpoint` cuts the per-iteration lineage.
-    * Returns the (sub, cell, cvec) relation; nothing reaches the
-    * driver (PqRelationSpec pins equality to the driver loop). */
-  def train(corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, k: Int, iters: Int = 2, seed: String = "km"): DataFrame = {
-    val probe = corpus.select(size(col(vecCol)).as("d")).limit(1).collect()
-    require(probe.nonEmpty, "empty corpus")
-    val dim = probe(0).getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    val base = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-      sqrt(graft.functions.functions.dot_product(col(vecCol), col(vecCol)))
-        .as("nrm"))
-    val w = Window.orderBy(QuantizerRelation.seedHash(col("id"), seed), col("id"))
-    val seeds = Materialize(base.orderBy(QuantizerRelation.seedHash(col("id"), seed), col("id"))
-      .limit(k)
-      .withColumn("cell", (row_number().over(w) - 1).cast("int"))
-      .select(col("cell"),
-        when(col("nrm") > 0,
-          transform(col("v"), x => x.cast("double") / col("nrm")))
-          .otherwise(col("v").cast("array<double>")).as("nv"))
-      .withColumn("sub", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("sub"), col("cell"),
-        slice(col("nv"), col("sub") * dsub + 1, lit(dsub)).as("cvec")))
-    Materialize.iterate(seeds, iters) { cb =>
-      val asg = encodeCells(base, "id", "v", cb)
-      // null-vec rows posexplode to nothing — exactly the driver loop's
-      // contribution (its expression encode also skips them)
-      val means = asg
-        .select(col("codes"), col("nrm"), posexplode(col("v")).as(Seq("pos", "x")))
-        .withColumn("sub", (col("pos") / dsub).cast("int"))
-        .withColumn("cell", element_at(col("codes"), col("sub") + 1))
-        .withColumn("p", col("pos") - col("sub") * dsub)
-        .groupBy("sub", "cell", "p")
-        .agg(round(avg(col("x").cast("double") /
-            when(col("nrm") > 0, col("nrm")).otherwise(lit(1.0))),
-          QuantizerRelation.MeanScale).as("mean"))
-        .groupBy("sub", "cell").agg(map_from_arrays(
-          collect_list(col("p")), collect_list(col("mean"))).as("byPos"))
-      cb.join(means, Seq("sub", "cell"), "left")
-        .select(col("sub"), col("cell"),
-          when(col("byPos").isNull, col("cvec"))
-            .otherwise(transform(sequence(lit(0), size(col("cvec")) - 1),
-              i => coalesce(element_at(col("byPos"), i),
-                element_at(col("cvec"), i + 1)))).as("cvec"))
-    }
   }
 }

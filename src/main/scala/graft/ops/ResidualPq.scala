@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * against the centroid matrix, one `element_at` per probed cell) and
   * only the residual is approximated.
   *
-  * Code assignment is TRUE L2 ([[PqIndex.lloydL2]] + the augmented-
-  * coordinate encode): residuals are zero-centered, exactly the family
+  * Code assignment is TRUE L2 ([[Lloyd.fit]] with
+  * [[PqIndex.assignL2]], the augmented-coordinate encode): residuals are zero-centered, exactly the family
   * where the scale-invariant argmax-dot assignment collapses (all
   * directions present, magnitudes load-bearing — the [[Opq]] lesson).
   *
@@ -57,12 +57,11 @@ object ResidualPq {
 
   /** Train residual codebooks: assign coarse cells, subtract the cell
     * centroid ([[graft.functions.CellResidualExpr]] — centroid matrix
-    * as one reference object), Lloyd with L2 assignment on the
-    * residuals. Deterministic end to end. */
+    * as one reference object), [[Lloyd.fit]] with L2 assignment on
+    * the residuals. Deterministic end to end. */
   def trainCodebooks(corpus: DataFrame, centroids: Array[Array[Double]],
       m: Int = 8, k: Int = 16, iters: Int = 2,
       seed: String = "km", rot: Option[Array[Array[Double]]] = None): PqIndex.Codebooks = {
-    val dim = centroids(0).length
     // Lloyd reads its input for the seeds and once per iteration —
     // materialize the residual pass (rotation, cell assignment k·d
     // matvec and residual) once instead of re-running it per read.
@@ -73,7 +72,7 @@ object ResidualPq {
         graft.functions.functions.cell_residual(col("vec"), col(CellIndex.Col),
           IvfIndex.unitRows(centroids), normalize = true).as("v"))
       .filter(col("v").isNotNull))
-    PqIndex.lloydL2(resid, dim, m, k, iters, seed)
+    Lloyd.fit(resid, m, k, iters, seed)(PqIndex.assignL2)
   }
 
   /** (cell, id, codes, vec): cells via the coarse quantizer, codes via

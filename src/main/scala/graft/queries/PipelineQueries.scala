@@ -224,7 +224,7 @@ object PipelineQueries {
   /** PRODUCTION-pruned ANN configurations in the timed surface — and,
     * since round 18, HASH-GATED like everything else: the portable
     * quantizer seeding + 6-dp Lloyd means
-    * ([[graft.ops.QuantizerRelation.seedHash]]) make the full
+    * ([[graft.ops.Lloyd.seedHash]]) make the full
     * train→assign→probe chain a pure function DuckDB recomputes
     * ([[QuantizerReplay]]), so the pruned modes' approximation is now
     * oracle-CHECKED rather than merely rows-counted. The exhaustive

@@ -4,9 +4,8 @@ package graft.queries
   * turn every trained-codebook ANN family's PRUNED production
   * configuration into an oracle-checkable relation (round-18 directive
   * #1, extended to the pruned modes themselves): deterministic k-means
-  * (portable md5-60 `"km" ‖ id` seed order + 6-dp Lloyd means —
-  * [[graft.ops.QuantizerRelation.seedHash]] /
-  * [[graft.ops.QuantizerRelation.MeanScale]]), cell assignment and
+  * (portable md5-60 `"km" ‖ id` seed order + 6-dp Lloyd means — the
+  * one Spark trainer, [[graft.ops.Lloyd]]), cell assignment and
   * probe selection with the expressions' larger-index tie rule, PQ
   * codes/LUT/ADC with the fixed-order term sums the codegen'd
   * expressions use, L2 (augmented-coordinate) assignment for the
@@ -29,10 +28,11 @@ package graft.queries
 object QuantizerReplay {
   import Md5Sql.hexVal
 
-  /** Coarse-IVF Lloyd replay ([[graft.ops.IvfIndex.train]]): seeds by
-    * portable hash order, `iters` rounds of unit-row argmax assignment
-    * (tie → larger cell) and 6-dp raw means (empty cells keep their
-    * previous coordinates). Ends in `{pfx}cent{iters}(cell, cvec)` and
+  /** Coarse-IVF Lloyd replay ([[graft.ops.IvfIndex.train]], the m = 1
+    * [[graft.ops.Lloyd.fit]]): seeds by portable hash order, `iters`
+    * rounds of unit-row argmax assignment (tie → larger cell) and
+    * 6-dp raw means (empty cells keep their previous coordinates).
+    * Ends in `{pfx}cent{iters}(cell, cvec)` and
     * the unit rows `{pfx}u{iters}(cell, ucvec)`. */
   def ivfTrainCtes(corpus: String, pfx: String = "iv", k: Int = 8,
       iters: Int = 2, dim: Int = 64, seed: String = "km"): String = {
@@ -110,7 +110,8 @@ object QuantizerReplay {
        |  FROM $corpus b JOIN ${pfx}cc cc ON cc.id = b.id
        |  JOIN ${pfx}u$iters u ON u.cell = cc.cell)""".stripMargin
 
-  /** PQ Lloyd replay ([[graft.ops.PqIndex.train]] — scale-invariant
+  /** PQ Lloyd replay ([[graft.ops.PqIndex.train]] through
+    * [[graft.ops.Lloyd.fit]] — scale-invariant
     * argmax-dot assignment, means of `x/‖row‖`): unit-normalized
     * portable-hash seeds sliced per subspace, `iters` rounds. Ends in
     * `{pfx}cent{iters}(sub, cell, cvec)` plus `{pfx}base(id, vec,
@@ -216,8 +217,9 @@ object QuantizerReplay {
        |      s.id) AS rank
        |  FROM $shortRel s JOIN q ON q.qid = s.qid JOIN c ON c.id = s.id)""".stripMargin
 
-  /** [[graft.ops.PqIndex.lloydL2]] replay over a float-quantized
-    * residual relation: raw portable-hash seeds, TRUE-L2 assignment
+  /** [[graft.ops.Lloyd.fit]] with [[graft.ops.PqIndex.assignL2]]
+    * ([[graft.ops.ResidualPq.trainCodebooks]]) replay over a
+    * float-quantized residual relation: raw portable-hash seeds, TRUE-L2 assignment
     * via the augmented form `argmax(dot(sub, c) + 1·(−0.5·‖c‖²))`
     * (tie → larger cell — exactly [[graft.functions.PqEncodeExpr]]
     * over the augmented layout), 6-dp plain means. Ends in

@@ -11,9 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Seed SELECTION for the trained-quantizer production configurations
   * — the round-18 "the audited number is seed luck" fix: because every
   * k-means chain is a pure function of (corpus, seed string)
-  * ([[graft.ops.QuantizerRelation.seedHash]]), a seed is not a random
-  * draw to be defaulted but a HYPERPARAMETER to be swept and
-  * committed. This tool sweeps the candidate seed set through each
+  * ([[graft.ops.Lloyd.seedHash]]), a seed is not a random draw to
+  * be defaulted but a HYPERPARAMETER to be swept and committed. This tool sweeps the candidate seed set through each
   * family's OWN pruned production configuration on the gate corpus,
   * measures recall@10 against brute force (the family-table metric),
   * prints the sweep, and writes it as ONE parquet fixture

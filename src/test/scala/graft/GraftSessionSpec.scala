@@ -14,8 +14,9 @@ import org.apache.spark.SparkConf
   * starts, and [[RunMeter]] the only code that listens to or drains the
   * listener bus. [[graft.queries.AnnHarness]] alone decides which
   * vectors are the standing ANN queries, [[graft.ops.SetSimilarity]]
-  * alone builds, cuts and scores shingle sets, and [[graft.ops.CellIndex]]
-  * alone writes and probes the cell-partitioned ANN layout. */
+  * alone builds, cuts and scores shingle sets, [[graft.ops.CellIndex]]
+  * alone writes and probes the cell-partitioned ANN layout, and
+  * [[graft.ops.Lloyd]] alone seeds and averages a k-means quantizer. */
 class GraftSessionSpec extends SparkSpec {
 
   private val Main = "src/main/scala"
@@ -75,6 +76,13 @@ class GraftSessionSpec extends SparkSpec {
     assert(sites(Main)(layout: _*) == Seq("CellIndex.scala"))
     val gone = Seq("trainCodebooks", "encoded", "writeIndex", "topK", "appendIndexEpoch")
       .map(_ + "Rotated") :+ ("IvfPq.appendIndex" + "(")
+    assert(sites(Both: _*)(gone: _*).isEmpty)
+  }
+
+  test("only Lloyd.scala seeds or averages a quantizer; the relational trainer twins are gone") {
+    assert(sites(Main)("seedHash" + "(", "Mean" + "Scale") == Seq("Lloyd.scala"))
+    val gone = Seq("QuantizerRelation.train" + "(", "PqRelation.train" + "(", "lloydL2" + "(",
+      "collect" + "Centroids", "collect" + "Codebooks", "normalize" + "Rows", "Opq." + "augment")
     assert(sites(Both: _*)(gone: _*).isEmpty)
   }
 

@@ -115,11 +115,14 @@ class IvfIndexSpec extends SparkSpec {
   test("writeIndexed layout is cutover-invariant: expression and join forms write identical indexes") {
     val emb = Tables.embeddings(spark, sf001).limit(150)
       .select($"vec_id".as("id"), $"embedding".as("vec"))
-    val cents = IvfIndex.train(emb, "id", "vec", k = 4, iters = 1)
+    // a k×64 matrix at the cutover by size: writeIndexed assigns through
+    // the broadcast join; the expression layout is written directly
+    val cents = Array.tabulate(QuantizerRelation.CutoverCells, 64)((c, j) =>
+      (((c * 131L + j * 31L + 17L) * 2654435761L) % 2000L) / 1000.0 - 1.0)
     val dExpr = graft.Staging.dirFor("ivf-write-expr")
     val dJoin = graft.Staging.dirFor("ivf-write-join")
-    IvfIndex.writeIndexed(emb, cents, dExpr) // k=4 < cutover: expression
-    IvfIndex.writeIndexed(emb, cents, dJoin, cutoverCells = 1) // forced join form
+    CellIndex.write(emb.withColumn(CellIndex.Col, IvfIndex.bestCell(col("vec"), cents)), dExpr)
+    IvfIndex.writeIndexed(emb, cents, dJoin)
     def layout(d: String) = spark.read.parquet(d)
       .select("id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap

@@ -83,7 +83,7 @@ class OpqSpec extends SparkSpec {
     val model = Opq.train(corpus, basis, m = 4, k = 16, iters = 2)
     val used = corpus.select(
         PqIndex.encode(Opq.encodeVecCol(col("vec"), basis, model.order, 4),
-          Opq.augment(model.cb)).as("codes"))
+          PqIndex.augmentL2(model.cb)).as("codes"))
       .select(posexplode(col("codes")).as(Seq("sub", "code")))
       .groupBy("sub").agg(countDistinct("code").as("nd"))
       .collect().map(r => r.getLong(1))

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** The broadcast-relation PQ codebook ([[PqRelation]]): encode and LUT
   * parity with the expression forms at a production-shaped m·k′ above
   * the cutover (incl. every degenerate class), the plan gate showing
-  * the codebook rides a BroadcastExchange, cutover-invariant layouts,
-  * and relational per-subspace Lloyd ≡ the driver loop. */
+  * the codebook rides a BroadcastExchange, and cutover-invariant
+  * results and layouts (training through either form is LloydSpec's). */
 class PqRelationSpec extends SparkSpec {
   import spark.implicits._
 
@@ -93,54 +93,30 @@ class PqRelationSpec extends SparkSpec {
   test("PqIndex.topK cuts over by m·k and both paths agree end-to-end") {
     val emb = Tables.embeddings(spark, sf001)
     val queries = emb.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qvec"))
-    val corpus = emb.filter($"vec_id" >= 5).select($"vec_id".as("id"), $"embedding".as("vec"))
-    val cb = mkBooks(8, 16, 8)
+    val corpus = emb.filter($"vec_id" >= 5 && $"vec_id" < 205)
+      .select($"vec_id".as("id"), $"embedding".as("vec"))
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val viaExpr = PqIndex.topK(queries, corpus, cb, k = 10, shortlist = 40)
-    val viaRel = PqIndex.topK(queries, corpus, cb, k = 10, shortlist = 40,
-      cutoverCells = 1)
+    // `big` is at the cutover by size: topK encodes and builds its LUTs
+    // through the relation; the expression pipeline is built directly
+    val viaRel = PqIndex.topK(queries, corpus, big, k = 10, shortlist = 40)
+    val encoded = corpus.select(col("id"), PqIndex.encode(col("vec"), big).as("codes"))
+    val luts = queries.select(col("qid"), PqIndex.lut(col("qvec"), big).as("lut"))
+    val scored = encoded.crossJoin(luts)
+      .withColumn("adc", PqIndex.adcScore(col("codes"), col("lut"), big.m, big.k))
+    val short = Similarity.rankPerQuery(scored, col("adc"), 40).select(col("qid"), col("id"))
+    val viaExpr = PqIndex.rerank(short, queries, corpus, k = 10)
     assert(key(viaExpr) == key(viaRel), "cutover must not change results")
   }
 
   test("writeEncoded layout is cutover-invariant") {
     val corpus = Tables.embeddings(spark, sf001).limit(100)
       .select($"vec_id".as("id"), $"embedding".as("vec"))
-    val cb = mkBooks(8, 16, 8)
     val a = graft.Staging.dirFor("pq-cut-a")
-    val b = graft.Staging.dirFor("pq-cut-b")
-    PqIndex.writeEncoded(corpus, cb, a)
-    PqIndex.writeEncoded(corpus, cb, b, cutoverCells = 1)
-    def stored(p: String) = spark.read.parquet(p).select("id", "codes")
+    PqIndex.writeEncoded(corpus, big, a) // at the cutover: relation form
+    val stored = spark.read.parquet(a).select("id", "codes")
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(stored(a) == stored(b))
-  }
-
-  test("relational per-subspace Lloyd ≡ driver-loop training") {
-    val corpus = Tables.embeddings(spark, sf001).limit(300)
-      .select($"vec_id".as("id"), $"embedding".as("vec"))
-    val driver = PqIndex.train(corpus, "id", "vec", m = 8, k = 4, iters = 2)
-    val rel = PqRelation.collectCodebooks(
-      PqRelation.train(corpus, "id", "vec", m = 8, k = 4, iters = 2))
-    assert(rel.m == driver.m && rel.dsub == driver.dsub)
-    for (mi <- 0 until driver.m; c <- 0 until driver.k; j <- 0 until driver.dsub)
-      assert(math.abs(driver.books(mi)(c)(j) - rel.books(mi)(c)(j)) < 1e-9,
-        s"sub $mi cell $c dim $j: ${driver.books(mi)(c)(j)} vs ${rel.books(mi)(c)(j)}")
-    // and the trained codebooks induce IDENTICAL corpus codes
-    val c1 = codesOf(corpus.withColumn("codes", PqIndex.encode(col("vec"), driver)))
-    val c2 = codesOf(corpus.withColumn("codes", PqIndex.encode(col("vec"), rel)))
-    assert(c1 == c2)
-  }
-
-  test("PqIndex.train above the cutover routes through the relational loop") {
-    val corpus = Tables.embeddings(spark, sf001).limit(120)
-      .select($"vec_id".as("id"), $"embedding".as("vec"))
-    val viaCutover = PqIndex.train(corpus, "id", "vec", m = 8, k = 4,
-      iters = 1, cutoverCells = 1)
-    val direct = PqRelation.collectCodebooks(
-      PqRelation.train(corpus, "id", "vec", m = 8, k = 4, iters = 1))
-    assert(viaCutover.books.map(_.map(_.toSeq).toSeq).toSeq ==
-      direct.books.map(_.map(_.toSeq).toSeq).toSeq)
+    assert(stored == codesOf(corpus.withColumn("codes", PqIndex.encode(col("vec"), big))))
   }
 }

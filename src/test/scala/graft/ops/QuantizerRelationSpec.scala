@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Broadcast-relation quantizer ([[QuantizerRelation]]): exact
   * assignment parity with the reference-object expression at k=1024
   * (including every degenerate class), the BroadcastExchange plan
-  * shape, the automatic cutover in [[IvfIndex.assignCells]], and
-  * relational training parity with the driver-loop trainer. */
+  * shape and the automatic cutover in [[IvfIndex.assignCells]]
+  * (training through either form is LloydSpec's). */
 class QuantizerRelationSpec extends SparkSpec {
   import spark.implicits._
 
@@ -87,46 +87,20 @@ class QuantizerRelationSpec extends SparkSpec {
   }
 
   test("IvfIndex.assignCells cuts over by k and both paths agree") {
-    val m = matrix(64, 8)
     val (good, _, _) = corpusWithDegens
-    val small = IvfIndex.assignCells(good, "id", "vec", m)
-    val forcedJoin = IvfIndex.assignCells(good, "id", "vec", m, cutoverCells = 1)
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val small = IvfIndex.assignCells(good, "id", "vec", matrix(64, 8))
     assert(!small.queryExecution.executedPlan.toString.contains("BroadcastExchange"),
       "below cutover: expression form, no join")
-    assert(forcedJoin.queryExecution.executedPlan.toString.contains("BroadcastExchange"),
-      "above cutover: broadcast join form")
-    assert(small.select("id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap ==
-      forcedJoin.select("id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
+    // at the cutover by size: the broadcast join, against the
+    // expression form built directly over the same matrix
+    val m = matrix(QuantizerRelation.CutoverCells, 8)
+    val large = IvfIndex.assignCells(good, "id", "vec", m)
+    assert(large.queryExecution.executedPlan.toString.contains("BroadcastExchange"),
+      "at the cutover: broadcast join form")
+    assert(cells(large) == cells(good.withColumn("cell", IvfIndex.bestCell(col("vec"), m))))
     // carried payload columns survive the join form
-    assert(forcedJoin.columns.toSet == Set("id", "vec", "cell"))
-  }
-
-  test("relational training ≡ driver-loop training (same seeds, same Lloyd updates)") {
-    val corpus = Tables.embeddings(spark, sf001).limit(300)
-      .select($"vec_id".as("id"), $"embedding".as("vec"))
-    val driver = IvfIndex.train(corpus, "id", "vec", k = 4, iters = 2)
-    val rel = QuantizerRelation.collectCentroids(
-      QuantizerRelation.train(corpus, "id", "vec", k = 4, iters = 2))
-    assert(rel.length == driver.length)
-    driver.zip(rel).zipWithIndex.foreach { case ((d, r), c) =>
-      d.zip(r).foreach { case (x, y) =>
-        assert(math.abs(x - y) < 1e-9, s"cell $c: $x vs $y") }
-    }
-    // and the trained quantizers induce IDENTICAL corpus assignments
-    val a1 = corpus.withColumn("cell", IvfIndex.bestCell(col("vec"), driver))
-      .select("id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val a2 = corpus.withColumn("cell", IvfIndex.bestCell(col("vec"), rel))
-      .select("id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(a1 == a2)
-  }
-
-  test("IvfIndex.train above the cutover routes through the relational loop") {
-    val corpus = Tables.embeddings(spark, sf001).limit(120)
-      .select($"vec_id".as("id"), $"embedding".as("vec"))
-    val viaCutover = IvfIndex.train(corpus, "id", "vec", k = 4, iters = 1,
-      cutoverCells = 1)
-    val direct = QuantizerRelation.collectCentroids(
-      QuantizerRelation.train(corpus, "id", "vec", k = 4, iters = 1))
-    assert(viaCutover.map(_.toSeq).toSeq == direct.map(_.toSeq).toSeq)
+    assert(large.columns.toSet == Set("id", "vec", "cell"))
   }
 }
