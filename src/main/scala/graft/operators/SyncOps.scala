@@ -80,36 +80,14 @@ object SyncOps {
     e.join(broadcast(r), cond, "inner")
   }
 
-  /** Single-identity convenience overload: a watcher known only by mode
-    * (single-remote deployments — matches any syncer of that mode). */
-  def matchRules(events: DataFrame, rules: DataFrame, watcherMode: String): DataFrame =
-    matchRules(events, rules, WatcherId(watcherMode))
-
   /** D10 — nested-field projection (`filterFields`,
     * krmsyncer_controller.go:561-584): identity columns always retained;
-    * each dotted path in `syncFields` copies that payload subtree;
+    * each dotted path in the row's own `syncFields` array column (the
+    * shape produced by [[matchRules]]) copies that payload subtree;
     * missing paths silently skipped. Payloads live in the JSON-string
     * columns `spec` / `status`; dotted paths are relative to the document
-    * root (`spec`, `status`, `spec.resourceID`).
-    */
-  def filterFields(df: DataFrame, syncFields: Seq[String]): DataFrame = {
-    val fields = if (syncFields.isEmpty) Seq("status") else syncFields
-    def projected(payloadCol: String): Column = {
-      val whole = fields.contains(payloadCol)
-      val subs = fields.filter(_.startsWith(payloadCol + ".")).map(_.stripPrefix(payloadCol + "."))
-      if (whole) col(payloadCol)
-      else if (subs.nonEmpty) json_project(col(payloadCol), subs)
-      else lit(null).cast("string")
-    }
-    val passthrough = df.columns.filter(c => c == "op").map(col).toSeq
-    df.select((KrmModel.identityCols.map(col) ++
-      Seq(projected("spec").as("spec"), projected("status").as("status")) ++
-      passthrough): _*)
-  }
-
-  /** Variant of D10 where each row carries its own `syncFields` array
-    * column (the shape produced by [[matchRules]]): the comma-joined path
-    * list is passed per-row into the projection expression.
+    * root (`spec`, `status`, `spec.resourceID`). The comma-joined path
+    * list is passed per row into the projection expression.
     */
   def filterFieldsPerRow(df: DataFrame, syncFieldsCol: Column): DataFrame = {
     import graft.functions.{JsonProjectExpr}

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *     stream immediately. Nothing document-sized crosses more than one
   *     exchange. Totals (tN, rN) are driver scalars, model parameters
   *     like the LM vocabulary.
-  *   - RESAMPLING is a per-row hash + one top-n ([[Skew.saltedTopK]]):
+  *   - RESAMPLING is a per-row hash + one top-n ([[Rank.head]]):
   *     Gumbel keys make "sample n without replacement ∝ exp(logw)" a
   *     stateless ranking — no sequential draw, no driver loop.
   *
@@ -177,9 +177,7 @@ object Dsir {
   /** Select `n` documents ∝ exp(logw) without replacement. Input must
     * carry (id, logw); output adds (key, rk), rk ∈ [1, n]. */
   def resample(weights: DataFrame, n: Int, seed: String): DataFrame = {
-    val keyed = weights.withColumn("key", gumbelKey(col("logw"), col("id"), seed))
-    Skew.saltedTopK(keyed.withColumn("qid", lit(0)), Seq("qid"),
-        Seq(col("key").desc, col("id").asc), n, saltBy = col("id"))
-      .drop("qid").withColumnRenamed("rank", "rk")
+    Rank.head(weights.withColumn("key", gumbelKey(col("logw"), col("id"), seed)),
+      n, col("key").desc, col("id").asc)
   }
 }

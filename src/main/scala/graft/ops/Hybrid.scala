@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** HYBRID retrieval fusion — Reciprocal-Rank Fusion (Cormack, Clarke &
@@ -36,9 +35,8 @@ object Hybrid {
     * attributable to its ranker; ORDER is semantic — reciprocal terms
     * add left to right, so the same list order replays the same IEEE
     * sum in any engine (the 2-ranker (lexical, vector) convention,
-    * generalized). Output: (id, rrf, rk), rk ∈ [1, k]; the fused
-    * relation is cut to its top k before the rank window, so the
-    * window never sees more than k rows. */
+    * generalized). Output: (id, rrf, rk), rk ∈ [1, k] — the fused
+    * relation's [[Rank.head]]. */
   def rrfTopKN(rankers: Seq[(String, DataFrame)], k: Int,
       k0: Int = 60): DataFrame = {
     require(rankers.nonEmpty, "rrfTopKN needs at least one ranker")
@@ -58,12 +56,8 @@ object Hybrid {
     val rrf = aliases
       .map(a => coalesce(lit(1.0) / (lit(k0) + col(a)), lit(0.0)))
       .reduce(_ + _)
-    // distributed top-k first (TextIndex.bm25TopK's cut): the rank
-    // window then only ever sees k rows
-    joined.select(col("id"), round(rrf, 6).as("rrf"))
-      .orderBy(col("rrf").desc, col("id")).limit(k)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("rrf").desc, col("id"))))
+    Rank.head(joined.select(col("id"), round(rrf, 6).as("rrf")), k,
+      col("rrf").desc, col("id"))
   }
 
   /** Fuse two (id, rk) rankings — [[rrfTopKN]] at the classic
@@ -76,9 +70,9 @@ object Hybrid {
   /** Single-query hybrid top-k over a corpus carrying BOTH a text and
     * an embedding column: BM25 over `queryTerms` fused with cosine
     * against `qvec` (a 1-row (qvec) relation), each ranker cut at `m`
-    * before fusion. The vector ranking is the family's two-phase
-    * salted top-k (4-dp rounded scores, ties by id) — no global window
-    * ever sees the corpus. */
+    * before fusion. The vector ranking is the [[Rank.head]] of 4-dp
+    * rounded cosines, ties by id — no global window ever sees the
+    * corpus. */
   def hybridTopK(corpus: DataFrame, idCol: String, textCol: String,
       vecCol: String, queryTerms: Seq[String], qvec: DataFrame,
       k: Int, m: Int, k0: Int = 60): DataFrame = {
@@ -86,12 +80,9 @@ object Hybrid {
     val lex = TextIndex.bm25TopK(corpus, idCol, textCol, queryTerms, m)
       .select(col("id"), col("rk"))
     val scored = corpus.crossJoin(broadcast(qvec))
-      .select(lit(0).as("qid"), col(idCol).as("id"),
+      .select(col(idCol).as("id"),
         round(Similarity.cosine(col(vecCol), col("qvec")), 4).as("score"))
-    val vec = Skew.saltedTopK(scored, Seq("qid"),
-        Seq(col("score").desc, col("id").asc), m, saltBy = col("id"))
-      .select(col("id"), col("rank").as("rk"))
-    rrfTopK(lex, vec, k, k0)
+    rrfTopK(lex, vecRanking(scored, m), k, k0)
   }
 
   /** The SERVING composition: [[hybridTopK]] from the two ON-DISK
@@ -104,7 +95,7 @@ object Hybrid {
     * (the family's oracle stance; `q_hybrid_rrf_indexed` hash-gates
     * it); smaller `nProbe` is the recall-traded production
     * configuration, whose fused recall HybridSpec floors. The vector
-    * ranking keeps the 4-dp salted-top-k convention, so indexed ≡
+    * ranking keeps the 4-dp rounded head, so indexed ≡
     * inline is exact, not approximate. */
   def hybridTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       bm25Path: String, annPath: String,
@@ -147,17 +138,19 @@ object Hybrid {
 
   /** The shared pruned dense ranking: probed-cell literal scan of a
     * cell-partitioned layout (flat or epoch-nested — `cell` is a
-    * partition column either way), 4-dp cosine, salted top-m. */
+    * partition column either way), 4-dp cosine, top-m head. */
   private def prunedVecRanking(spark: org.apache.spark.sql.SparkSession,
       annPath: String, centroids: Array[Array[Double]], qvec: DataFrame,
       m: Int, nProbe: Int): DataFrame = {
     val cb = CellIndex.probe(spark.read.parquet(annPath), qvec.select(
       explode(IvfIndex.probeCells(col("qvec"), centroids, nProbe)).as(CellIndex.Col)))
-    val scored = cb.crossJoin(broadcast(qvec))
-      .select(lit(0).as("qid"), col("id"),
-        round(Similarity.cosine(col("vec"), col("qvec")), 4).as("score"))
-    Skew.saltedTopK(scored, Seq("qid"),
-        Seq(col("score").desc, col("id").asc), m, saltBy = col("id"))
-      .select(col("id"), col("rank").as("rk"))
+    vecRanking(cb.crossJoin(broadcast(qvec)).select(col("id"),
+      round(Similarity.cosine(col("vec"), col("qvec")), 4).as("score")), m)
   }
+
+  /** The dense ranker: (id, rk) of the top m (id, score) rows, ties by
+    * id. */
+  private def vecRanking(scored: DataFrame, m: Int): DataFrame =
+    Rank.head(scored, m, col("score").desc, col("id").asc)
+      .select(col("id"), col(Rank.Col))
 }

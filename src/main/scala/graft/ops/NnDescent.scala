@@ -44,47 +44,33 @@ object NnDescent {
   private def cosRounded(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     round(Similarity.cosine(a, b), 4)
 
-  /** Global md5-order rank of the node set — `row_number` by (h, id)
-    * where h = md5-60(seed ‖ id) — computed as a TWO-PHASE distributed
-    * rank (the [[Sampling.packShardsGlobal]] prefix-sum shape), never a
-    * global unpartitioned window: bucket each node by the top 10 bits
-    * of its hash (monotone in h, so bucket order ≡ global hash order),
-    * collect the ≤ 1024 per-bucket COUNTS to the driver (model-sized,
-    * like centroids — this also yields n for free), exclusive-prefix
-    * them there, then rank WITHIN each bucket in parallel and add the
-    * broadcast bucket offset. Ties in h land in one bucket by
-    * construction (bucket is a function of h), so the (h, id)
-    * tie-break is exact and the result is row-identical to the global
-    * window form — but no partition ever sees more than ~n/1024 rows.
-    *
-    * Returns ((id, r), n) with r ∈ [1, n] — the same pure function of
-    * (seed, id-set) the DuckDB oracle replays with ONE ranking window. */
-  private[ops] def rankByHash(nodes: DataFrame, seed: String): (DataFrame, Long) = {
-    val hashed = nodes.select(col("id"))
-      .withColumn("h", Dedup.md5TokenHash60(concat(lit(seed), col("id").cast("string"))))
-      .withColumn("bkt", shiftright(col("h"), 50))
-    val totals = hashed.groupBy("bkt").agg(count(lit(1)).as("bn"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val n = totals.map(_._2).sum
-    var acc = 0L
-    val offs = totals.map { case (b, c) => val o = acc; acc += c; (b, o) }
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val offDf = offs.toIndexedSeq.toDF("bkt", "boff")
-    val wIn = Window.partitionBy(col("bkt")).orderBy(col("h"), col("id"))
-    val ranked = hashed.join(broadcast(offDf), Seq("bkt"))
-      .withColumn("r", col("boff") + row_number().over(wIn))
-      .select("id", "r")
-    (ranked, n)
-  }
+  /** (id, h) with h = md5-60(seed ‖ id): (h, id) is the deterministic
+    * node order the init ranks by and the entry head is cut from — a
+    * pure function of (seed, id-set) the DuckDB oracle replays with one
+    * ranking window. */
+  private def hashed(nodes: DataFrame, seed: String): DataFrame =
+    nodes.select(col("id"),
+      Dedup.md5TokenHash60(concat(lit(seed), col("id").cast("string"))).as("h"))
 
-  /** Deterministic pseudo-RANDOM init: nodes ranked by md5-60 order
-    * ([[rankByHash]] — two-phase, no global window), each adopting k
-    * hash-derived JUMP targets (jump ∈ [1, n−1] from md5(seed, rank,
-    * j)). A seeded ring would be far simpler but is pathologically
-    * LOCAL — every co-neighborhood lies within ±k ring positions, so
-    * the local join only ever meets ring-adjacent nodes and
-    * convergence stalls (measured: recall 0.04 after a sweep).
+  /** The first `entries` nodes in (h, id) order — the query-independent
+    * entry points of every md5-seeded graph walk. */
+  private def entryHead(nodes: DataFrame, entries: Int, seed: String): DataFrame =
+    Rank.head(hashed(nodes, seed), entries, col("h"), col("id")).select("id")
+
+  /** (id, r): the nodes ranked 1..n in (h, id) order — [[Rank.prefix]]
+    * over the top 10 bits of h, which are monotone in h, so no window
+    * ranks the whole node set. */
+  private[ops] def initRank(nodes: DataFrame, seed: String): DataFrame =
+    Rank.prefix(hashed(nodes, seed), shiftright(col("h"), 50), lit(1L), "before")(
+        col("h"), col("id"))
+      .select(col("id"), (col("before") + 1).as("r"))
+
+  /** Deterministic pseudo-RANDOM init: nodes ranked by [[initRank]],
+    * each adopting k hash-derived JUMP targets (jump ∈ [1, n−1] from
+    * md5(seed, rank, j)). A seeded ring would be far simpler but is
+    * pathologically LOCAL — every co-neighborhood lies within ±k ring
+    * positions, so the local join only ever meets ring-adjacent nodes
+    * and convergence stalls (measured: recall 0.04 after a sweep).
     * Random jumps restore the paper's uniform init while staying an
     * exact function of (seed, rank, j) the oracle replays. Duplicate
     * jump targets collapse (DISTINCT), so a node may start with < k
@@ -97,19 +83,22 @@ object NnDescent {
     // The rank relation feeds the jump derivation AND the r2-lookup join
     // below — materialize once so the bucketed rank window (a corpus
     // pass) isn't replayed per reference.
-    val (ranked0, n) = rankByHash(nodes, seed)
-    require(n >= 2, s"NN-Descent needs >= 2 nodes (jump ∈ [1, n−1]); got $n")
-    val ranked = Materialize(ranked0)
-    val offDf = nodes.sparkSession.range(1, k + 1).toDF("j")
-    try use(ranked.crossJoin(broadcast(offDf))
-      .withColumn("jump", pmod(Dedup.md5TokenHash60(concat(lit(seed),
-        col("r").cast("string"), lit("_"), col("j").cast("string"))),
-        lit(n - 1)) + 1)
-      .withColumn("r2", pmod(col("r") - 1 + col("jump"), lit(n)) + 1)
-      .join(ranked.select(col("r").as("r2"), col("id").as("nbr")), Seq("r2"))
-      .filter(col("id") =!= col("nbr"))
-      .select("id", "nbr").distinct())
-    finally Materialize.release(ranked)
+    val ranked = Materialize(initRank(nodes, seed))
+    try {
+      // an RDD count of the checkpoint is one job; `Dataset.count` adds
+      // an exchange and a second
+      val n = ranked.queryExecution.toRdd.count()
+      require(n >= 2, s"NN-Descent needs >= 2 nodes (jump ∈ [1, n−1]); got $n")
+      val offDf = nodes.sparkSession.range(1, k + 1).toDF("j")
+      use(ranked.crossJoin(broadcast(offDf))
+        .withColumn("jump", pmod(Dedup.md5TokenHash60(concat(lit(seed),
+          col("r").cast("string"), lit("_"), col("j").cast("string"))),
+          lit(n - 1)) + 1)
+        .withColumn("r2", pmod(col("r") - 1 + col("jump"), lit(n)) + 1)
+        .join(ranked.select(col("r").as("r2"), col("id").as("nbr")), Seq("r2"))
+        .filter(col("id") =!= col("nbr"))
+        .select("id", "nbr").distinct())
+    } finally Materialize.release(ranked)
   }
 
   /** One NN-Descent sweep over the scored edge set (id, nbr, score):
@@ -203,8 +192,8 @@ object NnDescent {
     * `beam` become the next frontier, and the answer is the top-k of
     * everything visited.
     *
-    *   - ENTRY points are the md5-rank head ([[rankByHash]] — the same
-    *     deterministic order the init uses), query-independent.
+    *   - ENTRY points are the md5-order head ([[Rank.head]] in the
+    *     same (h, id) order the init ranks by), query-independent.
     *   - Each hop's frontier is (queries × beam) rows — broadcast onto
     *     the edge relation, so the only data-sized side is the edge
     *     scan and no hop shuffles the corpus. Visited sets stay
@@ -239,10 +228,8 @@ object NnDescent {
   def searchGraph(graph: DataFrame, nodes: DataFrame, queries: DataFrame,
       k: Int, entries: Int, beam: Int, hops: Int,
       seed: String = "nnd"): DataFrame = {
-    require(entries >= 1)
-    val (ranked, _) = rankByHash(nodes, seed)
-    searchGraphFrom(graph, nodes, queries, k,
-      ranked.filter(col("r") <= entries).select("id"), beam, hops)
+    searchGraphFrom(graph, nodes, queries, k, entryHead(nodes, entries, seed),
+      beam, hops)
   }
 
   /** ONE entry point per coarse-quantizer cell — the node closest to
@@ -448,10 +435,8 @@ object NnDescent {
   def searchGraphFiltered(graph: DataFrame, nodes: DataFrame,
       queries: DataFrame, k: Int, entries: Int, beam: Int, hops: Int,
       predicate: Column, seed: String = "nnd"): DataFrame = {
-    require(entries >= 1)
-    val (ranked, _) = rankByHash(nodes, seed)
     searchGraphFilteredFrom(graph, nodes, queries, k,
-      ranked.filter(col("r") <= entries).select("id"), beam, hops, predicate)
+      entryHead(nodes, entries, seed), beam, hops, predicate)
   }
 
   /** [[searchGraphFiltered]] from an explicit entry relation. */
@@ -708,7 +693,7 @@ object NnDescent {
     out
   }
 
-  /** [[searchGraphFiltered]]'s indexed twin: md5-rank-head entry
+  /** [[searchGraphFiltered]]'s indexed twin: md5-order-head entry
     * points, then [[searchGraphIndexedFilteredFrom]]. */
   def searchGraphIndexedFiltered(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, nodes: DataFrame, queries: DataFrame, k: Int,
@@ -716,14 +701,12 @@ object NnDescent {
       numBuckets: Int = DefaultGraphBuckets,
       frontierCutover: Int = DefaultFrontierCutover,
       seed: String = "nnd"): DataFrame = {
-    require(entries >= 1)
-    val (ranked, _) = rankByHash(nodes, seed)
     searchGraphIndexedFilteredFrom(spark, indexPath, nodes, queries, k,
-      ranked.filter(col("r") <= entries).select("id"), beam, hops,
-      predicate, numBuckets, frontierCutover)
+      entryHead(nodes, entries, seed), beam, hops, predicate, numBuckets,
+      frontierCutover)
   }
 
-  /** [[searchGraph]]'s indexed twin: md5-rank-head entry points over
+  /** [[searchGraph]]'s indexed twin: md5-order-head entry points over
     * the indexed corpus, then [[searchGraphIndexedFrom]]. */
   def searchGraphIndexed(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, nodes: DataFrame, queries: DataFrame, k: Int,
@@ -731,11 +714,8 @@ object NnDescent {
       numBuckets: Int = DefaultGraphBuckets,
       frontierCutover: Int = DefaultFrontierCutover,
       seed: String = "nnd"): DataFrame = {
-    require(entries >= 1)
-    val (ranked, _) = rankByHash(nodes, seed)
     searchGraphIndexedFrom(spark, indexPath, nodes, queries, k,
-      ranked.filter(col("r") <= entries).select("id"), beam, hops,
-      numBuckets, frontierCutover)
+      entryHead(nodes, entries, seed), beam, hops, numBuckets, frontierCutover)
   }
 
   /** Build the k-NN graph: ring init, `iters` local-join sweeps.

@@ -92,19 +92,11 @@ object Sampling {
       .filter(hashUniform(col(keyCol), seed) < col("rate"))
 
   /** CORPUS-GLOBAL token-budget packing — [[packShards]] without a
-    * group column, via the classic two-phase distributed prefix sum
-    * expressed relationally (no global sort of the corpus anywhere):
-    *
-    *   1. bucket rows by id range (`bucket = floor(id / bucketWidth)` —
-    *      monotone in id, so bucket order ≡ global id order);
-    *   2. per-bucket token totals (one map-side-combinable aggregation)
-    *      → exclusive prefix over the TINY totals relation (the only
-    *      single-partition window, ~corpus/bucketWidth rows by
-    *      construction);
-    *   3. per-bucket windows (partition-parallel, like the grouped
-    *      variant) + broadcast bucket offsets →
-    *      `global prior = bucket offset + within-bucket prior`,
-    *      `shard = floor(prior / budget)`.
+    * group column: the global exclusive token prefix in id order is
+    * [[Rank.prefix]] over id-range buckets (`floor(id / bucketWidth)`,
+    * monotone in id), so no global sort of the corpus exists anywhere
+    * and only the ~corpus/bucketWidth bucket totals pass through one
+    * partition. `shard = floor(prior / budget)`.
     *
     * Deterministic — a pure function of ids, independent of
     * partitioning (no `repartitionByRange` sampling, no
@@ -117,23 +109,11 @@ object Sampling {
       budgetTokens: Long, bucketWidth: Long = 1L << 20): DataFrame = {
     require(budgetTokens > 0, "budgetTokens must be positive")
     require(bucketWidth > 0, "bucketWidth must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val b = df.withColumn("_bucket",
-      floor(col(idCol) / lit(bucketWidth.toDouble)).cast("long"))
-    val wOff = Window.orderBy(col("_bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = b.groupBy("_bucket")
-      .agg(sum(col(tokensCol)).as("_btot"))
-      .withColumn("_boff", coalesce(sum(col("_btot")).over(wOff), lit(0L)))
-      .select(col("_bucket"), col("_boff"))
-    val wIn = Window.partitionBy(col("_bucket")).orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    b.join(broadcast(offsets), Seq("_bucket"))
-      .withColumn("_prior",
-        col("_boff") + coalesce(sum(col(tokensCol)).over(wIn), lit(0L)))
+    Rank.prefix(df, floor(col(idCol) / lit(bucketWidth.toDouble)).cast("long"),
+        col(tokensCol), "_prior")(col(idCol))
       .withColumn("shard",
         floor(col("_prior") / lit(budgetTokens.toDouble)).cast("long"))
-      .drop("_bucket", "_boff", "_prior")
+      .drop("_prior")
   }
 
   /** Weighted sampling WITHOUT replacement, k per group — the
@@ -155,10 +135,11 @@ object Sampling {
     * non-positive weight are excluded (a zero-weight row must never
     * win; `−ln(u)/0` is ill-defined).
     *
-    * 100 TB shape: one window top-k per group partition. For a hot
-    * group (or the global k-of-corpus case) compose with the salted
-    * two-phase top-k exactly as `q_skew_topk` does for plain ranking —
-    * the key is just another ORDER BY column.
+    * 100 TB shape: one window top-k per group partition; for a hot
+    * group compose with the salted per-key top-k ([[Skew.saltedTopK]])
+    * exactly as `q_skew_topk` does for plain ranking — the key is just
+    * another ORDER BY column. The global k-of-corpus case (no group
+    * columns) is [[Rank.head]].
     */
   def weightedSample(df: DataFrame, keyCol: String, weightCol: String,
       k: Int, seed: String, groupCols: Seq[String] = Nil): DataFrame = {
@@ -168,17 +149,8 @@ object Sampling {
       .withColumn("wkey",
         round(-log(hashUniform(col(keyCol), seed)) /
           col(weightCol).cast("double"), 8))
-    if (groupCols.isEmpty) {
-      // GLOBAL k: `Window.partitionBy()` would funnel the whole corpus
-      // into one partition's sort — cut with orderBy+limit instead
-      // (TakeOrderedAndProject, per-partition heads merged on the
-      // driver; the [[reservoirSample]] shape). The rank window then
-      // sees ≤ k rows. Row-identical to the windowed form
-      // (SamplingSpec pins it).
-      keyed.orderBy(col("wkey"), col(keyCol)).limit(k)
-        .withColumn("rk",
-          row_number().over(Window.orderBy(col("wkey"), col(keyCol))))
-    } else {
+    if (groupCols.isEmpty) Rank.head(keyed, k, col("wkey"), col(keyCol))
+    else {
       val w = Window.partitionBy(groupCols.map(col): _*)
         .orderBy(col("wkey"), col(keyCol))
       keyed.withColumn("rk", row_number().over(w))
@@ -190,12 +162,8 @@ object Sampling {
     * sample in ONE pass with NO global sort — each row draws its seeded
     * md5-60 integer key and the k smallest keys win ([[weightedSample]]
     * with uniform weights, specialized to the global case). The global
-    * cut runs as `orderBy(key).limit(k)` = TakeOrderedAndProject:
-    * per-partition top-k heaps merged on the driver — k rows per
-    * partition cross the wire, never the corpus, and no
-    * `Window.partitionBy()` single-partition exchange (the 100 TB
-    * failure mode of a windowed global rank; same lesson as
-    * `bm25TopK`). The rank window after the cut sees ≤ k rows.
+    * cut is [[Rank.head]]: k rows per partition cross the wire, never
+    * the corpus.
     *
     * Properties (all spec-pinned, SamplingSpec):
     *   - reproducible: membership is a pure function of (seed, key) —
@@ -209,15 +177,12 @@ object Sampling {
   def reservoirSample(df: DataFrame, keyCol: String, k: Int,
       seed: String): DataFrame = {
     require(k > 0, "k must be positive")
-    import org.apache.spark.sql.expressions.Window
     // RAW md5-60 long, not the normalized [0,1) double of
     // [[hashUniform]]: ordering is identical, and integer keys make
     // the oracle replay exact with no float conventions at all.
-    df.withColumn("ukey",
-        Dedup.md5TokenHash60(concat(lit(seed), col(keyCol).cast("string"))))
-      .orderBy(col("ukey"), col(keyCol)).limit(k)
-      .withColumn("rk",
-        row_number().over(Window.orderBy(col("ukey"), col(keyCol))).cast("int"))
+    Rank.head(df.withColumn("ukey",
+        Dedup.md5TokenHash60(concat(lit(seed), col(keyCol).cast("string")))),
+      k, col("ukey"), col(keyCol))
   }
 
   /** Temperature-based mix plan: per-group sampling targets that

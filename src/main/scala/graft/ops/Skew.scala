@@ -42,6 +42,10 @@ import org.apache.spark.sql.functions._
   *      `Window.partitionBy(key)` puts ALL of a hot key's rows in one
   *      task by definition — AQE never splits a window partition, so
   *      salting (or groupBy-based partial top-k) is the only remedy.
+  *   4. '''Use [[Rank.head]] / [[Rank.prefix]]''' for a GLOBAL top-k or
+  *      rank (no key): salting a constant key still shuffles every row
+  *      into `salt` groups and merges them in one task, where the head
+  *      keeps k rows per partition and the prefix ranks per bucket.
   */
 object Skew {
 

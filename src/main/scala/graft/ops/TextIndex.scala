@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.{EpochStore, Materialize}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Full-text ranked retrieval: an inverted postings index and BM25
@@ -26,7 +25,7 @@ import org.apache.spark.sql.functions._
   *   - query-time cost is bucket occupancy, never corpus size: pruned
   *     postings join a broadcast per-term df relation and a broadcast
   *     1-row stats relation, aggregate per doc (the only shuffle,
-  *     keyed by doc id, |terms|·df rows), and window-top-k.
+  *     keyed by doc id, |terms|·df rows), and a [[Rank.head]].
   *
   * Scores are rounded to 4 dp before ranking, ties broken by doc id —
   * the [[TextAnalysis.tfIdfTopTerms]] cross-engine convention, which
@@ -223,7 +222,7 @@ object TextIndex {
     // scoring branch's and the postings exchange is reused.
     val dfRel = post.groupBy("token")
       .agg(sum(when(col("tf") >= 1, 1L).otherwise(0L)).as("df"))
-    post
+    val scored = post
       .join(broadcast(dfRel), Seq("token"))
       .crossJoin(broadcast(stats))
       .withColumn("idf",
@@ -232,12 +231,7 @@ object TextIndex {
         col("idf") * (col("tf") * (k1 + 1)) /
           (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
       .groupBy("id").agg(round(sum(col("contrib")), 4).as("score"))
-      // Distributed top-k (TakeOrderedAndProject — per-partition heads
-      // merged on the driver, no single-partition exchange); the rank
-      // window then only ever sees k rows.
-      .orderBy(col("score").desc, col("id")).limit(k)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("score").desc, col("id"))))
-      .select(col("id"), col("score"), col("rk"))
+    Rank.head(scored, k, col("score").desc, col("id"))
+      .select(col("id"), col("score"), col(Rank.Col))
   }
 }

@@ -36,15 +36,12 @@ object TextRank {
     * Self-loops (`a == b` bigrams) are dropped — a repeated token must
     * not vote for itself.
     *
-    * The final ranking is CUT to `k` with `orderBy+limit` (Spark plans
-    * a `TakeOrderedAndProject`: per-partition top-k, then a merge of
-    * |partitions|·k rows) BEFORE the `rk` window — so the one
-    * single-partition window in the plan sees ≤ k rows, never the
-    * vocabulary (10⁷–10⁸ tokens at 100 TB). Callers wanting salience
-    * want the head, not a total ordering; raise `k` if more of the
-    * tail matters — the cost is k·|partitions| driver-merge rows, not
-    * a vocabulary sort on one reducer. Same idiom as
-    * [[Sampling.reservoir]] and the CMS top-k cut. */
+    * The final ranking is the [[Rank.head]] of the vocabulary: the
+    * one single-partition window sees ≤ k rows, never the vocabulary
+    * (10⁷–10⁸ tokens at 100 TB). Callers wanting salience want the
+    * head, not a total ordering; raise `k` if more of the tail matters
+    * — the cost is k·|partitions| merged rows, not a vocabulary sort
+    * on one reducer. */
   def tokenRank(docs: DataFrame, textCol: String,
       iterations: Int = 10, damping: Double = 0.85,
       k: Int = 100): DataFrame = {
@@ -86,14 +83,7 @@ object TextRank {
     }
     Materialize.release(ew)
     Materialize.release(nRel)
-    import org.apache.spark.sql.expressions.Window
-    // TakeOrdered cut FIRST (bounded ≤ k), window over the survivors
-    // only — rk is 1..k by construction because limit and window share
-    // one total order (r desc, token-tiebreak).
-    ranks.select(col("node").as("token"), round(col("r"), 6).as("r"))
-      .orderBy(col("r").desc, col("token"))
-      .limit(k)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("r").desc, col("token"))))
+    Rank.head(ranks.select(col("node").as("token"), round(col("r"), 6).as("r")),
+      k, col("r").desc, col("token"))
   }
 }

@@ -312,18 +312,21 @@ object CorpusMlQueries {
     * −1; a synthetic or template-heavy corpus shows up as a flat or
     * kinked line, r² far from 1). The token counts are the only
     * data-sized pass; the regression runs on the Heaps-law-bounded
-    * vocabulary (the rank window is vocabulary-sized by construction).
+    * vocabulary, ranked by [[graft.ops.Rank.prefix]] (no task ranks
+    * the whole vocabulary).
     * Closed-form OLS from five sums of identical ln operands; outputs
     * rounded 4 dp (summation-order discipline). */
   val qZipfFit: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val freq = Tables.documents(s, dir)
       .filter(col("text").isNotNull)
       .select(explode(graft.ops.TextAnalysis.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("f"))
-    val ranked = freq.withColumn("r",
-      row_number().over(Window.orderBy(col("f").desc, col("token"))))
-      .select(log(col("r").cast("double")).as("x"),
+    // (f, first character) is monotone in (f desc, token) and splits
+    // the hapax band, the largest run of one f
+    val ranked = graft.ops.Rank.prefix(freq,
+        struct(-col("f"), substring(col("token"), 1, 1)), lit(1L), "before")(
+        col("f").desc, col("token"))
+      .select(log((col("before") + 1).cast("double")).as("x"),
         log(col("f").cast("double")).as("y"))
     ranked.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("y")).as("sxy"),

@@ -1216,13 +1216,10 @@ object CorpusOpsQueries {
     * and min with zero rounding. */
   val qCmsTopk: Q = (s, dir) => {
     import graft.ops.Sketches
-    import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(s, dir).filter(col("text").isNotNull)
       .select(explode(filter(split(col("text"), "\\s+"), t => t =!= "")).as("token"))
     val vocab = toks.groupBy(col("token")).agg(count(lit(1)).as("n_exact"))
-    val top = vocab.orderBy(col("n_exact").desc, col("token")).limit(20)
-      .withColumn("rk",
-        row_number().over(Window.orderBy(col("n_exact").desc, col("token"))))
+    val top = graft.ops.Rank.head(vocab, 20, col("n_exact").desc, col("token"))
     val sketch = Sketches.cmsSketch(vocab, col("token"), "cm", d = 4, w = 16,
       weight = col("n_exact"))
     val est = Sketches.cmsLookup(sketch, top, col("token"), "cm", d = 4, w = 16)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Materialize, Tables}
-import graft.ops.{Retrieval, Similarity, Skew}
+import graft.ops.{Rank, Retrieval, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Eighth wave of the query surface (round 17, second half): the
@@ -383,12 +383,11 @@ object EvalQueries {
     val (queries, corpus) = AnnHarness.split(s, dir)
     val qv = queries.filter(col("qid") === 0).select(col("qvec"))
     val scored = corpus.crossJoin(broadcast(qv))
-      .select(lit(0).as("qid"), col("id"), col("vec"),
+      .select(col("id"), col("vec"),
         round(Similarity.cosine(col("vec"), col("qvec")), 4).as("rel"))
-    // checkpoint the shortlist: the corpus-wide salted top-m must not
+    // checkpoint the shortlist: the corpus-wide top-m must not
     // recompute for each of the sims/candidates/mmr actions
-    val cands = Materialize(Skew.saltedTopK(scored, Seq("qid"),
-      Seq(col("rel").desc, col("id").asc), MmrM, saltBy = col("id")))
+    val cands = Materialize(Rank.head(scored, MmrM, col("rel").desc, col("id").asc))
     val sims = Retrieval.pairwiseSims(cands.select(col("id"), col("vec")))
     Retrieval.mmr(cands.select(col("id"), col("rel")), sims,
         k = MmrK, lambda = MmrLambda)

@@ -535,12 +535,11 @@ object LifecycleQueries {
         Seq("spark", "window", "merge"), m)
       .select(col("id"), col("rk"))
     val scored = corpus.crossJoin(broadcast(qv))
-      .select(lit(0).as("qid"), col("doc_id").as("id"),
+      .select(col("doc_id").as("id"),
         round(graft.ops.Similarity.cosine(col("embedding"), col("qvec")), 4)
           .as("score"))
-    val vec = graft.ops.Skew.saltedTopK(scored, Seq("qid"),
-        Seq(col("score").desc, col("id").asc), m, saltBy = col("id"))
-      .select(col("id"), col("rank").as("rk"))
+    val vec = graft.ops.Rank.head(scored, m, col("score").desc, col("id").asc)
+      .select(col("id"), col("rk"))
     val vecCorpus = corpus.select(col("doc_id").as("id"),
       col("embedding").as("vec"))
     val b = graft.ops.Sq.train(vecCorpus, "vec")

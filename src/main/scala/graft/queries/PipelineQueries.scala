@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Materialize, Tables}
 import graft.operators.RangeJoin
-import graft.ops.{Curation, Dedup, Sampling, TextAnalysis}
+import graft.ops.{Curation, Dedup, Rank, Sampling, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -677,20 +677,19 @@ object PipelineQueries {
     * the 20 embeddings the rank-16 PCA model explains WORST — tail
     * energy Σ_{j≥16} pⱼ² over the committed basis, the off-manifold
     * score for corrupt/OOD rows. Shuffle shape: a shuffle-free scan
-    * computes the residual, the global top-20 is TakeOrdered (partial
-    * per-partition top-k, no full sort). The oracle replays the
+    * computes the residual, the global top-20 is a [[Rank.head]]
+    * (partial per-partition top-k, no full sort). The oracle replays the
     * identical tail sum from the same fixture; ranking ties break on
     * vec_id on both sides. */
   val qPcaOutlier: Q = (s, dir) => {
     val basis = graft.ops.Pca.loadBasis(s,
       s"${graft.Tables.fixturesDir}/pca_basis.parquet")
-    val top = Tables.embeddings(s, dir)
+    val scored = Tables.embeddings(s, dir)
       .select(col("vec_id"),
         graft.ops.Pca.residual2Col(col("embedding"), basis, 16).as("resid2"))
-      .orderBy(col("resid2").desc, col("vec_id")).limit(20)
-    top.withColumn("rank",
-        row_number().over(Window.orderBy(col("resid2").desc, col("vec_id"))))
-      .select(col("vec_id"), round(col("resid2"), 6).as("resid2"), col("rank"))
+    Rank.head(scored, 20, col("resid2").desc, col("vec_id"))
+      .select(col("vec_id"), round(col("resid2"), 6).as("resid2"),
+        col(Rank.Col).as("rank"))
       .orderBy(col("rank"))
   }
 

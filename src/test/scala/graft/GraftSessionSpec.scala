@@ -15,22 +15,27 @@ import org.apache.spark.SparkConf
   * listener bus. [[graft.queries.AnnHarness]] alone decides which
   * vectors are the standing ANN queries, [[graft.ops.SetSimilarity]]
   * alone builds, cuts and scores shingle sets, [[graft.ops.CellIndex]]
-  * alone writes and probes the cell-partitioned ANN layout, and
-  * [[graft.ops.Lloyd]] alone seeds and averages a k-means quantizer.
+  * alone writes and probes the cell-partitioned ANN layout,
+  * [[graft.ops.Lloyd]] alone seeds and averages a k-means quantizer,
+  * and [[graft.ops.Rank]] alone ranks a whole relation.
   * [[GraftSession]] alone names the local file-system classes. */
 class GraftSessionSpec extends SparkSpec {
 
   private val Main = "src/main/scala"
   private val Both = Seq(Main, "src/test/scala")
 
-  /** Names of the .scala files under `roots` that contain any of
-    * `needles`, sorted. */
-  private def sites(roots: String*)(needles: String*): Seq[String] =
+  /** The .scala files under `roots`. */
+  private def files(roots: String*): Seq[java.nio.file.Path] =
     roots.flatMap { root =>
       val s = Files.walk(Paths.get(root))
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
-    }.filter(f => needles.exists(Files.readString(f).contains))
+    }
+
+  /** Names of the .scala files under `roots` that contain any of
+    * `needles`, sorted. */
+  private def sites(roots: String*)(needles: String*): Seq[String] =
+    files(roots: _*).filter(f => needles.exists(Files.readString(f).contains))
       .map(_.getFileName.toString).sorted
 
   test("only GraftSession.scala builds a SparkSession") {
@@ -85,6 +90,20 @@ class GraftSessionSpec extends SparkSpec {
     val gone = Seq("QuantizerRelation.train" + "(", "PqRelation.train" + "(", "lloydL2" + "(",
       "collect" + "Centroids", "collect" + "Codebooks", "normalize" + "Rows", "Opq." + "augment")
     assert(sites(Both: _*)(gone: _*).isEmpty)
+  }
+
+  test("only Rank.scala ranks a whole relation; the md5 rank copy and the constant-key salted heads are gone") {
+    assert(sites(Main)("Window.orderBy" + "(") == Seq("Rank.scala"))
+    assert(sites(Both: _*)("rankBy" + "Hash").isEmpty)
+    // a salted top-k keyed on a literal qid is a global head in disguise
+    val constKey = Seq("lit(0).as(\"qid\")", "withColumn(\"qid\", lit(0))")
+    val salted = files(Main).flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.toIndexedSeq
+      lines.indices.filter(i => lines(i).contains("saltedTopK" + "(") &&
+          lines.slice(i - 8, i + 1).exists(l => constKey.exists(l.contains)))
+        .map(i => s"${f.getFileName}:${i + 1}")
+    }
+    assert(salted.isEmpty, s"salted top-k over a constant key: $salted")
   }
 
   test("a launch conf's master and shuffle width are kept; unset, the local sizing applies") {

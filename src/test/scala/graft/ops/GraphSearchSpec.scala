@@ -114,10 +114,15 @@ class GraphSearchSpec extends SparkSpec {
       k = 10, seeded, beam = 5, hops = 3).collect().toSeq, truth)
     info(f"recall via $nSeeded IVF-seeded entries: $viaSeed%.3f")
     assert(viaSeed >= 0.9, s"seeded walk should land the true top-10: $viaSeed")
-    // and searchGraphFrom ≡ searchGraph when fed the md5 head (same hook)
-    val (ranked, _) = NnDescent.rankByHash(cl, "nnd")
+    // and searchGraphFrom ≡ searchGraph when fed the first 16 nodes of
+    // the one global (h, id) window (same hook)
+    val md5Head = cl.select($"id",
+        Dedup.md5TokenHash60(concat(lit("nnd"), $"id".cast("string"))).as("h"))
+      .withColumn("r", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy($"h", $"id")))
+      .filter($"r" <= 16).select("id")
     val viaHook = NnDescent.searchGraphFrom(clGraph, cl, clQs, k = 10,
-        ranked.filter($"r" <= 16).select("id"), beam = 5, hops = 3)
+        md5Head, beam = 5, hops = 3)
       .orderBy("qid", "rank").collect().toSeq
     val direct = NnDescent.searchGraph(clGraph, cl, clQs, k = 10,
         entries = 16, beam = 5, hops = 3)

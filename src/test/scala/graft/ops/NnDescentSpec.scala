@@ -162,28 +162,34 @@ class NnDescentSpec extends SparkSpec {
     assert(again == appended.orderBy("id", "rank").collect().toSeq)
   }
 
-  test("two-phase md5 rank is row-identical to the global-window rank, and n is exact") {
-    val (ranked, n) = NnDescent.rankByHash(nodes, "nnd")
+  test("the init rank (Rank.prefix) is row-identical to the global-window rank, 1..n") {
+    val ranked = NnDescent.initRank(nodes, "nnd")
     val global = nodes.select($"id")
       .withColumn("h", Dedup.md5TokenHash60(concat(lit("nnd"), $"id".cast("string"))))
       .withColumn("r", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy($"h", $"id")).cast("long"))
       .select("id", "r")
     assert(ranked.orderBy("r").collect().toSeq == global.orderBy("r").collect().toSeq)
-    assert(n == nodes.count())
+    assert(ranked.agg(max("r")).head().getLong(0) == nodes.count())
   }
 
   test("plan: the init rank never funnels the node set through an unpartitioned window") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
     // randomInit checkpoints the rank relation (it feeds two joins), so
-    // the window lives in rankByHash's own plan — assert there.
-    val (ranked, _) = NnDescent.rankByHash(nodes, "nnd")
+    // the windows live in initRank's own plan — assert there.
+    val ranked = NnDescent.initRank(nodes, "nnd")
     ranked.collect()
-    val wins = planNodes(ranked.queryExecution.executedPlan)
-      .collect { case w: WindowExec => w }
-    assert(wins.nonEmpty, "expected the within-bucket rank window")
-    assert(wins.forall(_.partitionSpec.nonEmpty),
-      "a global unpartitioned window survived in the init rank — the 10⁹-node bottleneck")
+    val plan = ranked.queryExecution.executedPlan
+    assert(planNodes(plan).exists { case w: WindowExec => w.partitionSpec.nonEmpty; case _ => false },
+      "expected the within-bucket rank window")
+    assert(RankPlans.unbounded(plan).isEmpty,
+      s"a global window over the node set survived in the init rank — the 10⁹-node bottleneck:\n$plan")
+    assert(planNodes(plan).count {
+        case e: ShuffleExchangeExec => e.outputPartitioning == SinglePartition
+        case _ => false
+      } == 1, s"only the bucket totals may pass through a single partition:\n$plan")
   }
 
   test("plan: randomInit's init edges read the rank checkpoint and rank nothing again") {
@@ -199,6 +205,25 @@ class NnDescentSpec extends SparkSpec {
     assert(plan.count(_.isInstanceOf[RDDScanExec]) == 2,
       "the jump side and the r2 lookup should each scan the rank checkpoint")
     assert(!plan.exists(_.isInstanceOf[FileSourceScanExec]), "the init edges read the nodes again")
+  }
+
+  test("the init's job count is fixed: its r2 lookup is a broadcast join from the first plan") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // a sort-merge r2 lookup left AQE a race: when the 1..k broadcast
+    // finished before the lookup side's shuffle, the jump side's shuffle
+    // ran as one more job before the join was demoted to a broadcast
+    val initial = NnDescent.randomInit(nodes, k = 5, seed = "nnd") { edges =>
+      edges.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    }
+    assert(initial.collectFirst { case j: SortMergeJoinExec => j }.isEmpty, initial)
+    def jobs() = graft.RunMeter.measure(spark, "nnd-init")(graft.Materialize.scope(
+      NnDescent.knnGraph(nodes, k = 5, iters = 1).count())).jobs
+    val first = jobs()
+    assert(jobs() == first)
   }
 
   test("fewer than 2 nodes is rejected (the jump modulus would be zero)") {

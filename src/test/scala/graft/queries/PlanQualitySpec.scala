@@ -226,6 +226,32 @@ class PlanQualitySpec extends SparkSpec {
         s"$name: expected the frame window:\n$p")
     }
   }
+
+  test("routed ranks: every unpartitioned window reads a TakeOrdered head or the bucket totals") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.ops.RankPlans
+    // every execution of the run, checkpoints included: an operator's
+    // intermediate rank never reaches the final plan
+    val plans = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.execution.SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val routed = Seq("q_zipf_fit", "q_cms_topk", "q_pca_outlier", "q_pack_global",
+      "corpus_pipeline_v5", "ann_graph_search")
+    spark.listenerManager.register(listener)
+    try routed.foreach { name =>
+      plans.synchronized(plans.clear())
+      // RunMeter drains the listener bus before it returns
+      graft.RunMeter.query(spark, name, sf001)(graft.RunMeter.noop)
+      val seen = plans.synchronized(plans.toList)
+      assert(seen.exists(RankPlans.global(_).nonEmpty), s"$name: no global rank was planned")
+      val bad = seen.flatMap(RankPlans.unbounded)
+      assert(bad.isEmpty, s"$name: an unpartitioned window over an unbounded input:\n${bad.mkString("\n")}")
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
 
 /** Helper giving specs access to a query's executed plan string. */
